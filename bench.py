@@ -144,14 +144,14 @@ def _staged_pipeline(spark, docs_df, emb_df, timings, stages):
     timed("cc_labels", _cc)
     labels = holder["labels"]
 
-    # same shared-membership shape as pipeline.py: one membership
-    # computation feeds the entities AND proxy-triples branches
-    members = gen.entity_membership(mentions, labels).localCheckpoint(eager=False)
-    timed("entities", lambda: gen.entities_df(mentions, labels, members=members).count())
+    # same shape as pipeline.py: one aggregation per component feeds the
+    # entities AND proxy-triples branches
+    comps = gen.entity_components(mentions, labels)
+    timed("entities", lambda: gen.entities_df(mentions, labels, comps=comps).count())
     base = extract.base_quads(flat, mentions)
     triples = (
         base.select("s", "p", "o")
-        .unionByName(gen.proxy_triples(mentions, labels, members=members))
+        .unionByName(gen.proxy_triples(mentions, labels, comps=comps))
         .dropDuplicates(["s", "p", "o"])
     )
     n_triples = timed("triples_total", lambda: triples.count())

@@ -2,10 +2,11 @@
 analogue: ``spindle/generate/{generate,props,classes,index}.c`` `[U~]`).
 
 Inputs: mentions + component labels (norm_text → label) from cc.py.
-Outputs:
+Outputs, all derived from ONE aggregation per component
+(``entity_components``):
 * ``entities``      — (entity_id, member_iri) membership (D6),
 * ``entity_attrs``  — index rows (D7: label via language-preference
-  window selection O24/O28, counts, score),
+  aggregate argmax O24/O28, counts, score),
 * ``proxy_triples`` — the proxy graph: owl:sameAs membership, rdf:type,
   rdfs:label (Twine writes these into the spindle root graph).
 
@@ -23,82 +24,111 @@ from . import exprs as X
 from . import grammar as G
 
 
-def entity_membership(mentions: DataFrame, labels: DataFrame) -> DataFrame:
-    """(entity_id, member_iri, root, norm_text) for every distinct
-    mention IRI; entity_id minted from the component's min member IRI."""
-    iris = (
-        mentions.select("norm_text", "mention_iri")
-        .distinct()
-        .join(labels.withColumnRenamed("node", "norm_text"), "norm_text")
+def _member_iris(mentions: DataFrame, labels: DataFrame) -> DataFrame:
+    """One row per distinct (label, norm_text, mention_iri) with the
+    IRI's mention count and its best display-label candidate."""
+    return (
+        mentions.join(labels.withColumnRenamed("node", "norm_text"), "norm_text")
+        .groupBy("label", "norm_text", "mention_iri")
+        .agg(
+            F.count("*").alias("n"),
+            F.min(F.struct(X.lang_rank(F.col("lang")).alias("rank"),
+                           "norm_text", "lang")).alias("name"),
+        )
     )
-    eids = iris.groupBy("label").agg(F.min("mention_iri").alias("min_member"))
-    eids = eids.select(
-        "label", X.entity_id_from_min_member(F.col("min_member")).alias("entity_id")
+
+
+def entity_components(
+    mentions: DataFrame, labels: DataFrame, rules: DataFrame | None = None
+) -> DataFrame:
+    """One row per component — (label, entity_id, name, name_lang,
+    class, n_members, n_mentions) — from a single aggregation over the
+    member IRIs:
+
+    * entity_id: minted from the min member IRI (O34);
+    * name: min of (LANG_PREF rank, norm_text, lang) over the members'
+      mentions (O24/O28; unknown languages rank last, lang asc breaks
+      the remaining tie);
+    * class: min of (-rule_score, class) over the rules matched by the
+      members' first tokens (O25; the rulebase is reduced to its best
+      rule per token and broadcast, so a token with several rules
+      cannot multiply the counted rows).
+
+    Every other generate output is a projection of this frame, or — the
+    membership — a join of it back onto the distinct member IRIs, so no
+    per-component member array is ever built."""
+    if rules is None:
+        rules = rulebase_df(mentions.sparkSession)
+    best_rule = rules.groupBy("tok").agg(
+        F.min(F.struct(
+            (-F.coalesce("rule_score", F.lit(G.DEFAULT_CLASS_SCORE))).alias("neg"),
+            F.coalesce("class", F.lit(G.DEFAULT_CLASS)).alias("class"),
+        )).alias("rule")
     )
-    return iris.join(eids, "label").select(
+    default_rule = F.struct(F.lit(-G.DEFAULT_CLASS_SCORE).alias("neg"),
+                            F.lit(G.DEFAULT_CLASS).alias("class"))
+    comps = (
+        _member_iris(mentions, labels)
+        .withColumn("tok", F.split("norm_text", " ").getItem(0))
+        .join(F.broadcast(best_rule), "tok", "left")
+        .groupBy("label")
+        .agg(
+            F.min("mention_iri").alias("min_member"),
+            F.count("*").alias("n_members"),
+            F.sum("n").alias("n_mentions"),
+            F.min("name").alias("name"),
+            F.min(F.coalesce("rule", default_rule)).alias("rule"),
+        )
+    )
+    return comps.select(
+        "label",
+        X.entity_id_from_min_member(F.col("min_member")).alias("entity_id"),
+        F.col("name.norm_text").alias("name"),
+        F.col("name.lang").alias("name_lang"),
+        F.col("rule.class").alias("class"),
+        "n_members",
+        "n_mentions",
+    )
+
+
+def entity_membership(
+    mentions: DataFrame, labels: DataFrame, comps: DataFrame | None = None
+) -> DataFrame:
+    """(entity_id, member_iri, label, norm_text) for every distinct
+    mention IRI: the member IRIs joined back onto their component."""
+    if comps is None:
+        comps = entity_components(mentions, labels)
+    return _member_iris(mentions, labels).join(
+        comps.select("label", "entity_id"), "label"
+    ).select(
         "entity_id", F.col("mention_iri").alias("member_iri"), "label", "norm_text"
     )
 
 
 def entities_df(
-    mentions: DataFrame, labels: DataFrame, members: DataFrame | None = None
+    mentions: DataFrame, labels: DataFrame, comps: DataFrame | None = None
 ) -> DataFrame:
-    if members is None:
-        members = entity_membership(mentions, labels)
-    return members.select("entity_id", "member_iri")
+    return entity_membership(mentions, labels, comps=comps).select(
+        "entity_id", "member_iri"
+    )
 
 
 def entity_attrs_df(
-    mentions: DataFrame,
-    labels: DataFrame,
-    members: DataFrame | None = None,
-    classes: DataFrame | None = None,
+    mentions: DataFrame, labels: DataFrame, comps: DataFrame | None = None
 ) -> DataFrame:
-    """D7 index rows.  Label selection = O24/O28: per entity, rank
-    candidate (norm_text, lang) pairs by LANG_PREF rank then
-    lexicographic norm — ``row_number`` window, deterministic
-    tie-breaks.  ``classes`` lets a caller that already computed
-    ``entity_classes`` (proxy_triples_full does, for rdf:type) share
-    it instead of rebuilding the distinct+window chain."""
-    if members is None:
-        members = entity_membership(mentions, labels)
-    m = mentions.join(
-        labels.withColumnRenamed("node", "norm_text"), "norm_text"
-    ).join(
-        members.select("label", "entity_id").distinct(), "label"
-    ).localCheckpoint(eager=False)  # feeds counts AND cands (r7)
-    counts = m.groupBy("entity_id").agg(
-        F.countDistinct("mention_iri").alias("n_members"),
-        F.count("*").alias("n_mentions"),
-    )
-    cands = m.select("entity_id", "norm_text", "lang").distinct().withColumn(
-        "lang_rank", X.lang_rank(F.col("lang"))
-    )
-    w = Window.partitionBy("entity_id").orderBy("lang_rank", "norm_text")
-    best = (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "entity_id",
-            F.col("norm_text").alias("label"),
-            F.col("lang").alias("label_lang"),
-        )
-    )
-    # D7 parity: spindle index rows carry the proxy's class
-    if classes is None:
-        classes = entity_classes(mentions, labels, members=members)
-    return (
-        counts.join(best, "entity_id")
-        .join(classes, "entity_id")
-        .select(
-            "entity_id",
-            "label",
-            "label_lang",
-            "class",
-            "n_members",
-            "n_mentions",
-            F.col("n_mentions").alias("score"),
-        )
+    """D7 index rows (one per entity): the component's display label
+    and class (spindle index rows carry the proxy's class), member and
+    mention counts, score = n_mentions."""
+    if comps is None:
+        comps = entity_components(mentions, labels)
+    return comps.select(
+        "entity_id",
+        F.col("name").alias("label"),
+        F.col("name_lang").alias("label_lang"),
+        "class",
+        "n_members",
+        "n_mentions",
+        F.col("n_mentions").alias("score"),
     )
 
 
@@ -149,7 +179,7 @@ def entity_props(
     rows distinct-ed before the 5-row broadcast join; the window
     partitions on (entity_id, pred) — no global sort."""
     if members is None:
-        members = entity_membership(mentions, labels)
+        members = entity_components(mentions, labels)
     m = mentions.join(
         labels.withColumnRenamed("node", "norm_text"), "norm_text"
     ).join(members.select("label", "entity_id").distinct(), "label")
@@ -238,7 +268,7 @@ def entity_media(
     broadcast rule joins; both windows partition on entity_id — no
     global sort, no skew beyond per-entity document counts."""
     if members is None:
-        members = entity_membership(mentions, labels)
+        members = entity_components(mentions, labels)
     m = mentions.join(
         labels.withColumnRenamed("node", "norm_text"), "norm_text"
     ).join(members.select("label", "entity_id").distinct(), "label")
@@ -297,180 +327,72 @@ def entity_media(
 def entity_classes(
     mentions: DataFrame,
     labels: DataFrame,
-    members: DataFrame | None = None,
+    comps: DataFrame | None = None,
     rules: DataFrame | None = None,
 ) -> DataFrame:
-    """O25 rulebase-driven class scoring: each member contributes the
-    rule matched by its norm-text's first token; the entity's class is
-    the highest-scoring matched rule (window argmax, deterministic
-    tie-break).  The rulebase join is a BroadcastHashJoin by
-    construction (16-row dimension)."""
-    if members is None:
-        members = entity_membership(mentions, labels)
-    if rules is None:
-        rules = rulebase_df(mentions.sparkSession)
-    cands = (
-        members.select(
-            "entity_id", F.split("norm_text", " ").getItem(0).alias("tok")
-        )
-        .distinct()
-        .join(F.broadcast(rules), "tok", "left")
-        .select(
-            "entity_id",
-            F.coalesce(F.col("class"), F.lit(G.DEFAULT_CLASS)).alias("class"),
-            F.coalesce(F.col("rule_score"), F.lit(G.DEFAULT_CLASS_SCORE)).alias(
-                "rule_score"
-            ),
-        )
-    )
-    w = Window.partitionBy("entity_id").orderBy(
-        F.desc("rule_score"), F.asc("class")
-    )
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("entity_id", "class")
-    )
+    """O25 rulebase-driven class per entity: the highest-scoring rule
+    matched by a member's first token (aggregate argmax, class asc
+    breaks ties — see ``entity_components``).  The rulebase join is a
+    BroadcastHashJoin by construction (16-row dimension)."""
+    if comps is None:
+        comps = entity_components(mentions, labels, rules=rules)
+    return comps.select("entity_id", "class")
 
 
-def _proxy_branches(
-    mentions: DataFrame,
-    labels: DataFrame,
-    members: DataFrame | None = None,
-    attrs: DataFrame | None = None,
-    classes: DataFrame | None = None,
+def proxy_triples_full(
+    mentions: DataFrame, labels: DataFrame, comps: DataFrame | None = None
 ) -> DataFrame:
-    """Un-deduplicated union of the four proxy-triple branches (full
-    term model).  Callers apply their own set-semantics dedup at the
-    granularity they need — proxy_triples_full at the 6-column term
-    level, proxy_triples directly at (s,p,o), which saves the full
-    intermediate 6-column exchange (guide §2.4: dedup of a projection
-    equals projection of the dedup as a set, one exchange cheaper).
-
-    Proxy-graph triples with the full D3 term model
+    """Proxy-graph triples with the full D3 term model
     (s, p, o, o_kind, o_lang, o_datatype):
 
     * ``owl:sameAs``  member links            (IRI objects)
     * ``rdf:type``    rulebase-selected class (IRI; O25)
-    * ``rdfs:label``  lang-TAGGED literal — the property-rule winner's
+    * ``rdfs:label``  lang-TAGGED literal — the selected label's
                       language rides as the literal's @lang tag
     * ``ex:score``    xsd:integer-datatyped literal (spindle index
                       score analogue)
 
-    ``members``/``attrs`` let the caller share one membership/index
-    computation across the entities/attrs/quads branches (pipeline.py
-    does) instead of rebuilding the same joins per branch.
-    """
-    def term(df, kind: str, lang=None, dtype=None):
-        return (
-            df.withColumn("o_kind", F.lit(kind))
-            .withColumn("o_lang", lang if lang is not None else F.lit(""))
-            .withColumn("o_datatype", F.lit(dtype if dtype is not None else ""))
-        )
+    Already a set, with no dedup: one sameAs row per distinct member
+    IRI, and one row per other predicate per component.  ``comps``
+    lets the caller share one ``entity_components`` frame."""
+    if comps is None:
+        comps = entity_components(mentions, labels)
 
-    # the membership join feeds three branches (sameAs, class rules,
-    # attrs) — compute it once and let lazy localCheckpoint share it
-    if members is None:
-        members = entity_membership(mentions, labels).localCheckpoint(eager=False)
-    # entity_classes feeds BOTH the rdf:type branch and (inside
-    # entity_attrs_df) the attrs 'class' column — compute it once and
-    # checkpoint; likewise checkpoint internally-computed attrs, whose
-    # subtree otherwise executes once for rdfs:label and once for
-    # ex:score (guide §2.4: share, don't replay)
-    if classes is None:
-        classes = entity_classes(mentions, labels, members=members).localCheckpoint(
-            eager=False
-        )
-    t_sameas = term(
-        members.select(
-            F.col("entity_id").alias("s"),
-            F.lit(G.P_SAME_AS).alias("p"),
-            F.col("member_iri").alias("o"),
-        ),
-        "iri",
-    )
-    t_type = term(
-        classes.select(
-            F.col("entity_id").alias("s"),
-            F.lit(G.P_TYPE).alias("p"),
-            F.col("class").alias("o"),
-        ),
-        "iri",
-    )
-    if attrs is None:
-        attrs = entity_attrs_df(
-            mentions, labels, members=members, classes=classes
-        ).localCheckpoint(eager=False)
-    t_label = term(
-        attrs.select(
-            F.col("entity_id").alias("s"),
-            F.lit(G.P_LABEL).alias("p"),
-            F.col("label").alias("o"),
-            F.col("label_lang"),
-        ),
-        "literal",
-        lang=F.col("label_lang"),
-    ).drop("label_lang")
-    t_score = term(
-        attrs.select(
-            F.col("entity_id").alias("s"),
-            F.lit(G.P_SCORE).alias("p"),
-            F.col("score").cast("string").alias("o"),
-        ),
-        "literal",
-        dtype=G.DT_INTEGER,
-    )
-    return (
-        t_sameas.unionByName(t_type)
-        .unionByName(t_label)
-        .unionByName(t_score)
-    )
+    def term(p, o, kind, lang=F.lit(""), dtype=""):
+        return F.struct(F.lit(p).alias("p"), o.alias("o"), F.lit(kind).alias("o_kind"),
+                        lang.alias("o_lang"), F.lit(dtype).alias("o_datatype"))
 
-
-def proxy_triples_full(
-    mentions: DataFrame,
-    labels: DataFrame,
-    members: DataFrame | None = None,
-    attrs: DataFrame | None = None,
-    classes: DataFrame | None = None,
-) -> DataFrame:
-    """Proxy-graph triples with the full D3 term model — see
-    ``_proxy_branches`` for the branch construction and sharing."""
-    return _proxy_branches(
-        mentions, labels, members=members, attrs=attrs, classes=classes
-    ).dropDuplicates(["s", "p", "o", "o_kind", "o_lang", "o_datatype"])
+    same_as = entity_membership(mentions, labels, comps=comps).select(
+        F.col("entity_id").alias("s"),
+        term(G.P_SAME_AS, F.col("member_iri"), "iri").alias("t"),
+    )
+    per_entity = comps.select(
+        F.col("entity_id").alias("s"),
+        F.explode(F.array(
+            term(G.P_TYPE, F.col("class"), "iri"),
+            term(G.P_LABEL, F.col("name"), "literal", lang=F.col("name_lang")),
+            term(G.P_SCORE, F.col("n_mentions").cast("string"), "literal",
+                 dtype=G.DT_INTEGER),
+        )).alias("t"),
+    )
+    return same_as.unionByName(per_entity).select("s", "t.*")
 
 
 def proxy_triples(
-    mentions: DataFrame,
-    labels: DataFrame,
-    members: DataFrame | None = None,
-    attrs: DataFrame | None = None,
+    mentions: DataFrame, labels: DataFrame, comps: DataFrame | None = None
 ) -> DataFrame:
-    """Graph-agnostic (s,p,o) view of the proxy triples.  Dedups ONCE
-    at (s,p,o) on the raw branch union — the old full-term dedup +
-    re-dedup of the projection paid an extra 6-column exchange for an
-    identical result set."""
-    return (
-        _proxy_branches(mentions, labels, members=members, attrs=attrs)
-        .select("s", "p", "o")
-        .dropDuplicates(["s", "p", "o"])
-    )
+    """Graph-agnostic (s,p,o) view of the proxy triples — still a set:
+    the term columns dropped are a function of (s, p)."""
+    return proxy_triples_full(mentions, labels, comps=comps).select("s", "p", "o")
 
 
 def proxy_quads(
-    mentions: DataFrame,
-    labels: DataFrame,
-    members: DataFrame | None = None,
-    attrs: DataFrame | None = None,
-    classes: DataFrame | None = None,
+    mentions: DataFrame, labels: DataFrame, comps: DataFrame | None = None
 ) -> DataFrame:
     """Proxy triples in the spindle ROOT graph (D4): generated proxy
     descriptions all live in one named graph, distinct from the
     per-document source graphs.  Full term model."""
-    return proxy_triples_full(
-        mentions, labels, members=members, attrs=attrs, classes=classes
-    ).select(
+    return proxy_triples_full(mentions, labels, comps=comps).select(
         F.lit(G.ROOT_GRAPH).alias("g"),
         "s", "p", "o", "o_kind", "o_lang", "o_datatype",
     )
@@ -623,10 +545,8 @@ def _incremental_index(
 
     # retire prior rows of: (a) regenerated entity ids, (b) prior
     # components that were affected (their eid may have vanished)
-    prior_eids = (
-        entity_membership(prior_mentions, prior_labels)
-        .select("label", "entity_id")
-        .distinct()
+    prior_eids = entity_components(prior_mentions, prior_labels).select(
+        "label", "entity_id"
     )
     stale_eids = prior_eids.join(stale_prior_roots, "label", "left_semi").select(
         "entity_id"

@@ -378,24 +378,30 @@ def _emb_prefilter(embeddings: DataFrame, n_emb: int):
     margin is ~7 orders above any dgemm-vs-einsum float discrepancy,
     so no false negatives; the Arrow kernel still decides exactly).
 
-    Returns (mat, acc): ``acc`` is a list of (va, vb) candidate pairs,
-    possibly empty — meaning NO off-diagonal pair can be cosine-
-    accepted — or None when unknown (dictionary too large for the
-    matmul, or the candidate set too large to broadcast).  ``mat`` is
+    Both transfers go through Arrow, not per-row py4j objects: the
+    dictionary comes back with ``toArrow`` and ``acc`` is a pandas
+    frame that ``createDataFrame`` ships as Arrow batches.
+
+    Returns (mat, acc): ``acc`` is a (vec_a, vec_b) pandas frame of
+    candidate pairs, possibly empty — meaning NO off-diagonal pair can
+    be cosine-accepted — or None when unknown (dictionary too large for
+    the matmul, or the candidate set too large to broadcast).  ``mat`` is
     None when the matrix itself would be oversized: it is indexed by
     vec_id, so a SPARSE id space (few rows, huge max id) must fall
     back to the join scorer even though the row count passed the
     dictionary guard."""
     import numpy as np
 
-    rows = embeddings.select("vec_id", "embedding").collect()
-    size = max((int(r["vec_id"]) for r in rows), default=-1) + 1
+    tbl = embeddings.select("vec_id", "embedding").toArrow()
+    ids = tbl["vec_id"].to_numpy().astype(np.int64)
+    size = int(ids.max()) + 1 if len(ids) else 0
     if size > _emb_dict_max():
         return None, None
-    dim = len(rows[0]["embedding"]) if rows else 1
+    vecs = tbl["embedding"].combine_chunks()
+    dim = len(vecs[0]) if len(ids) else 1
     mat = np.full((max(size, 1), dim), np.nan, dtype=np.float64)
-    for r in rows:
-        mat[int(r["vec_id"])] = np.asarray(r["embedding"], dtype=np.float64)
+    if len(ids):
+        mat[ids] = vecs.flatten().to_numpy(zero_copy_only=False).reshape(-1, dim)
 
     acc = None
     if mat.shape[0] <= _emb_acc_max():
@@ -406,7 +412,7 @@ def _emb_prefilter(embeddings: DataFrame, n_emb: int):
         off = ii != jj
         ii, jj = ii[off], jj[off]
         if len(ii) <= ACC_MAX_PAIRS:
-            acc = list(zip(ii.tolist(), jj.tolist()))
+            acc = pd.DataFrame({"vec_a": ii, "vec_b": jj}, dtype=np.int64)
     return mat, acc
 
 
@@ -457,10 +463,9 @@ def _score_band(
         keep = (F.col("jaccard") >= G.JACCARD_TAU) | (
             F.col("vec_a") == F.col("vec_b")
         )
-        if acc:
+        if len(acc):
             acc_df = band.sparkSession.createDataFrame(
-                [(int(a), int(b)) for a, b in acc],
-                "vec_a bigint, vec_b bigint",
+                acc, "vec_a bigint, vec_b bigint"
             ).withColumn("_acc", F.lit(True))
             band = (
                 band.join(F.broadcast(acc_df), ["vec_a", "vec_b"], "left")

@@ -90,8 +90,10 @@ def run_pipeline(
         else extract.mentions_df(flat)
     )
     if materialize:
-        # extraction feeds 4 consumers (edges, base triples, attrs,
-        # membership) — materialize once instead of re-parsing 4×
+        # extraction feeds 3 consumers (edges, base quads, generate) —
+        # materialize once instead of re-parsing 3×.  eager=False is not
+        # free under AQE: the call itself runs the doc repartition
+        # shuffle; only the kernel waits for the first consumer
         mentions = mentions.localCheckpoint(eager=False)
 
     media_features = extract.media_features_df(flat)
@@ -104,6 +106,8 @@ def run_pipeline(
         mentions, embeddings, vocab=sorted(G.ENTITY_TOKENS)
     )
     if materialize:
+        # runs link's shuffle stages at call time (AQE); the final
+        # stage runs at CC's probe, its first consumer
         edges = edges.localCheckpoint(eager=False)
 
     # O16: explicit coref assertions (owl:sameAs / skos:exactMatch) from
@@ -118,33 +122,24 @@ def run_pipeline(
     norms = mentions.select(F.col("norm_text").alias("node")).distinct()
     labels = cc.connected_components(cc_edges, norms, salt_buckets=salt_buckets)
 
-    # one membership + one attrs computation shared across the
-    # entities / attrs / proxy-quads branches (each used to rebuild the
-    # same joins independently — 3× the generate-stage shuffles)
-    members = generate.entity_membership(mentions, labels).localCheckpoint(
-        eager=False
-    )
-    entities = generate.entities_df(mentions, labels, members=members)
-    # one class-selection chain shared by the attrs index AND the
-    # proxy rdf:type branch (each used to rebuild it independently)
-    classes = generate.entity_classes(mentions, labels, members=members)
+    # ONE aggregation per component feeds entities, attrs and the proxy
+    # quads; its checkpoint runs the aggregation's shuffles at call time
+    # (AQE) and is the generate stage's only blocking call
+    comps = generate.entity_components(mentions, labels)
     if materialize:
-        classes = classes.localCheckpoint(eager=False)
-    attrs = generate.entity_attrs_df(
-        mentions, labels, members=members, classes=classes
-    )
-    if materialize:
-        attrs = attrs.localCheckpoint(eager=False)
-    # named-graph full-term quad view: per-doc graphs + proxy root graph
+        comps = comps.localCheckpoint(eager=False)
+    entities = generate.entities_df(mentions, labels, comps=comps)
+    attrs = generate.entity_attrs_df(mentions, labels, comps=comps)
+    # named-graph full-term quad view: per-doc graphs + proxy root graph.
+    # Per-document base quads (deduped per doc) plus per-component proxy
+    # rows in the root graph already form a set, so no dedup runs.  The
+    # checkpoint serves every reader of triples / triples_full / quads
+    # without re-running span synthesis, and keeps a reader's filters
+    # out of the branches: pushed into base_quads' constant-object rows,
+    # a FILTER such as CAST(o AS INT) >= 3 is constant-folded and fails
     term_cols = ["s", "p", "o", "o_kind", "o_lang", "o_datatype"]
-    quads = (
-        base_quads.select("g", *term_cols)
-        .unionByName(
-            generate.proxy_quads(
-                mentions, labels, members=members, attrs=attrs, classes=classes
-            )
-        )
-        .dropDuplicates(["g", *term_cols])
+    quads = base_quads.select("g", *term_cols).unionByName(
+        generate.proxy_quads(mentions, labels, comps=comps)
     )
     if materialize:
         quads = quads.localCheckpoint(eager=False)

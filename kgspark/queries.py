@@ -134,9 +134,9 @@ _MEMBERS_CACHE: dict = {}
 
 def _members(spark, sf_dir):
     """Memoized entity membership on top of the _labels chain: the
-    generate-family queries (entities, attrs, classes, props, media,
-    cooccurrence) all start from the same membership join — share one
-    checkpointed computation instead of rebuilding it per query."""
+    membership-based queries (props, media, cooccurrence, …) all start
+    from the same membership join — share one checkpointed computation
+    instead of rebuilding it per query."""
     key = (id(spark.sparkContext), sf_dir)
     if key not in _MEMBERS_CACHE:
         m, labels = _labels(spark, sf_dir)
@@ -148,12 +148,12 @@ def _members(spark, sf_dir):
 
 def kg_entities(spark, sf_dir):
     m, labels = _labels(spark, sf_dir)
-    return gen.entities_df(m, labels, members=_members(spark, sf_dir))
+    return gen.entities_df(m, labels)
 
 
 def kg_entity_attrs(spark, sf_dir):
     m, labels = _labels(spark, sf_dir)
-    return gen.entity_attrs_df(m, labels, members=_members(spark, sf_dir))
+    return gen.entity_attrs_df(m, labels)
 
 
 def kg_triples(spark, sf_dir):
@@ -849,7 +849,7 @@ def kg_graph_counts(spark, sf_dir):
 def kg_entity_class(spark, sf_dir):
     """O25 rulebase-driven class selection per entity."""
     m, labels = _labels(spark, sf_dir)
-    return gen.entity_classes(m, labels, members=_members(spark, sf_dir))
+    return gen.entity_classes(m, labels)
 
 
 def kg_entity_props(spark, sf_dir):

@@ -166,13 +166,17 @@ def run_all(
         "labels",
     )
 
+    # one aggregation per component feeds the entities, entity_attrs
+    # and triples stages; it stays a plan, so a stage served from its
+    # checkpoint never runs it
+    comps = gen.entity_components(mentions, labels)
     entities = _run_global_stage(
         spark, cat, "entities", me_fp, me_n,
-        lambda: gen.entities_df(mentions, labels), "entities",
+        lambda: gen.entities_df(mentions, labels, comps=comps), "entities",
     )
     attrs = _run_global_stage(
         spark, cat, "entity_attrs", me_fp, me_n,
-        lambda: gen.entity_attrs_df(mentions, labels), "entity_attrs",
+        lambda: gen.entity_attrs_df(mentions, labels, comps=comps), "entity_attrs",
     )
     # D7 full-form property index (spindle writes its index tables; the
     # multi-predicate props are part of the materialized catalog)
@@ -193,7 +197,8 @@ def run_all(
     b_fp, b_n = _global_fingerprint(base_triples, ["g", "s", "p", "o"])
     triples = _run_global_stage(
         spark, cat, "triples", _mix_fps(me_fp, me_n, b_fp, b_n), me_n + b_n,
-        lambda: extract_final_triples(base_triples, mentions, labels), "triples",
+        lambda: extract_final_triples(base_triples, mentions, labels, comps=comps),
+        "triples",
     )
 
     return {
@@ -204,11 +209,12 @@ def run_all(
     }
 
 
-def extract_final_triples(base_quads, mentions, labels):
+def extract_final_triples(base_quads, mentions, labels, comps=None):
     """Distinct full-term union of per-doc extraction quads + root-graph
-    proxy triples (the store's graph-agnostic view)."""
+    proxy triples (the store's graph-agnostic view); ``comps`` shares one
+    ``generate.entity_components`` frame."""
     cols = ["s", "p", "o", "o_kind", "o_lang", "o_datatype"]
-    proxies = gen.proxy_triples_full(mentions, labels)
+    proxies = gen.proxy_triples_full(mentions, labels, comps=comps)
     return (
         base_quads.select(*cols)
         .unionByName(proxies.select(*cols))
