@@ -2,7 +2,7 @@
 
 Default mode: runs the headline pipeline + representative operator
 queries at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
-``local[$SPARK_GRAFT_CPUS]`` (default 32) and prints
+``local[$SPARK_GRAFT_CPUS]`` (default: the machine's CPU count) and prints
 
     {"metric": "kg_pipeline_e2e", "value": <sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ..., "triples_per_sec": ...}
@@ -97,12 +97,10 @@ def _varied_documents(spark, sf_dir: str, rep: int):
 
 
 def _staged_pipeline(spark, docs_df, emb_df, timings, stages):
-    from pyspark.sql import functions as F
-
-    from kgspark import cc as cc_mod
-    from kgspark import extract, fixtures, link
-    from kgspark import generate as gen
-    from kgspark.pipeline import repartition_docs
+    """Times the in-memory executor's stages (pipeline.STAGES) as each
+    is first built and counted: a leaf's time includes the driver work
+    of building that stage, not of the stages before it."""
+    from kgspark.pipeline import PipelineResult
 
     def timed(name, fn):
         t0 = time.time()
@@ -115,46 +113,13 @@ def _staged_pipeline(spark, docs_df, emb_df, timings, stages):
 
     t_start = time.time()
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # repartition the RAW documents first — if the exchange sits above
-    # the span-synthesis projection, synthesis runs in the (few) input
-    # file partitions instead of across the cluster
-    docs_df = repartition_docs(docs_df, n_parts)
-    flat = fixtures.flat_spans(fixtures.with_spans(docs_df)).localCheckpoint(
-        eager=False
-    )
-    mentions = extract.mentions_df(flat).localCheckpoint(eager=False)
-    n_mentions = timed("extract_mentions", lambda: mentions.count())
-    timed("media_features", lambda: extract.media_features_df(flat).count())
-
-    from kgspark import grammar as G
-
-    edges = link.scored_edges(
-        mentions, emb_df, vocab=sorted(G.ENTITY_TOKENS)
-    ).localCheckpoint(eager=False)
-    timed("link_edges", lambda: edges.count())
-
-    holder = {}
-
-    def _cc():
-        holder["labels"] = cc_mod.connected_components(
-            edges, mentions.select(F.col("norm_text").alias("node")).distinct()
-        )
-        return holder["labels"].count()
-
-    timed("cc_labels", _cc)
-    labels = holder["labels"]
-
-    # same shape as pipeline.py: one aggregation per component feeds the
-    # entities AND proxy-triples branches
-    comps = gen.entity_components(mentions, labels)
-    timed("entities", lambda: gen.entities_df(mentions, labels, comps=comps).count())
-    base = extract.base_quads(flat, mentions)
-    triples = (
-        base.select("s", "p", "o")
-        .unionByName(gen.proxy_triples(mentions, labels, comps=comps))
-        .dropDuplicates(["s", "p", "o"])
-    )
-    n_triples = timed("triples_total", lambda: triples.count())
+    p = PipelineResult(docs_df, emb_df, n_parts)
+    n_mentions = timed("extract_mentions", lambda: p.mentions.count())
+    timed("media_features", lambda: p.media_features.count())
+    timed("link_edges", lambda: p.edges.count())
+    timed("cc_labels", lambda: p.labels.count())
+    timed("entities", lambda: p.entities.count())
+    n_triples = timed("triples_total", lambda: p.triples.count())
     e2e = time.time() - t_start
     timings["kg_pipeline_e2e"] = round(e2e, 3)
     # doc-parallel portion = everything except the (input-size-constant)
@@ -169,6 +134,7 @@ def _run_bench(sf_dir: str, cpus: int, rep: int = 1, with_queries: bool = True,
     ±2× noisy-neighbor windows (documented in BENCH/BASELINE.md §0);
     a single sample can misreport every stage in a bad window.  The
     min is the honest steady-state figure for a deterministic job."""
+    from kgspark.pipeline import run_pipeline_cached
     from kgspark.session import get_spark
     import kgspark.queries as Q
 
@@ -199,17 +165,17 @@ def _run_bench(sf_dir: str, cpus: int, rep: int = 1, with_queries: bool = True,
         n_mentions, n_triples, e2e_i = _staged_pipeline(spark, docs, emb, t_i, s_i)
 
         if with_queries:
-            # Pre-warm the memoized (session, sf_dir) labels chain so
-            # its one-time materialization cost is reported HERE and
-            # not absorbed by whichever store query happens to run
-            # first (round-5 bench: kg_entity_media silently paid it).
-            # Only the first pass pays; the warm cost is recorded once
-            # and kept out of the per-query min-merge below.
+            # Pre-warm the memoized (session, sf_dir) pipeline's labels
+            # chain so its one-time materialization cost is reported
+            # HERE and not absorbed by whichever store query happens to
+            # run first (round-5 bench: kg_entity_media silently paid
+            # it).  Only the first pass pays; the warm cost is recorded
+            # once and kept out of the per-query min-merge below.
             if "labels_chain_warm" not in timings:
                 t0 = time.time()
-                _m, _labels = Q._labels(spark, sf_dir)
-                _labels.count()
-                _m.count()
+                chain = run_pipeline_cached(spark, sf_dir)
+                chain.labels.count()
+                chain.mentions.count()
                 timings["labels_chain_warm"] = round(time.time() - t0, 3)
             # Odd passes run the list REVERSED: the VM's multi-minute
             # noisy-neighbor windows (BENCH/BASELINE.md §0) otherwise
@@ -253,7 +219,7 @@ def _run_bench(sf_dir: str, cpus: int, rep: int = 1, with_queries: bool = True,
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     rep = int(os.environ.get("SPARK_GRAFT_SCALE_REP", str(REP_DEFAULT)))
 
     if "--scaling" in sys.argv:
@@ -393,9 +359,11 @@ def _stress(sf_dir: str, cpus: int) -> dict:
     # local mode runs everything in ONE JVM: the ×REP working set
     # (replicated spans + lazy localCheckpoint blocks) needs a heap
     # sized for it — the default 8g GCLocker-thrashes at ×10/32 threads
-    # (measured; the first stress finding).  On a real cluster this is
-    # ordinary per-executor memory, not driver memory.
-    os.environ.setdefault("KGSPARK_DRIVER_MEM", "48g")
+    # (measured; the first stress finding) — so it gets half the
+    # machine's physical memory.  On a real cluster this is ordinary
+    # per-executor memory, not driver memory.
+    phys_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    os.environ.setdefault("KGSPARK_DRIVER_MEM", f"{max(phys_gib // 2, 1)}g")
     spark = get_spark(app_name="kgspark-stress", master=f"local[{cpus}]")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     # JVM/codegen warm-up: one untimed ×1 pass so the ×1 sample is not

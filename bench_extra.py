@@ -12,7 +12,8 @@ Usage:
     python bench_extra.py q1 q2 ...       # restrict to named queries
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32), KGSPARK_BENCH_REPS (default 3).
+     SPARK_GRAFT_CPUS (default: the machine's CPU count),
+     KGSPARK_BENCH_REPS (default 3).
 """
 
 from __future__ import annotations
@@ -40,7 +41,7 @@ def noop(df) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     reps = int(os.environ.get("KGSPARK_BENCH_REPS", "3"))
 
     args = [a for a in sys.argv[1:]]
@@ -51,6 +52,7 @@ def main() -> None:
         args = args[:i] + args[i + 2:]
     names = args or BENCH_QUERIES
 
+    from kgspark.pipeline import run_pipeline_cached
     from kgspark.session import get_spark
     import kgspark.queries as Q
 
@@ -68,12 +70,12 @@ def main() -> None:
             print(f"wrote {plans_dir}/{name}.txt")
         return
 
-    # Pre-warm the memoized chains exactly as bench.py does, so the
+    # Pre-warm the memoized chain exactly as bench.py does, so the
     # per-query numbers measure the queries, not the shared chain.
     t0 = time.time()
-    _m, _labels = Q._labels(spark, sf_dir)
-    _labels.count()
-    _m.count()
+    chain = run_pipeline_cached(spark, sf_dir)
+    chain.labels.count()
+    chain.mentions.count()
     warm = round(time.time() - t0, 3)
 
     out: dict[str, list[float]] = {}

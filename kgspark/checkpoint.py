@@ -117,10 +117,15 @@ def run_bucketed_stage(
     count_as_triples: bool = False,
     fail_buckets: set[int] | None = None,
     partition_cols: list[str] | None = None,
+    side_inputs: tuple[DataFrame, ...] = (),
 ) -> DataFrame:
     """Execute ``transform`` over only the not-yet-done buckets of
     ``input_df`` (which must carry a ``bucket`` column), write the
     output per-bucket, checkpoint, and return the full stage output.
+
+    ``side_inputs`` (bucketed frames derived from the same documents)
+    reach ``transform`` after ``input_df``, sliced to the same pending
+    buckets; only ``input_df`` is fingerprinted.
 
     ``fail_buckets`` injects a crash after processing the other buckets
     — the kill-mid-stage test hook (tests/test_checkpoint.py).
@@ -134,8 +139,10 @@ def run_bucketed_stage(
         pending_ids = [b for b in pending_ids if b not in fail_buckets]
 
     if pending_ids:
-        todo = input_df.filter(F.col("bucket").isin(pending_ids))
-        out = transform(todo)
+        pending_rows = F.col("bucket").isin(pending_ids)
+        out = transform(
+            input_df.filter(pending_rows), *(s.filter(pending_rows) for s in side_inputs)
+        )
         if "bucket" not in out.columns:
             raise ValueError(f"stage {stage}: transform must keep the bucket column")
         cat.write_bucketed(out, out_table, partition_cols=partition_cols)

@@ -15,9 +15,10 @@ from pyspark.sql import functions as F
 
 from . import cc as cc_mod
 from . import exprs as X
-from . import extract, fixtures, link
+from . import extract, fixtures
 from . import generate as gen
 from . import grammar as G
+from .pipeline import run_pipeline_cached
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -79,14 +80,8 @@ def kg_mention_counts(spark, sf_dir):
     )
 
 
-def _edges(spark, sf_dir):
-    m = extract.mentions_df(fixtures.flat_spans(spark, sf_dir))
-    emb = _t(spark, sf_dir, "embeddings")
-    return m, link.scored_edges(m, emb)
-
-
 def kg_link_edges(spark, sf_dir):
-    _, edges = _edges(spark, sf_dir)
+    edges = run_pipeline_cached(spark, sf_dir).edges
     return edges.select(
         "norm_a", "norm_b",
         e6(F.col("jaccard")).alias("jaccard_e6"),
@@ -94,71 +89,15 @@ def kg_link_edges(spark, sf_dir):
     )
 
 
-_LABELS_CACHE: dict = {}
-
-
-def _labels(spark, sf_dir):
-    """Memoized per (session, sf_dir) like run_pipeline_cached: seven
-    contract queries derive from the same mentions+edges+CC chain —
-    lazy localCheckpoints make the first consumer pay once and the
-    rest reuse the materialized lineage.
-
-    r7 ordering fix: the mentions checkpoint is taken BEFORE the edge
-    DAG is built and the edges are checkpointed BEFORE CC consumes
-    them — previously the un-checkpointed edge DAG (mentions kernel
-    included) re-executed once for CC's edge count and again for the
-    driver union-find collect, tripling the chain's one-time cost."""
-    key = (id(spark.sparkContext), sf_dir)
-    if key not in _LABELS_CACHE:
-        m = extract.mentions_df(fixtures.flat_spans(spark, sf_dir)).localCheckpoint(
-            eager=False
-        )
-        emb = _t(spark, sf_dir, "embeddings")
-        # mention tokens are the ENTITY_TOKENS alternation by
-        # construction (grammar.MENTION_PATTERN); the bitmask path's
-        # in-job guard falls back to the exact array path on any
-        # unknown token, so passing the dictionary is a pure shortcut.
-        edges = link.scored_edges(
-            m, emb, vocab=sorted(G.ENTITY_TOKENS)
-        ).localCheckpoint(eager=False)
-        norms = m.select(F.col("norm_text").alias("node")).distinct()
-        labels = cc_mod.connected_components(edges, norms).localCheckpoint(
-            eager=False
-        )
-        _LABELS_CACHE[key] = (m, labels)
-    return _LABELS_CACHE[key]
-
-
-_MEMBERS_CACHE: dict = {}
-
-
-def _members(spark, sf_dir):
-    """Memoized entity membership on top of the _labels chain: the
-    membership-based queries (props, media, cooccurrence, …) all start
-    from the same membership join — share one checkpointed computation
-    instead of rebuilding it per query."""
-    key = (id(spark.sparkContext), sf_dir)
-    if key not in _MEMBERS_CACHE:
-        m, labels = _labels(spark, sf_dir)
-        _MEMBERS_CACHE[key] = gen.entity_membership(m, labels).localCheckpoint(
-            eager=False
-        )
-    return _MEMBERS_CACHE[key]
-
-
 def kg_entities(spark, sf_dir):
-    m, labels = _labels(spark, sf_dir)
-    return gen.entities_df(m, labels)
+    return run_pipeline_cached(spark, sf_dir).entities
 
 
 def kg_entity_attrs(spark, sf_dir):
-    m, labels = _labels(spark, sf_dir)
-    return gen.entity_attrs_df(m, labels)
+    return run_pipeline_cached(spark, sf_dir).entity_attrs
 
 
 def kg_triples(spark, sf_dir):
-    from .pipeline import run_pipeline_cached
-
     return run_pipeline_cached(spark, sf_dir).triples
 
 
@@ -741,7 +680,6 @@ def rdf_ntriples_roundtrip(spark, sf_dir):
     independent DuckDB full-term triple oracle, so the round-trip must
     be lossless including language tags and datatypes."""
     from . import rdfio
-    from .pipeline import run_pipeline_cached
 
     t = run_pipeline_cached(spark, sf_dir).triples_full
     return rdfio.parse_ntriples(rdfio.to_ntriples(t)).select(*_TERM_COLS)
@@ -749,7 +687,6 @@ def rdf_ntriples_roundtrip(spark, sf_dir):
 
 def rdf_turtle_roundtrip(spark, sf_dir):
     from . import rdfio
-    from .pipeline import run_pipeline_cached
 
     t = run_pipeline_cached(spark, sf_dir).triples_full
     return rdfio.parse_turtle(rdfio.to_turtle(t)).select(*_TERM_COLS)
@@ -757,7 +694,6 @@ def rdf_turtle_roundtrip(spark, sf_dir):
 
 def rdf_jsonld_roundtrip(spark, sf_dir):
     from . import rdfio
-    from .pipeline import run_pipeline_cached
 
     t = run_pipeline_cached(spark, sf_dir).triples_full
     return rdfio.parse_jsonld(rdfio.to_jsonld(t)).select(*_TERM_COLS)
@@ -790,7 +726,6 @@ def rdf_xml_roundtrip(spark, sf_dir):
     """O9: serialize to the RDF/XML subset, parse back with the Arrow
     kernel — full-term lossless vs the independent DuckDB oracle."""
     from . import rdfio
-    from .pipeline import run_pipeline_cached
 
     t = run_pipeline_cached(spark, sf_dir).triples_full
     return rdfio.parse_rdfxml(rdfio.to_rdfxml(t)).select(*_TERM_COLS)
@@ -798,8 +733,6 @@ def rdf_xml_roundtrip(spark, sf_dir):
 
 def kg_triples_full(spark, sf_dir):
     """The D3 full term model: (s, p, o, o_kind, o_lang, o_datatype)."""
-    from .pipeline import run_pipeline_cached
-
     return run_pipeline_cached(spark, sf_dir).triples_full
 
 
@@ -809,8 +742,6 @@ _QUAD_COLS = ["g", "s", "p", "o", "o_kind", "o_lang", "o_datatype"]
 def kg_quads_full(spark, sf_dir):
     """The D4 named-graph quad model: (g, s, p, o, o_kind, o_lang,
     o_datatype) — one row per distinct quad across doc graphs + root."""
-    from .pipeline import run_pipeline_cached
-
     return run_pipeline_cached(spark, sf_dir).quads.select(*_QUAD_COLS)
 
 
@@ -820,7 +751,6 @@ def rdf_nquads_roundtrip(spark, sf_dir):
     graph, @lang tags and ^^datatypes; oracle is the independent DuckDB
     quad oracle."""
     from . import rdfio
-    from .pipeline import run_pipeline_cached
 
     q = run_pipeline_cached(spark, sf_dir).quads
     return rdfio.parse_nquads(rdfio.to_nquads(q)).select(*_QUAD_COLS)
@@ -830,7 +760,6 @@ def rdf_trig_roundtrip(spark, sf_dir):
     """O11 TriG-subset round-trip: one `<g> {{ s p o . }}` block per
     line, Turtle term syntax — same lossless quad-level oracle."""
     from . import rdfio
-    from .pipeline import run_pipeline_cached
 
     q = run_pipeline_cached(spark, sf_dir).quads
     return rdfio.parse_trig(rdfio.to_trig(q)).select(*_QUAD_COLS)
@@ -839,8 +768,6 @@ def rdf_trig_roundtrip(spark, sf_dir):
 def kg_graph_counts(spark, sf_dir):
     """Named-graph cardinalities (D4): one row per doc graph + the
     proxy root graph."""
-    from .pipeline import run_pipeline_cached
-
     return run_pipeline_cached(spark, sf_dir).quads.groupBy("g").agg(
         F.count("*").alias("n")
     )
@@ -848,15 +775,14 @@ def kg_graph_counts(spark, sf_dir):
 
 def kg_entity_class(spark, sf_dir):
     """O25 rulebase-driven class selection per entity."""
-    m, labels = _labels(spark, sf_dir)
-    return gen.entity_classes(m, labels)
+    p = run_pipeline_cached(spark, sf_dir)
+    return gen.entity_classes(p.mentions, p.labels)
 
 
 def kg_entity_props(spark, sf_dir):
     """O24 full D7 form: multi-predicate property selection via the
     broadcast PROPERTY_RULES table (priority + lang-pref window)."""
-    m, labels = _labels(spark, sf_dir)
-    return gen.entity_props(m, labels, members=_members(spark, sf_dir))
+    return run_pipeline_cached(spark, sf_dir).entity_props
 
 
 def kg_props_triples(spark, sf_dir):
@@ -864,8 +790,7 @@ def kg_props_triples(spark, sf_dir):
     triples (one lang-tagged/plain literal per entity per target
     predicate) — what a spindle-style generate stage would write for
     the property rulebase's winners."""
-    m, labels = _labels(spark, sf_dir)
-    props = gen.entity_props(m, labels, members=_members(spark, sf_dir))
+    props = run_pipeline_cached(spark, sf_dir).entity_props
     return props.select(
         F.col("entity_id").alias("s"),
         F.col("pred").alias("p"),
@@ -884,11 +809,10 @@ def kg_entity_cooccurrence(spark, sf_dir):
     per document (small and bounded by document length), never corpus-
     global; pairs are canonicalized (a < b) before the count groupBy
     (map-side combined)."""
-    m, labels = _labels(spark, sf_dir)
-    members = _members(spark, sf_dir)
+    p = run_pipeline_cached(spark, sf_dir)
     doc_ents = (
-        m.join(labels.withColumnRenamed("node", "norm_text"), "norm_text")
-        .join(members.select("label", "entity_id").distinct(), "label")
+        p.mentions.join(p.labels.withColumnRenamed("node", "norm_text"), "norm_text")
+        .join(p.comps.select("label", "entity_id"), "label")
         .select("doc_id", "entity_id")
         .distinct()
     )
@@ -935,9 +859,7 @@ def entity_communities(spark, sf_dir):
     rounds, most-frequent neighbor label, min-label tie-break) — the
     community-detection companion to entity_pagerank; round count is
     part of the operator definition, identical on both engines."""
-    m, labels = _labels(spark, sf_dir)
-    members = _members(spark, sf_dir)
-    nodes = members.select("entity_id").distinct()
+    nodes = run_pipeline_cached(spark, sf_dir).comps.select("entity_id")
     return cc_mod.label_propagation(
         _coocc_edges(spark, sf_dir), nodes, n_iter=4, node_col="entity_id"
     )
@@ -949,7 +871,6 @@ def kg_bgp_match(spark, sf_dir):
     {?e rdf:type ex:Commerce . ?e rdfs:label ?l . ?e ex:score ?n}
     compiled to filtered scans + equi-joins on the shared variable."""
     from .bgp import bgp_match
-    from .pipeline import run_pipeline_cached
 
     t = run_pipeline_cached(spark, sf_dir).triples
     return bgp_match(
@@ -968,7 +889,6 @@ def kg_bgp_optional(spark, sf_dir):
     short to carry a media span bind NULL (left-join semantics).
     {?d dc:language ?lang . OPTIONAL {?d ex:hasMedia ?media}}"""
     from .bgp import bgp_match
-    from .pipeline import run_pipeline_cached
 
     t = run_pipeline_cached(spark, sf_dir).triples
     return bgp_match(
@@ -984,12 +904,12 @@ def kg_entity_media(spark, sf_dir):
     kinds map through broadcast rule tables, one priority window per
     entity picks the winners; NULL media for entities whose documents
     carry no media span."""
-    m, labels = _labels(spark, sf_dir)
+    p = run_pipeline_cached(spark, sf_dir)
     media = fixtures.media_spans_direct(spark, sf_dir).select(
         "doc_id", "media_ref"
     ).distinct()
     return gen.entity_media(
-        m, labels, flat=None, members=_members(spark, sf_dir), media=media
+        p.mentions, p.labels, flat=None, members=p.comps, media=media
     )
 
 
@@ -1021,7 +941,6 @@ def kg_bgp_filter(spark, sf_dir):
     are plain column predicates, so Catalyst pushes each into the one
     pattern scan that binds its variable (plan-gated)."""
     from .bgp import bgp_match
-    from .pipeline import run_pipeline_cached
 
     t = run_pipeline_cached(spark, sf_dir).triples
     return bgp_match(
@@ -1042,7 +961,6 @@ def kg_bgp_union(spark, sf_dir):
     languages — branches bind DISJOINT variables, exercising the
     NULL-padding of the solution-mapping union (bag semantics)."""
     from .bgp import bgp_union
-    from .pipeline import run_pipeline_cached
 
     t = run_pipeline_cached(spark, sf_dir).triples
     return bgp_union(
@@ -1064,7 +982,6 @@ def kg_sameas_closure(spark, sf_dir):
     FILTER(?x < ?y) halves the symmetric output and drops the
     cycle-induced self-pairs."""
     from .bgp import bgp_match
-    from .pipeline import run_pipeline_cached
 
     t = run_pipeline_cached(spark, sf_dir).triples
     return bgp_match(
@@ -1082,7 +999,6 @@ def kg_sparql_topk(spark, sf_dir):
     as TakeOrdered (per-partition top-k, no global sort); the ORDER BY
     key (?n DESC, ?l, ?e) is a total order so the LIMIT cut is
     deterministic on both engines."""
-    from .pipeline import run_pipeline_cached
     from .sparql import sparql_select
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -1104,7 +1020,6 @@ def kg_sparql_construct(spark, sf_dir):
     entities under a summary vocabulary.  Output is a GRAPH (distinct
     s,p,o); one solution-set scan per template pattern, unioned —
     no joins beyond the WHERE group's own."""
-    from .pipeline import run_pipeline_cached
     from .sparql import sparql_construct
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -1126,7 +1041,6 @@ def kg_sparql_groupby(spark, sf_dir):
     count + integer-exact score sum.  Plans as partial+final hash
     aggregate around one shuffle on the class variable (map-side
     combine); SUM casts to BIGINT so both engines aggregate exactly."""
-    from .pipeline import run_pipeline_cached
     from .sparql import sparql_select
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -1150,7 +1064,6 @@ def kg_sameas_degree(spark, sf_dir):
     171.6 M pairs while this degree view is 28.6 k rows — THE
     scale-correct form of a closure query feeding an aggregate."""
     from .bgp import symmetric_closure_pairs  # noqa: F401 (same relation)
-    from .pipeline import run_pipeline_cached
     from . import cc as cc_mod
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -1205,8 +1118,6 @@ def kg_sparql_graph(spark, sf_dir):
 
 
 def kg_predicate_counts(spark, sf_dir):
-    from .pipeline import run_pipeline_cached
-
     return run_pipeline_cached(spark, sf_dir).triples.groupBy("p").agg(
         F.count("*").alias("n")
     )
@@ -1469,7 +1380,6 @@ def kg_sparql_path_seq(spark, sf_dir):
     intermediate nodes (the spec's fresh-variable translation,
     bgp._path_frame) with the inverse step a free column swap;
     constants stay pushed down, no closure materialization involved."""
-    from .pipeline import run_pipeline_cached
     from .sparql import sparql_select
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -1488,7 +1398,6 @@ def kg_sparql_path_star(spark, sf_dir):
     (bgp._step_frame); the DuckDB oracle re-derives it with a recursive
     CTE ∪ identity.  Closure materialization rides under the
     MAX_CLOSURE_PAIRS guard."""
-    from .pipeline import run_pipeline_cached
     from .sparql import sparql_select
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -1510,7 +1419,6 @@ def kg_sparql_subquery(spark, sf_dir):
     The subquery aggregates once (partial+final hash aggregate), joins
     back on the shared ?t variable, and the outer FILTER references the
     subquery-bound count."""
-    from .pipeline import run_pipeline_cached
     from .sparql import sparql_select
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -1530,7 +1438,6 @@ def kg_sparql_union_nested(spark, sf_dir):
     """SPARQL nested-group UNION (r5): ``{ {A} UNION {B} . pattern }``
     — the union INSIDE a group, joined against a further pattern on the
     shared variable (round-4 parser only allowed top-level UNION)."""
-    from .pipeline import run_pipeline_cached
     from .sparql import sparql_select
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -1552,7 +1459,6 @@ def kg_sparql_avg(spark, sf_dir):
     engines, so the IEEE-754 quotient is bit-identical; the registry
     surface bridges it to floor(1e6·x) BIGINT like every float
     output."""
-    from .pipeline import run_pipeline_cached
     from .sparql import sparql_select
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -1579,7 +1485,6 @@ def rdf_turtle_doc_roundtrip(spark, sf_dir):
     Grouping is collect_list per shard — bounded by shard count, all
     distributed."""
     from . import rdfio
-    from .pipeline import run_pipeline_cached
 
     t = run_pipeline_cached(spark, sf_dir).triples_full
     header = "".join(
@@ -1604,7 +1509,6 @@ def rdf_jsonld_expanded_roundtrip(spark, sf_dir):
     the expanded-document parser.  Lossless ⇒ equals the triple
     oracle."""
     from . import rdfio
-    from .pipeline import run_pipeline_cached
 
     t = run_pipeline_cached(spark, sf_dir).triples_full
     docs = (
@@ -1627,7 +1531,6 @@ def kg_sparql_optional_filter(spark, sf_dir):
     binding with NULL, they are not removed), then COALESCE defaults
     the unbound variable.  Exercises full group bodies inside OPTIONAL
     plus BOUND/COALESCE at the driver gate."""
-    from .pipeline import run_pipeline_cached
     from .sparql import sparql_select
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -1650,7 +1553,6 @@ def kg_sparql_group_concat(spark, sf_dir):
     before joining (the spec leaves order open; sorting makes it
     engine-deterministic, matched by the oracle's ORDER BY inside
     string_agg); SAMPLE = MIN, a valid arbitrary-value choice."""
-    from .pipeline import run_pipeline_cached
     from .sparql import sparql_select
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -1690,9 +1592,7 @@ def entity_pagerank(spark, sf_dir, n_iter: int = 5):
     the same 5 iterations as CTEs).  Scale shape: each iteration is
     one edge join + one map-side-combined aggregate — O(E) per round,
     the same plan family as the CC loop."""
-    m, labels = _labels(spark, sf_dir)
-    members = _members(spark, sf_dir)
-    nodes = members.select("entity_id").distinct()
+    nodes = run_pipeline_cached(spark, sf_dir).comps.select("entity_id")
     return cc_mod.pagerank_int(
         _coocc_edges(spark, sf_dir), nodes, n_iter=n_iter, node_col="entity_id"
     ).withColumnRenamed("node", "entity_id")
@@ -1977,7 +1877,6 @@ def rdf_jsonld_compacted_roundtrip(spark, sf_dir):
     and re-parsed with full context expansion.  Lossless ⇒ equals the
     triple oracle."""
     from . import rdfio
-    from .pipeline import run_pipeline_cached
 
     t = run_pipeline_cached(spark, sf_dir).triples_full
     ctx = rdfio.jsonld_context_json()
@@ -2001,7 +1900,6 @@ def kg_sparql_select_expr(spark, sf_dir):
     keys through the text front-end — label lengths and a score
     arithmetic column, longest-label-first with a total tie-break so
     the LIMIT cut is engine-deterministic."""
-    from .pipeline import run_pipeline_cached
     from .sparql import sparql_select
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -2024,7 +1922,6 @@ def kg_sparql_optional_exists(spark, sf_dir):
     plain equi-semi-join used to silently drop them.  Bound ?l rows
     survive iff that exact label occurs (trivially true), keeping both
     row shapes in the result."""
-    from .pipeline import run_pipeline_cached
     from .sparql import sparql_select
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -2046,7 +1943,6 @@ def kg_sparql_builtins(spark, sf_dir):
     STRLEN, MD5, ABS and FLOOR over xsd:integer casts.  ORDER BY
     (?e, ?l, score) is total over the distinct triple rows, so the
     LIMIT cut is engine-deterministic."""
-    from .pipeline import run_pipeline_cached
     from .sparql import sparql_select
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -2088,7 +1984,6 @@ def kg_sparql_construct_where(spark, sf_dir):
     """Round-6: the CONSTRUCT WHERE { … } shorthand (SPARQL 1.1
     §10.2.2) — the BGP is its own template; result is the distinct
     (s, p, o) union of both pattern instantiations."""
-    from .pipeline import run_pipeline_cached
     from .sparql import sparql_construct
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -2208,9 +2103,7 @@ def entity_hops(spark, sf_dir):
     pagerank/k-core/LPA (cc.bfs_hops: frontier semi-join + settled
     anti-join per round; the DuckDB oracle unrolls the same 4
     rounds, so horizon truncation is identical)."""
-    m, labels = _labels(spark, sf_dir)
-    members = _members(spark, sf_dir)
-    nodes = members.select("entity_id").distinct()
+    nodes = run_pipeline_cached(spark, sf_dir).comps.select("entity_id")
     seeds = nodes.filter(
         F.substring("entity_id", 13, 1).isin("0", "1")
     )
@@ -2743,7 +2636,6 @@ def kg_sparql_ask(spark, sf_dir):
     compiling to limit(1) + count > 0 (the scan stops at the first
     match; no full-table aggregate).  Booleans are cast to int for the
     cross-engine hash."""
-    from .pipeline import run_pipeline_cached
     from .sparql import sparql_ask
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -2769,7 +2661,6 @@ def kg_sparql_describe(spark, sf_dir):
     matched by the WHERE group — the solution set's distinct subjects
     semi-joined back against the triple frame (one shuffle, no
     collect)."""
-    from .pipeline import run_pipeline_cached
     from .sparql import sparql_describe
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -3479,12 +3370,9 @@ def entity_ppr(spark, sf_dir, n_iter: int = 4):
     RNG).  Scores in µ-units with integer damping 17/20 and teleport
     mass returning only to seeds (cc.ppr_int); 4 unrolled iterations
     mirrored as CTEs in the DuckDB oracle.  O(E) per round."""
-    m, labels = _labels(spark, sf_dir)
-    members = _members(spark, sf_dir)
     pfx = len(G.ENTITY_IRI_PREFIX)
     nodes = (
-        members.select("entity_id")
-        .distinct()
+        run_pipeline_cached(spark, sf_dir).comps.select("entity_id")
         .withColumn(
             "is_seed",
             F.expr(f"ascii(substr(entity_id, {pfx + 1}, 1)) % 4 = 0"),
@@ -3771,7 +3659,6 @@ def kg_sparql_values(spark, sf_dir):
     send (bind the class list, aggregate per class).  VALUES joins as
     a broadcast-able inline frame; MIN/MAX are exact on the integer
     scores."""
-    from .pipeline import run_pipeline_cached
     from .sparql import sparql_select
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -3974,7 +3861,6 @@ def kg_sparql_path_nps(spark, sf_dir):
     predicate-exclusion filter on the forward scan (no closure, no
     join beyond the type restriction) — a filter-pushdown plan at any
     store size."""
-    from .pipeline import run_pipeline_cached
     from .sparql import sparql_select
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -4421,11 +4307,10 @@ def kg_entity_provenance(spark, sf_dir):
     one join to the per-label entity ids, then a single groupBy on
     entity_id — all linear in mention count; the distinct-doc/source
     counts are per-group aggregates, never a global distinct."""
-    m, labels = _labels(spark, sf_dir)
-    members = _members(spark, sf_dir)
-    eids = members.select("label", "entity_id").distinct()
+    p = run_pipeline_cached(spark, sf_dir)
+    eids = p.comps.select("label", "entity_id")
     mm = (
-        m.join(labels.withColumnRenamed("node", "norm_text"), "norm_text")
+        p.mentions.join(p.labels.withColumnRenamed("node", "norm_text"), "norm_text")
         .withColumnRenamed("label", "root")
         .join(eids.withColumnRenamed("label", "root"), "root")
     )
@@ -4487,8 +4372,6 @@ def kg_void_summary(spark, sf_dir):
     COUNT(DISTINCT ...) columns are a single expand-aggregate (Spark
     plans multi-distinct via expand, still one shuffle); no driver
     iteration."""
-    from .pipeline import run_pipeline_cached
-
     t = run_pipeline_cached(spark, sf_dir).triples
     return t.agg(
         F.count("*").cast("bigint").alias("n_triples"),
@@ -4519,8 +4402,6 @@ def kg_graph_hash(spark, sf_dir):
     Scale shape: one distinct + one aggregate, both keyed by g; the
     combine is associative so map-side partials apply.  No arrays, no
     driver iteration."""
-    from .pipeline import run_pipeline_cached
-
     q = run_pipeline_cached(spark, sf_dir).quads
     canon = (
         "concat_ws('|', g, s, p, o, o_kind,"
@@ -4888,7 +4769,6 @@ def kg_component_size_hist(spark, sf_dir):
     bitlen(component size), so bucket k holds sizes in [2^(k-1), 2^k);
     emits component and node counts per bucket.  Linear: one CC label
     aggregate + one bucket aggregate, nothing pairwise."""
-    from .pipeline import run_pipeline_cached
     from . import cc as cc_mod
 
     t = run_pipeline_cached(spark, sf_dir).triples
@@ -5324,12 +5204,10 @@ def kg_attr_coverage(spark, sf_dir):
     (dropping coverage on a predicate flags an upstream rule or
     extraction regression).  Linear: one aggregate over the property
     index + the (1-row) entity count broadcast."""
-    m, labels = _labels(spark, sf_dir)
-    props = gen.entity_props(m, labels)
+    p = run_pipeline_cached(spark, sf_dir)
+    props = p.entity_props
     n_entities = (
-        gen.entity_membership(m, labels)
-        .select("entity_id")
-        .distinct()
+        p.comps
         .agg(F.count("*").cast("bigint").alias("n_entities"))
     )
     per_pred = props.groupBy("pred").agg(
@@ -5389,8 +5267,7 @@ def kg_label_collisions(spark, sf_dir):
     actionable readout is the near-name group feeding a human
     disambiguation queue).  One aggregate over the attrs index,
     collision groups only."""
-    m, labels = _labels(spark, sf_dir)
-    attrs = gen.entity_attrs_df(m, labels)
+    attrs = run_pipeline_cached(spark, sf_dir).entity_attrs
     return (
         attrs.select(
             F.expr("substring(label, 1, 4)").alias("label_prefix"),

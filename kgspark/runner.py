@@ -1,15 +1,20 @@
-"""Stage-DAG runner: the twined main loop + workflow chain analogue
-(SURVEY.md §3.1; ``libtwine/workflow.c``, ``twined`` daemon `[U~]`),
-re-expressed as checkpointed DataFrame stages over the catalog.
+"""Catalog executor of the stage table: the twined main loop + workflow
+chain analogue (SURVEY.md §3.1; ``libtwine/workflow.c``, ``twined``
+daemon `[U~]`).  ``run_all`` runs ``pipeline.STAGES`` — the same table
+``pipeline.run_pipeline`` runs in memory — storing each stage as a
+catalog table:
 
-    documents ──(bucket by pmod(xxhash64(doc_id), P))──► spans
-       spans ──► mentions, media_features, base_triples      [per-bucket]
-       mentions ──► edges ──► labels ──► entities/attrs/
-                                          proxy+final triples [global]
+* per-document stages (spans, mentions, media_features, base_triples)
+  run over the documents bucketed by pmod(xxhash64(doc_id), P) and
+  resume idempotently per bucket (``checkpoint.run_bucketed_stage``);
+  base_triples reads the pending buckets' slice of the mentions table;
+* global stages (edges … triples) resume per stage when the mixed
+  fingerprint of the per-document stages and sources they read is
+  unchanged;
+* plan stages (comps, quads) are never stored: a global stage served
+  from its checkpoint never runs them.
 
-Per-bucket stages resume idempotently at bucket granularity; global
-stages at stage granularity (fingerprint of their input).  Lineage +
-counts go to the ``_checkpoint`` table (checkpoint.py).
+Lineage + counts go to the ``_checkpoint`` table (checkpoint.py).
 
 Deployment: on a real cluster this module is the ``spark-submit``
 entry point —
@@ -26,16 +31,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import cc as cc_mod
 from . import checkpoint as CP
-from . import extract, fixtures, link
-from . import generate as gen
+from . import pipeline as P
 from .catalog import ParquetCatalog, with_bucket
 
 
-def _global_fingerprint(df: DataFrame, cols: list[str]) -> tuple[int, int]:
-    """(order-insensitive xor of row hashes, row count) — BOTH matched
-    at resume so even-duplicate xor cancellation can't fake 'complete'."""
+def _global_fingerprint(df: DataFrame) -> tuple[int, int]:
+    """(order-insensitive xor of row hashes over every column but the
+    bucket, row count) — BOTH matched at resume so even-duplicate xor
+    cancellation can't fake 'complete'."""
+    cols = [c for c in df.columns if c != "bucket"]
     row = df.select(
         F.bit_xor(F.xxhash64(*cols)).alias("fp"), F.count("*").alias("n")
     ).collect()[0]
@@ -63,12 +68,11 @@ def _run_global_stage(
     input_fp: int,
     input_rows: int,
     compute,
-    out_table: str,
 ) -> DataFrame:
-    """Stage-granular resume for non-bucketed (graph-global) stages.
-    Resume requires a complete checkpoint matching BOTH the input
-    fingerprint and the input row count (same guard the bucketed path
-    has)."""
+    """Stage-granular resume for a graph-global stage, stored in the
+    table named after it.  Resume requires a complete checkpoint
+    matching BOTH the input fingerprint and the input row count (same
+    guard the bucketed path has)."""
     cp = CP.read_checkpoints(spark, cat)
     if cp is not None:
         done = (
@@ -81,16 +85,27 @@ def _run_global_stage(
             )
             .count()
         )
-        if done and cat.exists(out_table):
-            return cat.read(spark, out_table)
-    out = compute()
-    cat.write(out, out_table)
-    out = cat.read(spark, out_table)
+        if done and cat.exists(stage):
+            return cat.read(spark, stage)
+    cat.write(compute(), stage)
+    out = cat.read(spark, stage)
     fps = spark.createDataFrame(
         [(-1, input_fp, input_rows)],
         "bucket int, input_fingerprint long, row_count long",
     )
     CP.write_checkpoint_rows(cat, stage, fps)
+    return out
+
+
+def _fingerprint_inputs(name: str) -> list[str]:
+    """The per-document stages and sources a global stage reads,
+    directly or through other global stages — the inputs whose changes
+    must invalidate its checkpoint (embeddings reach every stage from
+    edges on; spans reach entity_media; base_triples reach triples)."""
+    out: list[str] = []
+    for i in P.STAGES[name].inputs:
+        deep = i in P.STAGES and P.STAGES[i].scope != "doc"
+        out += [x for x in (_fingerprint_inputs(i) if deep else [i]) if x not in out]
     return out
 
 
@@ -101,125 +116,48 @@ def run_all(
     n_buckets: int = 32,
     fail_buckets_in: dict[str, set[int]] | None = None,
 ) -> dict[str, DataFrame]:
-    """Run (or resume) the full pipeline, materializing every stage
-    output under ``warehouse``.  ``fail_buckets_in`` maps stage name →
-    buckets to crash on (test hook)."""
+    """Run (or resume) the stage table (``pipeline.STAGES``), storing
+    every per-document and global stage under ``warehouse``.
+    ``fail_buckets_in`` maps stage name → buckets to crash on (test
+    hook)."""
     fail = fail_buckets_in or {}
     cat = ParquetCatalog(warehouse, n_buckets)
+    fps: dict[str, tuple[int, int]] = {}
+
+    def fingerprint(name: str) -> tuple[int, int]:
+        if name not in fps:
+            fps[name] = _global_fingerprint(get(name))
+        return fps[name]
+
+    def build(name, stage, inputs):
+        if stage.scope == "plan":
+            return stage.fn(*inputs())
+        if stage.scope == "doc":
+            # the first input is the fingerprinted one; later inputs are
+            # per-document stages sliced to the same pending buckets
+            first, *rest = stage.inputs
+            return CP.run_bucketed_stage(
+                spark, cat, name, get(first),
+                lambda d, *side: with_bucket(stage.fn(d, *side), n_buckets),
+                name, count_as_triples=name == "base_triples",
+                fail_buckets=fail.get(name), side_inputs=tuple(map(get, rest)),
+            )
+        ins = [fingerprint(i) for i in _fingerprint_inputs(name) if get(i) is not None]
+        return _run_global_stage(
+            spark, cat, name, _mix_fps(*(v for fp in ins for v in fp)),
+            sum(n for _, n in ins), lambda: stage.fn(*inputs()),
+        )
 
     docs = with_bucket(
         spark.read.parquet(f"{sf_dir}/documents.parquet"), n_buckets
     ).repartition(n_buckets, "bucket")
-
-    flat = CP.run_bucketed_stage(
-        spark, cat, "spans", docs,
-        lambda d: with_bucket(
-            fixtures.flat_spans(fixtures.with_spans(d)), n_buckets
-        ),
-        "spans", fail_buckets=fail.get("spans"),
+    get = P.resolver(
+        {"documents": docs,
+         "embeddings": spark.read.parquet(f"{sf_dir}/embeddings.parquet"),
+         "extra_triples": None},
+        build,
     )
-
-    mentions = CP.run_bucketed_stage(
-        spark, cat, "mentions", flat,
-        lambda d: with_bucket(extract.mentions_df(d), n_buckets),
-        "mentions", fail_buckets=fail.get("mentions"),
-    )
-
-    media = CP.run_bucketed_stage(
-        spark, cat, "media_features", flat,
-        lambda d: with_bucket(extract.media_features_df(d), n_buckets),
-        "media_features", fail_buckets=fail.get("media_features"),
-    )
-
-    # per-doc keyed quads: every output row's bucket IS its originating
-    # doc's bucket (base_quads keeps doc_id), so per-bucket resume
-    # overwrites exactly the pending buckets' partitions — a triple's
-    # graph g = doc://<id> makes this the O6 per-graph replace too
-    base_triples = CP.run_bucketed_stage(
-        spark, cat, "base_triples", flat,
-        lambda d: with_bucket(extract.base_quads(d, extract.mentions_df(d)), n_buckets),
-        "base_triples", count_as_triples=True,
-        fail_buckets=fail.get("base_triples"),
-    )
-
-    # --- global (graph-wide) stages -----------------------------------------
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    m_fp, m_n = _global_fingerprint(
-        mentions, ["doc_id", "span_pos", "mention_ord", "mention_iri"]
-    )
-    # edges/labels/entities/attrs all derive from mentions AND the
-    # embedding table (via link scoring) — embedding changes must
-    # invalidate them (they'd otherwise serve stale from checkpoint)
-    e_fp, e_n = _global_fingerprint(emb, ["vec_id", "label", "embedding"])
-    me_fp, me_n = _mix_fps(m_fp, m_n, e_fp, e_n), m_n + e_n
-
-    edges = _run_global_stage(
-        spark, cat, "edges", me_fp, me_n,
-        lambda: link.scored_edges(mentions, emb), "edges",
-    )
-
-    labels = _run_global_stage(
-        spark, cat, "labels", me_fp, me_n,
-        lambda: cc_mod.connected_components(
-            edges, mentions.select(F.col("norm_text").alias("node")).distinct()
-        ),
-        "labels",
-    )
-
-    # one aggregation per component feeds the entities, entity_attrs
-    # and triples stages; it stays a plan, so a stage served from its
-    # checkpoint never runs it
-    comps = gen.entity_components(mentions, labels)
-    entities = _run_global_stage(
-        spark, cat, "entities", me_fp, me_n,
-        lambda: gen.entities_df(mentions, labels, comps=comps), "entities",
-    )
-    attrs = _run_global_stage(
-        spark, cat, "entity_attrs", me_fp, me_n,
-        lambda: gen.entity_attrs_df(mentions, labels, comps=comps), "entity_attrs",
-    )
-    # D7 full-form property index (spindle writes its index tables; the
-    # multi-predicate props are part of the materialized catalog)
-    props = _run_global_stage(
-        spark, cat, "entity_props", me_fp, me_n,
-        lambda: gen.entity_props(mentions, labels), "entity_props",
-    )
-    # license/media selection index (spindle license.c/media.c) — also
-    # depends on the span table (media spans feed the candidates)
-    s_fp, s_n = _global_fingerprint(flat, ["doc_id", "span_pos", "media_ref"])
-    media_idx = _run_global_stage(
-        spark, cat, "entity_media", _mix_fps(me_fp, me_n, s_fp, s_n),
-        me_n + s_n,
-        lambda: gen.entity_media(mentions, labels, flat), "entity_media",
-    )
-    # final triples additionally depend on the base-quad table (media/
-    # lang triples come from spans, not mentions)
-    b_fp, b_n = _global_fingerprint(base_triples, ["g", "s", "p", "o"])
-    triples = _run_global_stage(
-        spark, cat, "triples", _mix_fps(me_fp, me_n, b_fp, b_n), me_n + b_n,
-        lambda: extract_final_triples(base_triples, mentions, labels, comps=comps),
-        "triples",
-    )
-
-    return {
-        "spans": flat, "mentions": mentions, "media_features": media,
-        "base_triples": base_triples, "edges": edges, "labels": labels,
-        "entities": entities, "entity_attrs": attrs, "entity_props": props,
-        "entity_media": media_idx, "triples": triples,
-    }
-
-
-def extract_final_triples(base_quads, mentions, labels, comps=None):
-    """Distinct full-term union of per-doc extraction quads + root-graph
-    proxy triples (the store's graph-agnostic view); ``comps`` shares one
-    ``generate.entity_components`` frame."""
-    cols = ["s", "p", "o", "o_kind", "o_lang", "o_datatype"]
-    proxies = gen.proxy_triples_full(mentions, labels, comps=comps)
-    return (
-        base_quads.select(*cols)
-        .unionByName(proxies.select(*cols))
-        .dropDuplicates(cols)
-    )
+    return {name: get(name) for name, st in P.STAGES.items() if st.scope != "plan"}
 
 
 def main() -> None:  # pragma: no cover — cluster entry point

@@ -1,10 +1,11 @@
 """SparkSession factory with the engine's standard configuration.
 
 Replaces Twine's daemon bootstrap (twined `twine.conf` parsing `[U~]`,
-SURVEY.md §3.1).  Local-mode defaults are sized for the sandbox
-(local[32], 128 GiB); on a real cluster the same builder is used via
-``spark-submit --py-files`` with master/executor conf supplied
-externally (see runner.py docstring).
+SURVEY.md §3.1).  The local-mode default comes from the machine:
+``local[os.cpu_count()]`` (``KGSPARK_MASTER`` overrides it), with one
+shuffle partition per core and at least 8; on a real cluster the same
+builder is used via ``spark-submit --py-files`` with master/executor
+conf supplied externally (see runner.py docstring).
 """
 
 from __future__ import annotations
@@ -33,12 +34,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("KGSPARK_MASTER", "local[32]")
-    cores = 32
-    if master.startswith("local["):
-        spec = master[6:-1]
-        if spec.isdigit():
-            cores = int(spec)
+    master = master or os.environ.get("KGSPARK_MASTER", f"local[{os.cpu_count()}]")
+    spec = master[6:-1] if master.startswith("local[") else ""
+    cores = int(spec) if spec.isdigit() else os.cpu_count() or 1
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     extra = dict(extra_conf or {})

@@ -14,6 +14,7 @@ spark_rows, oracle_rows, err}) — the committed full-replica artifact
 
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -50,7 +51,8 @@ def main() -> int:
     import __spark_entry__ as E
     from kgspark.session import get_spark
 
-    spark = get_spark(master="local[8]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
+    spark = get_spark(master=f"local[{cpus}]")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS FROM '{sf_dir}/{t}.parquet'")

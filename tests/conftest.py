@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -15,7 +16,8 @@ SF_SMOKE = "/root/testdata/sf0.001"
 def spark():
     from kgspark.session import get_spark
 
-    s = get_spark(app_name="kgspark-tests", master="local[8]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
+    s = get_spark(app_name="kgspark-tests", master=f"local[{cpus}]")
     yield s
 
 

@@ -185,3 +185,24 @@ def test_entity_media_stage_materialized_and_correct(spark, sf_dir, clean_run):
     )
     want = {tuple(r) for r in gen.entity_media(m, labels, flat).collect()}
     assert got == want and got
+
+
+def test_catalog_executor_matches_in_memory(spark, sf_dir, clean_run):
+    """The two executors of the one stage table agree: every global
+    stage ``run_all`` stores equals, as a row set, the in-memory stage
+    of the same name (the catalog's ``triples`` table is the full-term
+    view, the in-memory ``triples_full``)."""
+    from kgspark.pipeline import run_pipeline
+
+    _, _, out = clean_run
+    mem = run_pipeline(spark, sf_dir)
+
+    def rows(df):
+        cols = sorted(c for c in df.columns if c != "bucket")
+        return set(map(tuple, df.select(*cols).collect()))
+
+    for name in ["edges", "labels", "entities", "entity_attrs", "entity_props",
+                 "entity_media"]:
+        got = rows(out[name])
+        assert got and got == rows(getattr(mem, name)), name
+    assert rows(out["triples"]) == rows(mem.triples_full)

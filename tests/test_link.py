@@ -65,7 +65,7 @@ def test_explicit_sameas_merges_components(spark, sf_dir):
     when unioned into the edge set ahead of CC."""
     from kgspark.pipeline import run_pipeline
 
-    base = run_pipeline(spark, sf_dir, materialize=False)
+    base = run_pipeline(spark, sf_dir)
     labels = {r["node"]: r["label"] for r in base.labels.collect()}
     norm2iri = {}
     for r in base.mentions.select("norm_text", "mention_iri").distinct().collect():
@@ -80,7 +80,7 @@ def test_explicit_sameas_merges_components(spark, sf_dir):
     extra = spark.createDataFrame(
         [(norm2iri[na], "owl:sameAs", norm2iri[nb])], "s string, p string, o string"
     )
-    merged = run_pipeline(spark, sf_dir, materialize=False, extra_triples=extra)
+    merged = run_pipeline(spark, sf_dir, extra_triples=extra)
     ml = {r["node"]: r["label"] for r in merged.labels.collect()}
     assert ml[na] == ml[nb], "sameAs-bridged components must merge"
     assert len(set(ml.values())) == len(set(labels.values())) - 1, (

@@ -20,8 +20,8 @@ FAST = [
     "lineitem_except_all", "distinct_segments", "events_isin_counts",
     "events_json_k", "best_order_per_customer", "event_type_stats",
     "latest_event_per_user", "norm_iri_demo",
-    # round-4 additions (pipeline-derived ones amortize the memoized
-    # _labels/run_pipeline_cached chain)
+    # round-4 additions (pipeline-derived ones read the stages of the
+    # one memoized run_pipeline_cached pipeline)
     "event_value_percentiles", "event_value_pivot", "distinct_kmv_sketch",
     "kg_entity_media", "kg_media_triples", "kg_bgp_filter", "kg_bgp_union", "kg_sameas_closure", "kg_sameas_degree",
     "kg_sparql_topk", "kg_sparql_construct", "kg_sparql_groupby", "kg_sparql_lang", "kg_sparql_graph",

@@ -1,5 +1,6 @@
 """Session configuration: a caller's optimizer-rule exclusions are
-merged with the built-in one instead of replacing it."""
+merged with the built-in one instead of replacing it, and the default
+master is sized from the machine."""
 
 from __future__ import annotations
 
@@ -16,9 +17,9 @@ def test_excluded_rules_merge():
     assert merged.split(",") == [infer, "a.RuleOne", "b.RuleTwo"]
 
 
-def test_get_spark_keeps_builtin_exclusion(monkeypatch):
-    """A caller's ``excludedRules`` reaches the builder merged; the
-    builder is stopped before it touches the running session."""
+def _builder_options(monkeypatch, **kw) -> dict:
+    """The options ``get_spark(**kw)`` hands the builder; the builder
+    is stopped before it touches the running session."""
     seen = {}
 
     class Stop(Exception):
@@ -30,7 +31,29 @@ def test_get_spark_keeps_builtin_exclusion(monkeypatch):
 
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
     with pytest.raises(Stop):
-        S.get_spark(extra_conf={S.EXCLUDED_RULES: "a.RuleOne",
-                                "spark.sql.shuffle.partitions": "3"})
+        S.get_spark(**kw)
+    return seen
+
+
+def test_get_spark_keeps_builtin_exclusion(monkeypatch):
+    """A caller's ``excludedRules`` reaches the builder merged."""
+    seen = _builder_options(
+        monkeypatch, extra_conf={S.EXCLUDED_RULES: "a.RuleOne",
+                                 "spark.sql.shuffle.partitions": "3"})
     assert seen[S.EXCLUDED_RULES] == f"{S.INFER_FILTERS_FROM_GENERATE},a.RuleOne"
     assert seen["spark.sql.shuffle.partitions"] == "3"
+
+
+@pytest.mark.parametrize("cpus, partitions", [(12, "12"), (2, "8")])
+def test_default_master_from_cpu_count(monkeypatch, cpus, partitions):
+    """Without a master or ``KGSPARK_MASTER``, the session runs on every
+    core the machine reports, one shuffle partition per core (at least
+    8); the environment variable still overrides the default."""
+    monkeypatch.delenv("KGSPARK_MASTER", raising=False)
+    monkeypatch.setattr(S.os, "cpu_count", lambda: cpus)
+    seen = _builder_options(monkeypatch)
+    assert seen["spark.master"] == f"local[{cpus}]"
+    assert seen["spark.sql.shuffle.partitions"] == partitions
+
+    monkeypatch.setenv("KGSPARK_MASTER", "local[5]")
+    assert _builder_options(monkeypatch)["spark.master"] == "local[5]"
