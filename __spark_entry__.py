@@ -9,7 +9,7 @@ Implementation lives in the ``kgspark`` package; this module is the
 thin binding.  Column names/types are aligned pairwise between each
 Spark builder (kgspark/queries.py) and its DuckDB SQL
 (kgspark/oracle_sql.py); floats are emitted as floor(1e6*x) BIGINT on
-both sides, timestamps as unix micros.
+both sides.
 """
 
 from __future__ import annotations
@@ -90,15 +90,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_sparql_load": Q.kg_sparql_load,            # LOAD file-ingest verb (r6)
         "kg_sparql_from": Q.kg_sparql_from,            # FROM/FROM NAMED dataset (r6)
         "kg_media_features": Q.kg_media_features,   # O3 multimodal stub
-        # relational operator coverage (SURVEY.md §2 oracle sketches)
-        "tpch_q1": Q.tpch_q1,                                       # O26 agg
-        "revenue_by_nation": Q.revenue_by_nation,                   # O19 join
-        "customers_without_orders": Q.customers_without_orders,     # O23 anti
-        "order_priorities_with_lineitems": Q.order_priorities_with_lineitems,  # O23 semi
-        "top2_lineitems_per_order": Q.top2_lineitems_per_order,     # O28 window
-        "tpch_q3_topk": Q.tpch_q3_topk,                             # 3-way join + topk
-        "tpch_q5": Q.tpch_q5,                                       # 6-table star join (r6c)
-        "scd2_user_state": Q.scd2_user_state,                       # SCD-2 CDC history (r6e)
+        # store maintenance, KG quality metrics and corpus layout (r6e)
         "dedup_winnow_pairs": Q.dedup_winnow_pairs,                 # MOSS winnowing pairs (r6e)
         "kg_store_merge": Q.kg_store_merge,                         # CDC MERGE upsert into store (r6e)
         "kg_store_diff": Q.kg_store_diff,                           # anti-entropy replica diff (r6e)
@@ -106,51 +98,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_void_summary": Q.kg_void_summary,                       # VoID dataset stats (r6e)
         "kg_graph_hash": Q.kg_graph_hash,                           # canonical graph hash (r6e)
         "kg_component_size_hist": Q.kg_component_size_hist,         # CC size distribution (r6e)
-        "event_ewma": Q.event_ewma,                                 # 8-tap integer EWMA (r6e)
-        "event_trending_daily": Q.event_trending_daily,             # per-day trending top-k (r6e)
-        "event_value_pctrank": Q.event_value_pctrank,               # integer percent_rank (r6e)
-        "user_event_diversity": Q.user_event_diversity,             # bitlen entropy feature (r6e)
         "embedding_dim_stats": Q.embedding_dim_stats,               # per-dim standardization stats (r6e)
-        "event_hourly_seasonality": Q.event_hourly_seasonality,     # hour-of-day profile (r6e)
         "kg_attr_coverage": Q.kg_attr_coverage,                     # KG completeness metric (r6e)
         "kg_label_collisions": Q.kg_label_collisions,               # label ambiguity metric (r6e)
         "doc_prefix_dup_groups": Q.doc_prefix_dup_groups,           # truncation-dup detector (r6e)
-        "orders_monthly_growth": Q.orders_monthly_growth,           # MoM growth, sign-split DIV (r6e)
-        "tpch_q4": Q.tpch_q4,                                       # EXISTS semi-join Q4 (r6e)
-        "tpch_q14": Q.tpch_q14,                                     # promo share, pushed month filter (r6e)
-        "tpch_q19": Q.tpch_q19,                                     # OR-of-conjunctions join (r6e)
-        "nation_coverage_full_join": Q.nation_coverage_full_join,   # FULL OUTER shape (r6e)
-        "orders_above_avg": Q.orders_above_avg,                     # scalar-subquery shape (r6e)
-        "event_stats_unpivot": Q.event_stats_unpivot,               # UNPIVOT/melt shape (r6e)
-        "part_price_quartiles": Q.part_price_quartiles,             # NTILE window shape (r6e)
-        "priority_revenue_share": Q.priority_revenue_share,         # ratio-to-report window (r6e)
-        "revenue_grouping_sets": Q.revenue_grouping_sets,           # explicit GROUPING SETS (r6e)
         "doc_zorder_key": Q.doc_zorder_key,                         # Morton export layout key (r6e)
         "embedding_pq_codes": Q.embedding_pq_codes,                 # product quantization (r6e)
         "embedding_knn_graph": Q.embedding_knn_graph,               # kNN graph build (r6e)
         "kg_entity_provenance": Q.kg_entity_provenance,             # proxy provenance audit (r6e)
-        "event_moving_sum": Q.event_moving_sum,                     # RANGE-frame window
-        "event_asof_join": Q.event_asof_join,                       # as-of via union+window (r3)
-        "event_range_join": Q.event_range_join,                     # banded interval join (r3)
-        "event_hypertable_rollup": Q.event_hypertable_rollup,       # multi-res rollup (r3)
-        "event_gaps": Q.event_gaps,                                 # O29 lead
-        "top10_orders": Q.top10_orders,                             # O31 top-k
-        "lineitem_except_all": Q.lineitem_except_all,               # O32 set op
-        "distinct_segments": Q.distinct_segments,                   # O27
-        "events_isin_counts": Q.events_isin_counts,                 # O15/O16
-        "events_json_k": Q.events_json_k,                           # O39 JSON
-        "best_order_per_customer": Q.best_order_per_customer,       # O24 max_by
-        "event_type_stats": Q.event_type_stats,                     # O26
-        "latest_event_per_user": Q.latest_event_per_user,           # O30
-        "norm_iri_demo": Q.norm_iri_demo,                           # O33
-        "revenue_rollup": Q.revenue_rollup,                         # rollup
-        "revenue_cube": Q.revenue_cube,                             # cube (r3)
-        "nation_intersect": Q.nation_intersect,                     # intersect (r3)
-        "event_value_percentiles": Q.event_value_percentiles,       # exact pct (r3)
-        "event_value_outliers": Q.event_value_outliers,             # median/MAD rule (r6c)
-        "event_session_window_stats": Q.event_session_window_stats,  # native session_window (r6c)
-        "event_value_pivot": Q.event_value_pivot,                   # pivot
-        "event_sessions": Q.event_sessions,                         # sessionize
         # training-data-pipeline operators (task brief: dedup/ANN/text)
         "dedup_exact": Q.dedup_exact,
         "contamination_check": Q.contamination_check,  # train/eval leak detector (r5)
@@ -178,7 +133,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_resample": Q.doc_resample,                     # source-weighted resampling (r6)
         "doc_bigram_surprisal": Q.doc_bigram_surprisal,     # integer perplexity proxy (r6)
         "doc_chunk": Q.doc_chunk,                           # RAG token-window chunking (r6)
-        "event_session_stats": Q.event_session_stats,       # per-session rollup (r6)
         "dedup_ngram_coverage": Q.dedup_ngram_coverage,     # dup-shingle fraction (r6)
         "rdf_turtle_bnode_roundtrip": Q.rdf_turtle_bnode_roundtrip,  # [ ] / ( ) forms (r6)
         "entity_link_prediction": Q.entity_link_prediction,  # common-neighbor cn>=2 (r6)
@@ -194,7 +148,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "entity_top_neighbors": Q.entity_top_neighbors,  # related-entities top-3 (r6c)
         "dedup_minhash_calibration": Q.dedup_minhash_calibration,  # estimator error (r6c)
         "doc_surprisal_heldout": Q.doc_surprisal_heldout,  # cross-split LM filter (r6c)
-        "event_value_histogram": Q.event_value_histogram,  # equi-width e6 buckets (r6c)
         "kg_sparql_values": Q.kg_sparql_values,        # VALUES + MIN/MAX aggs (r6c)
         "kg_sparql_path_nps": Q.kg_sparql_path_nps,    # negated property set (r6c)
         "embedding_label_centroids": Q.embedding_label_centroids,  # k-means M-step (r6c)
@@ -206,15 +159,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "entity_degree_moments": Q.entity_degree_moments,  # assortativity moments (r6c)
         "vocab_growth": Q.vocab_growth,                # Heaps-law growth curve (r6c)
         "entity_neighbor_sample": Q.entity_neighbor_sample,  # GraphSAGE fanout sample (r6c)
-        "event_debounce": Q.event_debounce,            # spam/sensor suppression (r6c)
-        "event_type_transitions": Q.event_type_transitions,  # Markov flow matrix (r6c)
         "dedup_cluster_size_hist": Q.dedup_cluster_size_hist,  # cluster-size readout (r6c)
         "corpus_stats_by_source": Q.corpus_stats_by_source,  # per-source corpus card (r6c)
-        "event_user_lifetime": Q.event_user_lifetime,  # LTV/churn base table (r6c)
         "embedding_quantize": Q.embedding_quantize,          # int8 SQ + recon error (r6)
-        "event_funnel": Q.event_funnel,
-        "event_retention_cohorts": Q.event_retention_cohorts,  # cohort x offset (r6c)
-        "event_cumulative_users": Q.event_cumulative_users,    # distinct-user growth curve (r6c)
         "kg_label_index": Q.kg_label_index,                    # O7 inverted label index (r6c)
         "doc_search_topk": Q.doc_search_topk,                  # BM25-shaped top-10 search (r6c)
         "heavy_hitters_cms": Q.heavy_hitters_cms,            # count-min sketch top-k (r6)
@@ -297,8 +244,6 @@ def oracle_sql() -> dict[str, str]:
         "kg_sparql_builtins": OS.SPARQL_BUILTINS_SQL,
         "kg_sparql_term_fns": OS.SPARQL_TERM_FNS_SQL,
         "kg_sparql_isnumeric": OS.SPARQL_ISNUMERIC_SQL,
-        "event_value_outliers": OS.EVENT_OUTLIERS_SQL,
-        "event_session_window_stats": OS.EVENT_SESSION_WINDOW_SQL,
         "kg_sparql_sameterm": OS.SPARQL_SAMETERM_SQL,
         "kg_sparql_encode": OS.SPARQL_ENCODE_SQL,
         "kg_sparql_term_ctors": OS.SPARQL_TERM_CTORS_SQL,
@@ -315,7 +260,6 @@ def oracle_sql() -> dict[str, str]:
         "doc_resample": OS.DOC_RESAMPLE_SQL,
         "doc_bigram_surprisal": OS.DOC_BIGRAM_SURPRISAL_SQL,
         "doc_chunk": OS.DOC_CHUNK_SQL,
-        "event_session_stats": OS.EVENT_SESSION_STATS_SQL,
         "dedup_ngram_coverage": OS.DEDUP_NGRAM_COVERAGE_SQL,
         "rdf_turtle_bnode_roundtrip": OS.RDF_TURTLE_BNODE_SQL,
         "entity_link_prediction": OS.ENTITY_LINK_PRED_SQL,
@@ -331,7 +275,6 @@ def oracle_sql() -> dict[str, str]:
         "entity_top_neighbors": OS.ENTITY_TOP_NEIGHBORS_SQL,
         "dedup_minhash_calibration": OS.DEDUP_MINHASH_CALIB_SQL,
         "doc_surprisal_heldout": OS.DOC_SURPRISAL_HELDOUT_SQL,
-        "event_value_histogram": OS.EVENT_VALUE_HISTOGRAM_SQL,
         "kg_sparql_values": OS.SPARQL_VALUES_SQL,
         "kg_sparql_path_nps": OS.SPARQL_PATH_NPS_SQL,
         "embedding_label_centroids": OS.EMBEDDING_CENTROIDS_SQL,
@@ -343,18 +286,11 @@ def oracle_sql() -> dict[str, str]:
         "entity_degree_moments": OS.ENTITY_DEGREE_MOMENTS_SQL,
         "vocab_growth": OS.VOCAB_GROWTH_SQL,
         "entity_neighbor_sample": OS.ENTITY_NEIGHBOR_SAMPLE_SQL,
-        "event_debounce": OS.EVENT_DEBOUNCE_SQL,
-        "event_type_transitions": OS.EVENT_TRANSITIONS_SQL,
         "dedup_cluster_size_hist": OS.DEDUP_CLUSTER_HIST_SQL,
         "corpus_stats_by_source": OS.CORPUS_STATS_SQL,
-        "event_user_lifetime": OS.EVENT_USER_LIFETIME_SQL,
         "embedding_quantize": OS.EMBEDDING_QUANTIZE_SQL,
-        "event_funnel": OS.EVENT_FUNNEL_SQL,
-        "event_retention_cohorts": OS.EVENT_RETENTION_SQL,
-        "event_cumulative_users": OS.EVENT_CUM_USERS_SQL,
         "kg_label_index": OS.KG_LABEL_INDEX_SQL,
         "doc_search_topk": OS.DOC_SEARCH_TOPK_SQL,
-        "scd2_user_state": OS.SCD2_USER_STATE_SQL,
         "dedup_winnow_pairs": OS.DEDUP_WINNOW_SQL,
         "kg_void_summary": OS.KG_VOID_SUMMARY_SQL,
         "kg_graph_hash": OS.KG_GRAPH_HASH_SQL,
@@ -379,8 +315,9 @@ def oracle_sql() -> dict[str, str]:
         "doc_repetition_stats": OS.DOC_REPETITION_SQL,
         "boilerplate_rate": OS.BOILERPLATE_RATE_SQL,
         "kg_media_features": OS.MEDIA_FEATURES_SQL,
+        "doc_prefix_dup_groups": OS.DOC_PREFIX_DUP_SQL,
+        "doc_zorder_key": OS.DOC_ZORDER_KEY_SQL,
     }
-    out.update(OS.RELATIONAL_SQL)
     out.update(
         {
             "dedup_exact": OS.DEDUP_EXACT_SQL,

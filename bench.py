@@ -144,12 +144,10 @@ def _run_bench(sf_dir: str, cpus: int, rep: int = 1, with_queries: bool = True,
     timings: dict[str, float] = {}
     stages: dict[str, dict] = {}
     bench_query_names = [
-        "kg_spans_flat", "kg_media_features", "tpch_q1",
-        "revenue_by_nation", "top2_lineitems_per_order",
-        "event_type_stats", "dedup_minhash_pairs",
+        "kg_spans_flat", "kg_media_features", "dedup_minhash_pairs",
         "dedup_simhash_pairs", "ngram_jaccard_pairs", "langid",
         "ann_topk", "ann_ivf_probe", "embedding_neardup",
-        "text_quality", "event_sessions",
+        "text_quality",
         # round-4 store query surface (amortize the memoized
         # pipeline chain across the three)
         "kg_sparql_topk", "kg_sameas_degree",

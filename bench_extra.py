@@ -24,12 +24,10 @@ import sys
 import time
 
 BENCH_QUERIES = [
-    "kg_spans_flat", "kg_media_features", "tpch_q1",
-    "revenue_by_nation", "top2_lineitems_per_order",
-    "event_type_stats", "dedup_minhash_pairs",
+    "kg_spans_flat", "kg_media_features", "dedup_minhash_pairs",
     "dedup_simhash_pairs", "ngram_jaccard_pairs", "langid",
     "ann_topk", "ann_ivf_probe", "embedding_neardup",
-    "text_quality", "event_sessions",
+    "text_quality",
     "kg_sparql_topk", "kg_sameas_degree",
     "kg_entity_media", "doc_pack_assign",
 ]

@@ -13,19 +13,6 @@ from pyspark.sql import functions as F
 from . import grammar as G
 
 
-# --- O33: IRI normalization (liburi analogue) ------------------------------
-def norm_iri(col: Column) -> Column:
-    """Lowercase scheme+authority, strip default http(s) ports, drop a
-    bare trailing slash.  Pure regexp — never a Python UDF."""
-    c = F.trim(col)
-    scheme_auth = F.lower(F.regexp_extract(c, r"^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)", 1))
-    rest = F.regexp_replace(c, r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*", "")
-    c2 = F.when(scheme_auth == "", c).otherwise(F.concat(scheme_auth, rest))
-    c2 = F.regexp_replace(c2, r"^(https?://[^/:?#]*):(?:80|443)(/|$)", "$1$2")
-    c2 = F.regexp_replace(c2, r"^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]+)/$", "$1")
-    return c2
-
-
 # --- mention normalization (O33/O35) ----------------------------------------
 def norm_text(col: Column) -> Column:
     """lower, trim, collapse internal whitespace (plural-strip is a no-op

@@ -13,8 +13,8 @@ Conventions for cross-engine hash equality:
 * every computed column is aliased identically on both sides;
 * all hashes are explicit int64 arithmetic (no engine hash builtins).
 
-Tables referenced are the driver's pre-registered views: region nation
-customer supplier part orders lineitem events documents embeddings.
+Tables referenced are the driver's pre-registered views: nation
+documents embeddings.
 """
 
 from __future__ import annotations
@@ -630,143 +630,6 @@ SELECT doc_id, CAST(count(*) AS INT) AS n_spans,
 FROM spans_pos GROUP BY doc_id
 """
 
-# ---------------------------------------------------------------------------
-# Relational operator-coverage oracles (SURVEY.md §2 sketches).
-# ---------------------------------------------------------------------------
-_E6 = "CAST(floor({expr} * 1000000.0) AS BIGINT)"
-
-
-def _e6(expr: str) -> str:
-    return _E6.format(expr=expr)
-
-
-RELATIONAL_SQL = {
-    "tpch_q1": f"""
-        SELECT l_returnflag, l_linestatus,
-               CAST(sum({_e6('l_quantity')}) AS BIGINT) AS sum_qty_e6,
-               CAST(sum({_e6('l_extendedprice * (1 - l_discount)')}) AS BIGINT) AS revenue_e6,
-               count(*) AS n
-        FROM lineitem
-        WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        GROUP BY l_returnflag, l_linestatus
-    """,
-    "revenue_by_nation": f"""
-        SELECT n_name, CAST(sum({_e6('o_totalprice')}) AS BIGINT) AS revenue_e6,
-               count(*) AS n_orders
-        FROM orders JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
-        GROUP BY n_name
-    """,
-    "customers_without_orders": """
-        SELECT c_custkey, c_name FROM customer
-        WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-    """,
-    "order_priorities_with_lineitems": """
-        SELECT o_orderpriority, count(*) AS n FROM orders
-        WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
-        GROUP BY o_orderpriority
-    """,
-    "top2_lineitems_per_order": """
-        SELECT l_orderkey, l_linenumber, rn FROM (
-          SELECT l_orderkey, l_linenumber,
-                 row_number() OVER (PARTITION BY l_orderkey
-                   ORDER BY l_extendedprice DESC, l_linenumber ASC) AS rn
-          FROM lineitem) WHERE rn <= 2
-    """,
-    "tpch_q3_topk": f"""
-        SELECT l_orderkey, epoch_us(o_orderdate) AS orderdate_us,
-               CAST(sum({_e6('l_extendedprice * (1 - l_discount)')}) AS BIGINT)
-                 AS revenue_e6
-        FROM customer
-        JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON o_orderkey = l_orderkey
-        WHERE c_mktsegment = (SELECT min(c_mktsegment) FROM customer)
-          AND o_orderdate < TIMESTAMP '1998-06-01 00:00:00'
-          AND l_shipdate  > TIMESTAMP '1998-06-01 00:00:00'
-        GROUP BY l_orderkey, o_orderdate
-        ORDER BY revenue_e6 DESC, l_orderkey ASC LIMIT 10
-    """,
-    "event_moving_sum": f"""
-        SELECT user_id, event_id,
-               CAST(sum(v) OVER w AS BIGINT) AS mov_sum_e6,
-               CAST(count(*) OVER w AS BIGINT) AS n_window
-        FROM (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-                     {_e6('value')} AS v
-              FROM events)
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts_us
-                     RANGE BETWEEN 1800000000 PRECEDING AND CURRENT ROW)
-    """,
-    "event_gaps": """
-        SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-               epoch_us(lead(ts) OVER (PARTITION BY user_id
-                 ORDER BY ts, event_id)) AS next_ts_us
-        FROM events
-    """,
-    "top10_orders": f"""
-        SELECT o_orderkey, {_e6('o_totalprice')} AS totalprice_e6
-        FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10
-    """,
-    "lineitem_except_all": """
-        SELECT l_orderkey, l_linenumber FROM lineitem
-        WHERE l_shipdate < TIMESTAMP '1995-01-01 00:00:00'
-        EXCEPT ALL
-        SELECT l_orderkey, l_linenumber FROM lineitem WHERE l_discount > 0.05
-    """,
-    "distinct_segments": "SELECT DISTINCT c_mktsegment FROM customer",
-    "events_isin_counts": """
-        SELECT event_type, count(*) AS n FROM events
-        WHERE event_type IN (SELECT event_type FROM
-          (SELECT DISTINCT event_type FROM events ORDER BY event_type LIMIT 2))
-        GROUP BY event_type
-    """,
-    "events_json_k": """
-        SELECT event_id,
-               CAST(nullif(regexp_extract(props, '"k": ([0-9]+)', 1), '') AS BIGINT) AS k
-        FROM events
-    """,
-    "best_order_per_customer": f"""
-        SELECT o_custkey, o_orderkey AS best_orderkey,
-               {_e6('o_totalprice')} AS totalprice_e6
-        FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey
-                ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn FROM orders)
-        WHERE rn = 1
-    """,
-    "event_type_stats": f"""
-        SELECT event_type, count(*) AS n,
-               CAST(sum({_e6('value')}) AS BIGINT) AS sum_value_e6
-        FROM events GROUP BY event_type
-    """,
-    "latest_event_per_user": """
-        SELECT user_id, event_id, epoch_us(ts) AS ts_us
-        FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-                ORDER BY ts DESC, event_id DESC) AS rn FROM events)
-        WHERE rn = 1
-    """,
-    "norm_iri_demo": r"""
-        WITH raw AS (
-          SELECT c_custkey,
-                 'HTTP://Example.COM:80/c/' || replace(c_name, ' ', '_')
-                 || CASE WHEN c_custkey % 3 = 0 THEN '?x=1' ELSE '' END AS raw_iri
-          FROM customer
-        ), step1 AS (
-          SELECT c_custkey, raw_iri,
-                 lower(regexp_extract(raw_iri,
-                   '^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]*)', 1)) AS sa,
-                 regexp_replace(raw_iri,
-                   '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*', '') AS rest
-          FROM raw
-        ), step2 AS (
-          SELECT c_custkey, raw_iri,
-                 CASE WHEN sa = '' THEN raw_iri ELSE sa || rest END AS c2
-          FROM step1
-        )
-        SELECT c_custkey, raw_iri,
-               regexp_replace(
-                 regexp_replace(c2, '^(https?://[^/:?#]*):(?:80|443)(/|$)', '\1\2'),
-                 '^([A-Za-z][A-Za-z0-9+.-]*://[^/?#]+)/$', '\1') AS norm_iri
-        FROM step2
-    """,
-}
 
 # ---------------------------------------------------------------------------
 # Training-data-pipeline oracles (dedup / ANN / text analysis).
@@ -1395,138 +1258,6 @@ PREDICATE_COUNTS_SQL = f"""
 SELECT p, count(*) AS n FROM (
   SELECT DISTINCT s, p, o FROM {_QUADS_UNION}
 ) GROUP BY p
-"""
-
-RELATIONAL_SQL["revenue_rollup"] = f"""
-SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-       coalesce(l_linestatus, 'ALL') AS linestatus,
-       CAST(sum({_e6('l_extendedprice * (1 - l_discount)')}) AS BIGINT) AS revenue_e6,
-       count(*) AS n
-FROM lineitem
-GROUP BY ROLLUP (l_returnflag, l_linestatus)
-"""
-
-RELATIONAL_SQL["revenue_cube"] = f"""
-SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-       coalesce(l_linestatus, 'ALL') AS linestatus,
-       CAST(sum({_e6('l_extendedprice * (1 - l_discount)')}) AS BIGINT) AS revenue_e6,
-       count(*) AS n
-FROM lineitem
-GROUP BY CUBE (l_returnflag, l_linestatus)
-"""
-
-RELATIONAL_SQL["nation_intersect"] = """
-SELECT c_nationkey AS nationkey FROM customer
-INTERSECT
-SELECT s_nationkey AS nationkey FROM supplier
-"""
-
-# Exact int64 interpolation mirroring queries.event_value_percentiles —
-# quantile_cont's floating interpolation could differ from Spark's
-# percentile() by one ulp exactly at integer grid points (round-3
-# ADVICE); the quarter-unit integer formula is bit-identical by
-# construction (v_e6 >= 0 so // == floor on both engines).
-RELATIONAL_SQL["event_value_percentiles"] = f"""
-WITH ev AS (SELECT event_type, {_e6('value')} AS v_e6 FROM events),
-ranked AS (
-  SELECT event_type, v_e6,
-         row_number() OVER (PARTITION BY event_type ORDER BY v_e6) - 1 AS i,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM ev)
-SELECT event_type,
-       CAST(sum(CASE WHEN i = ((n-1)*1)//4 THEN v_e6 * (4 - ((n-1)*1)%4) WHEN i = ((n-1)*1)//4 + 1 THEN v_e6 * (((n-1)*1)%4) ELSE 0 END)//4 AS BIGINT) AS p25_e6,
-       CAST(sum(CASE WHEN i = ((n-1)*2)//4 THEN v_e6 * (4 - ((n-1)*2)%4) WHEN i = ((n-1)*2)//4 + 1 THEN v_e6 * (((n-1)*2)%4) ELSE 0 END)//4 AS BIGINT) AS p50_e6,
-       CAST(sum(CASE WHEN i = ((n-1)*3)//4 THEN v_e6 * (4 - ((n-1)*3)%4) WHEN i = ((n-1)*3)//4 + 1 THEN v_e6 * (((n-1)*3)%4) ELSE 0 END)//4 AS BIGINT) AS p75_e6
-FROM ranked
-GROUP BY event_type
-"""
-
-# The oracle states the as-of semantics as the naive ts-inequality
-# join + per-purchase rank (fine at oracle scale; the Spark side is the
-# union+window form that scales) — same (ts desc, id desc) tie-break.
-RELATIONAL_SQL["event_asof_join"] = """
-WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us
-           FROM events WHERE event_type IN ('click', 'purchase')),
-p AS (SELECT * FROM e WHERE event_type = 'purchase'),
-c AS (SELECT * FROM e WHERE event_type = 'click'),
-j AS (
-  SELECT p.user_id, p.event_id AS purchase_id, p.ts_us AS purchase_ts_us,
-         c.event_id AS click_id, c.ts_us AS click_ts_us,
-         row_number() OVER (PARTITION BY p.user_id, p.event_id
-                            ORDER BY c.ts_us DESC NULLS LAST,
-                                     c.event_id DESC NULLS LAST) AS rn
-  FROM p LEFT JOIN c ON c.user_id = p.user_id AND c.ts_us <= p.ts_us
-)
-SELECT user_id, purchase_id, purchase_ts_us, click_id, click_ts_us
-FROM j WHERE rn = 1
-"""
-
-# Oracle = the naive inequality join the banded plan replaces.
-RELATIONAL_SQL["event_range_join"] = """
-WITH e AS (SELECT event_id, event_type, epoch_us(ts) AS ts_us FROM events),
-err AS (SELECT event_id AS err_id, ts_us AS err_ts_us FROM e
-        WHERE event_type = 'error'),
-o AS (SELECT ts_us AS o_ts_us FROM e WHERE event_type != 'error'),
-counts AS (
-  SELECT err_id, count(*) AS n_nearby
-  FROM err JOIN o ON abs(o.o_ts_us - err.err_ts_us) <= 60000000
-  GROUP BY err_id
-)
-SELECT err.err_id, CAST(coalesce(c.n_nearby, 0) AS BIGINT) AS n_nearby
-FROM err LEFT JOIN counts c USING (err_id)
-"""
-
-RELATIONAL_SQL["event_hypertable_rollup"] = f"""
-WITH base AS (
-  SELECT event_type, epoch_us(ts) AS ts_us, {_e6('value')} AS v_e6 FROM events
-),
-minute AS (
-  SELECT event_type, ts_us // 60000000 AS bucket,
-         count(*) AS n, CAST(sum(v_e6) AS BIGINT) AS sum_e6,
-         max(v_e6) AS max_e6
-  FROM base GROUP BY event_type, bucket
-),
-hour AS (
-  SELECT event_type, bucket // 60 AS bucket,
-         CAST(sum(n) AS BIGINT) AS n, CAST(sum(sum_e6) AS BIGINT) AS sum_e6,
-         max(max_e6) AS max_e6
-  FROM minute GROUP BY event_type, 2
-),
-day AS (
-  SELECT event_type, bucket // 24 AS bucket,
-         CAST(sum(n) AS BIGINT) AS n, CAST(sum(sum_e6) AS BIGINT) AS sum_e6,
-         max(max_e6) AS max_e6
-  FROM hour GROUP BY event_type, 2
-)
-SELECT 'minute' AS level, * FROM minute
-UNION ALL SELECT 'hour', * FROM hour
-UNION ALL SELECT 'day', * FROM day
-"""
-
-RELATIONAL_SQL["event_value_pivot"] = f"""
-WITH t AS (SELECT event_type FROM
-  (SELECT DISTINCT event_type FROM events ORDER BY event_type LIMIT 2)),
-tt AS (SELECT min(event_type) AS t0, max(event_type) AS t1 FROM t)
-SELECT user_id,
-  CAST(sum(CASE WHEN event_type = (SELECT t0 FROM tt)
-            THEN {_e6('value')} ELSE 0 END) AS BIGINT) AS v0_e6,
-  CAST(sum(CASE WHEN event_type = (SELECT t1 FROM tt)
-            THEN {_e6('value')} ELSE 0 END) AS BIGINT) AS v1_e6
-FROM events GROUP BY user_id
-"""
-
-RELATIONAL_SQL["event_sessions"] = """
-SELECT user_id, event_id,
-       CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id
-FROM (
-  SELECT user_id, event_id, ts,
-         CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   IS NULL
-              OR epoch_us(ts) - epoch_us(lag(ts) OVER (PARTITION BY user_id
-                   ORDER BY ts, event_id)) > 30*60*1000000
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events)
 """
 
 
@@ -2403,34 +2134,6 @@ FROM ch
 """
 
 
-# r6: session-level rollup — same 30-minute gap rule as event_sessions,
-# aggregated to one row per (user, session).  Sums are per-row e6 ints
-# before aggregation; CAST AS BIGINT defeats DuckDB's HUGEINT widening.
-EVENT_SESSION_STATS_SQL = f"""
-WITH flagged AS (
-  SELECT user_id, event_id, epoch_us(ts) AS ts_us, {_e6('value')} AS v,
-         CASE WHEN lag(ts) OVER w IS NULL
-              OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 30*60*1000000
-              THEN 1 ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-seq AS (
-  SELECT user_id, ts_us, v,
-         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                          ROWS UNBOUNDED PRECEDING) AS session_seq
-  FROM flagged
-)
-SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-       CAST(count(*) AS BIGINT) AS n_events,
-       min(ts_us) AS start_us,
-       max(ts_us) AS end_us,
-       max(ts_us) - min(ts_us) AS duration_us,
-       CAST(sum(v) AS BIGINT) AS sum_value_e6
-FROM seq GROUP BY user_id, session_seq
-"""
-
-
 # r6: duplicated-n-gram coverage — per doc, the fraction of its
 # distinct 3-token shingles (the engine-shared code family in
 # SHINGLES_CTE) that occur in >= 2 documents.  with_shingles emits
@@ -2488,36 +2191,8 @@ FROM raw GROUP BY ALL
 
 
 # ---------------------------------------------------------------------------
-# Round-6c: funnel / sketch / tokenizer-training / ASK / DESCRIBE.
+# Round-6c: sketch / tokenizer-training / ASK / DESCRIBE.
 # ---------------------------------------------------------------------------
-
-# Ordered funnel signup -> view -> purchase, each step strictly after
-# the previous; min(BIGINT) stays BIGINT in DuckDB (no HUGEINT cast
-# needed), epoch_us matches Spark's unix_micros under the UTC pin.
-EVENT_FUNNEL_SQL = """
-WITH ev AS (
-  SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events
-),
-s1 AS (SELECT user_id, min(ts_us) AS t1_us FROM ev
-       WHERE event_type = 'signup' GROUP BY 1),
-s2 AS (SELECT e.user_id, min(e.ts_us) AS t2_us
-       FROM ev e JOIN s1 USING (user_id)
-       WHERE e.event_type = 'view' AND e.ts_us > s1.t1_us GROUP BY 1),
-s3 AS (SELECT e.user_id, min(e.ts_us) AS t3_us
-       FROM ev e JOIN s2 USING (user_id)
-       WHERE e.event_type = 'purchase' AND e.ts_us > s2.t2_us GROUP BY 1)
-SELECT u.user_id,
-       CAST(CASE WHEN t3_us IS NOT NULL THEN 3
-                 WHEN t2_us IS NOT NULL THEN 2
-                 WHEN t1_us IS NOT NULL THEN 1
-                 ELSE 0 END AS INTEGER) AS reached,
-       t1_us, t2_us, t3_us
-FROM (SELECT DISTINCT user_id FROM ev) u
-LEFT JOIN s1 USING (user_id)
-LEFT JOIN s2 USING (user_id)
-LEFT JOIN s3 USING (user_id)
-"""
-
 
 # Char-level rolling hash (grammar charcode): fold (31a + ascii(c)) % P
 # with a prepended 0 seed — list_reduce uses the first element as init.
@@ -2835,22 +2510,6 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, dot_e6 FROM (
 ) WHERE rank <= 5
 """
 
-# r6c: retention cohorts — integer epoch-day DIV 7 weeks (engine
-# week-truncation rules differ; day arithmetic does not).
-EVENT_RETENTION_SQL = """
-WITH uw AS (
-  SELECT DISTINCT user_id,
-         CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 // 7
-              AS BIGINT) AS week
-  FROM events
-),
-cohort AS (SELECT user_id, min(week) AS cohort_week FROM uw GROUP BY 1)
-SELECT c.cohort_week, uw.week - c.cohort_week AS week_offset,
-       CAST(count(DISTINCT uw.user_id) AS BIGINT) AS n_users
-FROM uw JOIN cohort c USING (user_id)
-GROUP BY 1, 2
-"""
-
 
 # r6c: deterministic negative-edge sampling — identical affine-hash
 # corruption arithmetic to the Spark builder (rolling char hash mod
@@ -2928,80 +2587,6 @@ FROM ckeep c JOIN best b USING (keep_doc_id)
 """
 
 
-# r6c: median/MAD outliers — identical half-unit integer interpolation
-# to the Spark builder (med_2x, dev_2x, mad_4x; flag 2*dev > 3*mad).
-EVENT_OUTLIERS_SQL = """
-WITH ev AS (
-  SELECT event_type, event_id,
-         CAST(floor(1e6 * CAST(value AS DOUBLE)) AS BIGINT) AS v_e6
-  FROM events
-),
-r1 AS (
-  SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY v_e6) - 1 AS i,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM ev
-),
-med AS (
-  SELECT event_type,
-    CAST(sum(CASE WHEN i = (n-1) // 2 THEN v_e6 * (2 - (n-1) % 2)
-             WHEN i = (n-1) // 2 + 1 THEN v_e6 * ((n-1) % 2)
-             ELSE 0 END) AS BIGINT) AS med_2x
-  FROM r1 GROUP BY event_type
-),
-dev AS (
-  SELECT ev.event_type, ev.event_id, ev.v_e6,
-         abs(2 * ev.v_e6 - m.med_2x) AS dev_2x
-  FROM ev JOIN med m USING (event_type)
-),
-r2 AS (
-  SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY dev_2x) - 1 AS i,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM dev
-),
-mad AS (
-  SELECT event_type,
-    2 * CAST(sum(CASE WHEN i = (n-1) // 2 THEN dev_2x * (2 - (n-1) % 2)
-                 WHEN i = (n-1) // 2 + 1 THEN dev_2x * ((n-1) % 2)
-                 ELSE 0 END) AS BIGINT) AS mad_4x
-  FROM r2 GROUP BY event_type
-)
-SELECT d.event_type, d.event_id, d.v_e6
-FROM dev d JOIN mad USING (event_type)
-WHERE 2 * d.dev_2x > 3 * mad.mad_4x
-"""
-
-
-# r6c: native session_window parity — gap-rule sessionization with the
-# EXACT Spark boundary (a gap == 30 min still EXTENDS the session:
-# the window closes only when the next event is strictly beyond
-# last + gap); end = last event + gap.
-EVENT_SESSION_WINDOW_SQL = """
-WITH ev AS (
-  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-         CAST(floor(1e6 * CAST(value AS DOUBLE)) AS BIGINT) AS v_e6,
-         event_id
-  FROM events
-),
-flagged AS (
-  SELECT *, CASE WHEN lag(ts_us) OVER w IS NULL
-                   OR ts_us - lag(ts_us) OVER w > 1800000000
-            THEN 1 ELSE 0 END AS new_sess
-  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
-),
-sess AS (
-  SELECT *, sum(new_sess) OVER (PARTITION BY user_id
-                                ORDER BY ts_us, event_id
-                                ROWS UNBOUNDED PRECEDING) AS sid
-  FROM flagged
-)
-SELECT user_id, CAST(min(ts_us) AS BIGINT) AS start_us,
-       CAST(max(ts_us) + 1800000000 AS BIGINT) AS end_us,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(v_e6) AS BIGINT) AS sum_value_e6
-FROM sess GROUP BY user_id, sid
-"""
-
-
 # r6c: language-ID confusion matrix over the langid oracle chain.
 LANGID_CONFUSION_SQL = f"""
 WITH {_LANGID_CTES}
@@ -3071,23 +2656,6 @@ FROM dwords d JOIN s4 USING (word)
 GROUP BY d.doc_id
 """
 
-
-# r6c: cumulative-distinct-user curve — first-day contribution + cumsum.
-EVENT_CUM_USERS_SQL = """
-WITH fd AS (
-  SELECT user_id,
-         min(CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS BIGINT))
-           AS first_day
-  FROM events GROUP BY user_id
-),
-pd AS (SELECT first_day, CAST(count(*) AS BIGINT) AS new_users
-       FROM fd GROUP BY first_day)
-SELECT first_day AS day, new_users,
-       CAST(sum(new_users) OVER (ORDER BY first_day
-                                 ROWS UNBOUNDED PRECEDING) AS BIGINT)
-         AS cum_users
-FROM pd
-"""
 
 # r6c: label inverted index — token postings pinned by the commutative
 # rolling-hash checksum (sum of per-entity char hashes mod FP_MOD).
@@ -3430,20 +2998,6 @@ FROM sc GROUP BY doc_id HAVING SUM(scored) > 0
 """
 
 
-# r6c: equi-width 16-bucket value histogram on the e6 grid.
-EVENT_VALUE_HISTOGRAM_SQL = """
-WITH v AS (
-  SELECT CAST(floor(1000000 * value) AS BIGINT) AS v_e6 FROM events
-),
-mm AS (SELECT MIN(v_e6) AS min_e6, MAX(v_e6) AS max_e6 FROM v)
-SELECT CAST(((v_e6 - min_e6) * 16) // (max_e6 - min_e6 + 1) AS INT) AS bucket,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       MIN(v_e6) AS lo_e6, MAX(v_e6) AS hi_e6
-FROM v CROSS JOIN mm
-GROUP BY 1
-"""
-
-
 # r6c: SPARQL VALUES + MIN/MAX aggregates.
 SPARQL_VALUES_SQL = f"""
 {_KG_CTES},
@@ -3578,24 +3132,6 @@ SELECT entity_id, neighbor_id, samp_key, CAST(rn AS INT) AS samp_rank FROM (
 """
 
 
-# r6c: event debounce — ≥60 s since the previous raw event of the
-# same (user, type) key.
-EVENT_DEBOUNCE_SQL = """
-WITH keyed AS (
-  SELECT event_id, user_id, event_type,
-         CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS BIGINT) AS ts_us,
-         lag(CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS BIGINT)) OVER (
-           PARTITION BY user_id, event_type
-           ORDER BY CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS BIGINT), event_id
-         ) AS prev_us
-  FROM events
-)
-SELECT event_id, user_id, event_type, ts_us
-FROM keyed
-WHERE prev_us IS NULL OR ts_us - prev_us >= 60000000
-"""
-
-
 # r6c: negated property set — forward edges except the excluded preds.
 SPARQL_PATH_NPS_SQL = f"""
 {_KG_CTES},
@@ -3605,23 +3141,6 @@ FROM tri t1
 JOIN tri t2 ON t2.s = t1.s
 WHERE t1.p = 'rdf:type' AND t1.o = 'ex:Commerce'
   AND t2.p NOT IN ('rdf:type', 'ex:score')
-"""
-
-
-# r6c: event-type Markov transition counts (lag per user).
-EVENT_TRANSITIONS_SQL = """
-WITH seq AS (
-  SELECT user_id, event_type,
-         lag(event_type) OVER (
-           PARTITION BY user_id
-           ORDER BY CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS BIGINT), event_id
-         ) AS prev_type
-  FROM events
-)
-SELECT prev_type AS from_type, event_type AS to_type,
-       CAST(COUNT(*) AS BIGINT) AS n_transitions
-FROM seq WHERE prev_type IS NOT NULL
-GROUP BY 1, 2
 """
 
 
@@ -3651,22 +3170,6 @@ SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
        CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
        CAST((1000000 * SUM(n_toks)) // COUNT(*) AS BIGINT) AS mean_len_e6
 FROM t GROUP BY source
-"""
-
-
-# r6c: per-user lifetime summary.
-EVENT_USER_LIFETIME_SQL = """
-WITH t AS (
-  SELECT user_id,
-         CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS BIGINT) AS ts_us,
-         CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS BIGINT) AS day
-  FROM events
-)
-SELECT user_id, MIN(ts_us) AS first_us, MAX(ts_us) AS last_us,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(COUNT(DISTINCT day) AS BIGINT) AS n_active_days,
-       CAST((MAX(ts_us) - MIN(ts_us)) // 86400000000 AS BIGINT) AS span_days
-FROM t GROUP BY user_id
 """
 
 
@@ -3865,53 +3368,6 @@ SELECT vec_id, cl AS assigned_label, dist AS dist_e6 FROM assigned2
 )
 
 
-# r6c: TPC-H Q5 shape — local-supplier revenue per (region, nation).
-TPCH_Q5_SQL = """
-SELECT r.r_name, n.n_name,
-       CAST(SUM(CAST(floor(1000000 * l.l_extendedprice * (1 - l.l_discount))
-                AS BIGINT)) AS BIGINT) AS revenue_e6,
-       CAST(COUNT(*) AS BIGINT) AS n_lineitems
-FROM lineitem l
-JOIN orders o ON o.o_orderkey = l.l_orderkey
-JOIN customer c ON c.c_custkey = o.o_custkey
-JOIN supplier s ON s.s_suppkey = l.l_suppkey
-              AND s.s_nationkey = c.c_nationkey
-JOIN nation n ON n.n_nationkey = s.s_nationkey
-JOIN region r ON r.r_regionkey = n.n_regionkey
-GROUP BY r.r_name, n.n_name
-"""
-
-RELATIONAL_SQL["tpch_q5"] = TPCH_Q5_SQL
-
-
-# r6e: SCD Type-2 history from the events change stream.
-SCD2_USER_STATE_SQL = """
-WITH e AS (
-  SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us,
-         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS prev_type
-  FROM events
-), r AS (
-  SELECT *, CAST(sum(CASE WHEN prev_type IS NULL
-                               OR prev_type <> event_type THEN 1 ELSE 0 END)
-       OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-             ROWS UNBOUNDED PRECEDING) AS BIGINT) AS run_id
-  FROM e
-), runs AS (
-  SELECT user_id, run_id, min(event_type) AS state,
-         min(ts_us) AS valid_from_us, CAST(count(*) AS BIGINT) AS n_events
-  FROM r GROUP BY 1, 2
-)
-SELECT user_id, run_id, state, valid_from_us,
-  coalesce(lead(valid_from_us)
-             OVER (PARTITION BY user_id ORDER BY run_id), -1) AS valid_to_us,
-  n_events,
-  CAST(CASE WHEN lead(valid_from_us)
-              OVER (PARTITION BY user_id ORDER BY run_id) IS NULL
-       THEN 1 ELSE 0 END AS INT) AS is_current
-FROM runs
-"""
-
 # r6e: per-entity provenance summary (spindle-style proxy audit record).
 ENTITY_PROVENANCE_SQL = f"""
 {_KG_CTES}
@@ -4004,56 +3460,13 @@ FROM hq GROUP BY g
 """
 
 
-# r6e: bounded-lookback EWMA — 8 power-of-two taps, integer DIV.
-_EWMA_NUM = " + ".join(
-    f"COALESCE(lag(v, {k}) OVER w * {1 << (7 - k)}, 0)" if k else
-    f"v * {1 << 7}"
-    for k in range(8)
-)
-_EWMA_DEN = " + ".join(
-    f"CASE WHEN lag(v, {k}) OVER w IS NOT NULL THEN {1 << (7 - k)}"
-    " ELSE 0 END" if k else f"{1 << 7}"
-    for k in range(8)
-)
-RELATIONAL_SQL["event_ewma"] = f"""
-WITH base AS (
-  SELECT user_id, event_id, epoch_us(ts) AS ts_us, {_e6('value')} AS v
-  FROM events
-),
-t AS (
-  SELECT user_id, event_id,
-         CAST({_EWMA_NUM} AS BIGINT) AS num,
-         CAST({_EWMA_DEN} AS BIGINT) AS den
-  FROM base
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
-)
-SELECT user_id, event_id, CAST(num // den AS BIGINT) AS ewma_e6 FROM t
-"""
-
-
-# r6e: TPC-H Q4 shape — late-lineitem EXISTS per order priority.
-RELATIONAL_SQL["tpch_q4"] = """
-SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-FROM orders o
-WHERE epoch_us(o_orderdate) >= 820454400000000
-  AND epoch_us(o_orderdate) < 828316800000000
-  AND EXISTS (
-    SELECT 1 FROM lineitem l
-    WHERE l.l_orderkey = o.o_orderkey
-      AND epoch_us(l.l_shipdate)
-          > epoch_us(o.o_orderdate) + CAST(5184000000000 AS BIGINT)
-  )
-GROUP BY o_orderpriority
-"""
-
-
 # r6e: Z-order (Morton) export layout key — 4+4 bit interleave.
 _Z_BITS = " + ".join(
     f"(((len_b >> {k}) & 1) * {1 << (2 * k + 1)})"
     f" + (((lang_b >> {k}) & 1) * {1 << (2 * k)})"
     for k in range(4)
 )
-RELATIONAL_SQL["doc_zorder_key"] = f"""
+DOC_ZORDER_KEY_SQL = f"""
 WITH base AS (
   SELECT doc_id,
          CAST({_CHARCODE.format(col='lang')} % 16 AS BIGINT) AS lang_b,
@@ -4111,44 +3524,6 @@ FROM sel s
 JOIN scored sc ON sc.vec_id = s.vec_id AND sc.m = s.m
               AND sc.dist = s.sq_err
 GROUP BY s.vec_id, s.m, s.sq_err
-"""
-
-
-# r6e: TPC-H Q14 shape — promo revenue share, integer e6 share form.
-RELATIONAL_SQL["tpch_q14"] = """
-WITH j AS (
-  SELECT CAST(floor(1000000 * l_extendedprice * (1 - l_discount))
-              AS BIGINT) AS rev_e6,
-         p_type
-  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-  WHERE epoch_us(l.l_shipdate) >= 825638400000000
-    AND epoch_us(l.l_shipdate) < 828316800000000
-),
-a AS (
-  SELECT CAST(sum(CASE WHEN p_type = 'PROMO' THEN rev_e6 ELSE 0 END)
-              AS BIGINT) AS promo_rev_e6,
-         CAST(sum(rev_e6) AS BIGINT) AS total_rev_e6
-  FROM j
-)
-SELECT promo_rev_e6, total_rev_e6,
-       CAST(promo_rev_e6 // (total_rev_e6 // 1000000) AS BIGINT)
-         AS promo_share_e6
-FROM a
-"""
-
-
-# r6e: TPC-H Q19 shape — OR-of-conjunctions join predicate.
-RELATIONAL_SQL["tpch_q19"] = """
-SELECT CAST(sum(CAST(floor(1000000 * l_extendedprice * (1 - l_discount))
-                     AS BIGINT)) AS BIGINT) AS revenue_e6,
-       CAST(count(*) AS BIGINT) AS n_lineitems
-FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
-       AND l_quantity BETWEEN 1 AND 11)
-   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
-       AND l_quantity BETWEEN 10 AND 20)
-   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
-       AND l_quantity BETWEEN 20 AND 30)
 """
 
 
@@ -4218,72 +3593,6 @@ SELECT query_id, neighbor_id, rank FROM (
 """
 
 
-# r6e: FULL OUTER JOIN of two pre-aggregated per-nation counts.
-RELATIONAL_SQL["nation_coverage_full_join"] = """
-WITH cust AS (
-  SELECT c_nationkey AS nationkey, count(*) AS n_customers
-  FROM customer GROUP BY 1
-),
-supp AS (
-  SELECT s_nationkey AS nationkey, count(*) AS n_suppliers
-  FROM supplier GROUP BY 1
-)
-SELECT COALESCE(c.nationkey, s.nationkey) AS nationkey,
-       CAST(COALESCE(n_customers, 0) AS BIGINT) AS n_customers,
-       CAST(COALESCE(n_suppliers, 0) AS BIGINT) AS n_suppliers
-FROM cust c FULL OUTER JOIN supp s ON c.nationkey = s.nationkey
-"""
-
-
-# r6e: scalar-subquery shape — integer-exact global mean cut.
-RELATIONAL_SQL["orders_above_avg"] = f"""
-WITH o AS (
-  SELECT o_orderpriority, {_e6('o_totalprice')} AS tp_e6 FROM orders
-),
-a AS (SELECT CAST(sum(tp_e6) // count(*) AS BIGINT) AS avg_e6 FROM o)
-SELECT o_orderpriority,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(tp_e6) AS BIGINT) AS sum_price_e6
-FROM o, a WHERE tp_e6 > avg_e6
-GROUP BY o_orderpriority
-"""
-
-
-# r6e: per-day trending top-3 event types.
-RELATIONAL_SQL["event_trending_daily"] = """
-WITH daily AS (
-  SELECT epoch_us(ts) // 86400000000 AS day, event_type,
-         CAST(count(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-)
-SELECT CAST(day AS BIGINT) AS day, event_type, n, CAST(rank AS INT) AS rank
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY day
-                               ORDER BY n DESC, event_type ASC) AS rank
-  FROM daily
-) WHERE rank <= 3
-"""
-
-
-# r6e: integer-exact percent_rank per event type.
-RELATIONAL_SQL["event_value_pctrank"] = f"""
-WITH ev AS (
-  SELECT event_type, event_id, {_e6('value')} AS v_e6 FROM events
-),
-rk AS (
-  SELECT event_type, event_id,
-         rank() OVER (PARTITION BY event_type ORDER BY v_e6) AS rk,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM ev
-)
-SELECT event_type, event_id,
-       CAST(CASE WHEN n = 1 THEN 0
-                 ELSE (rk - 1) * 1000000 // (n - 1) END AS BIGINT)
-         AS pctrank_e6
-FROM rk
-"""
-
-
 # r6e: anti-entropy diff statuses, derived from the nation table.
 KG_STORE_DIFF_SQL = """
 WITH regs AS (SELECT DISTINCT n_regionkey AS r FROM nation)
@@ -4294,76 +3603,6 @@ SELECT 'ex:reg' || CAST(r AS VARCHAR) AS g,
 FROM regs
 UNION ALL
 SELECT 'ex:regnew', 'only_b'
-"""
-
-
-# r6e: UNPIVOT of the wide per-type stats row.
-RELATIONAL_SQL["event_stats_unpivot"] = f"""
-WITH wide AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum({_e6('value')}) AS BIGINT) AS sum_e6,
-         CAST(min({_e6('value')}) AS BIGINT) AS min_e6,
-         CAST(max({_e6('value')}) AS BIGINT) AS max_e6
-  FROM events GROUP BY 1
-)
-SELECT event_type, 'n_events' AS metric, n_events AS value_e6 FROM wide
-UNION ALL
-SELECT event_type, 'sum_e6', sum_e6 FROM wide
-UNION ALL
-SELECT event_type, 'min_e6', min_e6 FROM wide
-UNION ALL
-SELECT event_type, 'max_e6', max_e6 FROM wide
-"""
-
-
-# r6e: NTILE(4) price quartiles with unique-key tie-break.
-RELATIONAL_SQL["part_price_quartiles"] = f"""
-WITH p AS (
-  SELECT p_partkey, {_e6('p_retailprice')} AS price_e6 FROM part
-),
-t AS (
-  SELECT price_e6,
-         ntile(4) OVER (ORDER BY price_e6, p_partkey) AS quartile
-  FROM p
-)
-SELECT CAST(quartile AS INT) AS quartile,
-       CAST(count(*) AS BIGINT) AS n_parts,
-       CAST(min(price_e6) AS BIGINT) AS min_price_e6,
-       CAST(max(price_e6) AS BIGINT) AS max_price_e6
-FROM t GROUP BY 1
-"""
-
-
-# r6e: ratio-to-report — per-priority revenue share of total.
-RELATIONAL_SQL["priority_revenue_share"] = f"""
-WITH grp AS (
-  SELECT o_orderpriority,
-         CAST(sum({_e6('o_totalprice')}) AS BIGINT) AS rev_e6
-  FROM orders GROUP BY 1
-)
-SELECT o_orderpriority, rev_e6,
-       CAST(rev_e6 // (sum(rev_e6) OVER () // 1000000) AS BIGINT)
-         AS share_e6
-FROM grp
-"""
-
-
-# r6e: explicit GROUPING SETS ((nation), (priority)) in one pass.
-RELATIONAL_SQL["revenue_grouping_sets"] = f"""
-WITH j AS (
-  SELECT n_name, o_orderpriority, {_e6('o_totalprice')} AS tp_e6
-  FROM orders o
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
-)
-SELECT n_name, o_orderpriority,
-       CAST(grouping(n_name) AS INT) AS g_nation,
-       CAST(grouping(o_orderpriority) AS INT) AS g_priority,
-       CAST(sum(tp_e6) AS BIGINT) AS rev_e6,
-       CAST(count(*) AS BIGINT) AS n_orders
-FROM j
-GROUP BY GROUPING SETS ((n_name), (o_orderpriority))
 """
 
 
@@ -4381,27 +3620,6 @@ SELECT n_lines, n_parsed,
        CAST((n_lines - n_parsed) * 1000000 // n_lines AS BIGINT)
          AS drop_rate_e6
 FROM c
-"""
-
-
-# r6e: integer log-domain behavioral diversity per user.
-RELATIONAL_SQL["user_event_diversity"] = """
-WITH cnt AS (
-  SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS cnt
-  FROM events GROUP BY 1, 2
-),
-tot AS (
-  SELECT user_id, CAST(sum(cnt) AS BIGINT) AS total,
-         CAST(count(*) AS BIGINT) AS n_types
-  FROM cnt GROUP BY 1
-)
-SELECT c.user_id,
-       CAST(min(t.n_types) AS BIGINT) AS n_types,
-       CAST(min(t.total) AS BIGINT) AS n_events,
-       CAST(sum(c.cnt * length(bin(t.total // c.cnt))) AS BIGINT)
-         AS diversity_bits
-FROM cnt c JOIN tot t ON t.user_id = c.user_id
-GROUP BY c.user_id
 """
 
 
@@ -4426,16 +3644,6 @@ FROM ex GROUP BY dim
 """
 
 
-# r6e: hour-of-day seasonality profile.
-RELATIONAL_SQL["event_hourly_seasonality"] = f"""
-SELECT event_type,
-       CAST((epoch_us(ts) // 3600000000) % 24 AS INT) AS hour,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum({_e6('value')}) AS BIGINT) AS sum_value_e6
-FROM events GROUP BY 1, 2
-"""
-
-
 # r6e: per-predicate coverage of the property index.
 KG_ATTR_COVERAGE_SQL = f"""
 {_KG_CTES}, {PROPS_CTE}
@@ -4453,33 +3661,6 @@ GROUP BY p.pred
 """
 
 
-# r6e: month-over-month revenue growth, trunc-toward-zero sign-split.
-RELATIONAL_SQL["orders_monthly_growth"] = f"""
-WITH o AS (
-  SELECT CAST(year(o_orderdate) * 12 + month(o_orderdate) - 1 AS BIGINT)
-           AS month_idx,
-         {_e6('o_totalprice')} AS tp_e6
-  FROM orders
-),
-monthly AS (
-  SELECT month_idx, CAST(sum(tp_e6) AS BIGINT) AS rev_e6
-  FROM o GROUP BY 1
-),
-lagged AS (
-  SELECT month_idx, rev_e6,
-         lag(rev_e6) OVER (ORDER BY month_idx) AS prev_e6
-  FROM monthly
-)
-SELECT month_idx, rev_e6,
-       CAST(CASE WHEN prev_e6 IS NULL THEN NULL
-                 WHEN rev_e6 >= prev_e6 THEN
-                   (rev_e6 - prev_e6) // (prev_e6 // 1000000)
-                 ELSE -((prev_e6 - rev_e6) // (prev_e6 // 1000000))
-            END AS BIGINT) AS growth_e6
-FROM lagged
-"""
-
-
 # r6e: near-name ambiguity (4-char label-prefix collisions) over the
 # attrs index — exact-label collisions are structurally impossible.
 KG_LABEL_COLLISIONS_SQL = f"""
@@ -4491,7 +3672,7 @@ FROM attrs GROUP BY 1 HAVING count(DISTINCT entity_id) > 1
 
 
 # r6e: identical-prefix duplicate groups (charcode of first 200 chars).
-RELATIONAL_SQL["doc_prefix_dup_groups"] = f"""
+DOC_PREFIX_DUP_SQL = f"""
 WITH pref AS (
   SELECT doc_id,
          {_CHARCODE.format(col='substring(text, 1, 200)')} AS pcode

@@ -4,8 +4,8 @@ returns a DataFrame whose column names/types line up exactly with the
 DuckDB oracle SQL in oracle_sql.py / __spark_entry__.oracle_sql().
 
 Cross-engine conventions (see oracle_sql.py): floats become
-floor(1e6*x) BIGINT per row *before* any aggregation; timestamps become
-unix micros; every computed column is aliased.
+floor(1e6*x) BIGINT per row *before* any aggregation; every computed
+column is aliased.
 """
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from . import cc as cc_mod
-from . import exprs as X
 from . import extract, fixtures
 from . import generate as gen
 from . import grammar as G
@@ -23,13 +22,6 @@ from .pipeline import run_pipeline_cached
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _ensure_utc(spark: SparkSession) -> None:
-    """Timestamp-emitting queries interpret the fixture's TIMESTAMP_NTZ
-    values as UTC instants (matching DuckDB's epoch_us); pin the session
-    zone so the contract is independent of the caller's TZ config."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
 def e6(col):
@@ -108,240 +100,6 @@ def kg_media_features(spark, sf_dir):
     return extract.media_features_from(ms).select(
         "doc_id", "span_pos", "media_ref", "media_kind", "ref_bytes",
         "vec_id", "content_fp",
-    )
-
-
-# --- relational operator coverage (SURVEY.md §2 oracle sketches) -------------
-def tpch_q1(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
-        .withColumn("rev_e6", e6(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(e6(F.col("l_quantity"))).alias("sum_qty_e6"),
-            F.sum("rev_e6").alias("revenue_e6"),
-            F.count("*").alias("n"),
-        )
-    )
-
-
-def revenue_by_nation(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    n = _t(spark, sf_dir, "nation")
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.sum(e6(F.col("o_totalprice"))).alias("revenue_e6"),
-            F.count("*").alias("n_orders"),
-        )
-    )
-
-
-def customers_without_orders(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
-        "c_custkey", "c_name"
-    )
-
-
-def order_priorities_with_lineitems(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-def top2_lineitems_per_order(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    # Input-skew fix (guide §2.5): the fixture table is ONE parquet file
-    # with a single row group, so the map-side sort + partial
-    # WindowGroupLimit run in one task.  Hash-repartition by the window
-    # key parallelizes the sort (measured 0.75 → 0.40 s noop at sf0.1) —
-    # but ONLY when the scan is degenerate: on a well-split input the
-    # implicit exchange's partial WindowGroupLimit halves the shuffled
-    # rows, which the explicit repartition would forfeit.
-    if li.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        li = li.select("l_orderkey", "l_linenumber", "l_extendedprice").repartition(
-            "l_orderkey"
-        )
-    w = Window.partitionBy("l_orderkey").orderBy(
-        F.desc("l_extendedprice"), F.asc("l_linenumber")
-    )
-    return (
-        li.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 2)
-        .select("l_orderkey", "l_linenumber", "rn")
-    )
-
-
-def tpch_q3_topk(spark, sf_dir):
-    """TPC-H Q3 shape: 3-way join (segment-filtered customers ⋈ orders
-    ⋈ lineitem) with date band filters, revenue aggregation, top-10 —
-    the multi-join + agg + top-k composite (O19/O26/O31)."""
-    _ensure_utc(spark)
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    # scalar-subquery shape without a driver round-trip at plan-build
-    # time: the 1-row min(segment) aggregate joins back as a broadcast —
-    # the oracle's (SELECT min(c_mktsegment) FROM customer), lazily
-    seg_df = c.agg(F.min("c_mktsegment").alias("_seg"))
-    cutoff = F.lit("1998-06-01 00:00:00").cast("timestamp")
-    return (
-        c.join(F.broadcast(seg_df), c.c_mktsegment == F.col("_seg"))
-        .drop("_seg")
-        .join(o, c.c_custkey == o.o_custkey)
-        .join(li, o.o_orderkey == li.l_orderkey)
-        .filter((F.col("o_orderdate") < cutoff) & (F.col("l_shipdate") > cutoff))
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg(
-            F.sum(e6(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
-                "revenue_e6"
-            )
-        )
-        .orderBy(F.desc("revenue_e6"), F.asc("l_orderkey"))
-        .limit(10)
-        .select(
-            "l_orderkey",
-            F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias(
-                "orderdate_us"
-            ),
-            "revenue_e6",
-        )
-    )
-
-
-def event_moving_sum(spark, sf_dir):
-    """RANGE-frame window (the one frame type lead/lag/row_number
-    don't cover): per user, value sum + row count over the trailing
-    30 real-time minutes — tie-agnostic because a RANGE frame includes
-    every peer row of the current timestamp."""
-    _ensure_utc(spark)
-    ev = _t(spark, sf_dir, "events")
-    base = ev.select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        e6(F.col("value")).alias("v"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts_us")
-        .rangeBetween(-30 * 60 * 1000000, 0)
-    )
-    return base.select(
-        "user_id",
-        "event_id",
-        F.sum("v").over(w).alias("mov_sum_e6"),
-        F.count("*").over(w).alias("n_window"),
-    )
-
-
-def event_gaps(spark, sf_dir):
-    _ensure_utc(spark)
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        F.unix_micros(F.lead("ts").over(w).cast("timestamp")).alias("next_ts_us"),
-    )
-
-
-def top10_orders(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(10)
-        .select("o_orderkey", e6(F.col("o_totalprice")).alias("totalprice_e6"))
-    )
-
-
-def lineitem_except_all(spark, sf_dir):
-    li = _t(spark, sf_dir, "lineitem")
-    a = li.filter(F.col("l_shipdate") < F.lit("1995-01-01 00:00:00").cast("timestamp")).select(
-        "l_orderkey", "l_linenumber"
-    )
-    b = li.filter(F.col("l_discount") > 0.05).select("l_orderkey", "l_linenumber")
-    return a.exceptAll(b)
-
-
-def distinct_segments(spark, sf_dir):
-    return _t(spark, sf_dir, "customer").select("c_mktsegment").distinct()
-
-
-def events_isin_counts(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    types = ev.select("event_type").distinct().orderBy("event_type").limit(2)
-    keep = [r[0] for r in types.collect()]
-    return (
-        ev.filter(F.col("event_type").isin(keep))
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-def events_json_k(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.regexp_extract(F.col("props"), r'"k": ([0-9]+)', 1).cast("bigint").alias("k"),
-    )
-
-
-def best_order_per_customer(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "o_custkey",
-            F.col("o_orderkey").alias("best_orderkey"),
-            e6(F.col("o_totalprice")).alias("totalprice_e6"),
-        )
-    )
-
-
-def event_type_stats(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum(e6(F.col("value"))).alias("sum_value_e6"),
-    )
-
-
-def latest_event_per_user(spark, sf_dir):
-    _ensure_utc(spark)
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"))
-    )
-
-
-def norm_iri_demo(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    raw = F.concat(
-        F.lit("HTTP://Example.COM:80/c/"),
-        F.regexp_replace(F.col("c_name"), " ", "_"),
-        F.when(F.col("c_custkey") % 3 == 0, F.lit("?x=1")).otherwise(F.lit("")),
-    )
-    return c.select(
-        "c_custkey", raw.alias("raw_iri"), X.norm_iri(raw).alias("norm_iri")
     )
 
 
@@ -1120,255 +878,6 @@ def kg_sparql_graph(spark, sf_dir):
 def kg_predicate_counts(spark, sf_dir):
     return run_pipeline_cached(spark, sf_dir).triples.groupBy("p").agg(
         F.count("*").alias("n")
-    )
-
-
-def revenue_rollup(spark, sf_dir):
-    """ROLLUP (l_returnflag, l_linestatus) with coalesced subtotal labels
-    so the grouping-set rows hash identically across engines."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.withColumn("rev_e6", e6(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(F.sum("rev_e6").alias("revenue_e6"), F.count("*").alias("n"))
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "revenue_e6",
-            "n",
-        )
-    )
-
-
-def revenue_cube(spark, sf_dir):
-    """CUBE (l_returnflag, l_linestatus): all four grouping sets, with
-    coalesced subtotal labels so rows hash identically across engines."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.withColumn("rev_e6", e6(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
-        .cube("l_returnflag", "l_linestatus")
-        .agg(F.sum("rev_e6").alias("revenue_e6"), F.count("*").alias("n"))
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "revenue_e6",
-            "n",
-        )
-    )
-
-
-def nation_intersect(spark, sf_dir):
-    """INTERSECT set op: nations having BOTH customers and suppliers."""
-    c = _t(spark, sf_dir, "customer").select(
-        F.col("c_nationkey").alias("nationkey")
-    )
-    s = _t(spark, sf_dir, "supplier").select(
-        F.col("s_nationkey").alias("nationkey")
-    )
-    return c.intersect(s)
-
-
-def event_value_percentiles(spark, sf_dir):
-    """Exact grouped percentiles (p25/p50/p75) of the event value per
-    type.  Linear interpolation computed in EXACT int64 arithmetic on
-    both engines (round-3 ADVICE): for quartile k the target position
-    is (n-1)*k quarter-units, so with lo = that DIV 4 and r = that % 4
-    the interpolated value is (v[lo]*(4-r) + v[lo+1]*r) DIV 4 — no
-    floating interpolation whose last-ulp differences between Spark's
-    percentile() and DuckDB's quantile_cont could flip a floor() at
-    integer grid points.  v_e6 ≥ 0 so DIV (trunc) == floor on both."""
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type", e6(F.col("value")).alias("v_e6")
-    )
-    w = Window.partitionBy("event_type").orderBy("v_e6")
-    ranked = ev.withColumn("i", F.row_number().over(w) - 1).withColumn(
-        "n", F.count("*").over(Window.partitionBy("event_type"))
-    )
-    def pct(k, name):
-        q = f"((n-1)*{k})"
-        return F.expr(
-            f"CAST(sum(CASE WHEN i = {q} DIV 4 THEN v_e6 * (4 - {q} % 4) "
-            f"WHEN i = {q} DIV 4 + 1 THEN v_e6 * ({q} % 4) "
-            f"ELSE 0 END) DIV 4 AS BIGINT)"
-        ).alias(name)
-    return ranked.groupBy("event_type").agg(
-        pct(1, "p25_e6"), pct(2, "p50_e6"), pct(3, "p75_e6")
-    )
-
-
-def event_asof_join(spark, sf_dir):
-    """AS-OF JOIN (task-brief custom operator): each purchase
-    attributed to the user's most recent click at ts' <= ts.
-
-    Scale shape: implemented as UNION + WINDOW, not a join — both
-    sides land in one frame partitioned by user, and a running
-    struct-max over a RANGE frame (all peers of the current timestamp
-    included) yields the latest preceding click.  No per-key pair
-    enumeration, no skew blowup on hot users, one shuffle on user_id;
-    this is the as-of pattern that survives 10^12 rows where a
-    ts-inequality join explodes.  Tie-break is the lexicographic
-    struct max on (ts, event_id) — deterministic on every engine."""
-    _ensure_utc(spark)
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-    ).filter(F.col("event_type").isin("click", "purchase"))
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts_us")
-        .rangeBetween(Window.unboundedPreceding, 0)
-    )
-    best = F.max(
-        F.when(
-            F.col("event_type") == "click", F.struct("ts_us", "event_id")
-        )
-    ).over(w)
-    return (
-        ev.withColumn("best", best)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts_us").alias("purchase_ts_us"),
-            F.col("best.event_id").alias("click_id"),
-            F.col("best.ts_us").alias("click_ts_us"),
-        )
-    )
-
-
-def event_range_join(spark, sf_dir):
-    """Banded RANGE (interval) join: for each error event, how many
-    non-error events across ALL users fall within ±60 s of it.
-
-    Scale shape: a raw ts-inequality join is a cross product; instead
-    both sides bucket to the 60 s grid and the join key is the BUCKET —
-    each error probes its own bucket ± 1 (a 3-element explode on the
-    small side), then the exact |Δts| predicate verifies inside the
-    equi-join.  Work is O(rows × band density), shuffle is a plain
-    hash join on an integer key — the banded-join trick that keeps an
-    interval join alive at 10^12 rows."""
-    _ensure_utc(spark)
-    band_us = 60_000_000
-    ev = _t(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-    )
-    err = ev.filter(F.col("event_type") == "error").select(
-        F.col("event_id").alias("err_id"),
-        F.col("ts_us").alias("err_ts_us"),
-        F.floor(F.col("ts_us") / band_us).alias("bucket"),
-    )
-    probes = err.select(
-        "err_id",
-        "err_ts_us",
-        F.explode(
-            F.array(
-                F.col("bucket") - 1, F.col("bucket"), F.col("bucket") + 1
-            )
-        ).alias("b"),
-    )
-    other = ev.filter(F.col("event_type") != "error").select(
-        F.col("ts_us").alias("o_ts_us"),
-        F.floor(F.col("ts_us") / band_us).alias("b"),
-    )
-    counts = (
-        probes.join(other, "b")
-        .filter(F.abs(F.col("o_ts_us") - F.col("err_ts_us")) <= band_us)
-        .groupBy("err_id")
-        .agg(F.count("*").alias("n_nearby"))
-    )
-    return err.select("err_id").join(counts, "err_id", "left").select(
-        "err_id", F.coalesce("n_nearby", F.lit(0)).alias("n_nearby")
-    )
-
-
-def event_hypertable_rollup(spark, sf_dir):
-    """Hypertable rollup (task-brief custom operator): minute → hour →
-    day continuous aggregates per event type, where each level
-    RE-AGGREGATES the level below (sum/count/max are associative), not
-    the raw rows — the TimescaleDB continuous-aggregate maintenance
-    pattern.  At 10^12 rows the raw table is touched once (minute
-    level); hour reads |minutes| rows and day reads |hours| — the
-    rollup tree's total cost is ~1 raw scan regardless of depth."""
-    _ensure_utc(spark)
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        e6(F.col("value")).alias("v_e6"),
-    )
-    minute = (
-        ev.withColumn("bucket", F.floor(F.col("ts_us") / 60_000_000))
-        .groupBy("event_type", "bucket")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("v_e6").alias("sum_e6"),
-            F.max("v_e6").alias("max_e6"),
-        )
-    )
-    def up(lower, fan):
-        return (
-            lower.withColumn("bucket", F.floor(F.col("bucket") / fan))
-            .groupBy("event_type", "bucket")
-            .agg(
-                F.sum("n").alias("n"),
-                F.sum("sum_e6").alias("sum_e6"),
-                F.max("max_e6").alias("max_e6"),
-            )
-        )
-    hour = up(minute, 60)
-    day = up(hour, 24)
-    def lvl(df, name):
-        return df.select(
-            F.lit(name).alias("level"), "event_type", "bucket",
-            "n", "sum_e6", "max_e6",
-        )
-    return (
-        lvl(minute, "minute")
-        .unionByName(lvl(hour, "hour"))
-        .unionByName(lvl(day, "day"))
-    )
-
-
-def event_value_pivot(spark, sf_dir):
-    """Pivot-style conditional aggregation: per user, summed value for
-    the two lexicographically-first event types."""
-    ev = _t(spark, sf_dir, "events")
-    # limit(2) INSIDE the plan (matches events_isin_counts /
-    # tpch_q3_topk): the driver receives exactly 2 rows no matter how
-    # many distinct event types exist — round-3 verdict #2.
-    types = sorted(
-        r[0]
-        for r in ev.select("event_type").distinct()
-        .orderBy("event_type").limit(2).collect()
-    )
-    t0, t1 = types
-    vale6 = e6(F.col("value"))
-    return ev.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_type") == t0, vale6).otherwise(F.lit(0))).alias("v0_e6"),
-        F.sum(F.when(F.col("event_type") == t1, vale6).otherwise(F.lit(0))).alias("v1_e6"),
-    )
-
-
-def event_sessions(spark, sf_dir):
-    """Sessionization: per user, a new session starts after a >30-min
-    gap; session_id = running count of session starts (O29 lag+cumsum)."""
-    _ensure_utc(spark)
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_us = 30 * 60 * 1000000
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    prev = F.lag(ts_us).over(w)
-    new_sess = F.when(prev.isNull() | ((ts_us - prev) > gap_us), 1).otherwise(0)
-    return (
-        ev.withColumn("_new", new_sess)
-        .withColumn(
-            "session_id",
-            F.sum("_new").over(w.rowsBetween(Window.unboundedPreceding, 0)).cast("bigint"),
-        )
-        .select("user_id", "event_id", "session_id")
     )
 
 
@@ -2238,54 +1747,6 @@ def doc_chunk(spark, sf_dir):
     )
 
 
-def event_session_stats(spark, sf_dir):
-    """Round-6: session-level rollup on top of the gap sessionization
-    (event_sessions assigns per-event ids; this emits one row per
-    session).  Per user (ordered by ts, event_id for determinism) a new
-    session starts at the first event or when the gap from the previous
-    event exceeds 30 minutes; session_seq is the running count of
-    session starts.  Emits count / span / value-sum per session.
-
-    Scale shape: ONE shuffle.  The lag/cumsum window hash-partitions by
-    user_id; the final groupBy(user_id, session_seq) is satisfied by
-    that same partitioning (HashPartitioning(user_id) clusters every
-    (user_id, session_seq) group), so Catalyst plans no second
-    Exchange.  Value sums use the per-row floor(1e6*x) convention
-    before aggregation (int-exact both engines)."""
-    _ensure_utc(spark)
-    GAP_US = 30 * 60 * 1_000_000
-    ev = _t(spark, sf_dir, "events")
-    base = ev.select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        e6(F.col("value")).alias("v"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    flagged = base.withColumn(
-        "new_s",
-        F.when(
-            F.lag("ts_us").over(w).isNull()
-            | ((F.col("ts_us") - F.lag("ts_us").over(w)) > GAP_US),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    ).withColumn(
-        "session_seq",
-        F.sum("new_s").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return flagged.groupBy("user_id", "session_seq").agg(
-        F.count("*").cast("bigint").alias("n_events"),
-        F.min("ts_us").alias("start_us"),
-        F.max("ts_us").alias("end_us"),
-        (F.max("ts_us") - F.min("ts_us")).alias("duration_us"),
-        F.sum("v").cast("bigint").alias("sum_value_e6"),
-    ).select(
-        "user_id",
-        F.col("session_seq").cast("bigint").alias("session_seq"),
-        "n_events", "start_us", "end_us", "duration_us", "sum_value_e6",
-    )
-
-
 def dedup_ngram_coverage(spark, sf_dir):
     """Round-6: duplicated-n-gram coverage (the approximate
     substring-dedup *metric* of Lee et al.'s "Deduplicating Training
@@ -2432,64 +1893,7 @@ def rdf_turtle_bnode_roundtrip(spark, sf_dir):
     )
 
 
-# --- round-6c: funnel / sketch / tokenizer-training operators ------------------
-def event_funnel(spark, sf_dir):
-    """Round-6: ordered FUNNEL analysis — for every user, how far they
-    progressed through signup -> view -> purchase where each step must
-    happen STRICTLY AFTER the previous one (the classic product-
-    analytics sequential-conversion query).  Step k's timestamp is the
-    earliest event of its type later than step k-1's timestamp, so the
-    whole funnel is three per-user min-aggregates chained by equi-joins
-    on user_id — every shuffle keys on user_id (AQE reuses the
-    exchange), no window over the full event stream, no per-user event
-    arrays.  At 100 TB this is 3 slim groupBys + 3 slim joins; skewed
-    power-users cost only their own group, never a cross product."""
-    _ensure_utc(spark)
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-    )
-    s1 = (
-        ev.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts_us").alias("t1_us"))
-    )
-    s2 = (
-        ev.filter(F.col("event_type") == "view")
-        .join(s1, "user_id")
-        .filter(F.col("ts_us") > F.col("t1_us"))
-        .groupBy("user_id")
-        .agg(F.min("ts_us").alias("t2_us"))
-    )
-    s3 = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(s2, "user_id")
-        .filter(F.col("ts_us") > F.col("t2_us"))
-        .groupBy("user_id")
-        .agg(F.min("ts_us").alias("t3_us"))
-    )
-    users = ev.select("user_id").distinct()
-    reached = (
-        F.when(F.col("t3_us").isNotNull(), F.lit(3))
-        .when(F.col("t2_us").isNotNull(), F.lit(2))
-        .when(F.col("t1_us").isNotNull(), F.lit(1))
-        .otherwise(F.lit(0))
-    )
-    return (
-        users.join(s1, "user_id", "left")
-        .join(s2, "user_id", "left")
-        .join(s3, "user_id", "left")
-        .select(
-            "user_id",
-            reached.cast("int").alias("reached"),
-            "t1_us",
-            "t2_us",
-            "t3_us",
-        )
-    )
-
-
+# --- round-6c: sketch / tokenizer-training operators -------------------------
 def _charcode_expr(col: str) -> str:
     """SQL for the char-level rolling hash of a token column — the
     grammar's charcode(t): fold (31*acc + ascii(c)) % HASH_P over the
@@ -2966,35 +2370,6 @@ def ann_mips(spark, sf_dir):
     return A.ann_mips(_t(spark, sf_dir, "embeddings"))
 
 
-def event_retention_cohorts(spark, sf_dir):
-    """Round-6c: classic retention-cohort analysis over the event
-    stream — users cohorted by their FIRST active week, then counted
-    per (cohort week, week offset).  Weeks are integer epoch-day DIV 7
-    (never engine week-truncation: Monday-vs-Sunday and locale rules
-    differ across engines; the day-index arithmetic is bit-identical).
-    Scale shape: distinct (user, week) first (map-side combine on the
-    stream), a per-user min aggregate, one join back on user_id, and a
-    final small aggregate — no windows over the raw stream."""
-    _ensure_utc(spark)
-    ev = _t(spark, sf_dir, "events")
-    uw = ev.select(
-        "user_id",
-        F.expr(
-            "CAST(unix_micros(CAST(ts AS TIMESTAMP))"
-            " DIV 86400000000 DIV 7 AS BIGINT)"
-        ).alias("week"),
-    ).distinct()
-    cohort = uw.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
-    return (
-        uw.join(cohort, "user_id")
-        .groupBy(
-            "cohort_week",
-            (F.col("week") - F.col("cohort_week")).alias("week_offset"),
-        )
-        .agg(F.countDistinct("user_id").cast("bigint").alias("n_users"))
-    )
-
-
 def kg_negative_edges(spark, sf_dir):
     """Round-6c: deterministic NEGATIVE-EDGE SAMPLING — the standard
     KG-embedding training-data prep (TransE-family corruption): every
@@ -3096,84 +2471,6 @@ def dedup_keep_best(spark, sf_dir):
     )
 
 
-def event_value_outliers(spark, sf_dir):
-    """Round-6c: robust OUTLIER DETECTION per event type — the
-    median/MAD rule (|x − med| > 3·MAD), the standard robust
-    alternative to z-scores (mean/std are themselves dragged by the
-    outliers).  All arithmetic stays int64 on the e6 grid: med_2x =
-    2·median via the half-unit interpolation of
-    event_value_percentiles, dev_2x = |2·v − med_2x|, mad_4x =
-    2·median(dev_2x), and the flag is 2·dev_2x > 3·mad_4x — no float
-    ever, so the cut is bit-identical across engines.  Scale shape:
-    two ranked-window passes per type (the exact-median shape shared
-    with event_value_percentiles) + broadcast-size per-type stats
-    joined back."""
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type", "event_id", e6(F.col("value")).alias("v_e6")
-    )
-
-    def med2(df, col):
-        w = Window.partitionBy("event_type").orderBy(col)
-        ranked = df.withColumn("i", F.row_number().over(w) - 1).withColumn(
-            "n", F.count("*").over(Window.partitionBy("event_type"))
-        )
-        return ranked.groupBy("event_type").agg(
-            F.expr(
-                f"CAST(sum(CASE WHEN i = (n-1) DIV 2 THEN {col} * (2 - (n-1) % 2) "
-                f"WHEN i = (n-1) DIV 2 + 1 THEN {col} * ((n-1) % 2) "
-                "ELSE 0 END) AS BIGINT)"
-            ).alias("m2")
-        )
-
-    med = med2(ev, "v_e6").withColumnRenamed("m2", "med_2x")
-    dev = ev.join(F.broadcast(med), "event_type").withColumn(
-        "dev_2x", F.abs(F.lit(2) * F.col("v_e6") - F.col("med_2x"))
-    )
-    mad = (
-        med2(dev.select("event_type", "event_id", "dev_2x"), "dev_2x")
-        .select("event_type", (F.col("m2") * 2).alias("mad_4x"))
-    )
-    return (
-        dev.join(F.broadcast(mad), "event_type")
-        .filter(F.lit(2) * F.col("dev_2x") > F.lit(3) * F.col("mad_4x"))
-        .select("event_type", "event_id", "v_e6")
-    )
-
-
-def event_session_window_stats(spark, sf_dir):
-    """Round-6c: Spark's NATIVE session_window (gap-merged dynamic
-    windows) — per (user, session) event count and value sum.  One
-    groupBy does the sessionize-and-aggregate in a single shuffle
-    (Catalyst's UpdatingSessionsExec merges windows in-partition after
-    hashing by user), vs the window+cumsum+second-aggregate chain of
-    event_sessions/event_session_stats — the idiomatic engine-native
-    form of the same operator family.  Boundary semantics pinned in
-    the oracle: an event exactly gap-distant from its predecessor
-    still EXTENDS the session (session_window closes only strictly
-    beyond last + gap — verified by the boundary unit test); window
-    end = last event + gap."""
-    _ensure_utc(spark)
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id",
-        F.col("ts").cast("timestamp").alias("tss"),
-        e6(F.col("value")).alias("v_e6"),
-    )
-    return (
-        ev.groupBy("user_id", F.session_window("tss", "30 minutes").alias("w"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            F.sum("v_e6").cast("bigint").alias("sum_value_e6"),
-        )
-        .select(
-            "user_id",
-            F.unix_micros("w.start").alias("start_us"),
-            F.unix_micros("w.end").alias("end_us"),
-            "n_events",
-            "sum_value_e6",
-        )
-    )
-
-
 def langid_confusion(spark, sf_dir):
     """Round-6c: language-ID CONFUSION MATRIX — the evaluation metric
     for the classifier operator (true fixture lang × predicted lang →
@@ -3256,38 +2553,6 @@ def bpe_encode_counts(spark, sf_dir):
             F.sum("n_before").cast("bigint").alias("n_syms_before"),
             F.sum("n_after").cast("bigint").alias("n_syms_after"),
         )
-    )
-
-
-def event_cumulative_users(spark, sf_dir):
-    """Round-6c: cumulative-distinct-user curve — per day, how many
-    users have EVER been seen up to that day (the growth curve every
-    analytics stack draws).  Computed without a running COUNT(DISTINCT)
-    window (quadratic state at scale): each user contributes once at
-    their FIRST day (per-user min aggregate), then one small
-    per-day count + cumulative sum over the day sequence — integer
-    epoch-days (engine-neutral, like the retention weeks)."""
-    _ensure_utc(spark)
-    ev = _t(spark, sf_dir, "events")
-    first_day = (
-        ev.select(
-            "user_id",
-            F.expr(
-                "CAST(unix_micros(CAST(ts AS TIMESTAMP))"
-                " DIV 86400000000 AS BIGINT)"
-            ).alias("day"),
-        )
-        .groupBy("user_id")
-        .agg(F.min("day").alias("first_day"))
-    )
-    per_day = first_day.groupBy("first_day").agg(
-        F.count("*").cast("bigint").alias("new_users")
-    )
-    w = Window.orderBy("first_day").rowsBetween(Window.unboundedPreceding, 0)
-    return per_day.select(
-        F.col("first_day").alias("day"),
-        "new_users",
-        F.sum("new_users").over(w).cast("bigint").alias("cum_users"),
     )
 
 
@@ -3622,37 +2887,6 @@ def doc_surprisal_heldout(spark, sf_dir):
     )
 
 
-def event_value_histogram(spark, sf_dir):
-    """Round-6c: equi-width 16-bucket HISTOGRAM of event values on the
-    e6 integer grid — the observability readout for value
-    distributions (the exact-percentile query is the equi-depth
-    companion).  Bucket = ((v_e6 − min_e6) · 16) DIV (range + 1) with
-    the global min/max broadcast from one 1-row aggregate; pure
-    integer arithmetic, identical buckets on every engine.  Two
-    map-side-combined aggregates — O(N), no sort, no skew exposure."""
-    ev = _t(spark, sf_dir, "events").select(
-        F.expr("CAST(floor(1000000 * value) AS BIGINT)").alias("v_e6")
-    )
-    mm = ev.agg(
-        F.min("v_e6").alias("min_e6"), F.max("v_e6").alias("max_e6")
-    )
-    return (
-        ev.crossJoin(F.broadcast(mm))
-        .select(
-            F.expr(
-                "CAST(((v_e6 - min_e6) * 16) DIV (max_e6 - min_e6 + 1) AS INT)"
-            ).alias("bucket"),
-            "v_e6",
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            F.min("v_e6").alias("lo_e6"),
-            F.max("v_e6").alias("hi_e6"),
-        )
-    )
-
-
 def kg_sparql_values(spark, sf_dir):
     """Round-6c: VALUES inline data + MIN/MAX aggregates through the
     text front-end — the parameterized-query form consumers actually
@@ -3757,8 +2991,8 @@ def vocab_growth(spark, sf_dir):
     10-document batch, how many word-TRIGRAM types appear for the
     FIRST time and the cumulative type count (the fixture's unigram
     vocabulary is closed and saturates in batch 0; trigram types grow
-    for the whole corpus, which is the regime the curve is for).  Same
-    no-quadratic-state shape as event_cumulative_users: each type
+    for the whole corpus, which is the regime the curve is for).  No
+    quadratic state: each type
     contributes once at its first batch (per-type min aggregate), then
     one small per-batch count + running sum; the windowed frame is
     corpus/10 rows — the batch grain is the scale knob (coarsen it,
@@ -3829,31 +3063,6 @@ def entity_neighbor_sample(spark, sf_dir):
     )
 
 
-def event_debounce(spark, sf_dir):
-    """Round-6c: EVENT DEBOUNCE — drop events that repeat the same
-    (user, type) within 60 s of the previously KEPT event of that key
-    (sensor/click-spam suppression).  Kept-anchor semantics need a
-    scan, but the fixture's rule is definable with lag alone when
-    debounced runs can't chain (verified by the oracle): an event is
-    kept iff it is ≥ 60 s after the previous RAW event of its key —
-    the standard lag-window form, one shuffle on (user_id, event_type),
-    engine-exact on integer micros."""
-    _ensure_utc(spark)
-    ev = _t(spark, sf_dir, "events")
-    us = F.expr("unix_micros(CAST(ts AS TIMESTAMP))")
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts_us", "event_id")
-    keyed = ev.select(
-        "event_id", "user_id", "event_type", us.alias("ts_us")
-    ).withColumn("prev_us", F.lag("ts_us").over(w))
-    return (
-        keyed.filter(
-            F.col("prev_us").isNull()
-            | ((F.col("ts_us") - F.col("prev_us")) >= 60_000_000)
-        )
-        .select("event_id", "user_id", "event_type", "ts_us")
-    )
-
-
 def kg_sparql_path_nps(spark, sf_dir):
     """Round-6c: NEGATED PROPERTY SET path — all outgoing edges of
     Commerce entities EXCEPT rdf:type and ex:score
@@ -3872,28 +3081,6 @@ def kg_sparql_path_nps(spark, sf_dir):
           ?e !(rdf:type|ex:score) ?o
         }
         """,
-    )
-
-
-def event_type_transitions(spark, sf_dir):
-    """Round-6c: EVENT-TYPE MARKOV TRANSITION MATRIX — per user the
-    type sequence in time order, counted as (from_type, to_type) pairs
-    (the session-flow / funnel-discovery readout; also the training
-    table for a first-order behavior model).  One lag window per user
-    + one map-side-combined aggregate — the shuffle carries one row
-    per transition type pair per partition, never sequences."""
-    _ensure_utc(spark)
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        ev.select("user_id", "ts", "event_id", "event_type")
-        .withColumn("prev_type", F.lag("event_type").over(w))
-        .filter(F.col("prev_type").isNotNull())
-        .groupBy(
-            F.col("prev_type").alias("from_type"),
-            F.col("event_type").alias("to_type"),
-        )
-        .agg(F.count("*").cast("bigint").alias("n_transitions"))
     )
 
 
@@ -3945,37 +3132,6 @@ def corpus_stats_by_source(spark, sf_dir):
         .withColumn(
             "mean_len_e6",
             F.expr("CAST((1000000 * n_tokens) DIV n_docs AS BIGINT)"),
-        )
-    )
-
-
-def event_user_lifetime(spark, sf_dir):
-    """Round-6c: USER LIFETIME SUMMARY — per user: first/last activity
-    (epoch micros), span in days, events, active days (the LTV /
-    churn-feature base table).  One aggregate; distinct-day count via
-    the integer epoch-day like the retention query."""
-    _ensure_utc(spark)
-    ev = _t(spark, sf_dir, "events")
-    us = F.expr("unix_micros(CAST(ts AS TIMESTAMP))")
-    return (
-        ev.select(
-            "user_id",
-            us.alias("ts_us"),
-            F.expr(
-                "CAST(unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000"
-                " AS BIGINT)"
-            ).alias("day"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.min("ts_us").alias("first_us"),
-            F.max("ts_us").alias("last_us"),
-            F.count("*").cast("bigint").alias("n_events"),
-            F.countDistinct("day").cast("bigint").alias("n_active_days"),
-        )
-        .withColumn(
-            "span_days",
-            F.expr("CAST((last_us - first_us) DIV 86400000000 AS BIGINT)"),
         )
     )
 
@@ -4203,100 +3359,6 @@ def embedding_kmeans_train(spark, sf_dir):
     )
 
 
-def tpch_q5(spark, sf_dir):
-    """Round-6c: TPC-H Q5 shape — local-supplier revenue per nation
-    (customer and supplier in the SAME nation), 6-table join:
-    region ⋈ nation ⋈ customer ⋈ orders ⋈ lineitem ⋈ supplier.
-    Catalyst broadcasts every dimension (region/nation/customer/
-    supplier at fixture scale; on a real corpus AQE keeps the small
-    ones broadcast and shuffles the big ones) so the fact table
-    streams through BroadcastHashJoins — the canonical star-join plan.
-    Revenue on the e6 integer grid from the raw doubles, floor AFTER
-    the per-row product like revenue_by_nation."""
-    region = _t(spark, sf_dir, "region")
-    nation = _t(spark, sf_dir, "nation")
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    lineitem = _t(spark, sf_dir, "lineitem")
-    supplier = _t(spark, sf_dir, "supplier")
-    rev = F.expr(
-        "CAST(floor(1000000 * l_extendedprice * (1 - l_discount)) AS BIGINT)"
-    )
-    j = (
-        lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey"))
-        .join(
-            F.broadcast(supplier),
-            (F.col("l_suppkey") == F.col("s_suppkey"))
-            & (F.col("c_nationkey") == F.col("s_nationkey")),
-        )
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
-    )
-    return (
-        j.select("n_name", "r_name", rev.alias("rev_e6"))
-        .groupBy("r_name", "n_name")
-        .agg(
-            F.sum("rev_e6").cast("bigint").alias("revenue_e6"),
-            F.count("*").cast("bigint").alias("n_lineitems"),
-        )
-    )
-
-
-def scd2_user_state(spark, sf_dir):
-    """Round-6: SCD Type-2 dimension history — materialize the events
-    change stream into valid-from/valid-to interval rows per user (the
-    standard warehouse CDC pattern: consecutive runs of the same
-    event_type collapse into one versioned row; the open run carries
-    valid_to_us = -1 and is_current = 1).
-
-    Scale shape: ONE shuffle on user_id serves every step — the
-    run-boundary lag, the running-sum run_id, the per-run aggregate
-    (same key prefix), and the valid_to lead all ride the same
-    hash(user_id) partitioning; no sequence or array ever enters a
-    shuffle row.  At 10^12 events this is a single repartition plus
-    linear window work per user."""
-    _ensure_utc(spark)
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    e = ev.select(
-        "user_id",
-        "event_id",
-        "event_type",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-    )
-    e = e.withColumn("prev_type", F.lag("event_type").over(w)).withColumn(
-        "chg",
-        F.when(
-            F.col("prev_type").isNull()
-            | (F.col("prev_type") != F.col("event_type")),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    e = e.withColumn(
-        "run_id",
-        F.sum("chg")
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .cast("bigint"),
-    )
-    runs = e.groupBy("user_id", "run_id").agg(
-        F.min("event_type").alias("state"),
-        F.min("ts_us").alias("valid_from_us"),
-        F.count("*").cast("bigint").alias("n_events"),
-    )
-    wr = Window.partitionBy("user_id").orderBy("run_id")
-    nxt = F.lead("valid_from_us").over(wr)
-    return runs.select(
-        "user_id",
-        "run_id",
-        "state",
-        "valid_from_us",
-        F.coalesce(nxt, F.lit(-1).cast("bigint")).alias("valid_to_us"),
-        "n_events",
-        F.when(nxt.isNull(), F.lit(1)).otherwise(F.lit(0)).alias("is_current"),
-    )
-
-
 def kg_entity_provenance(spark, sf_dir):
     """Round-6: per-entity provenance summary — for every canonical
     proxy, how many mentions/documents/sources support it and the
@@ -4421,85 +3483,6 @@ def kg_graph_hash(spark, sf_dir):
     )
 
 
-def event_ewma(spark, sf_dir):
-    """Round-6: bounded-lookback exponential moving average per user —
-    the smoothing operator monitoring stacks apply to event values.
-    Weights are powers of two over the trailing 8 events
-    (2^7 for the current row down to 2^0 for lag 7), so numerator and
-    denominator are exact BIGINTs on the e6 grid and the truncating
-    integer division is identical in Spark and DuckDB (values are
-    non-negative by fixture construction).  A true infinite-memory EWMA
-    is a linear recurrence no engine's window frame expresses without
-    exploding weights; the 8-tap truncation keeps >99.2% of the mass
-    (sum 2^0..2^7 vs the geometric tail) and stays integer-exact.
-
-    Scale shape: ONE user_id shuffle serves all eight lag() columns
-    (same window spec); no self-joins, no state."""
-    _ensure_utc(spark)
-    ev = _t(spark, sf_dir, "events")
-    base = ev.select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-        e6(F.col("value")).alias("v"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    num = None
-    den = None
-    for k in range(8):
-        lv = F.lag("v", k).over(w) if k else F.col("v")
-        wt = F.lit(1 << (7 - k)).cast("bigint")
-        term = F.coalesce(lv * wt, F.lit(0).cast("bigint"))
-        mask = F.when(lv.isNotNull(), wt).otherwise(F.lit(0).cast("bigint"))
-        num = term if num is None else num + term
-        den = mask if den is None else den + mask
-    return base.select(
-        "user_id",
-        "event_id",
-        num.cast("bigint").alias("_num"),
-        den.cast("bigint").alias("_den"),
-    ).selectExpr(
-        "user_id", "event_id", "CAST(_num DIV _den AS BIGINT) AS ewma_e6"
-    )
-
-
-def tpch_q4(spark, sf_dir):
-    """Round-6: TPC-H Q4 shape — order-priority checking: count the
-    orders of one quarter that had at least one LATE lineitem
-    (l_shipdate more than 60 days after the order date; the fixture
-    lineitem has no commit/receipt dates so lateness is vs the order
-    date).  The EXISTS decorrelates to a LEFT SEMI join with the
-    non-equi lateness predicate INSIDE the join condition, so the
-    probe side never materializes matched multiplicity — the shape
-    that distinguishes semi-join from join+distinct at scale.  Date
-    arithmetic on epoch micros (integer-exact both engines)."""
-    _ensure_utc(spark)
-    orders = _t(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderpriority",
-        F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("od_us"),
-    )
-    Q_LO = 820454400000000  # 1996-01-01 UTC in micros
-    Q_HI = 828316800000000  # 1996-04-01 UTC in micros
-    orders = orders.filter(
-        (F.col("od_us") >= Q_LO) & (F.col("od_us") < Q_HI)
-    )
-    late = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey",
-        F.unix_micros(F.col("l_shipdate").cast("timestamp")).alias("sd_us"),
-    )
-    sixty_days_us = 60 * 86400 * 1000000
-    j = orders.join(
-        late,
-        (F.col("l_orderkey") == F.col("o_orderkey"))
-        & (F.col("sd_us") > F.col("od_us") + F.lit(sixty_days_us)),
-        "left_semi",
-    )
-    return j.groupBy("o_orderpriority").agg(
-        F.count("*").cast("bigint").alias("order_count")
-    )
-
-
 def doc_zorder_key(spark, sf_dir):
     """Round-6: Z-ORDER (Morton) export layout key — the
     multidimensional clustering trick warehouse layouts use so range
@@ -4616,90 +3599,6 @@ def embedding_pq_codes(spark, sf_dir):
     )
 
 
-def tpch_q14(spark, sf_dir):
-    """Round-6: TPC-H Q14 shape — promotion revenue share: of one
-    month's lineitem revenue, the fraction from PROMO-type parts.
-    Part is broadcast (a dimension); the month filter prunes the fact
-    scan BEFORE the join (pushed to the parquet reader).  The share is
-    published on the e6 grid as promo_rev_e6 DIV (total_rev_e6 DIV
-    1e6) — a pure-integer form both engines compute identically, and
-    one that cannot overflow (multiplying promo_rev_e6 by 1e6 first
-    would pass 2^63 on a 100 TB fact table)."""
-    _ensure_utc(spark)
-    li = _t(spark, sf_dir, "lineitem")
-    # filter on the RAW column (plain comparisons push to the parquet
-    # reader as PushedFilters; a unix_micros() wrapper would not)
-    li = li.filter(
-        (F.col("l_shipdate") >= F.lit("1996-03-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp_ntz"))
-    )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = F.expr(
-        "CAST(floor(1000000 * l_extendedprice * (1 - l_discount)) AS BIGINT)"
-    )
-    j = li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
-    agg = j.select(
-        rev.alias("rev_e6"),
-        F.when(F.col("p_type") == "PROMO", rev)
-        .otherwise(F.lit(0).cast("bigint"))
-        .alias("promo_e6"),
-    ).agg(
-        F.sum("promo_e6").cast("bigint").alias("promo_rev_e6"),
-        F.sum("rev_e6").cast("bigint").alias("total_rev_e6"),
-    )
-    return agg.selectExpr(
-        "promo_rev_e6",
-        "total_rev_e6",
-        "CAST(promo_rev_e6 DIV (total_rev_e6 DIV 1000000) AS BIGINT)"
-        " AS promo_share_e6",
-    )
-
-
-def tpch_q19(spark, sf_dir):
-    """Round-6: TPC-H Q19 shape — discounted revenue under an OR of
-    brand/size/quantity conjunctions.  The equi key (partkey) carries
-    the join; the disjunction stays a post-join filter Catalyst splits:
-    the part-only conjuncts (brand OR-list, size >= 1) push into the
-    broadcast side's scan, the mixed ones evaluate after the hash
-    probe — the shape that verifies disjunctive predicate splitting
-    rather than forcing a nested-loop join."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_partkey",
-        "l_quantity",
-        F.expr(
-            "CAST(floor(1000000 * l_extendedprice * (1 - l_discount))"
-            " AS BIGINT)"
-        ).alias("rev_e6"),
-    )
-    part = _t(spark, sf_dir, "part").select(
-        "p_partkey", "p_brand", "p_size"
-    )
-    j = li.join(
-        F.broadcast(part), F.col("l_partkey") == F.col("p_partkey")
-    )
-    cond = (
-        (
-            (F.col("p_brand") == "Brand#12")
-            & F.col("p_size").between(1, 5)
-            & F.col("l_quantity").between(1, 11)
-        )
-        | (
-            (F.col("p_brand") == "Brand#23")
-            & F.col("p_size").between(1, 10)
-            & F.col("l_quantity").between(10, 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#34")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(20, 30)
-        )
-    )
-    return j.filter(cond).agg(
-        F.sum("rev_e6").cast("bigint").alias("revenue_e6"),
-        F.count("*").cast("bigint").alias("n_lineitems"),
-    )
-
-
 def kg_store_merge(spark, sf_dir):
     """Round-6: DataFrame-level CDC MERGE into the store
     (rdfio.merge_quads — the Delta-style upsert surface; SPARQL
@@ -4804,116 +3703,6 @@ def embedding_knn_graph(spark, sf_dir):
     return ann.knn_graph(_t(spark, sf_dir, "embeddings"), k=3)
 
 
-def nation_coverage_full_join(spark, sf_dir):
-    """Round-6: FULL OUTER JOIN shape (the one outer-join variant the
-    registry lacked): per-nation customer count vs per-nation supplier
-    count, nations missing from either side kept with 0.  Both inputs
-    are pre-aggregated BEFORE the join — the full-outer join runs on
-    two ≤|nations| frames, never on raw fact rows (the scale-correct
-    order; joining raw then aggregating would shuffle every row twice).
-    """
-    cust = (
-        _t(spark, sf_dir, "customer")
-        .groupBy(F.col("c_nationkey").alias("nationkey"))
-        .agg(F.count("*").alias("n_customers"))
-    )
-    supp = (
-        _t(spark, sf_dir, "supplier")
-        .groupBy(F.col("s_nationkey").alias("nationkey"))
-        .agg(F.count("*").alias("n_suppliers"))
-    )
-    return (
-        cust.join(supp, "nationkey", "full_outer")
-        .select(
-            "nationkey",
-            F.coalesce("n_customers", F.lit(0))
-            .cast("bigint")
-            .alias("n_customers"),
-            F.coalesce("n_suppliers", F.lit(0))
-            .cast("bigint")
-            .alias("n_suppliers"),
-        )
-    )
-
-
-def orders_above_avg(spark, sf_dir):
-    """Round-6: scalar-subquery shape — orders pricier than the global
-    mean, counted per priority.  The mean is exact integer arithmetic
-    (sum_e6 DIV n, one 1-row aggregate broadcast into the filter) so
-    the cut line is engine-identical; a float AVG() could flip rows
-    sitting exactly on the boundary."""
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderpriority", e6(F.col("o_totalprice")).alias("tp_e6")
-    )
-    avg = o.agg(
-        F.expr("CAST(sum(tp_e6) DIV count(*) AS BIGINT)").alias("avg_e6")
-    )
-    return (
-        o.join(F.broadcast(avg))
-        .filter(F.col("tp_e6") > F.col("avg_e6"))
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count("*").cast("bigint").alias("n_orders"),
-            F.sum("tp_e6").cast("bigint").alias("sum_price_e6"),
-        )
-    )
-
-
-def event_trending_daily(spark, sf_dir):
-    """Round-6: TIME-BUCKETED TRENDING TOP-K — per epoch-day, the top-3
-    event types by count with their ranks (the dashboard "what moved
-    today" readout).  Grouped top-k via rn <= k so Spark plans
-    WindowGroupLimit: each partition keeps only 3 candidate rows per
-    day BEFORE the exchange — at 10^12 events the shuffle carries
-    days*types partial counts, never event rows."""
-    _ensure_utc(spark)
-    ev = _t(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            F.expr(
-                "CAST(unix_micros(CAST(ts AS TIMESTAMP))"
-                " DIV 86400000000 AS BIGINT)"
-            ).alias("day"),
-            "event_type",
-        )
-        .groupBy("day", "event_type")
-        .agg(F.count("*").cast("bigint").alias("n"))
-    )
-    w = Window.partitionBy("day").orderBy(F.desc("n"), F.asc("event_type"))
-    return (
-        daily.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("day", "event_type", "n", F.col("rank").cast("int").alias("rank"))
-    )
-
-
-def event_value_pctrank(spark, sf_dir):
-    """Round-6: integer-exact PERCENT_RANK within group — the
-    rank-based feature normalization ML pipelines apply to heavy-tailed
-    values (robust to outliers where min-max scaling is not).
-    pr_e6 = (rank - 1) * 1e6 DIV (n - 1) entirely in int64; ties share
-    the SQL rank() value on both engines, so the contract is
-    engine-exact where a float percent_rank() could differ in the last
-    ulp."""
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type", "event_id", e6(F.col("value")).alias("v_e6")
-    )
-    w = Window.partitionBy("event_type").orderBy("v_e6")
-    return (
-        ev.withColumn("rk", F.rank().over(w))
-        .withColumn(
-            "n", F.count("*").over(Window.partitionBy("event_type"))
-        )
-        .selectExpr(
-            "event_type",
-            "event_id",
-            "CAST(CASE WHEN n = 1 THEN 0"
-            " ELSE (rk - 1) * 1000000 DIV (n - 1) END AS BIGINT)"
-            " AS pctrank_e6",
-        )
-    )
-
-
 def kg_store_diff(spark, sf_dir):
     """Round-6: two-store ANTI-ENTROPY DIFF (rdfio.store_diff — the
     replica-repair readout that closes the hash → diff → merge
@@ -4961,103 +3750,6 @@ def kg_store_diff(spark, sf_dir):
     return rdfio.store_diff(spark, store_a, store_b)
 
 
-def event_stats_unpivot(spark, sf_dir):
-    """Round-6: UNPIVOT (melt) shape — the wide per-type stats row
-    rotated into (event_type, metric, value_e6) long format, the
-    transform every metrics exporter applies before shipping to a
-    time-series store.  Map-only after the aggregate: unpivot is a
-    generate, no extra shuffle."""
-    ev = _t(spark, sf_dir, "events").select(
-        "event_type", e6(F.col("value")).alias("v_e6")
-    )
-    wide = ev.groupBy("event_type").agg(
-        F.count("*").cast("bigint").alias("n_events"),
-        F.sum("v_e6").cast("bigint").alias("sum_e6"),
-        F.min("v_e6").cast("bigint").alias("min_e6"),
-        F.max("v_e6").cast("bigint").alias("max_e6"),
-    )
-    return wide.unpivot(
-        "event_type",
-        ["n_events", "sum_e6", "min_e6", "max_e6"],
-        "metric",
-        "value_e6",
-    )
-
-
-def part_price_quartiles(spark, sf_dir):
-    """Round-6: NTILE window shape — parts binned into price quartiles
-    (the bucketing step behind banded pricing reports and stratified
-    samplers).  The ordering carries the unique p_partkey tie-break,
-    so every row's bucket is total-order determined and engine-exact;
-    emitted as per-quartile aggregates (count + min/max price) so the
-    contract pins every bucket boundary."""
-    p = _t(spark, sf_dir, "part").select(
-        "p_partkey", e6(F.col("p_retailprice")).alias("price_e6")
-    )
-    w = Window.orderBy("price_e6", "p_partkey")
-    return (
-        p.withColumn("quartile", F.ntile(4).over(w))
-        .groupBy("quartile")
-        .agg(
-            F.count("*").cast("bigint").alias("n_parts"),
-            F.min("price_e6").cast("bigint").alias("min_price_e6"),
-            F.max("price_e6").cast("bigint").alias("max_price_e6"),
-        )
-        .select(F.col("quartile").cast("int").alias("quartile"),
-                "n_parts", "min_price_e6", "max_price_e6")
-    )
-
-
-def priority_revenue_share(spark, sf_dir):
-    """Round-6: RATIO-TO-REPORT window shape — each priority's share
-    of total order revenue, the denominator an unpartitioned window
-    sum over the (5-row) aggregate, share on the integer e6 grid via
-    the overflow-safe grp DIV (total DIV 1e6) form (see tpch_q14)."""
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderpriority", e6(F.col("o_totalprice")).alias("tp_e6")
-    )
-    grp = o.groupBy("o_orderpriority").agg(
-        F.sum("tp_e6").cast("bigint").alias("rev_e6")
-    )
-    w = Window.partitionBy()
-    return grp.select(
-        "o_orderpriority",
-        "rev_e6",
-        F.expr(
-            "CAST(rev_e6 DIV (sum(rev_e6) OVER () DIV 1000000) AS BIGINT)"
-        ).alias("share_e6"),
-    )
-
-
-def revenue_grouping_sets(spark, sf_dir):
-    """Round-6: explicit GROUPING SETS shape (distinct from the
-    existing ROLLUP/CUBE queries: an arbitrary set list, here the two
-    single-dimension reports ((nation), (priority)) computed in ONE
-    pass over the join — Spark expands both groupings from the same
-    shuffle read instead of scanning twice).  GROUPING() flags
-    disambiguate the NULL-keyed rows exactly as in the cube query."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    j = (
-        o.join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("n_name", "o_orderpriority", e6(F.col("o_totalprice")).alias("tp_e6"))
-    )
-    j.createOrReplaceTempView("_rgs_j")
-    return spark.sql(
-        """
-        SELECT n_name, o_orderpriority,
-               CAST(grouping(n_name) AS INT) AS g_nation,
-               CAST(grouping(o_orderpriority) AS INT) AS g_priority,
-               CAST(sum(tp_e6) AS BIGINT) AS rev_e6,
-               CAST(count(*) AS BIGINT) AS n_orders
-        FROM _rgs_j
-        GROUP BY GROUPING SETS ((n_name), (o_orderpriority))
-        """
-    )
-
-
 def kg_parse_error_stats(spark, sf_dir):
     """Round-6: INGEST ERROR OBSERVABILITY — the drop-rate metric over
     the quarantine policy (the parse kernels silently drop malformed
@@ -5093,42 +3785,6 @@ def kg_parse_error_stats(spark, sf_dir):
             "CAST(n_lines - n_parsed AS BIGINT) AS n_dropped",
             "CAST((n_lines - n_parsed) * 1000000 DIV n_lines AS BIGINT)"
             " AS drop_rate_e6",
-        )
-    )
-
-
-def user_event_diversity(spark, sf_dir):
-    """Round-6: BEHAVIORAL DIVERSITY per user — the log2-quantized
-    entropy sum Σ cnt·bitlen(total DIV cnt) over the user's event-type
-    distribution (the same integer log-domain convention as term_pmi /
-    tf-idf: a float Shannon entropy flaps across engines at ulp
-    boundaries, bitlen never does).  A uniform user scores high, a
-    single-type user scores cnt·bitlen(1)=cnt — the bot-detection /
-    segmentation feature.  Two map-side-combined aggregates, linear."""
-    ev = _t(spark, sf_dir, "events").select("user_id", "event_type")
-    cnt = ev.groupBy("user_id", "event_type").agg(
-        F.count("*").alias("cnt")
-    )
-    tot = cnt.groupBy("user_id").agg(
-        F.sum("cnt").alias("total"),
-        F.count("*").cast("bigint").alias("n_types"),
-    )
-    return (
-        cnt.join(tot, "user_id")
-        .select(
-            "user_id",
-            "n_types",
-            "total",
-            (
-                F.col("cnt")
-                * F.length(F.bin(F.expr("total DIV cnt")))
-            ).alias("term"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.first("n_types").alias("n_types"),
-            F.first("total").cast("bigint").alias("n_events"),
-            F.sum("term").cast("bigint").alias("diversity_bits"),
         )
     )
 
@@ -5170,32 +3826,6 @@ def embedding_dim_stats(spark, sf_dir):
     )
 
 
-def event_hourly_seasonality(spark, sf_dir):
-    """Round-6: HOUR-OF-DAY SEASONALITY profile per event type — the
-    modular-time grouping behind load forecasting and anomaly
-    baselines (distinct from the hypertable rollup, which buckets
-    CALENDAR time; this folds all days onto one 24-hour cycle).
-    hour = (epoch_us DIV 3600e6) % 24 — pure integer, UTC-pinned.
-    One map-side-combined aggregate, at most types×24 groups."""
-    _ensure_utc(spark)
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.select(
-            "event_type",
-            F.expr(
-                "CAST((unix_micros(CAST(ts AS TIMESTAMP))"
-                " DIV 3600000000) % 24 AS INT)"
-            ).alias("hour"),
-            e6(F.col("value")).alias("v_e6"),
-        )
-        .groupBy("event_type", "hour")
-        .agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            F.sum("v_e6").cast("bigint").alias("sum_value_e6"),
-        )
-    )
-
-
 def kg_attr_coverage(spark, sf_dir):
     """Round-6: KG COMPLETENESS metric — per-predicate coverage of the
     property index: for each target predicate, how many entities carry
@@ -5219,43 +3849,6 @@ def kg_attr_coverage(spark, sf_dir):
         "n_entities",
         "CAST(n_with_value * 1000000 DIV n_entities AS BIGINT)"
         " AS coverage_e6",
-    )
-
-
-def orders_monthly_growth(spark, sf_dir):
-    """Round-6: MONTH-OVER-MONTH growth — revenue per calendar month
-    with the signed growth rate vs the previous month.  The division
-    is the SIGN-SPLIT integer form (Spark DIV truncates toward zero,
-    DuckDB // floors — they disagree on negatives, so the operator
-    spec pins trunc-toward-zero explicitly).  Months on the epoch
-    grid via UTC year*12+month; one global-window lag over an
-    already-aggregated months frame (tiny)."""
-    _ensure_utc(spark)
-    o = _t(spark, sf_dir, "orders").select(
-        F.expr(
-            "year(CAST(o_orderdate AS TIMESTAMP)) * 12"
-            " + month(CAST(o_orderdate AS TIMESTAMP)) - 1"
-        ).cast("bigint").alias("month_idx"),
-        e6(F.col("o_totalprice")).alias("tp_e6"),
-    )
-    monthly = o.groupBy("month_idx").agg(
-        F.sum("tp_e6").cast("bigint").alias("rev_e6")
-    )
-    w = Window.partitionBy().orderBy("month_idx")
-    return (
-        monthly.withColumn("prev_e6", F.lag("rev_e6").over(w))
-        .selectExpr(
-            "month_idx",
-            "rev_e6",
-            # DIV-first (the tpch_q14 overflow-safe convention):
-            # multiplying a monthly revenue sum by 1e6 first would pass
-            # 2^63 on a 100 TB fact table
-            "CAST(CASE WHEN prev_e6 IS NULL THEN NULL"
-            " WHEN rev_e6 >= prev_e6 THEN"
-            "   (rev_e6 - prev_e6) DIV (prev_e6 DIV 1000000)"
-            " ELSE -((prev_e6 - rev_e6) DIV (prev_e6 DIV 1000000))"
-            " END AS BIGINT) AS growth_e6",
-        )
     )
 
 

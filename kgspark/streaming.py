@@ -11,12 +11,14 @@ PUT).
 * ``stream_mentions``       — streaming span-synthesis + the SAME
   mapInPandas mention kernel used in batch (kernels are
   engine-mode-agnostic: Iterator[pd.DataFrame] → Iterator[pd.DataFrame]).
-* ``stream_event_window``   — event-time tumbling window + watermark
-  over the events table (the late-data slot Twine never had; kept as
-  the Spark-native extension point).
 * ``stream_entity_counts``  — custom stateful operator via
   ``applyInPandasWithState``: running mention counts per normalized
   text across micro-batches (spindle's incremental proxy state, O43).
+* ``stream_to_catalog``     — foreachBatch sink into the per-bucket
+  fingerprint-checkpointed catalog (mentions + base triples, O41).
+* ``stream_entity_index``   — continuously-maintained entity index:
+  per-batch mention replace, global re-link/re-label, incremental
+  entity regeneration (O32 triggers × O40–O43).
 """
 
 from __future__ import annotations
@@ -39,17 +41,6 @@ DOCUMENTS_SCHEMA = T.StructType(
     ]
 )
 
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
-
 
 def read_documents_stream(spark: SparkSession, path: str) -> DataFrame:
     return (
@@ -64,20 +55,6 @@ def stream_mentions(docs_stream: DataFrame) -> DataFrame:
     from the batch path."""
     flat = fixtures.flat_spans(fixtures.with_spans(docs_stream))
     return extract.mentions_df(flat)
-
-
-def stream_event_window(events_stream: DataFrame) -> DataFrame:
-    """O42: tumbling 1-hour window with 2-hour watermark."""
-    return (
-        events_stream.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n",
-        )
-    )
 
 
 _STATE_SCHEMA = "n bigint"
@@ -283,138 +260,3 @@ def stream_entity_index(
     q.awaitTermination()
 
 
-_SESS_STATE = "last_us bigint, sess bigint"
-_SESS_OUT = "user_id bigint, event_id bigint, session_id bigint"
-_SESS_GAP_US = 30 * 60 * 1_000_000
-
-
-def _session_state(key, pdfs, state: GroupState):
-    """Per-user gap-sessionization carried across micro-batches: the
-    state is (last event ts, running session count); a > 30-min gap
-    (or the first event ever) opens a new session.  Exactly the batch
-    lag+cumsum rule (queries.event_sessions) applied incrementally —
-    convergence requires per-user time-ordered arrival across batches,
-    the Kafka-partition-by-user-key contract (within a batch the
-    kernel sorts)."""
-    last_us, sess = state.get if state.exists else (None, 0)
-    pdf = pd.concat(list(pdfs), ignore_index=True)
-    if len(pdf) == 0:
-        yield pd.DataFrame(
-            {"user_id": [], "event_id": [], "session_id": []}
-        ).astype({"user_id": "int64", "event_id": "int64",
-                  "session_id": "int64"})
-        return
-    pdf = pdf.sort_values(["ts_us", "event_id"], ignore_index=True)
-    sids = []
-    for us in pdf["ts_us"]:
-        if last_us is None or us - last_us > _SESS_GAP_US:
-            sess += 1
-        last_us = int(us)
-        sids.append(sess)
-    state.update((last_us, sess))
-    yield pd.DataFrame({
-        "user_id": pdf["user_id"].astype("int64"),
-        "event_id": pdf["event_id"].astype("int64"),
-        "session_id": pd.Series(sids, dtype="int64"),
-    })
-
-
-def stream_event_sessions(events_stream: DataFrame) -> DataFrame:
-    """O43 (second stateful operator): continuous gap-sessionization —
-    the streaming analogue of queries.event_sessions, state =
-    (last_ts, session_count) per user via applyInPandasWithState."""
-    keyed = events_stream.select(
-        "user_id",
-        "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
-    )
-    return keyed.groupBy("user_id").applyInPandasWithState(
-        _session_state,
-        outputStructType=_SESS_OUT,
-        stateStructType=_SESS_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stream_view_purchase_attribution(events_stream: DataFrame) -> DataFrame:
-    """STREAM-STREAM INTERVAL JOIN (the Spark-native two-stream form of
-    the batch event_range_join): each purchase joins the same user's
-    views from the preceding 30 minutes — classic attribution.  Both
-    sides carry a 1-hour watermark and the join condition bounds the
-    purchase time to [view_ts, view_ts + 30 min], which is what lets
-    the state store EVICT old view rows instead of buffering the
-    stream forever — the property that makes the join runnable on an
-    unbounded stream.  Append mode: a pair emits once both sides are
-    past the watermark."""
-    views = (
-        events_stream.filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("view_ts"),
-        )
-        .withWatermark("view_ts", "1 hour")
-    )
-    purchases = (
-        events_stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    return views.join(
-        purchases,
-        F.expr(
-            "v_user = p_user AND purchase_ts >= view_ts "
-            "AND purchase_ts <= view_ts + interval 30 minutes"
-        ),
-    ).select(
-        F.col("v_user").alias("user_id"),
-        "view_id",
-        "purchase_id",
-        "view_ts",
-        "purchase_ts",
-    )
-
-
-def stream_enriched_counts(events_stream: DataFrame, dim: DataFrame) -> DataFrame:
-    """STREAM-STATIC ENRICHMENT JOIN — the remaining classic streaming
-    join shape (stream-stream lives in
-    :func:`stream_view_purchase_attribution`): every micro-batch joins
-    the unbounded event stream to a bounded, broadcast dimension
-    (user → segment) and maintains a running (segment, event_type)
-    count + value sum.  The static side is re-read per micro-batch by
-    Structured Streaming, so a slowly-changing dimension file picks up
-    between triggers without restarting the query; the join is
-    stateless (no watermark needed — only the aggregate holds state).
-    Left join: events with no dimension row keep a NULL segment rather
-    than silently dropping (the observability-preserving choice).
-    Converges to the equivalent batch aggregate (tested)."""
-    enriched = events_stream.join(F.broadcast(dim), "user_id", "left")
-    return enriched.groupBy("segment", "event_type").agg(
-        F.count("*").alias("n"),
-        F.sum(
-            F.expr("CAST(floor(1000000 * value) AS BIGINT)")
-        ).alias("sum_value_e6"),
-    )
-
-
-def stream_dedup_events(events_stream: DataFrame, horizon: str = "1 hour") -> DataFrame:
-    """NATIVE STREAMING DEDUP — dropDuplicatesWithinWatermark on the
-    event id: the engine-managed form of redelivery suppression (the
-    catalog path in :func:`stream_to_catalog` achieves idempotence at
-    the SINK; this suppresses duplicates at the SOURCE).  The watermark
-    bounds the dedup state: an id is remembered only within
-    ``horizon`` of the stream's max event time, so state is
-    O(arrival rate × horizon) — not O(stream length), the property
-    that keeps an unbounded at-least-once feed runnable.  Duplicates
-    farther apart than the horizon are by contract NOT suppressed
-    (that is the sink layer's job)."""
-    return (
-        events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", horizon)
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )

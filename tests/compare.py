@@ -23,10 +23,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+# the tables the oracle SQL reads; an oracle over any other table fails
+# to bind, so a query family outside the KG engine cannot creep back in
+# without its own fixture view
+TABLES = ["nation", "documents", "embeddings"]
 
 
 def canon(df: pd.DataFrame) -> tuple[int, list[str], int]:
@@ -69,17 +69,6 @@ def main() -> int:
             sdf = fn(spark, sf_dir).toPandas()
             t_spark = time.time() - t0
             t0 = time.time()
-            if name not in osql:
-                results[name] = {
-                    "rows_match": None,
-                    "schema_match": None,
-                    "hash_match": None,
-                    "spark_rows": len(sdf),
-                    "oracle_rows": None,
-                    "err": None,
-                }
-                print(f"{name:35s} rows-only: {len(sdf)} rows  spark={t_spark:.1f}s")
-                continue
             odf = con.execute(osql[name]).df()
             t_duck = time.time() - t0
             sn, sc, sh = canon(sdf)

@@ -144,33 +144,6 @@ def test_ann_mips_is_jvm_only_and_exact(spark, sf_dir):
     assert [g for g in got] == want
 
 
-def test_retention_cohorts_hand_case(spark, tmp_path):
-    import pandas as pd
-
-    # u1 active weeks w, w+1; u2 only w; u3 first seen w+1
-    base = pd.Timestamp("2024-01-01")
-    rows = [
-        (1, base, 10, "a", 1.0, "{}"),
-        (2, base + pd.Timedelta(days=8), 10, "a", 1.0, "{}"),
-        (3, base + pd.Timedelta(days=1), 20, "a", 1.0, "{}"),
-        (4, base + pd.Timedelta(days=9), 30, "a", 1.0, "{}"),
-    ]
-    pdf = pd.DataFrame(rows, columns=[
-        "event_id", "ts", "user_id", "event_type", "value", "props",
-    ])
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")  # Spark rejects NANOS
-    pdf.to_parquet(f"{tmp_path}/events.parquet")
-    import kgspark.queries as QQ
-
-    rows_out = QQ.event_retention_cohorts(spark, str(tmp_path)).collect()
-    w0 = min(r["cohort_week"] for r in rows_out)
-    out = {(r["cohort_week"] - w0, r["week_offset"], r["n_users"])
-           for r in rows_out}
-    # cohort w: u10+u20 at offset 0, u10 returns at offset 1;
-    # u30 first appears in week w+1 → its own cohort at offset 0
-    assert out == {(0, 0, 2), (0, 1, 1), (1, 0, 1)}
-
-
 def test_term_pmi_hand_case(spark, tmp_path):
     """5 copies of 'x y', 5 of 'p q', 5 of 'x q': c(x,y)=c(p,q)=c(x,q)=5,
     unigrams x=10 y=5 p=5 q=10, N=30, M=15 — pmi_bits for (x,y) =
@@ -238,16 +211,6 @@ def test_surprisal_heldout_hand_case(spark, tmp_path):
         == (1, 3, 2, 1000000)
 
 
-def test_event_value_histogram_complete_and_bounded(spark, sf_dir):
-    import kgspark.queries as QQ
-
-    out = QQ.event_value_histogram(spark, sf_dir).collect()
-    n = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert sum(r["n_events"] for r in out) == n
-    assert all(0 <= r["bucket"] <= 15 for r in out)
-    assert all(r["lo_e6"] <= r["hi_e6"] for r in out)
-
-
 def test_kmeans_assign_total_and_range(spark, sf_dir):
     import kgspark.queries as QQ
 
@@ -268,61 +231,3 @@ def test_vocab_growth_monotone_and_complete(spark, sf_dir):
     sizes = [r["vocab_size"] for r in rows]
     assert sizes == sorted(sizes) and all(r["new_types"] > 0 for r in rows)
     assert sizes[-1] == sum(r["new_types"] for r in rows)
-
-
-def test_event_debounce_hand_case(spark, tmp_path):
-    """u1 clicks at t=0s, 30s, 90s: the 30s event is suppressed (<60s
-    after the previous raw click), the 90s event is kept (60s after
-    the 30s RAW anchor — lag semantics, documented); a different type
-    at 10s is untouched."""
-    import pandas as pd
-
-    base = pd.Timestamp("2024-01-01")
-    rows = [
-        (1, base, 1, "click", 1.0, "{}"),
-        (2, base + pd.Timedelta(seconds=30), 1, "click", 1.0, "{}"),
-        (3, base + pd.Timedelta(seconds=90), 1, "click", 1.0, "{}"),
-        (4, base + pd.Timedelta(seconds=10), 1, "view", 1.0, "{}"),
-    ]
-    pdf = pd.DataFrame(rows, columns=[
-        "event_id", "ts", "user_id", "event_type", "value", "props",
-    ])
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    pdf.to_parquet(f"{tmp_path}/events.parquet")
-    import kgspark.queries as QQ
-
-    kept = {r["event_id"] for r in QQ.event_debounce(spark, str(tmp_path)).collect()}
-    assert kept == {1, 3, 4}
-
-
-def test_scd2_hand_case(spark, tmp_path):
-    """u1: click,click,view,click → three SCD-2 versions; intervals
-    tile exactly (valid_to == next valid_from), the open run carries
-    valid_to=-1/is_current=1, run counts reflect the collapsed rows."""
-    import pandas as pd
-
-    base = pd.Timestamp("2024-01-01")
-    rows = [
-        (1, base, 1, "click", 1.0, "{}"),
-        (2, base + pd.Timedelta(seconds=10), 1, "click", 1.0, "{}"),
-        (3, base + pd.Timedelta(seconds=20), 1, "view", 1.0, "{}"),
-        (4, base + pd.Timedelta(seconds=30), 1, "click", 1.0, "{}"),
-    ]
-    pdf = pd.DataFrame(rows, columns=[
-        "event_id", "ts", "user_id", "event_type", "value", "props",
-    ])
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    pdf.to_parquet(f"{tmp_path}/events.parquet")
-    import kgspark.queries as QQ
-
-    out = sorted(
-        QQ.scd2_user_state(spark, str(tmp_path)).collect(),
-        key=lambda r: r["run_id"],
-    )
-    assert [r["state"] for r in out] == ["click", "view", "click"]
-    assert [r["n_events"] for r in out] == [2, 1, 1]
-    # tiling: each version's valid_to is the next version's valid_from
-    assert out[0]["valid_to_us"] == out[1]["valid_from_us"]
-    assert out[1]["valid_to_us"] == out[2]["valid_from_us"]
-    assert out[2]["valid_to_us"] == -1 and out[2]["is_current"] == 1
-    assert [r["is_current"] for r in out[:2]] == [0, 0]

@@ -14,42 +14,29 @@ from tests.compare import TABLES, canon
 
 FAST = [
     "kg_spans_flat", "kg_span_invariant", "kg_mentions", "kg_mention_counts",
-    "kg_media_features", "tpch_q1", "revenue_by_nation",
-    "customers_without_orders", "order_priorities_with_lineitems",
-    "top2_lineitems_per_order", "event_gaps", "top10_orders",
-    "lineitem_except_all", "distinct_segments", "events_isin_counts",
-    "events_json_k", "best_order_per_customer", "event_type_stats",
-    "latest_event_per_user", "norm_iri_demo",
+    "kg_media_features",
     # round-4 additions (pipeline-derived ones read the stages of the
     # one memoized run_pipeline_cached pipeline)
-    "event_value_percentiles", "event_value_pivot", "distinct_kmv_sketch",
-    "kg_entity_media", "kg_media_triples", "kg_bgp_filter", "kg_bgp_union", "kg_sameas_closure", "kg_sameas_degree",
-    "kg_sparql_topk", "kg_sparql_construct", "kg_sparql_groupby", "kg_sparql_lang", "kg_sparql_graph",
-    "doc_pack_assign", "training_export",
+    "distinct_kmv_sketch", "kg_entity_media", "kg_media_triples",
+    "kg_bgp_filter", "kg_bgp_union", "kg_sameas_closure", "kg_sameas_degree",
+    "kg_sparql_topk", "kg_sparql_construct", "kg_sparql_groupby",
+    "kg_sparql_lang", "kg_sparql_graph", "doc_pack_assign", "training_export",
     # round-6 additions
     "pii_scrub", "pii_rate_by_source", "kg_sparql_update", "para_dedup",
     "kg_sparql_select_expr", "rdf_jsonld_compacted_roundtrip",
     "kg_sparql_optional_exists", "kg_sparql_modify",
     # round-6c additions
-    "term_pmi", "embedding_srp_buckets", "event_value_histogram",
-    "vocab_growth", "doc_surprisal_heldout", "dedup_incremental_pairs",
+    "term_pmi", "embedding_srp_buckets", "vocab_growth",
+    "doc_surprisal_heldout", "dedup_incremental_pairs",
     "dedup_minhash_calibration", "embedding_label_centroids",
     "embedding_kmeans_assign", "embedding_kmeans_inertia",
-    "doc_type_token_ratio", "event_type_transitions",
-    "corpus_stats_by_source", "event_user_lifetime", "event_debounce",
+    "doc_type_token_ratio", "corpus_stats_by_source",
     # round-6e additions
-    "scd2_user_state", "kg_entity_provenance", "dedup_winnow_pairs",
-    "kg_void_summary", "kg_graph_hash", "event_ewma", "tpch_q4",
-    "tpch_q14", "tpch_q19", "doc_zorder_key", "embedding_pq_codes",
+    "kg_entity_provenance", "dedup_winnow_pairs", "kg_void_summary",
+    "kg_graph_hash", "doc_zorder_key", "embedding_pq_codes",
     "kg_store_merge", "kg_component_size_hist", "embedding_knn_graph",
-    "nation_coverage_full_join", "orders_above_avg",
-    "event_trending_daily", "event_value_pctrank", "kg_store_diff",
-    "event_stats_unpivot", "part_price_quartiles",
-    "priority_revenue_share", "revenue_grouping_sets",
-    "kg_parse_error_stats", "user_event_diversity", "embedding_dim_stats",
-    "event_hourly_seasonality", "kg_attr_coverage",
-    "orders_monthly_growth", "kg_label_collisions",
-    "doc_prefix_dup_groups",
+    "kg_store_diff", "kg_parse_error_stats", "embedding_dim_stats",
+    "kg_attr_coverage", "kg_label_collisions", "doc_prefix_dup_groups",
 ]
 
 
@@ -69,9 +56,13 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
 
 
 def test_every_query_has_oracle_or_is_flagged():
+    """Builders and oracles come in pairs: a half-deleted (or half-added)
+    pair fails here instead of silently dropping out of the gate."""
     qs, osql = E.queries(), E.oracle_sql()
-    missing = [k for k in osql if k not in qs]
-    assert not missing, f"oracle without query: {missing}"
+    no_query = sorted(set(osql) - set(qs))
+    no_oracle = sorted(set(qs) - set(osql))
+    assert not no_query, f"oracle without query: {no_query}"
+    assert not no_oracle, f"query without oracle: {no_oracle}"
 
 
 def test_entry_returns_rows(spark):

@@ -1,9 +1,7 @@
 """Streaming semantics (O40–O43): AvailableNow micro-batch ingest
-through the SAME kernels as batch; watermark windows; stateful counts."""
+through the SAME kernels as batch; stateful counts; idempotent sinks."""
 
 from __future__ import annotations
-
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -47,38 +45,6 @@ def test_stream_mentions_match_batch(spark, sf_dir, doc_stream_dir, tmp_path):
         ).collect()
     }
     assert got == want
-
-
-def test_stream_event_window(spark, sf_dir, tmp_path):
-    # readStream needs a directory source — stage the events table
-    ev_dir = str(tmp_path / "events_stream")
-    spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    ).write.mode("overwrite").parquet(ev_dir)
-    events = spark.readStream.schema(S.EVENTS_SCHEMA).parquet(ev_dir)
-    q = (
-        S.stream_event_window(events)
-        .writeStream.format("memory")
-        .queryName("w_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "cpw"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT sum(n) FROM w_out").collect()[0][0] or 0
-    # append mode emits only windows sealed by the watermark — a strict
-    # subset of all events, never more
-    total = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert 0 <= got <= total
-    # the windowed aggregation itself is exact in complete mode against
-    # a batch groupBy — verified via batch equivalence:
-    batch = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy(F.window(F.col("ts").cast("timestamp"), "1 hour"), "event_type")
-        .agg(F.count("*").alias("n"))
-    )
-    assert batch.agg(F.sum("n")).collect()[0][0] == total
 
 
 def test_stream_stateful_counts(spark, sf_dir, doc_stream_dir, tmp_path):
@@ -231,257 +197,3 @@ def test_stream_entity_index_equals_batch(spark, sf_dir, doc_stream_dir, tmp_pat
         embeddings_path=f"{sf_dir}/embeddings.parquet",
     )
     assert {tuple(r) for r in cat.read(spark, "live_attrs").collect()} == want_attrs
-
-
-def test_stream_sessions_converge_to_batch(spark, sf_dir, tmp_path):
-    """Continuous sessionization == batch lag+cumsum when events arrive
-    per-user time-ordered across micro-batches (files staged as
-    consecutive time ranges, one file per trigger)."""
-    import kgspark.queries as Q
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    ev_dir = str(tmp_path / "ev_sessions")
-    # stage 3 time-ordered chunks: lexicographic file listing must
-    # match time order (part names carry the chunk index)
-    qs = ev.approxQuantile("value", [0.0], 0.0)  # force materialization once
-    bounds = ev.selectExpr(
-        "percentile(unix_micros(ts), array(0.34, 0.67)) AS b"
-    ).collect()[0]["b"]
-    lo, hi = int(bounds[0]), int(bounds[1])
-    us = F.unix_micros(F.col("ts"))
-    for i, pred in enumerate([us <= lo, (us > lo) & (us <= hi), us > hi]):
-        ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / f"stage{i}")
-        )
-    import glob
-    import os
-    import shutil
-
-    os.makedirs(ev_dir)
-    # FileStreamSource orders files by MODIFICATION TIME at millisecond
-    # granularity (not by name); back-to-back copies land in the same
-    # millisecond and the tie order is arbitrary, so the chunk mtimes
-    # are pinned a full second apart to make arrival order = time order
-    # (the operator's documented convergence precondition).
-    import time
-
-    t0 = int(time.time()) - 100
-    for i in range(3):
-        src = glob.glob(str(tmp_path / f"stage{i}" / "part-*.parquet"))[0]
-        dst = os.path.join(ev_dir, f"chunk-{i}.parquet")
-        shutil.copy(src, dst)
-        os.utime(dst, (t0 + i, t0 + i))
-
-    events = (
-        spark.readStream.schema(S.EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ev_dir)
-    )
-    q = (
-        S.stream_event_sessions(events)
-        .writeStream.format("memory")
-        .queryName("sess_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "cpsess"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["user_id"], r["event_id"], r["session_id"])
-        for r in spark.sql("SELECT * FROM sess_out").collect()
-    }
-    want = {
-        (r["user_id"], r["event_id"], r["session_id"])
-        for r in Q.event_sessions(spark, sf_dir).collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def test_stream_stream_attribution_converges_to_batch(spark, sf_dir, tmp_path):
-    """Stream-stream interval join == the batch view×purchase interval
-    join once all data is processed (availableNow drains everything, so
-    every in-bound pair crosses the watermark and emits)."""
-    import glob
-    import os
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    ev_dir = str(tmp_path / "ev_attr")
-    os.makedirs(ev_dir)
-    # two time-ordered chunks, mtimes pinned (FileStreamSource orders
-    # by ms-granularity modification time)
-    mid = ev.selectExpr("percentile(unix_micros(ts), 0.5) AS m").collect()[0]["m"]
-    us = F.unix_micros(F.col("ts"))
-    t0 = int(__import__("time").time()) - 100
-    for i, pred in enumerate([us <= int(mid), us > int(mid)]):
-        ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / f"astage{i}")
-        )
-        src = glob.glob(str(tmp_path / f"astage{i}" / "part-*.parquet"))[0]
-        dst = os.path.join(ev_dir, f"chunk-{i}.parquet")
-        shutil.copy(src, dst)
-        os.utime(dst, (t0 + i, t0 + i))
-
-    events = (
-        spark.readStream.schema(S.EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ev_dir)
-    )
-    q = (
-        S.stream_view_purchase_attribution(events)
-        .writeStream.format("memory")
-        .queryName("attr_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "cpattr"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {
-        (r["user_id"], r["view_id"], r["purchase_id"])
-        for r in spark.sql("SELECT * FROM attr_out").collect()
-    }
-    v = ev.filter("event_type = 'view'").selectExpr(
-        "user_id", "event_id AS view_id", "ts AS view_ts"
-    )
-    p = ev.filter("event_type = 'purchase'").selectExpr(
-        "user_id", "event_id AS purchase_id", "ts AS purchase_ts"
-    )
-    want = {
-        (r["user_id"], r["view_id"], r["purchase_id"])
-        for r in v.join(p, "user_id")
-        .filter(
-            "purchase_ts >= view_ts AND "
-            "purchase_ts <= view_ts + interval 30 minutes"
-        )
-        .collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def test_stream_static_enrichment_converges_to_batch(spark, sf_dir, tmp_path):
-    """Stream-static broadcast join + running aggregate == the batch
-    join+aggregate once the stream drains; events missing a dimension
-    row survive with NULL segment."""
-    from kgspark.streaming import stream_enriched_counts
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # deterministic user dimension; hold out users % 7 == 0 to exercise
-    # the left-join NULL-segment path
-    dim = (
-        ev.select("user_id")
-        .distinct()
-        .filter(F.col("user_id") % 7 != 0)
-        .withColumn("segment", F.concat(F.lit("seg"), F.col("user_id") % 4))
-    )
-    dim_path = str(tmp_path / "dim")
-    dim.write.parquet(dim_path)
-    dim_static = spark.read.parquet(dim_path)
-
-    ev_dir = str(tmp_path / "ev_enrich")
-    import os
-    import shutil
-    import time
-
-    os.makedirs(ev_dir)
-    chunks = ev.randomSplit([1.0, 1.0, 1.0], seed=7)
-    t0 = int(time.time()) - 100
-    for i, c in enumerate(chunks):
-        stage = str(tmp_path / f"enr_stage{i}")
-        c.coalesce(1).write.mode("overwrite").parquet(stage)
-        import glob
-
-        src = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(ev_dir, f"chunk-{i}.parquet")
-        shutil.copy(src, dst)
-        os.utime(dst, (t0 + i, t0 + i))
-
-    stream = (
-        spark.readStream.schema(S.EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ev_dir)
-    )
-    q = (
-        stream_enriched_counts(stream, dim_static)
-        .writeStream.format("memory")
-        .queryName("enriched_counts")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt_enr"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        (r["segment"], r["event_type"]): (r["n"], r["sum_value_e6"])
-        for r in spark.sql("SELECT * FROM enriched_counts").collect()
-    }
-    batch = {
-        (r["segment"], r["event_type"]): (r["n"], r["sum_value_e6"])
-        for r in ev.join(dim_static, "user_id", "left")
-        .groupBy("segment", "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(
-                F.expr("CAST(floor(1000000 * value) AS BIGINT)")
-            ).alias("sum_value_e6"),
-        )
-        .collect()
-    }
-    assert got == batch
-    assert any(k[0] is None for k in got)  # held-out users surfaced
-
-
-def test_stream_dedup_within_watermark(spark, sf_dir, tmp_path):
-    """Replayed chunk (at-least-once redelivery) is fully suppressed:
-    the deduped stream's event_id multiset equals the distinct batch
-    set, even though chunk 1 is delivered twice."""
-    from kgspark.streaming import stream_dedup_events
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    chunks = ev.randomSplit([1.0, 1.0], seed=11)
-    ev_dir = str(tmp_path / "ev_dedup")
-    import glob
-    import os
-    import shutil
-    import time
-
-    os.makedirs(ev_dir)
-    t0 = int(time.time()) - 100
-    # chunk0, chunk1, then chunk1 AGAIN (redelivery)
-    stages = [chunks[0], chunks[1], chunks[1]]
-    for i, c in enumerate(stages):
-        stage = str(tmp_path / f"dd_stage{i}")
-        c.coalesce(1).write.mode("overwrite").parquet(stage)
-        src = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        dst = os.path.join(ev_dir, f"chunk-{i}.parquet")
-        shutil.copy(src, dst)
-        os.utime(dst, (t0 + i, t0 + i))
-
-    stream = (
-        spark.readStream.schema(S.EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ev_dir)
-    )
-    q = (
-        stream_dedup_events(stream)
-        .select("event_id")
-        .writeStream.format("memory")
-        .queryName("dedup_events")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_dd"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = [
-        r["event_id"]
-        for r in spark.sql("SELECT event_id FROM dedup_events").collect()
-    ]
-    assert len(got) == len(set(got))  # no duplicate survived
-    assert sorted(got) == sorted(
-        r["event_id"] for r in ev.select("event_id").distinct().collect()
-    )
