@@ -9,7 +9,7 @@ Implementation lives in the ``kgspark`` package; this module is the
 thin binding.  Column names/types are aligned pairwise between each
 Spark builder (kgspark/queries.py) and its DuckDB SQL
 (kgspark/oracle_sql.py); floats are emitted as floor(1e6*x) BIGINT on
-both sides.
+both sides, timestamps as unix micros.
 """
 
 from __future__ import annotations
@@ -90,6 +90,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_sparql_load": Q.kg_sparql_load,            # LOAD file-ingest verb (r6)
         "kg_sparql_from": Q.kg_sparql_from,            # FROM/FROM NAMED dataset (r6)
         "kg_media_features": Q.kg_media_features,   # O3 multimodal stub
+        # TPC-H plan-shape fixtures: pin the optimizer behaviour the session
+        # relies on (pushdown, broadcast dims, semi-join, OR splitting)
+        "tpch_q1": Q.tpch_q1,                                       # pushdown + pruning
+        "revenue_by_nation": Q.revenue_by_nation,                   # broadcast dim join
+        "customers_without_orders": Q.customers_without_orders,     # anti-join
+        "tpch_q3_topk": Q.tpch_q3_topk,                             # 3-way join + top-k
+        "top10_orders": Q.top10_orders,                             # global top-k
+        "tpch_q4": Q.tpch_q4,                                       # EXISTS semi-join
+        "tpch_q5": Q.tpch_q5,                                       # 6-table star join
+        "tpch_q14": Q.tpch_q14,                                     # pushed month filter
+        "tpch_q19": Q.tpch_q19,                                     # OR-of-conjunctions join
         # store maintenance, KG quality metrics and corpus layout (r6e)
         "dedup_winnow_pairs": Q.dedup_winnow_pairs,                 # MOSS winnowing pairs (r6e)
         "kg_store_merge": Q.kg_store_merge,                         # CDC MERGE upsert into store (r6e)
@@ -367,4 +378,5 @@ def oracle_sql() -> dict[str, str]:
             "rdf_trig_roundtrip": OS.QUADS_FULL_SQL,
         }
     )
+    out.update(OS.TPCH_SQL)
     return out

@@ -632,6 +632,116 @@ FROM spans_pos GROUP BY doc_id
 
 
 # ---------------------------------------------------------------------------
+# TPC-H plan-shape fixture oracles (queries.py's TPC-H section).
+# ---------------------------------------------------------------------------
+_E6 = "CAST(floor({expr} * 1000000.0) AS BIGINT)"
+
+
+def _e6(expr: str) -> str:
+    return _E6.format(expr=expr)
+
+
+TPCH_SQL = {
+    "tpch_q1": f"""
+        SELECT l_returnflag, l_linestatus,
+               CAST(sum({_e6('l_quantity')}) AS BIGINT) AS sum_qty_e6,
+               CAST(sum({_e6('l_extendedprice * (1 - l_discount)')}) AS BIGINT) AS revenue_e6,
+               count(*) AS n
+        FROM lineitem
+        WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+        GROUP BY l_returnflag, l_linestatus
+    """,
+    "revenue_by_nation": f"""
+        SELECT n_name, CAST(sum({_e6('o_totalprice')}) AS BIGINT) AS revenue_e6,
+               count(*) AS n_orders
+        FROM orders JOIN customer ON o_custkey = c_custkey
+        JOIN nation ON c_nationkey = n_nationkey
+        GROUP BY n_name
+    """,
+    "customers_without_orders": """
+        SELECT c_custkey, c_name FROM customer
+        WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+    """,
+    "tpch_q3_topk": f"""
+        SELECT l_orderkey, epoch_us(o_orderdate) AS orderdate_us,
+               CAST(sum({_e6('l_extendedprice * (1 - l_discount)')}) AS BIGINT)
+                 AS revenue_e6
+        FROM customer
+        JOIN orders ON c_custkey = o_custkey
+        JOIN lineitem ON o_orderkey = l_orderkey
+        WHERE c_mktsegment = (SELECT min(c_mktsegment) FROM customer)
+          AND o_orderdate < TIMESTAMP '1998-06-01 00:00:00'
+          AND l_shipdate  > TIMESTAMP '1998-06-01 00:00:00'
+        GROUP BY l_orderkey, o_orderdate
+        ORDER BY revenue_e6 DESC, l_orderkey ASC LIMIT 10
+    """,
+    "top10_orders": f"""
+        SELECT o_orderkey, {_e6('o_totalprice')} AS totalprice_e6
+        FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10
+    """,
+    "tpch_q4": """
+SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
+FROM orders o
+WHERE epoch_us(o_orderdate) >= 820454400000000
+  AND epoch_us(o_orderdate) < 828316800000000
+  AND EXISTS (
+    SELECT 1 FROM lineitem l
+    WHERE l.l_orderkey = o.o_orderkey
+      AND epoch_us(l.l_shipdate)
+          > epoch_us(o.o_orderdate) + CAST(5184000000000 AS BIGINT)
+  )
+GROUP BY o_orderpriority
+""",
+    "tpch_q5": """
+SELECT r.r_name, n.n_name,
+       CAST(SUM(CAST(floor(1000000 * l.l_extendedprice * (1 - l.l_discount))
+                AS BIGINT)) AS BIGINT) AS revenue_e6,
+       CAST(COUNT(*) AS BIGINT) AS n_lineitems
+FROM lineitem l
+JOIN orders o ON o.o_orderkey = l.l_orderkey
+JOIN customer c ON c.c_custkey = o.o_custkey
+JOIN supplier s ON s.s_suppkey = l.l_suppkey
+              AND s.s_nationkey = c.c_nationkey
+JOIN nation n ON n.n_nationkey = s.s_nationkey
+JOIN region r ON r.r_regionkey = n.n_regionkey
+GROUP BY r.r_name, n.n_name
+""",
+    "tpch_q14": """
+WITH j AS (
+  SELECT CAST(floor(1000000 * l_extendedprice * (1 - l_discount))
+              AS BIGINT) AS rev_e6,
+         p_type
+  FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+  WHERE epoch_us(l.l_shipdate) >= 825638400000000
+    AND epoch_us(l.l_shipdate) < 828316800000000
+),
+a AS (
+  SELECT CAST(sum(CASE WHEN p_type = 'PROMO' THEN rev_e6 ELSE 0 END)
+              AS BIGINT) AS promo_rev_e6,
+         CAST(sum(rev_e6) AS BIGINT) AS total_rev_e6
+  FROM j
+)
+SELECT promo_rev_e6, total_rev_e6,
+       CAST(promo_rev_e6 // (total_rev_e6 // 1000000) AS BIGINT)
+         AS promo_share_e6
+FROM a
+""",
+    "tpch_q19": """
+SELECT CAST(sum(CAST(floor(1000000 * l_extendedprice * (1 - l_discount))
+                     AS BIGINT)) AS BIGINT) AS revenue_e6,
+       CAST(count(*) AS BIGINT) AS n_lineitems
+FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
+       AND l_quantity BETWEEN 1 AND 11)
+   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
+       AND l_quantity BETWEEN 10 AND 20)
+   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
+       AND l_quantity BETWEEN 20 AND 30)
+""",
+}
+
+
+# ---------------------------------------------------------------------------
 # Training-data-pipeline oracles (dedup / ANN / text analysis).
 # Shared shingle CTE: token 3-gram codes (grammar.py NGRAM_N family).
 # ---------------------------------------------------------------------------

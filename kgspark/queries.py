@@ -103,6 +103,252 @@ def kg_media_features(spark, sf_dir):
     )
 
 
+# --- TPC-H plan-shape fixtures ----------------------------------------------
+# Not part of the KG chain: these read the TPC-H tables and exist so the
+# optimizer behaviour the engine's session relies on (parquet pushdown and
+# column pruning, broadcast dimension joins, semi-join decorrelation,
+# disjunctive predicate splitting) stays pinned by plan tests and oracles.
+def tpch_q1(spark, sf_dir):
+    li = _t(spark, sf_dir, "lineitem")
+    return (
+        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
+        .withColumn("rev_e6", e6(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
+        .groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            F.sum(e6(F.col("l_quantity"))).alias("sum_qty_e6"),
+            F.sum("rev_e6").alias("revenue_e6"),
+            F.count("*").alias("n"),
+        )
+    )
+
+
+def revenue_by_nation(spark, sf_dir):
+    c = _t(spark, sf_dir, "customer")
+    o = _t(spark, sf_dir, "orders")
+    n = _t(spark, sf_dir, "nation")
+    return (
+        o.join(c, o.o_custkey == c.c_custkey)
+        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .groupBy("n_name")
+        .agg(
+            F.sum(e6(F.col("o_totalprice"))).alias("revenue_e6"),
+            F.count("*").alias("n_orders"),
+        )
+    )
+
+
+def customers_without_orders(spark, sf_dir):
+    c = _t(spark, sf_dir, "customer")
+    o = _t(spark, sf_dir, "orders")
+    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select(
+        "c_custkey", "c_name"
+    )
+
+
+def tpch_q3_topk(spark, sf_dir):
+    """TPC-H Q3 shape: 3-way join (segment-filtered customers ⋈ orders
+    ⋈ lineitem) with date band filters, revenue aggregation, top-10 —
+    the multi-join + agg + top-k composite (O19/O26/O31)."""
+    c = _t(spark, sf_dir, "customer")
+    o = _t(spark, sf_dir, "orders")
+    li = _t(spark, sf_dir, "lineitem")
+    # scalar-subquery shape without a driver round-trip at plan-build
+    # time: the 1-row min(segment) aggregate joins back as a broadcast —
+    # the oracle's (SELECT min(c_mktsegment) FROM customer), lazily
+    seg_df = c.agg(F.min("c_mktsegment").alias("_seg"))
+    cutoff = F.lit("1998-06-01 00:00:00").cast("timestamp")
+    return (
+        c.join(F.broadcast(seg_df), c.c_mktsegment == F.col("_seg"))
+        .drop("_seg")
+        .join(o, c.c_custkey == o.o_custkey)
+        .join(li, o.o_orderkey == li.l_orderkey)
+        .filter((F.col("o_orderdate") < cutoff) & (F.col("l_shipdate") > cutoff))
+        .groupBy("l_orderkey", "o_orderdate")
+        .agg(
+            F.sum(e6(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
+                "revenue_e6"
+            )
+        )
+        .orderBy(F.desc("revenue_e6"), F.asc("l_orderkey"))
+        .limit(10)
+        .select(
+            "l_orderkey",
+            F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias(
+                "orderdate_us"
+            ),
+            "revenue_e6",
+        )
+    )
+
+
+def top10_orders(spark, sf_dir):
+    o = _t(spark, sf_dir, "orders")
+    return (
+        o.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
+        .limit(10)
+        .select("o_orderkey", e6(F.col("o_totalprice")).alias("totalprice_e6"))
+    )
+
+
+def tpch_q4(spark, sf_dir):
+    """TPC-H Q4 shape — order-priority checking: count the
+    orders of one quarter that had at least one LATE lineitem
+    (l_shipdate more than 60 days after the order date; the fixture
+    lineitem has no commit/receipt dates so lateness is vs the order
+    date).  The EXISTS decorrelates to a LEFT SEMI join with the
+    non-equi lateness predicate INSIDE the join condition, so the
+    probe side never materializes matched multiplicity — the shape
+    that distinguishes semi-join from join+distinct at scale.  Date
+    arithmetic on epoch micros (integer-exact both engines)."""
+    orders = _t(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_orderpriority",
+        F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("od_us"),
+    )
+    Q_LO = 820454400000000  # 1996-01-01 UTC in micros
+    Q_HI = 828316800000000  # 1996-04-01 UTC in micros
+    orders = orders.filter(
+        (F.col("od_us") >= Q_LO) & (F.col("od_us") < Q_HI)
+    )
+    late = _t(spark, sf_dir, "lineitem").select(
+        "l_orderkey",
+        F.unix_micros(F.col("l_shipdate").cast("timestamp")).alias("sd_us"),
+    )
+    sixty_days_us = 60 * 86400 * 1000000
+    j = orders.join(
+        late,
+        (F.col("l_orderkey") == F.col("o_orderkey"))
+        & (F.col("sd_us") > F.col("od_us") + F.lit(sixty_days_us)),
+        "left_semi",
+    )
+    return j.groupBy("o_orderpriority").agg(
+        F.count("*").cast("bigint").alias("order_count")
+    )
+
+
+def tpch_q5(spark, sf_dir):
+    """TPC-H Q5 shape — local-supplier revenue per nation
+    (customer and supplier in the SAME nation), 6-table join:
+    region ⋈ nation ⋈ customer ⋈ orders ⋈ lineitem ⋈ supplier.
+    Catalyst broadcasts every dimension (region/nation/customer/
+    supplier at fixture scale; on a real corpus AQE keeps the small
+    ones broadcast and shuffles the big ones) so the fact table
+    streams through BroadcastHashJoins — the canonical star-join plan.
+    Revenue on the e6 integer grid from the raw doubles, floor AFTER
+    the per-row product like revenue_by_nation."""
+    region = _t(spark, sf_dir, "region")
+    nation = _t(spark, sf_dir, "nation")
+    customer = _t(spark, sf_dir, "customer")
+    orders = _t(spark, sf_dir, "orders")
+    lineitem = _t(spark, sf_dir, "lineitem")
+    supplier = _t(spark, sf_dir, "supplier")
+    rev = F.expr(
+        "CAST(floor(1000000 * l_extendedprice * (1 - l_discount)) AS BIGINT)"
+    )
+    j = (
+        lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey"))
+        .join(
+            F.broadcast(supplier),
+            (F.col("l_suppkey") == F.col("s_suppkey"))
+            & (F.col("c_nationkey") == F.col("s_nationkey")),
+        )
+        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
+    )
+    return (
+        j.select("n_name", "r_name", rev.alias("rev_e6"))
+        .groupBy("r_name", "n_name")
+        .agg(
+            F.sum("rev_e6").cast("bigint").alias("revenue_e6"),
+            F.count("*").cast("bigint").alias("n_lineitems"),
+        )
+    )
+
+
+def tpch_q14(spark, sf_dir):
+    """TPC-H Q14 shape — promotion revenue share: of one
+    month's lineitem revenue, the fraction from PROMO-type parts.
+    Part is broadcast (a dimension); the month filter prunes the fact
+    scan BEFORE the join (pushed to the parquet reader).  The share is
+    published on the e6 grid as promo_rev_e6 DIV (total_rev_e6 DIV
+    1e6) — a pure-integer form both engines compute identically, and
+    one that cannot overflow (multiplying promo_rev_e6 by 1e6 first
+    would pass 2^63 on a 100 TB fact table)."""
+    li = _t(spark, sf_dir, "lineitem")
+    # filter on the RAW column (plain comparisons push to the parquet
+    # reader as PushedFilters; a unix_micros() wrapper would not)
+    li = li.filter(
+        (F.col("l_shipdate") >= F.lit("1996-03-01").cast("timestamp_ntz"))
+        & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp_ntz"))
+    )
+    part = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    rev = F.expr(
+        "CAST(floor(1000000 * l_extendedprice * (1 - l_discount)) AS BIGINT)"
+    )
+    j = li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
+    agg = j.select(
+        rev.alias("rev_e6"),
+        F.when(F.col("p_type") == "PROMO", rev)
+        .otherwise(F.lit(0).cast("bigint"))
+        .alias("promo_e6"),
+    ).agg(
+        F.sum("promo_e6").cast("bigint").alias("promo_rev_e6"),
+        F.sum("rev_e6").cast("bigint").alias("total_rev_e6"),
+    )
+    return agg.selectExpr(
+        "promo_rev_e6",
+        "total_rev_e6",
+        "CAST(promo_rev_e6 DIV (total_rev_e6 DIV 1000000) AS BIGINT)"
+        " AS promo_share_e6",
+    )
+
+
+def tpch_q19(spark, sf_dir):
+    """TPC-H Q19 shape — discounted revenue under an OR of
+    brand/size/quantity conjunctions.  The equi key (partkey) carries
+    the join; the disjunction stays a post-join filter Catalyst splits:
+    the part-only conjuncts (brand OR-list, size >= 1) push into the
+    broadcast side's scan, the mixed ones evaluate after the hash
+    probe — the shape that verifies disjunctive predicate splitting
+    rather than forcing a nested-loop join."""
+    li = _t(spark, sf_dir, "lineitem").select(
+        "l_partkey",
+        "l_quantity",
+        F.expr(
+            "CAST(floor(1000000 * l_extendedprice * (1 - l_discount))"
+            " AS BIGINT)"
+        ).alias("rev_e6"),
+    )
+    part = _t(spark, sf_dir, "part").select(
+        "p_partkey", "p_brand", "p_size"
+    )
+    j = li.join(
+        F.broadcast(part), F.col("l_partkey") == F.col("p_partkey")
+    )
+    cond = (
+        (
+            (F.col("p_brand") == "Brand#12")
+            & F.col("p_size").between(1, 5)
+            & F.col("l_quantity").between(1, 11)
+        )
+        | (
+            (F.col("p_brand") == "Brand#23")
+            & F.col("p_size").between(1, 10)
+            & F.col("l_quantity").between(10, 20)
+        )
+        | (
+            (F.col("p_brand") == "Brand#34")
+            & F.col("p_size").between(1, 15)
+            & F.col("l_quantity").between(20, 30)
+        )
+    )
+    return j.filter(cond).agg(
+        F.sum("rev_e6").cast("bigint").alias("revenue_e6"),
+        F.count("*").cast("bigint").alias("n_lineitems"),
+    )
+
+
 # --- training-data-pipeline operators (dedup / ANN / text analysis) ----------
 def dedup_exact(spark, sf_dir):
     from . import dedup as D

@@ -23,10 +23,14 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
 
-# the tables the oracle SQL reads; an oracle over any other table fails
-# to bind, so a query family outside the KG engine cannot creep back in
-# without its own fixture view
-TABLES = ["nation", "documents", "embeddings"]
+# the tables the oracle SQL reads: the KG inputs plus the TPC-H tables of
+# the plan-shape fixtures.  An oracle over any other table fails to bind,
+# so a query family outside these cannot creep back in without its own
+# fixture view.
+TABLES = [
+    "nation", "documents", "embeddings",
+    "region", "customer", "supplier", "part", "orders", "lineitem",
+]
 
 
 def canon(df: pd.DataFrame) -> tuple[int, list[str], int]:

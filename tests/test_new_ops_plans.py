@@ -638,3 +638,13 @@ def test_neighbor_sample_plans_window_group_limit(spark, sf_dir):
     # re-run → bit-identical (hash order, no rand())
     again = {tuple(r) for r in Q.entity_neighbor_sample(spark, sf_dir).collect()}
     assert {tuple(r) for r in rows} == again
+
+
+def test_tpch_q5_star_join_broadcasts_dims(spark, sf_dir):
+    """The 6-table star join must stream the fact table through
+    BroadcastHashJoins at fixture scale — no cartesian, no
+    BroadcastNestedLoopJoin, >= 4 broadcast joins."""
+    p = _plan(Q.tpch_q5(spark, sf_dir))
+    assert "CartesianProduct" not in p
+    assert "BroadcastNestedLoopJoin" not in p
+    assert p.count("BroadcastHashJoin") >= 4, p[:2000]

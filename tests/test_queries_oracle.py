@@ -15,6 +15,9 @@ from tests.compare import TABLES, canon
 FAST = [
     "kg_spans_flat", "kg_span_invariant", "kg_mentions", "kg_mention_counts",
     "kg_media_features",
+    # TPC-H plan-shape fixtures
+    "tpch_q1", "revenue_by_nation", "customers_without_orders",
+    "top10_orders", "tpch_q4", "tpch_q14", "tpch_q19",
     # round-4 additions (pipeline-derived ones read the stages of the
     # one memoized run_pipeline_cached pipeline)
     "distinct_kmv_sketch", "kg_entity_media", "kg_media_triples",

@@ -1,5 +1,6 @@
-"""Round-6e operator tests: canonical graph hash, VoID summary sanity,
-Z-order keys, product quantization, kNN graph and store maintenance."""
+"""Round-6e operator tests: canonical graph hash, TPC-H Q4/Q14/Q19
+plan shapes, VoID summary sanity, Z-order keys, product quantization,
+kNN graph and store maintenance."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
@@ -51,6 +52,15 @@ def test_graph_hash_contract_runs(spark, sf_dir):
     rows = out.collect()
     assert len(rows) > 1
     assert all(r["n_quads"] > 0 for r in rows)
+
+
+def test_tpch_q4_is_semi_join(spark, sf_dir):
+    from kgspark.queries import tpch_q4
+
+    plan = _plan(tpch_q4(spark, sf_dir))
+    assert "LeftSemi" in plan
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_void_summary_invariants(spark, sf_dir):
@@ -111,6 +121,26 @@ def test_pq_codebook_join_is_broadcast(spark, sf_dir):
     plan = _plan(embedding_pq_codes(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_q14_month_filter_pushed_to_scan(spark, sf_dir):
+    from kgspark.queries import tpch_q14
+
+    plan = _plan(tpch_q14(spark, sf_dir))
+    assert "BroadcastHashJoin" in plan
+    # the month bounds must reach the parquet reader
+    assert "PushedFilters: [" in plan and "l_shipdate" in plan.split(
+        "PushedFilters"
+    )[1][:200]
+
+
+def test_q19_disjunction_no_nested_loop(spark, sf_dir):
+    from kgspark.queries import tpch_q19
+
+    plan = _plan(tpch_q19(spark, sf_dir))
+    assert "BroadcastHashJoin" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_merge_quads_semantics(spark, tmp_path):
@@ -208,6 +238,45 @@ def test_bucketed_tables_join_without_exchange(spark, sf_dir, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thr)
         spark.sql("DROP TABLE IF EXISTS bkt_left")
         spark.sql("DROP TABLE IF EXISTS bkt_right")
+
+
+def test_runtime_bloom_filter_prunes_fact_side(spark, sf_dir):
+    """Runtime-filter proof: a selective dimension filter induces a
+    bloom_filter_agg on the dim side and a might_contain probe on the
+    fact scan — the runtime semi-join reduction that, at 100 TB,
+    drops most fact rows before the shuffle.  The size thresholds are
+    sized for real clusters (10 GB application side), so the test
+    scales them to fixture size; result equality with the unfiltered
+    plan is asserted too."""
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.optimizer.runtime.bloomFilter"
+        ".applicationSideScanSizeThreshold": "0",
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    part = spark.read.parquet(f"{sf_dir}/part.parquet").filter("p_size = 1")
+    import pyspark.sql.functions as Fn
+
+    def q():
+        return (
+            li.join(part, Fn.col("l_partkey") == Fn.col("p_partkey"))
+            .groupBy("p_brand")
+            .count()
+        )
+
+    baseline = {(r["p_brand"], r["count"]) for r in q().collect()}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        j = q()
+        plan = j._jdf.queryExecution().optimizedPlan().toString()
+        assert "bloom_filter_agg" in plan
+        assert "might_contain" in plan
+        assert {(r["p_brand"], r["count"]) for r in j.collect()} == baseline
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def test_knn_graph_invariants(spark, sf_dir):
