@@ -709,20 +709,6 @@ def union_pad_frames(frames: list[DataFrame]) -> DataFrame:
     return out
 
 
-def bgp_construct(
-    triples: DataFrame,
-    template: list[tuple[str, str, str]],
-    **match_kwargs,
-) -> DataFrame:
-    """SPARQL CONSTRUCT: instantiate ``template`` triple patterns for
-    every solution of the WHERE group (``match_kwargs`` →
-    :func:`bgp_match`).  The result is a GRAPH — distinct (s, p, o);
-    template instances containing an unbound (NULL) variable are
-    dropped, per the spec.  One scan of the solution set per template
-    pattern, unioned — no joins beyond the WHERE group's own."""
-    return construct_from_solutions(bgp_match(triples, **match_kwargs), template)
-
-
 def construct_from_solutions(
     sol: DataFrame, template: list[tuple[str, str, str]]
 ) -> DataFrame:
@@ -742,13 +728,6 @@ def construct_from_solutions(
         )
         out = inst if out is None else out.unionByName(inst)
     return out.dropna(subset=["s", "p", "o"]).distinct()
-
-
-def bgp_ask(triples: DataFrame, **match_kwargs) -> DataFrame:
-    """SPARQL ASK: exactly one row ``(ask: boolean)`` — true iff the
-    group has any solution.  Plans as limit(1) + count aggregate (the
-    scan short-circuits after the first match)."""
-    return ask_from_solutions(bgp_match(triples, **match_kwargs))
 
 
 def ask_from_solutions(sol: DataFrame) -> DataFrame:

@@ -70,17 +70,12 @@ class ParquetCatalog:
         partition overwrite) — the sparql-put / MERGE analogue.
         ``partition_cols`` defaults to ["bucket"]; streaming appends add
         a batch key so batches never clobber each other."""
-        spark = df.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                df.write.mode("overwrite")
-                .partitionBy(*(partition_cols or ["bucket"]))
-                .parquet(self.path(name))
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*(partition_cols or ["bucket"]))
+            .parquet(self.path(name))
+        )
 
     def write(self, df: DataFrame, name: str, mode: str = "overwrite") -> None:
         df.write.mode(mode).parquet(self.path(name))

@@ -53,11 +53,6 @@ def tokcode(col: Column) -> Column:
     )
 
 
-def perm_hash(code: Column, i: int) -> Column:
-    """h_i(code) = (A_i*code + B_i) mod P — int64-exact everywhere."""
-    return (code * F.lit(G.hash_a(i)) + F.lit(G.hash_b(i))) % F.lit(G.HASH_P)
-
-
 def vec_id_for_norm(norm: Column, n_embeddings: int) -> Column:
     """Deterministic pseudo-embedding assignment for a mention:
     rolling-hash fingerprint of the norm's tokens, mod table size."""

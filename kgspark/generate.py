@@ -398,13 +398,6 @@ def proxy_quads(
     )
 
 
-def graph_diff(new: DataFrame, old: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """O32 old/new graph diff (libtwine/graph.c twine_graph old/new
-    models `[U]`): (added, removed) triple sets — drives incremental
-    regeneration triggers."""
-    return new.exceptAll(old), old.exceptAll(new)
-
-
 def graph_diff_by_g(
     new_quads: DataFrame, old_quads: DataFrame
 ) -> tuple[DataFrame, DataFrame, DataFrame]:

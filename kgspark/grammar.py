@@ -281,10 +281,6 @@ LANGID_TOP_N = 400
 # reason = first failing rule in that order, else 'keep'.
 QUALITY_MIN_E6 = 560_000
 
-
-def langid_rot_py(lang: str) -> int:
-    return (ord(lang[0]) * 31 + ord(lang[1] if len(lang) > 1 else lang[0])) % 26
-
 # Rolling-hash document fingerprint: acc = (acc*31 + tokcode) % FP_MOD.
 FP_MOD = 1000000007
 

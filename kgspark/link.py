@@ -544,15 +544,6 @@ def _score_band_join(band: DataFrame, embeddings: DataFrame) -> DataFrame:
     return accepted.select("norm_a", "norm_b", "jaccard", "cosine")
 
 
-def explicit_sameas_edges(triples: DataFrame) -> DataFrame:
-    """O16: coref-predicate filter over an existing triple table —
-    explicit owl:sameAs / skos:exactMatch assertions become edges."""
-    return triples.filter(F.col("p").isin(G.COREF_PREDICATES)).select(
-        F.least(F.col("s"), F.col("o")).alias("norm_a"),
-        F.greatest(F.col("s"), F.col("o")).alias("norm_b"),
-    ).distinct()
-
-
 def explicit_norm_edges(triples: DataFrame, mentions: DataFrame) -> DataFrame:
     """O16 wired for the pipeline: explicit coref assertions between
     MENTION IRIs become norm-text edges for the CC stage (SURVEY §3.2:

@@ -22,7 +22,7 @@ import time
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 PREFIXES = {
@@ -540,9 +540,10 @@ def parse_rdfxml(lines: DataFrame) -> DataFrame:
 # --- graph-partitioned N-Quads store ------------------------------------------
 # O5/O6 at file level: the quad table written as N-Triples lines
 # PARTITIONED BY named graph, so a graph-scoped fetch (sparql-get
-# analogue) is a partition-PRUNED scan — Spark never opens other
-# graphs' files — and a graph replace (sparql-put analogue) is a
-# dynamic partition overwrite of exactly that graph's directory.
+# analogue) lists and scans only that graph's directory — Spark never
+# lists or opens other graphs' files — and a graph replace (sparql-put
+# analogue) is a dynamic partition overwrite of exactly that graph's
+# directory.
 
 def _nt_line_col(triples: DataFrame):
     """The N-Triples line expression over a (possibly quad) frame."""
@@ -675,23 +676,22 @@ class _StoreWriteLock:
         return False
 
 
-def _replace_graphs_unlocked(quads: DataFrame, path: str) -> None:
+def _replace_graphs_unlocked(quads: DataFrame, path: str) -> set[str]:
     """The write body of :func:`replace_graphs` WITHOUT taking the
     store lock — for callers that already hold it (store_update runs a
     whole UPDATE request under one lock; the O_EXCL lock is not
-    reentrant).  The overwrite-mode conf flip stays inside the caller's
-    lock because the conf is session-global."""
-    spark = quads.sparkSession
-    prev = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        quads.select("g", _nt_line_col(quads).alias("line")).write.mode(
-            "overwrite"
-        ).partitionBy("g").text(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    reentrant).  Dynamic partition overwrite is a per-write option, so
+    no session-global conf is touched.  Returns the graphs the write
+    holds rows for, observed during the write itself: a caller that
+    must drop the graphs it emptied needs no second pass over
+    ``quads``."""
+    seen = Observation()
+    quads.observe(seen, F.collect_set("g").alias("gs")).select(
+        "g", _nt_line_col(quads).alias("line")
+    ).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("g").text(path)
+    return set(seen.get["gs"])
 
 
 def replace_graphs(
@@ -755,27 +755,46 @@ def compact_str(term: str) -> str:
     return term
 
 
+def _read_store_text(spark, path: str, graphs=None) -> DataFrame | None:
+    """Raw (value, g) lines of the store: the whole store when
+    ``graphs`` is None, else only the listed graphs' partition
+    directories (looked up with :func:`store_graph_dirs`, so Spark lists
+    just those directories, not every ``g=`` directory of the store).
+    ``g`` is read as a string — partition type inference would turn the
+    graph ``0042`` into ``42``.  The graph filter stays on the partition
+    column as a guard (it shows as PartitionFilters in the scan).
+    Returns None when none of ``graphs`` is in the store."""
+    reader = spark.read.schema("value string, g string")
+    if graphs is None:
+        return reader.text(path)
+    dirs = store_graph_dirs(path)
+    hit = sorted({g for g in graphs if g in dirs})
+    if not hit:
+        return None
+    raw = reader.option("basePath", path).text([dirs[g] for g in hit])
+    return raw.filter(F.col("g").isin(hit))
+
+
 def read_nquads_store(spark, path: str, graph=None) -> DataFrame:
     """Read the partitioned store back to the full quad model.
 
-    ``graph`` (an IRI or list of IRIs) applies the graph-scoped fetch —
-    and it MUST be applied here, on the raw frame's partition column,
-    not as a filter on the parsed output: Catalyst does not push
+    ``graph`` (an IRI or list of IRIs) is the graph-scoped fetch: only
+    the requested graphs' directories are listed and scanned, so the
+    cost follows the graphs read, not the graphs the store holds.
+    Absent graphs contribute no rows (none present → an empty frame
+    with the quad schema).  The scope must be applied here, on the raw
+    frame, not as a filter on the parsed output: Catalyst does not push
     predicates through a Python MapInPandas operator, so a post-parse
-    filter would scan (and parse) every graph's files.  Passed here,
-    the predicate sits on the partition column directly above the text
-    scan and prunes to the requested graphs' directories
+    filter would scan (and parse) every graph's files.  The raw frame
+    also keeps the graph predicate on its partition column
     (PartitionFilters in the scan — verified in tests/test_rdfio.py).
     The parse kernel carries each row's partition graph through the
     Arrow batch."""
-    raw = spark.read.text(path)  # partition discovery adds the g column
-    if graph is not None:
-        pred = (
-            F.col("g").isin(list(graph))
-            if isinstance(graph, (list, tuple, set))
-            else F.col("g") == graph
-        )
-        raw = raw.filter(pred)
+    if isinstance(graph, str):
+        graph = [graph]
+    raw = _read_store_text(spark, path, graph)
+    if raw is None:
+        return spark.createDataFrame([], QUADS_PARSED_DDL)
     return _parse_with_graph(raw)
 
 
@@ -1790,9 +1809,7 @@ def compact_store(
         staging = os.path.join(path, "_compact_tmp")
         if os.path.isdir(staging):
             shutil.rmtree(staging)  # safe: every graph restored above
-        raw = spark.read.text(path).filter(
-            F.col("g").isin(list(eligible))
-        )
+        raw = _read_store_text(spark, path, eligible)
         (
             raw.repartition(len(eligible), "g")
             .select("g", F.col("value").alias("line"))
@@ -1833,12 +1850,12 @@ def merge_quads(
     does not mention are untouched (their partition directories are
     never read or rewritten).
 
-    Scale shape: reads ONLY the affected graphs' partitions
-    (partition-pruned under the MapInPandas parse, like every store
-    read); the retract anti-join and the add union shuffle on the quad
-    key; the affected-graph collect is metadata-scale (graphs touched
-    per merge, not rows).  The whole read-modify-write runs under the
-    store writer lock, serialized with SPARQL UPDATE and graph-replace
+    Scale shape: lists and reads ONLY the affected graphs' directories
+    (scoped below the MapInPandas parse, like every store read); the
+    retract anti-join and the add union shuffle on the quad key; the
+    affected-graph collect is metadata-scale (graphs touched per merge,
+    not rows).  The whole read-modify-write runs under the store
+    writer lock, serialized with SPARQL UPDATE and graph-replace
     writers."""
     delta = delta.localCheckpoint(eager=False)
     og = delta.select("op", "g").distinct().collect()  # one metadata job

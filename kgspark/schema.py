@@ -17,15 +17,6 @@ SPAN = T.StructType(
     ]
 )
 
-DOCS_SPANS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-        T.StructField("spans", T.ArrayType(SPAN, False), False),
-    ]
-)
-
 # D3 — columnar triple table (librdf statement-list analogue,
 # libtwine/rdf.c `[U]`), plus lineage columns.
 TRIPLES = T.StructType(
@@ -61,31 +52,5 @@ ENTITIES = T.StructType(
     [
         T.StructField("entity_id", T.StringType(), False),
         T.StructField("member_iri", T.StringType(), False),
-    ]
-)
-
-# D7 — proxy description index rows (spindle/generate/index.c analogue).
-ENTITY_ATTRS = T.StructType(
-    [
-        T.StructField("entity_id", T.StringType(), False),
-        T.StructField("label", T.StringType(), True),
-        T.StructField("label_lang", T.StringType(), True),
-        T.StructField("n_members", T.LongType(), False),
-        T.StructField("n_mentions", T.LongType(), False),
-        T.StructField("score", T.LongType(), False),
-    ]
-)
-
-# D8 — checkpoint/lineage table (replaces AMQP ack + writerd serialization
-# with Structured-Streaming-style micro-batch checkpoints).
-CHECKPOINT = T.StructType(
-    [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("input_fingerprint", T.LongType(), False),
-        T.StructField("row_count", T.LongType(), False),
-        T.StructField("triple_count", T.LongType(), False),
-        T.StructField("status", T.StringType(), False),   # complete|failed
-        T.StructField("ts", T.TimestampType(), False),
     ]
 )

@@ -1319,10 +1319,12 @@ def store_sparql(
     (rdfio.write_nquads_store) — the D5/D6 store consumed through its
     query surface.
 
-    ``graph`` (IRI or list) is the graph-scoped fetch: the predicate is
-    applied to the RAW partition column inside read_nquads_store, so it
-    prunes to the requested graphs' directories BEFORE the parse kernel
-    runs (filters do not push through MapInPandas; plan-gated in
+    ``graph`` (IRI or list) is the graph-scoped fetch: read_nquads_store
+    lists and scans only the requested graphs' directories, BEFORE the
+    parse kernel runs, so a scoped query costs the graphs it reads, not
+    the graphs the store holds (a filter on the parsed frame would not
+    prune: filters do not push through MapInPandas).  The predicate
+    also stays on the raw partition column as a guard (plan-gated in
     tests).  The queried default graph is the RDF MERGE of the selected
     graphs (set semantics — distinct before matching); a query using
     GRAPH clauses instead keeps the quad frame's ``g`` column so the
@@ -1812,10 +1814,12 @@ def store_update(
     graph directories (plus explicit directory removal for graphs an
     operation empties, which a zero-row overwrite cannot express).
 
-    Scale shape: INSERT/DELETE DATA read only the affected graphs'
-    partitions (partition-pruned scans), union/anti-join against a
-    broadcast-sized ground-quad frame, and rewrite only those
-    partitions.  DELETE WHERE is a conjunctive quad match (the same
+    Scale shape: INSERT/DELETE DATA list and read only the affected
+    graphs' directories (the store's other graphs are never listed),
+    union/anti-join against a broadcast-sized ground-quad frame, and
+    rewrite only those partitions; the graphs a DELETE empties are
+    observed during the write itself, so the touched graphs are parsed
+    once.  DELETE WHERE is a conjunctive quad match (the same
     _conjunction equi-join plan the read surface uses) followed by a
     left_anti join per affected graph; its affected-graph collect is
     metadata-scale (bounded by the store's graph count)."""
@@ -1845,7 +1849,9 @@ def _exec_update_op(
             ((q[0] if q[0] is not None else default_graph),) + tuple(q[1:])
             for q in op["quads"]
         ]
-        data = spark.createDataFrame(rows, rdfio.QUADS_PARSED_DDL)
+        # one partition: a request's ground quads are a handful of rows,
+        # not one task per core
+        data = spark.createDataFrame(rows, rdfio.QUADS_PARSED_DDL).coalesce(1)
         affected = sorted({r[0] for r in rows})
         dirs = rdfio.store_graph_dirs(path)
         have = [g for g in affected if g in dirs]
@@ -1864,9 +1870,7 @@ def _exec_update_op(
             F.broadcast(data.select("g", "s", "p", "o")),
             ["g", "s", "p", "o"], "left_anti",
         )
-        nonempty = {r["g"] for r in remaining.groupBy("g").count().collect()}
-        if nonempty:
-            rdfio._replace_graphs_unlocked(remaining, path)
+        nonempty = rdfio._replace_graphs_unlocked(remaining, path)
         rdfio._remove_graph_dirs(path, [g for g in have if g not in nonempty])
         return {"op": kind, "graphs": have, "quads": len(rows)}
 
@@ -1906,9 +1910,7 @@ def _exec_update_op(
         n_dels = dels.count()
         existing = rdfio.read_nquads_store(spark, path, graph=affected)
         remaining = existing.join(dels, ["g", "s", "p", "o"], "left_anti")
-        nonempty = {r["g"] for r in remaining.groupBy("g").count().collect()}
-        if nonempty:
-            rdfio._replace_graphs_unlocked(remaining, path)
+        nonempty = rdfio._replace_graphs_unlocked(remaining, path)
         rdfio._remove_graph_dirs(
             path, [g for g in affected if g not in nonempty]
         )
@@ -2270,9 +2272,7 @@ def _exec_modify(
     # every count/collect runs BEFORE the overwrite: the lazy frames'
     # lineage reads the store files the write is about to replace
     n_ins = 0 if ins is None else ins.count()
-    nonempty = {r["g"] for r in new.groupBy("g").count().collect()}
-    if nonempty:
-        rdfio._replace_graphs_unlocked(new, path)
+    nonempty = rdfio._replace_graphs_unlocked(new, path)
     rdfio._remove_graph_dirs(path, [g for g in have if g not in nonempty])
     return {
         "op": "modify", "graphs": affected, "deleted": n_del,

@@ -836,3 +836,33 @@ def test_compact_store_recovers_crashed_swap(spark, tmp_path):
     assert not any(e.endswith(".gc") for e in os.listdir(store))
     assert not os.path.isdir(os.path.join(store, "_compact_tmp"))
     assert result and result[0][0] == "ex:g0"
+
+
+def test_scoped_store_read_edge_cases(spark, tmp_path):
+    """Graph-scoped reads of absent graphs, mixed present/absent lists
+    and lists with duplicates give exactly the present graphs' rows —
+    the filtered full read — and an all-absent scope keeps the quad
+    schema."""
+    store = str(tmp_path / "store")
+    rdfio.write_nquads_store(spark.createDataFrame(
+        [(g, f"ex:s{k}", "ex:p", f"{g}-{k}", "literal", "", "")
+         for g in ("ex:g1", "ex:g2", "ex:g3") for k in range(3)],
+        rdfio.QUADS_PARSED_DDL,
+    ), store)
+    full = rdfio.read_nquads_store(spark, store)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    empty = rdfio.read_nquads_store(spark, store, graph="ex:absent")
+    assert empty.collect() == []
+    assert empty.schema == spark.createDataFrame(
+        [], rdfio.QUADS_PARSED_DDL).schema
+    for scope, want in [
+        (["ex:g1", "ex:absent"], ["ex:g1"]),
+        (["ex:g2", "ex:g2", "ex:g1", "ex:g2"], ["ex:g1", "ex:g2"]),
+        ({"ex:g3"}, ["ex:g3"]),
+    ]:
+        got = rows(rdfio.read_nquads_store(spark, store, graph=scope))
+        assert got == rows(full.filter(F.col("g").isin(want))), scope
+        assert len(got) == 3 * len(want)

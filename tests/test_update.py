@@ -495,3 +495,87 @@ def test_add_overlapping_content_keeps_set_semantics(spark, tmp_path):
     rows = [tuple(r) for r in rdfio.read_nquads_store(
         spark, store, graph="ex:dst").select("s", "o").collect()]
     assert sorted(rows) == [("ex:a", "1"), ("ex:b", "2"), ("ex:c", "3")]
+
+
+def test_numeric_graph_names_survive_read_and_update(spark, tmp_path):
+    """Graph names that look like numbers keep their spelling: the
+    store reads its partition column as a string, so ``0042`` is not
+    inferred as the integer 42 (which a later update of the graph
+    would then write back under the wrong name)."""
+    store = str(tmp_path / "store")
+    store_update(spark, store, '''
+        INSERT DATA { GRAPH <0042> { ex:a ex:p "1" }
+                      GRAPH <0007> { ex:b ex:p "2" } }''')
+    assert _state(spark, store) == {
+        ("0042", "ex:a", "ex:p", "1"), ("0007", "ex:b", "ex:p", "2"),
+    }
+    scoped = rdfio.read_nquads_store(spark, store, graph="0042")
+    assert [r["g"] for r in scoped.collect()] == ["0042"]
+    store_update(spark, store, 'INSERT DATA { GRAPH <0042> { ex:c ex:p "3" } }')
+    assert _state(spark, store) == {
+        ("0042", "ex:a", "ex:p", "1"), ("0042", "ex:c", "ex:p", "3"),
+        ("0007", "ex:b", "ex:p", "2"),
+    }
+    assert sorted(rdfio.store_graph_dirs(store)) == ["0007", "0042"]
+
+
+def _tasks(spark, group: str, fn) -> int:
+    """Spark tasks of every stage of every job ``fn`` submits, counted
+    under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    n = 0
+    for job in st.getJobIdsForGroup(group):
+        for sid in st.getJobInfo(job).stageIds:
+            info = st.getStageInfo(sid)
+            n += info.numTasks if info is not None else 0
+    return n
+
+
+def test_graph_scoped_ops_cost_follows_touched_graphs(spark, tmp_path):
+    """A graph-scoped read, INSERT DATA and DELETE DATA list and scan
+    only the graph they touch.  The store holds more graphs than
+    Spark's 32-path parallel-discovery threshold, so listing the whole
+    store would be a Spark job with a task per graph directory."""
+    import os
+    from urllib.parse import unquote, urlparse
+
+    from kgspark.sparql import store_sparql
+
+    store = str(tmp_path / "store")
+    n_graphs = 41
+    rdfio.write_nquads_store(spark.createDataFrame(
+        [(f"ex:g{i}", f"ex:s{i}", "ex:p", f"v{i}", "literal", "", "")
+         for i in range(n_graphs)],
+        rdfio.QUADS_PARSED_DDL,
+    ), store)
+    assert len(rdfio.store_graph_dirs(store)) == n_graphs
+    bound = 12
+
+    scoped = rdfio.read_nquads_store(spark, store, graph="ex:g7")
+    graph_dir = rdfio.store_graph_dirs(store)["ex:g7"]
+    files = scoped.inputFiles()
+    assert files and all(
+        os.path.dirname(unquote(urlparse(f).path)) == graph_dir for f in files
+    ), files
+
+    rows: list = []
+    read = _tasks(spark, "store-scoped-read", lambda: rows.extend(store_sparql(
+        spark, store, "SELECT ?s ?o WHERE { ?s ex:p ?o }", graph="ex:g7",
+    ).collect()))
+    assert [(r["s"], r["o"]) for r in rows] == [("ex:s7", "v7")]
+    insert = _tasks(spark, "store-insert-data", lambda: store_update(
+        spark, store, 'INSERT DATA { GRAPH ex:g7 { ex:x ex:p "new" } }'))
+    delete = _tasks(spark, "store-delete-data", lambda: store_update(
+        spark, store, 'DELETE DATA { GRAPH ex:g7 { ex:s7 ex:p "v7" } }'))
+    assert max(read, insert, delete) <= bound, (read, insert, delete)
+    assert _state(spark, store) == {
+        (f"ex:g{i}", f"ex:s{i}", "ex:p", f"v{i}")
+        for i in range(n_graphs) if i != 7
+    } | {("ex:g7", "ex:x", "ex:p", "new")}
