@@ -18,7 +18,7 @@ from .. import grammar as G
 
 _MENTION_RE = re.compile(G.MENTION_PATTERN)
 
-# Output schema (DDL) — matches kgspark.schema.MENTIONS.
+# Output schema (DDL) of the mention kernel.
 MENTIONS_DDL = (
     "doc_id string, lang string, source string, span_pos int, "
     "mention_ord int, mention_text string, norm_text string, "

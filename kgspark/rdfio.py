@@ -1,17 +1,30 @@
-"""RDF serialization / parsing (SURVEY.md O9–O11; the `rdf/` processor
+r"""RDF serialization / parsing (SURVEY.md O9–O11; the `rdf/` processor
 module family of bbcarchdev/twine, upstream via librdf `[U]`).
 
-Twine's core competence is per-MIME RDF parsing into statement lists.
-Here: an N-Triples writer (the graph-PUT payload analogue), an
-N-Triples parser, and a Turtle-subset writer/parser — all vectorized
-(native exprs for serialization; mapInPandas regex kernels for
-parsing), with round-trip equality gates in tests and a driver query
-whose oracle is the independent DuckDB triple oracle (serialize → parse
-must be lossless).
+Twine parses and serializes RDF through one librdf term model per MIME
+type.  Here every format goes through one term codec, defined once:
+
+* IRIs: :func:`expand` turns a prefixed name into its full IRI (one map
+  lookup per column); :func:`compact_str` turns a full IRI back into a
+  prefixed name only when a known namespace STARTS the IRI — an IRI
+  that merely embeds one (``http://a.org/?u=http://example.org/kg#x``)
+  stays as it is.  Every parser compacts through it.
+* Literals: :func:`_escape` writes backslash, ``"``, LF, CR and TAB as
+  ``\\ \" \n \r \t`` for the N-Triples family (N-Triples, N-Quads,
+  Turtle, TriG, the store) and JSON-LD, so no stored line holds a raw
+  line break; :func:`_unescape` decodes each ``\x`` pair once, left to
+  right.
+* Object terms: :func:`_term_cols` reads literal-ness, language and
+  datatype from the ``o_kind``/``o_lang``/``o_datatype`` columns, or
+  from ``LITERAL_PREDICATES`` for bare (s, p, o) input.
+* Lines: :func:`_nt_line` builds the N-Triples statement (N-Quads and
+  the store add the graph), :func:`_ttl_line` the Turtle one (TriG
+  wraps it in a graph block).  Writers are native column expressions.
+* Parsing: :func:`_parse_lines` is the one Arrow regex kernel of both
+  line families; RDF/XML, JSON-LD and the document parsers have their
+  own grammar but the same compaction and unescape.
 
 Prefix table: fixed, deterministic (the spindle rulebase analogue).
-Literal detection: by predicate (dc:language, rdfs:label emit literals;
-everything else IRIs) — matching the pipeline's triple semantics.
 """
 
 from __future__ import annotations
@@ -39,80 +52,60 @@ PREFIXES = {
 # column (the D3 term model drives serialization when present).
 LITERAL_PREDICATES = ["dc:language", "rdfs:label", "ex:score"]
 
-
-def expand(col):
-    """prefix:name → full IRI (column expression chain)."""
-    out = col
-    for p, full in sorted(PREFIXES.items()):
-        out = F.when(col.startswith(p),
-                     F.concat(F.lit(full), F.substring(col, len(p) + 1, 0x0FFFFFFF))
-                     ).otherwise(out)
-    return out
-
-
-def _escape_literal(col):
-    out = F.regexp_replace(col, r"\\", r"\\\\")
-    out = F.regexp_replace(out, '"', '\\\\"')
-    out = F.regexp_replace(out, "\n", "\\\\n")
-    return out
-
-
-def _object_term(triples: DataFrame, quote_iri) -> "F.Column":
-    """Serialize the object term.  Term-model-aware: with an ``o_kind``
-    column, literals carry their ``@lang`` tag / ``^^<datatype>`` suffix
-    (D3); bare (s,p,o) inputs fall back to the predicate heuristic."""
-    if "o_kind" in triples.columns:
-        is_lit = F.col("o_kind") == "literal"
-        lang = F.col("o_lang") if "o_lang" in triples.columns else F.lit("")
-        dtype = F.col("o_datatype") if "o_datatype" in triples.columns else F.lit("")
-        suffix = (
-            F.when(lang != "", F.concat(F.lit("@"), lang))
-            .when(dtype != "", F.concat(F.lit("^^<"), expand(dtype), F.lit(">")))
-            .otherwise(F.lit(""))
-        )
-    else:
-        is_lit = F.col("p").isin(LITERAL_PREDICATES)
-        suffix = F.lit("")
-    return F.when(
-        is_lit,
-        F.concat(F.lit('"'), _escape_literal(F.col("o")), F.lit('"'), suffix),
-    ).otherwise(quote_iri(F.col("o")))
-
-
-def to_ntriples(triples: DataFrame) -> DataFrame:
-    """(s,p,o[,o_kind,o_lang,o_datatype]) → one N-Triples line per row
-    (column ``line``)."""
-    obj = _object_term(
-        triples, lambda c: F.concat(F.lit("<"), expand(c), F.lit(">"))
-    )
-    line = F.concat(
-        F.lit("<"), expand(F.col("s")), F.lit("> <"), expand(F.col("p")),
-        F.lit("> "), obj, F.lit(" ."),
-    )
-    return triples.select(line.alias("line"))
-
-
-_NT_RE = re.compile(
-    r"^<(?P<s>[^>]*)> <(?P<p>[^>]*)> "
-    r"(?:<(?P<oiri>[^>]*)>|\"(?P<olit>(?:[^\"\\]|\\.)*)\""
-    r"(?:@(?P<lang>[A-Za-z][A-Za-z0-9-]*)|\^\^<(?P<dt>[^>]*)>)?)"
-    r" \.$"
-)
-
 PARSED_DDL = (
     "s string, p string, o string, o_kind string, o_lang string, o_datatype string"
 )
+QUADS_PARSED_DDL = "g string, " + PARSED_DDL
+
+
+# --- the term codec -------------------------------------------------------------
+
+_PREFIX_RE = "^(" + "|".join(sorted(p[:-1] for p in PREFIXES)) + "):"
+_NAMESPACE_MAP = "map(" + ", ".join(
+    f"'{p[:-1]}', '{full}'" for p, full in sorted(PREFIXES.items())
+) + ")"
+
+
+def expand(col):
+    """prefix:name → full IRI; any other value passes through."""
+    ns = F.expr(_NAMESPACE_MAP)[F.regexp_extract(col, _PREFIX_RE, 1)]
+    return F.coalesce(F.concat(ns, F.regexp_replace(col, _PREFIX_RE, "")), col)
+
+
+_NAMESPACE_RE = re.compile("|".join(re.escape(full) for full in PREFIXES.values()))
+_PREFIX_OF = {full: p for p, full in PREFIXES.items()}
+
+
+def compact_str(term: str) -> str:
+    """Full IRI → prefixed name when a known namespace starts it (the
+    inverse of :func:`expand`); anything else is returned unchanged."""
+    m = _NAMESPACE_RE.match(term)
+    return _PREFIX_OF[m.group()] + term[m.end():] if m else term
 
 
 def _compact(series: pd.Series) -> pd.Series:
-    out = series
-    for p, full in PREFIXES.items():
-        out = out.str.replace(full, p, regex=False)
-    return out
+    return series.map(compact_str, na_action="ignore")
+
+
+# (Java regex, Java replacement) pairs
+_ESCAPES = [(r"\\", r"\\\\"), ('"', r'\\"'), ("\n", r"\\n"), ("\r", r"\\r"),
+            ("\t", r"\\t")]
+
+
+def _escape(col):
+    r"""Backslash, ``"``, LF, CR and TAB → ``\\ \" \n \r \t`` (backslash
+    first): the string escape of N-Triples, Turtle and JSON alike."""
+    for raw, esc in _ESCAPES:
+        col = F.regexp_replace(col, raw, esc)
+    return col
 
 
 _UNESCAPE_RE = re.compile(r"\\(.)")
 _UNESCAPE_MAP = {"n": "\n", "t": "\t", "r": "\r"}
+
+
+def _unescape_pair(m: re.Match) -> str:
+    return _UNESCAPE_MAP.get(m.group(1), m.group(1))
 
 
 def _unescape(series: pd.Series) -> pd.Series:
@@ -120,94 +113,136 @@ def _unescape(series: pd.Series) -> pd.Series:
     left to right.  Sequential replaces are LOSSY here — a literal
     containing a real backslash before an 'n' serializes as ``\\\\n``
     and must parse back to ``\\n`` (backslash + n), not a newline."""
-    return series.str.replace(
-        _UNESCAPE_RE, lambda m: _UNESCAPE_MAP.get(m.group(1), m.group(1)), regex=True
+    return series.str.replace(_UNESCAPE_RE, _unescape_pair, regex=True)
+
+
+def _unescape_str(s: str) -> str:
+    return _UNESCAPE_RE.sub(_unescape_pair, s)
+
+
+def _term_cols(df: DataFrame):
+    """(is_lit, lang, dtype) of the object term: from the ``o_kind`` /
+    ``o_lang`` / ``o_datatype`` columns (D3), or for bare (s, p, o)
+    input from the predicate (``LITERAL_PREDICATES``, untagged)."""
+    if "o_kind" not in df.columns:
+        return F.col("p").isin(LITERAL_PREDICATES), F.lit(""), F.lit("")
+    lang = F.col("o_lang") if "o_lang" in df.columns else F.lit("")
+    dtype = F.col("o_datatype") if "o_datatype" in df.columns else F.lit("")
+    return F.col("o_kind") == "literal", lang, dtype
+
+
+def _iri(col):
+    return F.concat(F.lit("<"), expand(col), F.lit(">"))
+
+
+def _ttl_term(col):
+    """Prefixed name when the value starts with a known prefix AND the
+    local part is PN_LOCAL-safe, else <iri>.  Turtle forbids '#', '/',
+    '.' etc. unescaped in a prefixed-name local part — a bare
+    ``ex://entity/x#id`` is illegal Turtle ('#' even starts a comment) —
+    and PN_LOCAL may not BEGIN with '-', so such terms serialize
+    bracketed (the document parser and external parsers depend on it)."""
+    safe = col.rlike(_PREFIX_RE + "([A-Za-z0-9_][A-Za-z0-9_-]*)?$")
+    return F.when(safe, col).otherwise(_iri(col))
+
+
+def _spo(df: DataFrame, term):
+    """``s p o`` of one statement with ``term`` writing each IRI: a
+    literal object is quoted and escaped, with its @lang tag or
+    ^^datatype suffix."""
+    is_lit, lang, dtype = _term_cols(df)
+    suffix = (
+        F.when(lang != "", F.concat(F.lit("@"), lang))
+        .when(dtype != "", F.concat(F.lit("^^"), term(dtype)))
+        .otherwise(F.lit(""))
     )
+    obj = F.when(
+        is_lit, F.concat(F.lit('"'), _escape(F.col("o")), F.lit('"'), suffix)
+    ).otherwise(term(F.col("o")))
+    return [term(F.col("s")), F.lit(" "), term(F.col("p")), F.lit(" "), obj]
 
 
-def ntriples_parse_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Vectorized N-Triples parser (O11): one Arrow batch of lines in,
-    one batch of (s, p, o, o_kind) out; malformed lines are dropped
-    (the quarantine filter runs upstream at scale)."""
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        ext = pdf["line"].astype("string").str.extract(_NT_RE)
-        ok = ext["s"].notna()
-        ext = ext[ok]
-        if len(ext) == 0:
-            continue
-        is_iri = ext["oiri"].notna()
-        o = ext["oiri"].where(is_iri, _unescape(ext["olit"]))
-        out = pd.DataFrame(
-            {
-                "s": _compact(ext["s"]),
-                "p": _compact(ext["p"]),
-                "o": o.where(~is_iri, _compact(o)),
+def _nt_line(df: DataFrame, graph: bool = False):
+    """The N-Triples statement line; with ``graph`` the N-Quads one
+    (the graph IRI as the 4th term)."""
+    g = [F.lit(" "), _iri(F.col("g"))] if graph else []
+    return F.concat(*_spo(df, _iri), *g, F.lit(" ."))
+
+
+def _ttl_line(df: DataFrame, graph: bool = False):
+    """The one-line Turtle statement; with ``graph`` the one-statement
+    TriG block ``g { s p o . }``."""
+    if not graph:
+        return F.concat(*_spo(df, _ttl_term), F.lit(" ."))
+    return F.concat(_ttl_term(F.col("g")), F.lit(" { "), *_spo(df, _ttl_term),
+                    F.lit(" . }"))
+
+
+# --- the line formats -----------------------------------------------------------
+# One regex per syntax; both families share the object-term grammar and
+# one kernel.  The @prefix header of Turtle/TriG is implicit (the fixed
+# table); directive and comment lines match no statement and drop, like
+# malformed lines (the quarantine filter runs upstream at scale).
+
+_LIT = r"\"(?P<olit>(?:[^\"\\]|\\.)*)\"(?:@(?P<lang>[A-Za-z][A-Za-z0-9-]*)|\^\^{dt})?"
+_NT_STMT = (r"<(?P<s>[^>]*)> <(?P<p>[^>]*)> (?:<(?P<oiri>[^>]*)>|"
+            + _LIT.format(dt=r"<(?P<dt>[^>]*)>") + ")")
+_NT_RE = re.compile(rf"^{_NT_STMT} \.$")
+_NQ_RE = re.compile(rf"^{_NT_STMT} <(?P<g>[^>]*)> \.$")
+
+_TTL_TERM = r"(?:<[^>]*>|[A-Za-z][A-Za-z0-9]*:[^\s]*)"
+_TTL_STMT = (rf"(?P<s>{_TTL_TERM}) (?P<p>{_TTL_TERM}) (?:(?P<oiri>{_TTL_TERM})|"
+             + _LIT.format(dt=rf"(?P<dt>{_TTL_TERM})") + ")")
+_TTL_RE = re.compile(rf"^{_TTL_STMT} \.$")
+_TRIG_RE = re.compile(rf"^(?P<g>{_TTL_TERM}) \{{ {_TTL_STMT} \. \}}$")
+
+
+def _ttl_value(sr: pd.Series) -> pd.Series:
+    """A Turtle term's IRI: brackets stripped, then compacted."""
+    return _compact(sr.str.replace(r"^<|>$", "", regex=True))
+
+
+def _parse_lines(lines: DataFrame, regex, iri, graph: str | None = None) -> DataFrame:
+    """The Arrow regex kernel of the line formats: column ``line`` in,
+    the full term model out; lines ``regex`` does not match are dropped.
+    ``iri`` turns a matched term into the stored IRI (:func:`_compact`
+    for N-Triples, :func:`_ttl_value` for Turtle).  ``graph`` is None
+    for triples, ``"term"`` for the regex's ``g`` group, ``"column"``
+    for an input ``g`` column (the store's partition graph)."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ext = pdf["line"].astype("string").str.strip().str.extract(regex)
+            ext = ext[ext["s"].notna()]
+            if len(ext) == 0:
+                continue
+            is_iri = ext["oiri"].notna()
+            out = pd.DataFrame({
+                "s": iri(ext["s"]),
+                "p": iri(ext["p"]),
+                "o": iri(ext["oiri"]).where(is_iri, _unescape(ext["olit"])),
                 "o_kind": is_iri.map({True: "iri", False: "literal"}),
                 "o_lang": ext["lang"].fillna(""),
-                "o_datatype": _compact(ext["dt"].fillna("")),
-            }
-        )
-        yield out
+                "o_datatype": iri(ext["dt"].fillna("")),
+            })
+            if graph == "term":
+                out.insert(0, "g", iri(ext["g"]))
+            elif graph == "column":
+                out.insert(0, "g", pdf.loc[ext.index, "g"].astype("string"))
+            yield out
+
+    return lines.mapInPandas(kernel, schema=QUADS_PARSED_DDL if graph else PARSED_DDL)
+
+
+def to_ntriples(triples: DataFrame) -> DataFrame:
+    """(s,p,o[,o_kind,o_lang,o_datatype]) → one N-Triples line per row
+    (column ``line``)."""
+    return triples.select(_nt_line(triples).alias("line"))
 
 
 def parse_ntriples(lines: DataFrame) -> DataFrame:
-    return lines.mapInPandas(ntriples_parse_kernel, schema=PARSED_DDL)
-
-
-_NT_LIT_TAIL = r"(?:@[A-Za-z][A-Za-z0-9-]*|\^\^<[^>]*>)?"
-
-
-def parse_ntriples_native(lines: DataFrame) -> DataFrame:
-    """JVM-only N-Triples parser (regexp_extract) — cross-checked with
-    the kernel in tests.  Handles @lang tags and ^^<datatype> suffixes."""
-    s = F.regexp_extract("line", r"^<([^>]*)>", 1)
-    p = F.regexp_extract("line", r"^<[^>]*> <([^>]*)>", 1)
-    oiri = F.regexp_extract("line", r"^<[^>]*> <[^>]*> <([^>]*)> \.$", 1)
-    olit = F.regexp_extract(
-        "line",
-        r'^<[^>]*> <[^>]*> "((?:[^"\\]|\\.)*)"' + _NT_LIT_TAIL + r" \.$",
-        1,
-    )
-    o_lang = F.regexp_extract(
-        "line", r'^<[^>]*> <[^>]*> "(?:[^"\\]|\\.)*"@([A-Za-z][A-Za-z0-9-]*) \.$', 1
-    )
-    o_dt = F.regexp_extract(
-        "line", r'^<[^>]*> <[^>]*> "(?:[^"\\]|\\.)*"\^\^<([^>]*)> \.$', 1
-    )
-    is_iri = oiri != ""
-    compact_s, compact_p, compact_o, compact_dt = s, p, oiri, o_dt
-    for pref, full in sorted(PREFIXES.items()):
-        compact_s = F.regexp_replace(compact_s, re.escape(full), pref)
-        compact_p = F.regexp_replace(compact_p, re.escape(full), pref)
-        compact_o = F.regexp_replace(compact_o, re.escape(full), pref)
-        compact_dt = F.regexp_replace(compact_dt, re.escape(full), pref)
-    # Single-LOGICAL-pass unescape for the JVM path: protect '\\\\'
-    # behind a NUL sentinel first so '\\' + 'n' never re-combines into a
-    # newline, then decode the single-char escapes, then restore the
-    # backslash.  Sound because N-Triples forbids raw U+0000 in literals
-    # (it must be written \\u0000) — documented subset assumption.
-    unlit = F.regexp_replace(olit, r"\\\\", "\u0000")
-    unlit = F.regexp_replace(unlit, r"\\n", "\n")
-    unlit = F.regexp_replace(unlit, r"\\t", "\t")
-    unlit = F.regexp_replace(unlit, r"\\r", "\r")
-    unlit = F.regexp_replace(unlit, r'\\"', '"')
-    unlit = F.regexp_replace(unlit, "\u0000", r"\\")
-    return lines.filter(
-        F.col("line").rlike(
-            r"^<[^>]*> <[^>]*> (<[^>]*>|\"(?:[^\"\\]|\\.)*\""
-            + _NT_LIT_TAIL
-            + r") \.$"
-        )
-    ).select(
-        compact_s.alias("s"),
-        compact_p.alias("p"),
-        F.when(is_iri, compact_o).otherwise(unlit).alias("o"),
-        F.when(is_iri, F.lit("iri")).otherwise(F.lit("literal")).alias("o_kind"),
-        F.when(is_iri, F.lit("")).otherwise(o_lang).alias("o_lang"),
-        F.when(is_iri, F.lit("")).otherwise(compact_dt).alias("o_datatype"),
-    )
+    """N-Triples lines (O11) → (s, p, o, o_kind, o_lang, o_datatype)."""
+    return _parse_lines(lines, _NT_RE, _compact)
 
 
 # --- N-Quads (graph-carrying round-trip) --------------------------------------
@@ -217,214 +252,40 @@ def parse_ntriples_native(lines: DataFrame) -> DataFrame:
 # as the fourth term, the parser recovers it — so a graph-scoped
 # export/import preserves per-document graph boundaries.
 
-QUADS_PARSED_DDL = "g string, " + PARSED_DDL
-
-
 def to_nquads(quads: DataFrame) -> DataFrame:
-    """(g,s,p,o[,term cols]) → one N-Quads line per row: the N-Triples
-    statement with the graph IRI as the 4th term."""
-    obj = _object_term(
-        quads, lambda c: F.concat(F.lit("<"), expand(c), F.lit(">"))
-    )
-    line = F.concat(
-        F.lit("<"), expand(F.col("s")), F.lit("> <"), expand(F.col("p")),
-        F.lit("> "), obj, F.lit(" <"), expand(F.col("g")), F.lit("> ."),
-    )
-    return quads.select(line.alias("line"))
-
-
-_NQ_RE = re.compile(
-    r"^<(?P<s>[^>]*)> <(?P<p>[^>]*)> "
-    r"(?:<(?P<oiri>[^>]*)>|\"(?P<olit>(?:[^\"\\]|\\.)*)\""
-    r"(?:@(?P<lang>[A-Za-z][A-Za-z0-9-]*)|\^\^<(?P<dt>[^>]*)>)?)"
-    r" <(?P<g>[^>]*)> \.$"
-)
-
-
-def nquads_parse_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Vectorized N-Quads parser: one Arrow batch of lines in, one batch
-    of (g, s, p, o, o_kind, o_lang, o_datatype) out; malformed lines are
-    dropped (quarantine upstream)."""
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        ext = pdf["line"].astype("string").str.extract(_NQ_RE)
-        ext = ext[ext["s"].notna()]
-        if len(ext) == 0:
-            continue
-        is_iri = ext["oiri"].notna()
-        o = ext["oiri"].where(is_iri, _unescape(ext["olit"]))
-        yield pd.DataFrame(
-            {
-                "g": _compact(ext["g"]),
-                "s": _compact(ext["s"]),
-                "p": _compact(ext["p"]),
-                "o": o.where(~is_iri, _compact(o)),
-                "o_kind": is_iri.map({True: "iri", False: "literal"}),
-                "o_lang": ext["lang"].fillna(""),
-                "o_datatype": _compact(ext["dt"].fillna("")),
-            }
-        )
+    """(g,s,p,o[,term cols]) → one N-Quads line per row."""
+    return quads.select(_nt_line(quads, graph=True).alias("line"))
 
 
 def parse_nquads(lines: DataFrame) -> DataFrame:
-    return lines.mapInPandas(nquads_parse_kernel, schema=QUADS_PARSED_DDL)
+    return _parse_lines(lines, _NQ_RE, _compact, graph="term")
 
 
-# --- TriG subset ----------------------------------------------------------------
-# One single-line graph block per quad — `<g> { s p o . }` with Turtle
-# term syntax inside the braces.  (TriG allows one statement per block;
-# the line-oriented subset keeps the writer pure native exprs and the
-# parser an Arrow regex kernel, the same shape as every other format.)
-
-def to_trig(quads: DataFrame) -> DataFrame:
-    obj = _object_term(quads, _ttl_term)
-    if "o_kind" in quads.columns:
-        is_lit = F.col("o_kind") == "literal"
-        lang = F.col("o_lang") if "o_lang" in quads.columns else F.lit("")
-        dtype = F.col("o_datatype") if "o_datatype" in quads.columns else F.lit("")
-        suffix = (
-            F.when(lang != "", F.concat(F.lit("@"), lang))
-            .when(dtype != "", F.concat(F.lit("^^"), _ttl_term(dtype)))
-            .otherwise(F.lit(""))
-        )
-        obj = F.when(
-            is_lit,
-            F.concat(F.lit('"'), _escape_literal(F.col("o")), F.lit('"'), suffix),
-        ).otherwise(_ttl_term(F.col("o")))
-    line = F.concat(
-        _ttl_term(F.col("g")), F.lit(" { "),
-        _ttl_term(F.col("s")), F.lit(" "), _ttl_term(F.col("p")),
-        F.lit(" "), obj, F.lit(" . }"),
-    )
-    return quads.select(line.alias("line"))
-
-
-def trig_parse_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """TriG-subset parser: `<g> { s p o . }` one-line blocks; @prefix
-    and comment lines skipped; malformed lines dropped."""
-    trig_re = re.compile(
-        rf"^(?P<g>{_TTL_TERM}) \{{ (?P<s>{_TTL_TERM}) (?P<p>{_TTL_TERM}) "
-        rf"(?:(?P<oterm>{_TTL_TERM})|\"(?P<olit>(?:[^\"\\]|\\.)*)\""
-        rf"(?:@(?P<lang>[A-Za-z][A-Za-z0-9-]*)|\^\^(?P<dt>{_TTL_TERM}))?)"
-        rf" \. \}}$"
-    )
-
-    def norm_term(sr: pd.Series) -> pd.Series:
-        bare = sr.str.replace(r"^<|>$", "", regex=True)
-        return _compact(bare)
-
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        lines = pdf["line"].astype("string").str.strip()
-        lines = lines[~lines.str.startswith(("@prefix", "@base", "#"), na=False)]
-        ext = lines.str.extract(trig_re)
-        ext = ext[ext["s"].notna()]
-        if len(ext) == 0:
-            continue
-        is_iri = ext["oterm"].notna()
-        yield pd.DataFrame(
-            {
-                "g": norm_term(ext["g"]),
-                "s": norm_term(ext["s"]),
-                "p": norm_term(ext["p"]),
-                "o": norm_term(ext["oterm"]).where(is_iri, _unescape(ext["olit"])),
-                "o_kind": is_iri.map({True: "iri", False: "literal"}),
-                "o_lang": ext["lang"].fillna(""),
-                "o_datatype": norm_term(ext["dt"].fillna("")),
-            }
-        )
-
-
-def parse_trig(lines: DataFrame) -> DataFrame:
-    return lines.mapInPandas(trig_parse_kernel, schema=QUADS_PARSED_DDL)
-
-
-# --- Turtle subset -----------------------------------------------------------
-def _ttl_term(col):
-    """Prefixed name when the value starts with a known prefix AND the
-    local part is PN_LOCAL-safe, else <iri>.  Turtle forbids '#', '/',
-    '.' etc. unescaped in a prefixed-name local part — a bare
-    ``ex://entity/x#id`` is illegal Turtle ('#' even starts a comment),
-    so such terms serialize bracketed (round-5 fix; the document parser
-    depends on it)."""
-    out = F.concat(F.lit("<"), expand(col), F.lit(">"))
-    # PN_LOCAL may not BEGIN with '-' (Turtle grammar: first char is
-    # PN_CHARS_U | digit) — ex:-x is illegal and external parsers
-    # reject it, so such locals fall back to <iri> (round-6 ADVICE)
-    safe = col.rlike("^[A-Za-z][A-Za-z0-9]*:([A-Za-z0-9_][A-Za-z0-9_-]*)?$")
-    for pref in sorted(PREFIXES):
-        out = F.when(col.startswith(pref) & safe, col).otherwise(out)
-    return out
-
+# --- Turtle and TriG subsets ----------------------------------------------------
+# Turtle: prefixed names or <iri> terms, one triple per line.  TriG: one
+# single-line graph block per quad — `g { s p o . }` with Turtle term
+# syntax inside the braces (TriG allows one statement per block; the
+# line-oriented subset keeps the writer native exprs and the parser the
+# shared Arrow kernel).
 
 def to_turtle(triples: DataFrame) -> DataFrame:
     """Turtle-subset writer: prefixed names, one triple per line, @lang
     tags and ^^prefixed-datatype suffixes on literals when the term
-    model rides along.  The @prefix header is implicit (fixed table) —
-    parser shares it."""
-    obj = _object_term(triples, _ttl_term)
-    # Turtle datatype suffix uses the prefixed name, not <iri> — rebuild
-    # the literal suffix accordingly when term columns are present
-    if "o_kind" in triples.columns:
-        is_lit = F.col("o_kind") == "literal"
-        lang = F.col("o_lang") if "o_lang" in triples.columns else F.lit("")
-        dtype = F.col("o_datatype") if "o_datatype" in triples.columns else F.lit("")
-        suffix = (
-            F.when(lang != "", F.concat(F.lit("@"), lang))
-            .when(dtype != "", F.concat(F.lit("^^"), _ttl_term(dtype)))
-            .otherwise(F.lit(""))
-        )
-        obj = F.when(
-            is_lit,
-            F.concat(F.lit('"'), _escape_literal(F.col("o")), F.lit('"'), suffix),
-        ).otherwise(_ttl_term(F.col("o")))
-    line = F.concat(_ttl_term(F.col("s")), F.lit(" "), _ttl_term(F.col("p")),
-                    F.lit(" "), obj, F.lit(" ."))
-    return triples.select(line.alias("line"))
-
-
-_TTL_TERM = r"(?:<[^>]*>|[A-Za-z][A-Za-z0-9]*:[^\s]*)"
-_TTL_RE = re.compile(
-    rf"^(?P<s>{_TTL_TERM}) (?P<p>{_TTL_TERM}) "
-    rf"(?:(?P<oterm>{_TTL_TERM})|\"(?P<olit>(?:[^\"\\]|\\.)*)\""
-    rf"(?:@(?P<lang>[A-Za-z][A-Za-z0-9-]*)|\^\^(?P<dt>{_TTL_TERM}))?) \.$"
-)
-
-
-def turtle_parse_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Turtle-subset parser kernel (O10): prefixed names or <iri> terms,
-    quoted literals, one triple per line; @prefix/@base and comment
-    lines are skipped."""
-    def norm_term(sr: pd.Series) -> pd.Series:
-        bare = sr.str.replace(r"^<|>$", "", regex=True)
-        return _compact(bare)
-
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        lines = pdf["line"].astype("string").str.strip()
-        lines = lines[~lines.str.startswith(("@prefix", "@base", "#"), na=False)]
-        ext = lines.str.extract(_TTL_RE)
-        ext = ext[ext["s"].notna()]
-        if len(ext) == 0:
-            continue
-        is_iri = ext["oterm"].notna()
-        yield pd.DataFrame(
-            {
-                "s": norm_term(ext["s"]),
-                "p": norm_term(ext["p"]),
-                "o": norm_term(ext["oterm"]).where(is_iri, _unescape(ext["olit"])),
-                "o_kind": is_iri.map({True: "iri", False: "literal"}),
-                "o_lang": ext["lang"].fillna(""),
-                "o_datatype": norm_term(ext["dt"].fillna("")),
-            }
-        )
+    model rides along."""
+    return triples.select(_ttl_line(triples).alias("line"))
 
 
 def parse_turtle(lines: DataFrame) -> DataFrame:
-    return lines.mapInPandas(turtle_parse_kernel, schema=PARSED_DDL)
+    """Turtle-subset parser (O10)."""
+    return _parse_lines(lines, _TTL_RE, _ttl_value)
+
+
+def to_trig(quads: DataFrame) -> DataFrame:
+    return quads.select(_ttl_line(quads, graph=True).alias("line"))
+
+
+def parse_trig(lines: DataFrame) -> DataFrame:
+    return _parse_lines(lines, _TRIG_RE, _ttl_value, graph="term")
 
 
 # --- RDF/XML subset -----------------------------------------------------------
@@ -448,13 +309,7 @@ def _xml_escape(col):
 
 def to_rdfxml(triples: DataFrame) -> DataFrame:
     """(s,p,o[,term cols]) → one one-line rdf:Description per triple."""
-    if "o_kind" in triples.columns:
-        is_lit = F.col("o_kind") == "literal"
-        lang = F.col("o_lang") if "o_lang" in triples.columns else F.lit("")
-        dtype = F.col("o_datatype") if "o_datatype" in triples.columns else F.lit("")
-    else:
-        is_lit = F.col("p").isin(LITERAL_PREDICATES)
-        lang, dtype = F.lit(""), F.lit("")
+    is_lit, lang, dtype = _term_cols(triples)
     attrs = F.concat(
         F.when(lang != "", F.concat(F.lit(' xml:lang="'), lang, F.lit('"')))
         .otherwise(F.lit("")),
@@ -545,23 +400,12 @@ def parse_rdfxml(lines: DataFrame) -> DataFrame:
 # analogue) is a dynamic partition overwrite of exactly that graph's
 # directory.
 
-def _nt_line_col(triples: DataFrame):
-    """The N-Triples line expression over a (possibly quad) frame."""
-    obj = _object_term(
-        triples, lambda c: F.concat(F.lit("<"), expand(c), F.lit(">"))
-    )
-    return F.concat(
-        F.lit("<"), expand(F.col("s")), F.lit("> <"), expand(F.col("p")),
-        F.lit("> "), obj, F.lit(" ."),
-    )
-
-
 def write_nquads_store(quads: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Write (g, s, p, o[, term cols]) as a per-graph partitioned text
     store: each graph's statements land in its own ``g=<iri>`` partition
     directory as N-Triples lines (the graph name lives in the partition
     key, so each partition's file IS that graph's PUT payload)."""
-    quads.select("g", _nt_line_col(quads).alias("line")).write.mode(
+    quads.select("g", _nt_line(quads).alias("line")).write.mode(
         mode
     ).partitionBy("g").text(path)
 
@@ -687,7 +531,7 @@ def _replace_graphs_unlocked(quads: DataFrame, path: str) -> set[str]:
     ``quads``."""
     seen = Observation()
     quads.observe(seen, F.collect_set("g").alias("gs")).select(
-        "g", _nt_line_col(quads).alias("line")
+        "g", _nt_line(quads).alias("line")
     ).write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("g").text(path)
@@ -746,15 +590,6 @@ def _remove_graph_dirs(path: str, graphs) -> list[str]:
     return removed
 
 
-def compact_str(term: str) -> str:
-    """Python-side mirror of the parse kernels' ``_compact``: full IRI →
-    prefixed form when a known prefix applies, so ground terms typed in
-    an UPDATE request compare equal to parsed store rows."""
-    for p, full in PREFIXES.items():
-        term = term.replace(full, p)
-    return term
-
-
 def _read_store_text(spark, path: str, graphs=None) -> DataFrame | None:
     """Raw (value, g) lines of the store: the whole store when
     ``graphs`` is None, else only the listed graphs' partition
@@ -788,44 +623,16 @@ def read_nquads_store(spark, path: str, graph=None) -> DataFrame:
     filter would scan (and parse) every graph's files.  The raw frame
     also keeps the graph predicate on its partition column
     (PartitionFilters in the scan — verified in tests/test_rdfio.py).
-    The parse kernel carries each row's partition graph through the
+    The N-Triples kernel carries each row's partition graph through the
     Arrow batch."""
     if isinstance(graph, str):
         graph = [graph]
     raw = _read_store_text(spark, path, graph)
     if raw is None:
         return spark.createDataFrame([], QUADS_PARSED_DDL)
-    return _parse_with_graph(raw)
-
-
-def _parse_with_graph(raw: DataFrame) -> DataFrame:
-    """Parse N-Triples lines keeping each row's partition graph: the
-    kernel input carries (g, line) and the output re-emits g."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ext = pdf["value"].astype("string").str.extract(_NT_RE)
-            ok = ext["s"].notna()
-            ext = ext[ok]
-            if len(ext) == 0:
-                continue
-            is_iri = ext["oiri"].notna()
-            o = ext["oiri"].where(is_iri, _unescape(ext["olit"]))
-            yield pd.DataFrame(
-                {
-                    "g": pdf.loc[ext.index, "g"].astype("string"),
-                    "s": _compact(ext["s"]),
-                    "p": _compact(ext["p"]),
-                    "o": o.where(~is_iri, _compact(o)),
-                    "o_kind": is_iri.map({True: "iri", False: "literal"}),
-                    "o_lang": ext["lang"].fillna(""),
-                    "o_datatype": _compact(ext["dt"].fillna("")),
-                }
-            )
-
-    return raw.mapInPandas(kernel, schema=QUADS_PARSED_DDL)
+    return _parse_lines(
+        raw.withColumnRenamed("value", "line"), _NT_RE, _compact, graph="column"
+    )
 
 
 # --- JSON-LD subset (NDJSON) -------------------------------------------------
@@ -833,42 +640,26 @@ def _parse_with_graph(raw: DataFrame) -> DataFrame:
 # JSON-LD member of the family here is the flat NDJSON profile: one
 # node object per TRIPLE per line, expanded IRIs, literal objects as
 # {"@value": v[, "@language": l | "@type": dt]}.  Writer is pure native
-# exprs (JSON string escaping included); parser is an Arrow kernel over
+# exprs (the shared string escape); parser is an Arrow kernel over
 # json.loads.  Lossless against the full term model (tested).
-
-def _json_escape(col):
-    out = F.regexp_replace(col, r"\\", r"\\\\")
-    out = F.regexp_replace(out, '"', '\\\\"')
-    out = F.regexp_replace(out, "\n", "\\\\n")
-    out = F.regexp_replace(out, "\t", "\\\\t")
-    out = F.regexp_replace(out, "\r", "\\\\r")
-    return out
-
 
 def to_jsonld(triples: DataFrame) -> DataFrame:
     """(s,p,o[,term cols]) → one flat JSON-LD node object per line."""
-    if "o_kind" in triples.columns:
-        is_lit = F.col("o_kind") == "literal"
-        lang = F.col("o_lang") if "o_lang" in triples.columns else F.lit("")
-        dtype = F.col("o_datatype") if "o_datatype" in triples.columns else F.lit("")
-    else:
-        is_lit = F.col("p").isin(LITERAL_PREDICATES)
-        lang = F.lit("")
-        dtype = F.lit("")
+    is_lit, lang, dtype = _term_cols(triples)
     lit_tail = (
         F.when(lang != "", F.concat(F.lit('", "@language": "'), lang, F.lit('"}')))
-        .when(dtype != "", F.concat(F.lit('", "@type": "'), _json_escape(expand(dtype)), F.lit('"}')))
+        .when(dtype != "", F.concat(F.lit('", "@type": "'), _escape(expand(dtype)), F.lit('"}')))
         .otherwise(F.lit('"}'))
     )
     obj = F.when(
         is_lit,
-        F.concat(F.lit('{"@value": "'), _json_escape(F.col("o")), lit_tail),
+        F.concat(F.lit('{"@value": "'), _escape(F.col("o")), lit_tail),
     ).otherwise(
-        F.concat(F.lit('{"@id": "'), _json_escape(expand(F.col("o"))), F.lit('"}'))
+        F.concat(F.lit('{"@id": "'), _escape(expand(F.col("o"))), F.lit('"}'))
     )
     line = F.concat(
-        F.lit('{"@id": "'), _json_escape(expand(F.col("s"))),
-        F.lit('", "'), _json_escape(expand(F.col("p"))), F.lit('": '),
+        F.lit('{"@id": "'), _escape(expand(F.col("s"))),
+        F.lit('", "'), _escape(expand(F.col("p"))), F.lit('": '),
         obj, F.lit("}"),
     )
     return triples.select(line.alias("line"))
@@ -949,19 +740,6 @@ _TTL_TOKEN = re.compile(
 _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*:")
 
 
-def _unescape_str(s: str) -> str:
-    return _UNESCAPE_RE.sub(
-        lambda m: _UNESCAPE_MAP.get(m.group(1), m.group(1)), s
-    )
-
-
-def _compact_iri(iri: str) -> str:
-    for p, full in PREFIXES.items():
-        if iri.startswith(full):
-            return p + iri[len(full):]
-    return iri
-
-
 def _ttl_tokenize(text: str) -> list[tuple[str, str]]:
     toks: list[tuple[str, str]] = []
     i = 0
@@ -1021,7 +799,7 @@ def _turtle_doc_triples(text: str) -> list[tuple[str, str, str, str, str, str]]:
         ref = tok[1:-1]
         if not _SCHEME_RE.match(ref):
             ref = base + ref
-        return _compact_iri(ref)
+        return compact_str(ref)
 
     def resolve_pname(tok: str) -> str:
         if tok.startswith("_:"):
@@ -1031,7 +809,7 @@ def _turtle_doc_triples(text: str) -> list[tuple[str, str, str, str, str, str]]:
         pref, local = tok.split(":", 1)
         pref += ":"
         if pref in prefixes:
-            return _compact_iri(prefixes[pref] + local)
+            return compact_str(prefixes[pref] + local)
         if pref in PREFIXES:
             return tok  # already in the canonical compact form
         raise ValueError(f"Turtle parse error: undeclared prefix {pref!r}")
@@ -1205,13 +983,21 @@ def parse_turtle_docs(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Arrow-batched, no driver involvement; malformed documents are
     DROPPED (quarantine policy, matching the line kernels)."""
 
+    return _parse_docs(docs, text_col, _turtle_doc_triples)
+
+
+def _parse_docs(docs: DataFrame, text_col: str, doc_triples) -> DataFrame:
+    """The kernel of the document parsers: each row's document through
+    ``doc_triples`` (text → statement tuples); a document it rejects
+    with ValueError is dropped."""
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = ["s", "p", "o", "o_kind", "o_lang", "o_datatype"]
         for pdf in batches:
             rows: list[tuple] = []
             for text in pdf[text_col].astype("string"):
                 try:
-                    rows.extend(_turtle_doc_triples(text or ""))
+                    rows.extend(doc_triples(text or ""))
                 except ValueError:
                     continue
             if rows:
@@ -1250,7 +1036,7 @@ def _jsonld_expanded_triples(
             return f"_:{bnode_scope}b{counter[0]}"
         if not isinstance(nid, str):
             raise ValueError(f"JSON-LD parse error: bad @id {nid!r}")
-        return _compact_iri(nid)
+        return compact_str(nid)
 
     def walk(obj) -> str:
         if not isinstance(obj, dict):
@@ -1264,11 +1050,11 @@ def _jsonld_expanded_triples(
                 for t in types:
                     if not isinstance(t, str):
                         raise ValueError(f"JSON-LD parse error: bad @type {t!r}")
-                    out.append((s, "rdf:type", _compact_iri(t), "iri", "", ""))
+                    out.append((s, "rdf:type", compact_str(t), "iri", "", ""))
                 continue
             if key.startswith("@"):
                 raise ValueError(f"JSON-LD parse error: unsupported keyword {key!r}")
-            p = _compact_iri(key)
+            p = compact_str(key)
             vals = val if isinstance(val, list) else [val]
             for v in vals:
                 if not isinstance(v, dict):
@@ -1292,7 +1078,7 @@ def _jsonld_expanded_triples(
         if "@value" in v:
             value = v["@value"]
             lang = v.get("@language", "") or ""
-            dtype = _compact_iri(v.get("@type", "") or "")
+            dtype = compact_str(v.get("@type", "") or "")
             if isinstance(value, bool):
                 value, dtype = ("true" if value else "false"), dtype or "xsd:boolean"
             elif isinstance(value, int):
@@ -1303,7 +1089,7 @@ def _jsonld_expanded_triples(
                 raise ValueError(f"JSON-LD parse error: bad @value {value!r}")
             return (value, "literal", lang, dtype)
         if set(v.keys()) <= {"@id"}:
-            return (_compact_iri(v["@id"]), "iri", "", "")
+            return (compact_str(v["@id"]), "iri", "", "")
         # nested node object: link to it, then recurse
         return (walk(v), "iri", "", "")
 
@@ -1351,21 +1137,8 @@ def parse_jsonld_expanded(
     rows and tangle unrelated chains.  Off by default (single-document
     and label-erased contracts keep the short ``_:bN`` labels)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["s", "p", "o", "o_kind", "o_lang", "o_datatype"]
-        for pdf in batches:
-            rows: list[tuple] = []
-            for text in pdf[text_col].astype("string"):
-                try:
-                    rows.extend(_jsonld_expanded_triples(
-                        text or "", _bnode_scope_of(text) if scope_bnodes else ""
-                    ))
-                except ValueError:
-                    continue
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return docs.mapInPandas(kernel, schema=PARSED_DDL)
+    return _parse_docs(docs, text_col, lambda text: _jsonld_expanded_triples(
+        text, _bnode_scope_of(text) if scope_bnodes else ""))
 
 
 def _bnode_scope_of(text) -> str:
@@ -1467,7 +1240,7 @@ def _jsonld_compacted_triples(
         if nid is None:
             counter[0] += 1
             return f"_:{bnode_scope}b{counter[0]}"
-        return _compact_iri(expand_iri(nid, as_vocab=False))
+        return compact_str(expand_iri(nid, as_vocab=False))
 
     def term_of(v, tdef: dict) -> tuple[str, str, str, str]:
         """One compacted value → (o, o_kind, o_lang, o_datatype);
@@ -1481,7 +1254,7 @@ def _jsonld_compacted_triples(
                 value = v["@value"]
                 lang = v.get("@language", "") or ""
                 dt = v.get("@type", "") or ""
-                dt = _compact_iri(expand_iri(dt, True)) if dt else ""
+                dt = compact_str(expand_iri(dt, True)) if dt else ""
                 if isinstance(value, bool):
                     value, dt = ("true" if value else "false"), dt or "xsd:boolean"
                 elif isinstance(value, int):
@@ -1492,7 +1265,7 @@ def _jsonld_compacted_triples(
                     raise ValueError(f"bad @value {value!r}")
                 return (value, "literal", lang, dt)
             if set(v.keys()) <= {"@id"}:
-                return (_compact_iri(expand_iri(v["@id"], False)),
+                return (compact_str(expand_iri(v["@id"], False)),
                         "iri", "", "")
             return (walk(v), "iri", "", "")
         if isinstance(v, bool):
@@ -1503,9 +1276,9 @@ def _jsonld_compacted_triples(
             return (repr(v), "literal", "", "xsd:double")
         if isinstance(v, str):
             if tdef.get("@type") == "@id":
-                return (_compact_iri(expand_iri(v, False)), "iri", "", "")
+                return (compact_str(expand_iri(v, False)), "iri", "", "")
             dt = tdef.get("@type", "") or ""
-            dt = _compact_iri(expand_iri(dt, True)) if dt else ""
+            dt = compact_str(expand_iri(dt, True)) if dt else ""
             lang = "" if dt else (tdef.get("@language", "") or "")
             return (v, "literal", lang, dt)
         raise ValueError(f"JSON-LD parse error: bad value {v!r}")
@@ -1540,13 +1313,13 @@ def _jsonld_compacted_triples(
             if key == "@type":
                 for t in (val if isinstance(val, list) else [val]):
                     out.append(
-                        (s, "rdf:type", _compact_iri(expand_iri(t, True)),
+                        (s, "rdf:type", compact_str(expand_iri(t, True)),
                          "iri", "", "")
                     )
                 continue
             if key.startswith("@"):
                 raise ValueError(f"unsupported keyword {key!r}")
-            p = _compact_iri(expand_iri(key, True))
+            p = compact_str(expand_iri(key, True))
             tdef = terms.get(key, {})
             if tdef.get("@container") == "@list" and isinstance(val, list):
                 # an @list-container term's array IS one ordered
@@ -1581,21 +1354,8 @@ def parse_jsonld_compacted(
     documents dropped (quarantine policy — same as the other document
     parsers).  ``scope_bnodes``: see parse_jsonld_expanded."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["s", "p", "o", "o_kind", "o_lang", "o_datatype"]
-        for pdf in batches:
-            rows: list[tuple] = []
-            for text in pdf[text_col].astype("string"):
-                try:
-                    rows.extend(_jsonld_compacted_triples(
-                        text or "", _bnode_scope_of(text) if scope_bnodes else ""
-                    ))
-                except ValueError:
-                    continue
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return docs.mapInPandas(kernel, schema=PARSED_DDL)
+    return _parse_docs(docs, text_col, lambda text: _jsonld_compacted_triples(
+        text, _bnode_scope_of(text) if scope_bnodes else ""))
 
 
 def to_jsonld_compacted(triples: DataFrame) -> DataFrame:
@@ -1604,32 +1364,25 @@ def to_jsonld_compacted(triples: DataFrame) -> DataFrame:
     document's @context prefix map — see jsonld_context_json()); plain
     literals serialize as bare JSON strings, tagged/typed ones as value
     objects.  Native expressions only."""
-    if "o_kind" in triples.columns:
-        is_lit = F.col("o_kind") == "literal"
-        lang = F.col("o_lang") if "o_lang" in triples.columns else F.lit("")
-        dtype = F.col("o_datatype") if "o_datatype" in triples.columns else F.lit("")
-    else:
-        is_lit = F.col("p").isin(LITERAL_PREDICATES)
-        lang = F.lit("")
-        dtype = F.lit("")
+    is_lit, lang, dtype = _term_cols(triples)
     obj = (
         F.when(is_lit & (lang == "") & (dtype == ""),
-               F.concat(F.lit('"'), _json_escape(F.col("o")), F.lit('"')))
+               F.concat(F.lit('"'), _escape(F.col("o")), F.lit('"')))
         .when(is_lit & (lang != ""),
-              F.concat(F.lit('{"@value": "'), _json_escape(F.col("o")),
+              F.concat(F.lit('{"@value": "'), _escape(F.col("o")),
                        F.lit('", "@language": "'), lang, F.lit('"}')))
         .when(is_lit,
-              F.concat(F.lit('{"@value": "'), _json_escape(F.col("o")),
-                       F.lit('", "@type": "'), _json_escape(dtype),
+              F.concat(F.lit('{"@value": "'), _escape(F.col("o")),
+                       F.lit('", "@type": "'), _escape(dtype),
                        F.lit('"}')))
         .otherwise(
-            F.concat(F.lit('{"@id": "'), _json_escape(F.col("o")),
+            F.concat(F.lit('{"@id": "'), _escape(F.col("o")),
                      F.lit('"}'))
         )
     )
     line = F.concat(
-        F.lit('{"@id": "'), _json_escape(F.col("s")),
-        F.lit('", "'), _json_escape(F.col("p")), F.lit('": '),
+        F.lit('{"@id": "'), _escape(F.col("s")),
+        F.lit('", "'), _escape(F.col("p")), F.lit('": '),
         obj, F.lit("}"),
     )
     return triples.select(line.alias("line"))

@@ -1821,8 +1821,9 @@ def store_update(
     observed during the write itself, so the touched graphs are parsed
     once.  DELETE WHERE is a conjunctive quad match (the same
     _conjunction equi-join plan the read surface uses) followed by a
-    left_anti join per affected graph; its affected-graph collect is
-    metadata-scale (bounded by the store's graph count)."""
+    left_anti join per affected graph; when every pattern names a
+    constant graph it reads only those graphs.  Its affected-graph
+    collect is metadata-scale (bounded by the store's graph count)."""
     from . import rdfio
 
     ops = parse_update(update)
@@ -1885,10 +1886,14 @@ def _exec_update_op(
         return {"op": kind, "graphs": [], "quads": 0}
 
     if kind == "delete_where":
+        named = {g4[0] for g4 in op["patterns"]}
         dirs = rdfio.store_graph_dirs(path)
-        if not dirs:
+        scope = None  # a graph variable can match in any graph
+        if not any(g.startswith("?") for g in named):
+            scope = sorted(named & dirs.keys())
+        if not dirs or scope == []:
             return {"op": kind, "graphs": [], "quads": 0}
-        quads = rdfio.read_nquads_store(spark, path)
+        quads = rdfio.read_nquads_store(spark, path, graph=scope)
         sol = _conjunction(
             quads, op["patterns"], allow_product=allow_product
         )
@@ -1904,10 +1909,11 @@ def _exec_update_op(
             )
             dels = inst if dels is None else dels.unionByName(inst)
         dels = dels.dropna(subset=["g", "s", "p", "o"]).distinct()
-        affected = sorted(r["g"] for r in dels.select("g").distinct().collect())
-        if not affected:
+        per_graph = {r["g"]: r["n"] for r in dels.groupBy("g").agg(
+            F.count("*").alias("n")).collect()}
+        if not per_graph:
             return {"op": kind, "graphs": [], "quads": 0}
-        n_dels = dels.count()
+        affected, n_dels = sorted(per_graph), sum(per_graph.values())
         existing = rdfio.read_nquads_store(spark, path, graph=affected)
         remaining = existing.join(dels, ["g", "s", "p", "o"], "left_anti")
         nonempty = rdfio._replace_graphs_unlocked(remaining, path)

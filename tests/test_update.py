@@ -539,8 +539,8 @@ def _tasks(spark, group: str, fn) -> int:
 
 
 def test_graph_scoped_ops_cost_follows_touched_graphs(spark, tmp_path):
-    """A graph-scoped read, INSERT DATA and DELETE DATA list and scan
-    only the graph they touch.  The store holds more graphs than
+    """A graph-scoped read, INSERT DATA, DELETE DATA and a constant-graph
+    DELETE WHERE list and scan only the graph they touch.  The store holds more graphs than
     Spark's 32-path parallel-discovery threshold, so listing the whole
     store would be a Spark job with a task per graph directory."""
     import os
@@ -579,3 +579,11 @@ def test_graph_scoped_ops_cost_follows_touched_graphs(spark, tmp_path):
         (f"ex:g{i}", f"ex:s{i}", "ex:p", f"v{i}")
         for i in range(n_graphs) if i != 7
     } | {("ex:g7", "ex:x", "ex:p", "new")}
+    # a DELETE WHERE whose patterns all name a constant graph
+    where = _tasks(spark, "store-delete-where", lambda: store_update(
+        spark, store, "DELETE WHERE { GRAPH ex:g7 { ?s ex:p ?o } }"))
+    assert where <= bound, where
+    assert _state(spark, store) == {
+        (f"ex:g{i}", f"ex:s{i}", "ex:p", f"v{i}")
+        for i in range(n_graphs) if i != 7
+    }
