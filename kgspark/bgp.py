@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 # Hidden carrier columns riding alongside a variable binding from a
 # full-term input: language tag, datatype IRI, and term kind
 # (iri/literal) of an OBJECT binding — consumed by FILTER(LANG(?v)),
@@ -230,8 +232,9 @@ def _identity_pairs(triples: DataFrame, consts) -> DataFrame:
         .distinct()
     )
     if consts:
-        extra = triples.sparkSession.createDataFrame(
-            [(c,) for c in sorted(set(consts))], "src string"
+        extra = local_frame(
+            triples.sparkSession, [(c,) for c in sorted(set(consts))],
+            "src string",
         )
         nodes = nodes.unionByName(extra).distinct()
     return nodes.select("src", F.col("src").alias("dst"))
@@ -502,8 +505,8 @@ def _apply_group_ops(
         # broadcast join — and a product when no variable is shared
         # (the SPARQL extension semantics) — is bounded and safe.
         spark = triples.sparkSession
-        vdf = spark.createDataFrame(
-            rows, ", ".join(f"{v} string" for v in varnames)
+        vdf = local_frame(
+            spark, rows, ", ".join(f"{v} string" for v in varnames)
         ).distinct()
         shared = [c for c in vdf.columns if c in bound.columns]
         if shared:

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import ParquetCatalog
+from .session import local_frame
 
 CHECKPOINT_TABLE = "_checkpoint"
 
@@ -67,7 +68,7 @@ def completed_buckets(
     1-col DataFrame (bucket)."""
     cp = read_checkpoints(spark, cat)
     if cp is None:
-        return spark.createDataFrame([], "bucket int")
+        return local_frame(spark, [], "bucket int")
     done = (
         latest_state(cp.filter(F.col("stage") == stage))
         .filter(F.col("status") == "complete")

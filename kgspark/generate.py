@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from . import exprs as X
 from . import grammar as G
+from .session import local_frame
 
 
 def _member_iris(mentions: DataFrame, labels: DataFrame) -> DataFrame:
@@ -142,8 +143,8 @@ def rulebase_df(spark, ttl_path: str | None = None) -> DataFrame:
         from .rulebase import load_class_rules
 
         return load_class_rules(spark, ttl_path)
-    return spark.createDataFrame(
-        G.CLASS_RULES, "tok string, class string, rule_score int"
+    return local_frame(
+        spark, G.CLASS_RULES, "tok string, class string, rule_score int"
     )
 
 
@@ -155,8 +156,9 @@ def property_rules_df(spark, ttl_path: str | None = None) -> DataFrame:
         from .rulebase import load_property_rules
 
         return load_property_rules(spark, ttl_path)
-    return spark.createDataFrame(
-        G.PROPERTY_RULES, "pred string, shape string, priority int, lang_pref int"
+    return local_frame(
+        spark, G.PROPERTY_RULES,
+        "pred string, shape string, priority int, lang_pref int",
     )
 
 
@@ -233,15 +235,17 @@ def entity_props(
 
 def license_rules_df(spark) -> DataFrame:
     """Spindle ``license.c`` rulebase analogue as a broadcast dim."""
-    return spark.createDataFrame(
-        G.LICENSE_RULES, "rights_bucket int, license string, lic_rank int"
+    return local_frame(
+        spark, G.LICENSE_RULES,
+        "rights_bucket int, license string, lic_rank int",
     )
 
 
 def media_kind_rules_df(spark) -> DataFrame:
     """Spindle ``media.c`` kind-classification rulebase analogue."""
-    return spark.createDataFrame(
-        G.MEDIA_KIND_RULES, "kind_bucket int, media_class string, med_rank int"
+    return local_frame(
+        spark, G.MEDIA_KIND_RULES,
+        "kind_bucket int, media_class string, med_rank int",
     )
 
 

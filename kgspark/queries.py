@@ -18,6 +18,7 @@ from . import extract, fixtures
 from . import generate as gen
 from . import grammar as G
 from .pipeline import run_pipeline_cached
+from .session import local_frame
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -2604,8 +2605,8 @@ def bpe_vocab_merges(spark, sf_dir, rounds: int = 3, return_vocab: bool = False)
             "          element_at(cs, i)))"
         )
         sym = sym.withColumn("cs", F.expr(merge)).localCheckpoint(eager=False)
-    merges = spark.createDataFrame(
-        out_rows, "rnd int, lhs string, rhs string, cnt bigint"
+    merges = local_frame(
+        spark, out_rows, "rnd int, lhs string, rhs string, cnt bigint"
     )
     return (merges, sym) if return_vocab else merges
 

@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from .session import local_frame
+
 PREFIXES = {
     "rdf:": "http://www.w3.org/1999/02/22-rdf-syntax-ns#",
     "rdfs:": "http://www.w3.org/2000/01/rdf-schema#",
@@ -598,9 +600,12 @@ def _read_store_text(spark, path: str, graphs=None) -> DataFrame | None:
     ``g`` is read as a string — partition type inference would turn the
     graph ``0042`` into ``42``.  The graph filter stays on the partition
     column as a guard (it shows as PartitionFilters in the scan).
-    Returns None when none of ``graphs`` is in the store."""
+    Returns None when none of ``graphs`` is in the store, or when the
+    store directory holds no graph (a DELETE emptied its last one)."""
     reader = spark.read.schema("value string, g string")
     if graphs is None:
+        if os.path.isdir(path) and not store_graph_dirs(path):
+            return None
         return reader.text(path)
     dirs = store_graph_dirs(path)
     hit = sorted({g for g in graphs if g in dirs})
@@ -616,12 +621,13 @@ def read_nquads_store(spark, path: str, graph=None) -> DataFrame:
     ``graph`` (an IRI or list of IRIs) is the graph-scoped fetch: only
     the requested graphs' directories are listed and scanned, so the
     cost follows the graphs read, not the graphs the store holds.
-    Absent graphs contribute no rows (none present → an empty frame
-    with the quad schema).  The scope must be applied here, on the raw
-    frame, not as a filter on the parsed output: Catalyst does not push
-    predicates through a Python MapInPandas operator, so a post-parse
-    filter would scan (and parse) every graph's files.  The raw frame
-    also keeps the graph predicate on its partition column
+    Absent graphs contribute no rows (none present, or a store with no
+    graph left → an empty frame with the quad schema).  The scope must
+    be applied here, on the raw frame, not as a filter on the parsed
+    output: Catalyst does not push predicates through a Python
+    MapInPandas operator, so a post-parse filter would scan (and parse)
+    every graph's files.  The raw frame also keeps the graph predicate
+    on its partition column
     (PartitionFilters in the scan — verified in tests/test_rdfio.py).
     The N-Triples kernel carries each row's partition graph through the
     Arrow batch."""
@@ -629,7 +635,7 @@ def read_nquads_store(spark, path: str, graph=None) -> DataFrame:
         graph = [graph]
     raw = _read_store_text(spark, path, graph)
     if raw is None:
-        return spark.createDataFrame([], QUADS_PARSED_DDL)
+        return local_frame(spark, [], QUADS_PARSED_DDL)
     return _parse_lines(
         raw.withColumnRenamed("value", "line"), _NT_RE, _compact, graph="column"
     )
@@ -1501,7 +1507,7 @@ def unroll_lists(triples: DataFrame, max_len: int = 64) -> DataFrame:
     if out is None:
         schema = ("s string, p string, pos int, o string, o_kind string,"
                   " o_lang string, o_datatype string")
-        return triples.sparkSession.createDataFrame([], schema)
+        return local_frame(triples.sparkSession, [], schema)
     return out
 
 

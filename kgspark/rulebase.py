@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from . import grammar as G
 from . import rdfio
+from .session import local_frame
 
 P_TOKEN = "ex:ruleToken"
 P_CLASS = "ex:ruleClass"
@@ -57,7 +58,7 @@ def rulebase_triples(spark: SparkSession) -> DataFrame:
         rows.append((s, P_SHAPE, shape, "literal", "", ""))
         rows.append((s, P_PRIORITY, str(priority), "literal", "", XSD_INT))
         rows.append((s, P_LANGPREF, str(lang_pref), "literal", "", XSD_INT))
-    return spark.createDataFrame(rows, rdfio.PARSED_DDL)
+    return local_frame(spark, rows, rdfio.PARSED_DDL)
 
 
 def write_rulebase_ttl(spark: SparkSession, path: str) -> None:

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from . import checkpoint as CP
 from . import pipeline as P
 from .catalog import ParquetCatalog, with_bucket
+from .session import local_frame
 
 
 def _global_fingerprint(df: DataFrame) -> tuple[int, int]:
@@ -89,7 +90,8 @@ def _run_global_stage(
             return cat.read(spark, stage)
     cat.write(compute(), stage)
     out = cat.read(spark, stage)
-    fps = spark.createDataFrame(
+    fps = local_frame(
+        spark,
         [(-1, input_fp, input_rows)],
         "bucket int, input_fingerprint long, row_count long",
     )

@@ -12,7 +12,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 EXCLUDED_RULES = "spark.sql.optimizer.excludedRules"
 INFER_FILTERS_FROM_GENERATE = (
@@ -72,3 +75,24 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A driver-side table (a list of row tuples, ``None`` for NULL) as
+    a DataFrame with exactly the schema of ``ddl``.
+
+    ``spark.createDataFrame(<list>, ddl)`` plans as a scan of a pickled
+    Python RDD: every job that reads the table, even a one-row one,
+    starts Python-worker tasks to unpickle it, and the planner has no
+    size for it, so it cannot choose a broadcast at plan time.  A
+    ``pyarrow.Table`` always takes the Arrow path, whatever the session
+    conf says, and plans as a ``LocalTableScan`` with a known size, zero
+    rows included (an empty pandas frame would fall back to the RDD
+    scan)."""
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

@@ -63,6 +63,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .bgp import HIDDEN_PREFIXES
+from .session import local_frame
 
 _TOKEN = re.compile(
     r"""\s*(?:
@@ -156,8 +157,10 @@ def _take_path_term(p: _P) -> str:
             return out
 
 
-def _parse_patterns(p: _P) -> list[tuple[str, str, str]]:
-    """Triple patterns up to the closing '}' (not consumed)."""
+def _parse_patterns(p: _P, term=None) -> list[tuple[str, str, str]]:
+    """Triple patterns up to the closing '}' (not consumed); ``term``
+    maps a token to the text it matches (default :func:`_term`)."""
+    term = term or _term
     pats = []
     while p.peek() not in ("}", "{", None):
         up = (p.peek() or "").upper()
@@ -170,7 +173,7 @@ def _parse_patterns(p: _P) -> list[tuple[str, str, str]]:
             pred = "rdf:type"
         o = p.take()
         p.kw(".")  # trailing dot optional before }
-        pats.append((_term(s), _term(pred), _term(o)))
+        pats.append((term(s), term(pred), term(o)))
     return pats
 
 
@@ -934,8 +937,8 @@ def _eval_group_mn(
                 branches.append(bound)
                 branch_mns.append(set(mn))
                 continue
-            vdf = spark.createDataFrame(
-                mrows, ", ".join(f"{v} string" for v in mvars)
+            vdf = local_frame(
+                spark, mrows, ", ".join(f"{v} string" for v in mvars)
             ).distinct()
             shared = [c for c in vdf.columns if c in bound.columns]
             if shared:
@@ -1447,7 +1450,7 @@ def sparql_describe(
         t = t.select("s", "p", "o").distinct()
     subjects = None
     if consts:
-        subjects = spark.createDataFrame([(c,) for c in consts], "subj string")
+        subjects = local_frame(spark, [(c,) for c in consts], "subj string")
     if vars_:
         if (p.peek() or "").upper() != "WHERE":
             raise ValueError("DESCRIBE with variables needs a WHERE group")
@@ -1533,6 +1536,15 @@ def _ground_term(tok: str) -> str:
     return compact_str(_term(tok))
 
 
+def _pattern_term(tok: str) -> str:
+    """A DELETE WHERE pattern token: a bracketed IRI is compacted like
+    the ground terms of a DATA block, since the store holds compact
+    IRIs; literals and variables keep their text."""
+    from .rdfio import compact_str
+
+    return compact_str(_term(tok)) if tok.startswith("<") else _term(tok)
+
+
 def _parse_data_triples(p: _P) -> list[tuple]:
     """Ground triples inside a DATA block → (s, p, o, o_kind, o_lang,
     o_datatype) rows.  Literal objects may carry @lang or ^^datatype
@@ -1560,7 +1572,7 @@ def _parse_data_triples(p: _P) -> list[tuple]:
             )
         rows.append((
             _ground_term(s), _ground_term(pred),
-            _unescape_str(_ground_term(o)) if o_kind == "literal"
+            _unescape_str(_term(o)) if o_kind == "literal"
             else _ground_term(o),
             o_kind, o_lang, o_dt,
         ))
@@ -1613,14 +1625,14 @@ def _parse_quad_patterns(p: _P) -> list[tuple]:
     while (p.peek() or "}") != "}":
         if (p.peek() or "").upper() == "GRAPH":
             p.take()
-            gterm = _term(p.take())
+            gterm = _pattern_term(p.take())
             p.expect("{")
-            inner = _parse_patterns(p)
+            inner = _parse_patterns(p, _pattern_term)
             p.expect("}")
             p.kw(".")
             pats += [(gterm,) + t for t in inner]
         else:
-            inner = _parse_patterns(p)
+            inner = _parse_patterns(p, _pattern_term)
             if not inner:
                 raise ValueError(
                     f"SPARQL UPDATE parse error at {p.peek()!r} — "
@@ -1850,9 +1862,9 @@ def _exec_update_op(
             ((q[0] if q[0] is not None else default_graph),) + tuple(q[1:])
             for q in op["quads"]
         ]
-        # one partition: a request's ground quads are a handful of rows,
-        # not one task per core
-        data = spark.createDataFrame(rows, rdfio.QUADS_PARSED_DDL).coalesce(1)
+        # a local relation: no Python-worker stage, one partition for a
+        # one-quad request, and a size the planner sees for the broadcast
+        data = local_frame(spark, rows, rdfio.QUADS_PARSED_DDL)
         affected = sorted({r[0] for r in rows})
         dirs = rdfio.store_graph_dirs(path)
         have = [g for g in affected if g in dirs]
@@ -1866,11 +1878,10 @@ def _exec_update_op(
         # delete_data: only graphs that exist can lose rows
         if not have:
             return {"op": kind, "graphs": [], "quads": 0}
+        # equal RDF terms only: the object's kind, language and datatype
+        # are part of the term (ex:b is not "ex:b", "chat"@en not @fr)
         existing = rdfio.read_nquads_store(spark, path, graph=have)
-        remaining = existing.join(
-            F.broadcast(data.select("g", "s", "p", "o")),
-            ["g", "s", "p", "o"], "left_anti",
-        )
+        remaining = existing.join(F.broadcast(data), data.columns, "left_anti")
         nonempty = rdfio._replace_graphs_unlocked(remaining, path)
         rdfio._remove_graph_dirs(path, [g for g in have if g not in nonempty])
         return {"op": kind, "graphs": have, "quads": len(rows)}
@@ -2174,9 +2185,7 @@ def _exec_modify(
             # object-term resolution (below) sees the dataset's terms
             quads = ds
         else:
-            triples = spark.createDataFrame(
-                [], "s string, p string, o string"
-            )
+            triples = local_frame(spark, [], "s string, p string, o string")
             quads = None
     else:
         src_graphs = [with_g] if with_g is not None else None
@@ -2186,9 +2195,7 @@ def _exec_modify(
             if dirs and have_src else None
         )
         if quads is None:
-            triples = spark.createDataFrame(
-                [], "s string, p string, o string"
-            )
+            triples = local_frame(spark, [], "s string, p string, o string")
         else:
             triples = quads.select("s", "p", "o").distinct()
     sol = _drop_hidden(_eval_group(triples, op["where"], allow_product))

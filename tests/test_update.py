@@ -587,3 +587,84 @@ def test_graph_scoped_ops_cost_follows_touched_graphs(spark, tmp_path):
         (f"ex:g{i}", f"ex:s{i}", "ex:p", f"v{i}")
         for i in range(n_graphs) if i != 7
     }
+
+
+def _full_state(spark, store):
+    return {tuple(r) for r in rdfio.read_nquads_store(spark, store).collect()}
+
+
+def test_delete_data_matches_whole_rdf_terms(spark, tmp_path):
+    """DELETE DATA removes only quads whose terms are equal: an IRI and
+    a literal with the same text, or one literal in two languages, are
+    different terms."""
+    store = str(tmp_path / "store")
+    store_update(spark, store, '''
+        INSERT DATA { GRAPH ex:g1 {
+          ex:a ex:p ex:b . ex:a ex:p "ex:b" .
+          ex:a rdfs:label "chat"@en . ex:a rdfs:label "chat"@fr }
+          GRAPH ex:g2 { ex:z ex:p ex:z } }''')
+    store_update(spark, store, '''
+        DELETE DATA { GRAPH ex:g1 {
+          ex:a ex:p "ex:b" . ex:a rdfs:label "chat"@en } }''')
+    assert _full_state(spark, store) == {
+        ("ex:g1", "ex:a", "ex:p", "ex:b", "iri", "", ""),
+        ("ex:g1", "ex:a", "rdfs:label", "chat", "literal", "fr", ""),
+        ("ex:g2", "ex:z", "ex:p", "ex:z", "iri", "", ""),
+    }
+
+
+def test_data_literal_keeps_iri_text(spark, tmp_path):
+    """A literal that spells a full IRI is stored as written: only IRIs
+    are compacted to prefixed names, and DELETE DATA of the same literal
+    finds it."""
+    store = str(tmp_path / "store")
+    lit = "http://example.org/kg#x"
+    store_update(spark, store, f'INSERT DATA {{ GRAPH ex:g1 {{ ex:a ex:p "{lit}" }} }}')
+    assert _full_state(spark, store) == {
+        ("ex:g1", "ex:a", "ex:p", lit, "literal", "", ""),
+    }
+    store_update(spark, store, f'''
+        INSERT DATA {{ GRAPH ex:g1 {{ ex:a ex:q "keep" }} }} ;
+        DELETE DATA {{ GRAPH ex:g1 {{ ex:a ex:p "{lit}" }} }}''')
+    assert _state(spark, store) == {("ex:g1", "ex:a", "ex:q", "keep")}
+
+
+def test_delete_where_compacts_bracketed_iris(spark, tmp_path):
+    """DELETE WHERE matches a full bracketed IRI against the compact
+    form the store holds, in graph and subject position; a literal
+    spelling an IRI is not compacted."""
+    store = str(tmp_path / "store")
+    store_update(spark, store, '''
+        INSERT DATA {
+          GRAPH <http://example.org/kg#g1> { <http://example.org/kg#a> ex:p "v" }
+          GRAPH ex:g2 { ex:a ex:p "w" . ex:b ex:p "x" } }''')
+    assert _state(spark, store) == {
+        ("ex:g1", "ex:a", "ex:p", "v"), ("ex:g2", "ex:a", "ex:p", "w"),
+        ("ex:g2", "ex:b", "ex:p", "x"),
+    }
+    r = store_update(spark, store,
+                     "DELETE WHERE { GRAPH <http://example.org/kg#g1> { ?s ?p ?o } }")
+    assert r["ops"][0]["quads"] == 1
+    assert sorted(rdfio.store_graph_dirs(store)) == ["ex:g2"]
+    r = store_update(spark, store,
+                     "DELETE WHERE { GRAPH ?g { <http://example.org/kg#a> ?p ?o } }")
+    assert r["ops"][0]["quads"] == 1
+    assert _state(spark, store) == {("ex:g2", "ex:b", "ex:p", "x")}
+    (op,) = parse_update(
+        'DELETE WHERE { GRAPH ?g { ?s ?p "http://example.org/kg#a" } }')
+    assert op["patterns"] == [("?g", "?s", "?p", "http://example.org/kg#a")]
+
+
+def test_store_emptied_by_delete_reads_empty(spark, tmp_path):
+    """When a DELETE empties the last graph, the store directory is left
+    with no graph; a full read gives the empty quad frame, not a
+    text-source schema error."""
+    store = str(tmp_path / "store")
+    store_update(spark, store, 'INSERT DATA { GRAPH ex:g1 { ex:a ex:p "v" } }')
+    store_update(spark, store, 'DELETE DATA { GRAPH ex:g1 { ex:a ex:p "v" } }')
+    assert rdfio.store_graph_dirs(store) == {}
+    df = rdfio.read_nquads_store(spark, store)
+    assert df.collect() == []
+    assert df.columns == ["g", "s", "p", "o", "o_kind", "o_lang", "o_datatype"]
+    r = store_update(spark, store, "DELETE WHERE { ?s ?p ?o }")
+    assert r["ops"][0]["quads"] == 0
