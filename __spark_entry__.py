@@ -51,11 +51,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_entity_props": Q.kg_entity_props,       # O24 property rulebase (r3)
         "kg_props_triples": Q.kg_props_triples,     # D7→D3 props as triples (r3)
         "kg_entity_cooccurrence": Q.kg_entity_cooccurrence,  # entity graph edges (r3)
-        "entity_pagerank": Q.entity_pagerank,       # int-exact centrality (r5)
-        "entity_triangle_counts": Q.entity_triangle_counts,  # clustering signal (r5)
-        "entity_kcore": Q.entity_kcore,                      # 3-core peeling fixpoint (r6b)
-        "entity_communities": Q.entity_communities,          # sync LPA communities (r6b)
-        "entity_hops": Q.entity_hops,                        # multi-source BFS, 4 rounds (r6)
         "kg_bgp_match": Q.kg_bgp_match,             # SPARQL BGP over triples (r3)
         "kg_bgp_optional": Q.kg_bgp_optional,       # SPARQL OPTIONAL (r3)
         "kg_bgp_filter": Q.kg_bgp_filter,           # SPARQL FILTER+SELECT DISTINCT (r4)
@@ -146,17 +141,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_chunk": Q.doc_chunk,                           # RAG token-window chunking (r6)
         "dedup_ngram_coverage": Q.dedup_ngram_coverage,     # dup-shingle fraction (r6)
         "rdf_turtle_bnode_roundtrip": Q.rdf_turtle_bnode_roundtrip,  # [ ] / ( ) forms (r6)
-        "entity_link_prediction": Q.entity_link_prediction,  # common-neighbor cn>=2 (r6)
-        "entity_link_adamic": Q.entity_link_adamic,  # bitlen AA + e6 Jaccard (r6c)
-        "kg_negative_edges": Q.kg_negative_edges,    # deterministic corruption sampling (r6c)
-        "entity_neighbor_agg": Q.entity_neighbor_agg,  # one message-passing round (r6c)
-        "entity_clustering_coef": Q.entity_clustering_coef,  # e6 local clustering (r6c)
-        "entity_degree_hist": Q.entity_degree_hist,    # log2 degree distribution (r6c)
-        "entity_ppr": Q.entity_ppr,                    # personalized PageRank (r6c)
         "term_pmi": Q.term_pmi,                        # log-domain PMI collocations (r6c)
         "embedding_srp_buckets": Q.embedding_srp_buckets,  # SRP-LSH histogram (r6c)
         "dedup_incremental_pairs": Q.dedup_incremental_pairs,  # arriving-batch LSH (r6c)
-        "entity_top_neighbors": Q.entity_top_neighbors,  # related-entities top-3 (r6c)
         "dedup_minhash_calibration": Q.dedup_minhash_calibration,  # estimator error (r6c)
         "doc_surprisal_heldout": Q.doc_surprisal_heldout,  # cross-split LM filter (r6c)
         "kg_sparql_values": Q.kg_sparql_values,        # VALUES + MIN/MAX aggs (r6c)
@@ -167,9 +154,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_kmeans_train": Q.embedding_kmeans_train,  # 2 Lloyd rounds unrolled (r6c)
         "doc_type_token_ratio": Q.doc_type_token_ratio,  # lexical diversity e6 (r6c)
         "kg_class_cooccurrence": Q.kg_class_cooccurrence,  # schema-level affinity (r6c)
-        "entity_degree_moments": Q.entity_degree_moments,  # assortativity moments (r6c)
         "vocab_growth": Q.vocab_growth,                # Heaps-law growth curve (r6c)
-        "entity_neighbor_sample": Q.entity_neighbor_sample,  # GraphSAGE fanout sample (r6c)
         "dedup_cluster_size_hist": Q.dedup_cluster_size_hist,  # cluster-size readout (r6c)
         "corpus_stats_by_source": Q.corpus_stats_by_source,  # per-source corpus card (r6c)
         "embedding_quantize": Q.embedding_quantize,          # int8 SQ + recon error (r6)
@@ -261,11 +246,6 @@ def oracle_sql() -> dict[str, str]:
         "kg_sparql_construct_where": OS.SPARQL_CONSTRUCT_WHERE_SQL,
         "kg_sparql_load": OS.KG_SPARQL_LOAD_SQL,
         "contamination_check": OS.CONTAMINATION_SQL,
-        "entity_pagerank": OS.ENTITY_PAGERANK_SQL,
-        "entity_triangle_counts": OS.ENTITY_TRIANGLES_SQL,
-        "entity_kcore": OS.ENTITY_KCORE_SQL,
-        "entity_communities": OS.ENTITY_COMMUNITIES_SQL,
-        "entity_hops": OS.ENTITY_HOPS_SQL,
         "training_export_clean": OS.TRAINING_EXPORT_CLEAN_SQL,
         "doc_quota_sample": OS.DOC_QUOTA_SAMPLE_SQL,
         "doc_resample": OS.DOC_RESAMPLE_SQL,
@@ -273,17 +253,9 @@ def oracle_sql() -> dict[str, str]:
         "doc_chunk": OS.DOC_CHUNK_SQL,
         "dedup_ngram_coverage": OS.DEDUP_NGRAM_COVERAGE_SQL,
         "rdf_turtle_bnode_roundtrip": OS.RDF_TURTLE_BNODE_SQL,
-        "entity_link_prediction": OS.ENTITY_LINK_PRED_SQL,
-        "entity_link_adamic": OS.ENTITY_LINK_ADAMIC_SQL,
-        "kg_negative_edges": OS.KG_NEGATIVE_EDGES_SQL,
-        "entity_neighbor_agg": OS.ENTITY_NEIGHBOR_AGG_SQL,
-        "entity_clustering_coef": OS.ENTITY_CLUSTERING_SQL,
-        "entity_degree_hist": OS.ENTITY_DEGREE_HIST_SQL,
-        "entity_ppr": OS.ENTITY_PPR_SQL,
         "term_pmi": OS.TERM_PMI_SQL,
         "embedding_srp_buckets": OS.EMBEDDING_SRP_SQL,
         "dedup_incremental_pairs": OS.DEDUP_INCREMENTAL_SQL,
-        "entity_top_neighbors": OS.ENTITY_TOP_NEIGHBORS_SQL,
         "dedup_minhash_calibration": OS.DEDUP_MINHASH_CALIB_SQL,
         "doc_surprisal_heldout": OS.DOC_SURPRISAL_HELDOUT_SQL,
         "kg_sparql_values": OS.SPARQL_VALUES_SQL,
@@ -294,9 +266,7 @@ def oracle_sql() -> dict[str, str]:
         "embedding_kmeans_train": OS.EMBEDDING_KMEANS_TRAIN_SQL,
         "doc_type_token_ratio": OS.DOC_TTR_SQL,
         "kg_class_cooccurrence": OS.KG_CLASS_COOCC_SQL,
-        "entity_degree_moments": OS.ENTITY_DEGREE_MOMENTS_SQL,
         "vocab_growth": OS.VOCAB_GROWTH_SQL,
-        "entity_neighbor_sample": OS.ENTITY_NEIGHBOR_SAMPLE_SQL,
         "dedup_cluster_size_hist": OS.DEDUP_CLUSTER_HIST_SQL,
         "corpus_stats_by_source": OS.CORPUS_STATS_SQL,
         "embedding_quantize": OS.EMBEDDING_QUANTIZE_SQL,

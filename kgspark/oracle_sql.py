@@ -1499,116 +1499,6 @@ LEFT JOIN sh USING (doc_id)
 """
 
 
-# r5: integer-exact PageRank over the co-occurrence graph — the same
-# five iterations unrolled as CTEs ('//' = DuckDB integer division;
-# BIGINT sums are order-independent, so both engines agree bit-exactly).
-_PR_ITER = """,
-pr{k} AS (
-  SELECT n.entity_id,
-         CAST(150000 + (17 * COALESCE(inc.s, 0)) // 20 AS BIGINT) AS score
-  FROM pr_nodes n LEFT JOIN (
-    SELECT e.dst AS entity_id, SUM(p.score // d.d) AS s
-    FROM pr_edges e
-    JOIN pr{km1} p ON p.entity_id = e.src
-    JOIN pr_deg d ON d.src = e.src
-    GROUP BY e.dst
-  ) inc USING (entity_id)
-)"""
-
-ENTITY_PAGERANK_SQL = (
-    f"""{_KG_CTES},
-doc_ents AS (
-  SELECT DISTINCT mm.doc_id, e.entity_id
-  FROM mm JOIN eids e ON e.label = mm.root
-),
-coocc AS (
-  SELECT a.entity_id AS entity_a, b.entity_id AS entity_b
-  FROM doc_ents a JOIN doc_ents b
-    ON b.doc_id = a.doc_id AND a.entity_id < b.entity_id
-  GROUP BY 1, 2
-),
-pr_edges AS MATERIALIZED (
-  SELECT entity_a AS src, entity_b AS dst FROM coocc
-  UNION ALL
-  SELECT entity_b AS src, entity_a AS dst FROM coocc
-),
-pr_deg AS MATERIALIZED (
-  SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM pr_edges GROUP BY src
-),
-pr_nodes AS MATERIALIZED (SELECT DISTINCT entity_id FROM eids),
-pr0 AS (SELECT entity_id, CAST(1000000 AS BIGINT) AS score FROM pr_nodes)"""
-    + "".join(_PR_ITER.format(k=k, km1=k - 1) for k in range(1, 6))
-    + """
-SELECT entity_id, score FROM pr5
-"""
-)
-
-
-# r5: per-entity triangle counts over the ordered co-occurrence edges.
-ENTITY_TRIANGLES_SQL = f"""
-{_KG_CTES},
-doc_ents AS (
-  SELECT DISTINCT mm.doc_id, e.entity_id
-  FROM mm JOIN eids e ON e.label = mm.root
-),
-coocc AS MATERIALIZED (
-  SELECT a.entity_id AS entity_a, b.entity_id AS entity_b
-  FROM doc_ents a JOIN doc_ents b
-    ON b.doc_id = a.doc_id AND a.entity_id < b.entity_id
-  GROUP BY 1, 2
-),
-tri AS MATERIALIZED (
-  SELECT ab.entity_a AS a, ab.entity_b AS b, bc.entity_b AS c
-  FROM coocc ab
-  JOIN coocc bc ON bc.entity_a = ab.entity_b
-  JOIN coocc ac ON ac.entity_a = ab.entity_a AND ac.entity_b = bc.entity_b
-)
-SELECT entity_id, CAST(COUNT(*) AS BIGINT) AS n_triangles
-FROM (
-  SELECT a AS entity_id FROM tri
-  UNION ALL SELECT b FROM tri
-  UNION ALL SELECT c FROM tri
-)
-GROUP BY entity_id
-"""
-
-
-# r6: common-neighbor link prediction — wedges over the bidirectional
-# edge frame, existing edges anti-joined away, cn >= 2 threshold.
-ENTITY_LINK_PRED_SQL = f"""
-{_KG_CTES},
-doc_ents AS (
-  SELECT DISTINCT mm.doc_id, e.entity_id
-  FROM mm JOIN eids e ON e.label = mm.root
-),
-coocc AS MATERIALIZED (
-  SELECT a.entity_id AS entity_a, b.entity_id AS entity_b
-  FROM doc_ents a JOIN doc_ents b
-    ON b.doc_id = a.doc_id AND a.entity_id < b.entity_id
-  GROUP BY 1, 2
-),
-bi_all AS MATERIALIZED (
-  SELECT entity_a AS src, entity_b AS dst FROM coocc
-  UNION ALL
-  SELECT entity_b AS src, entity_a AS dst FROM coocc
-),
-bi AS MATERIALIZED (
-  SELECT src, dst FROM bi_all
-  WHERE src IN (SELECT src FROM bi_all GROUP BY src
-                HAVING count(*) <= 64)
-),
-lp_cand AS (
-  SELECT w1.dst AS a, w2.dst AS b, CAST(count(*) AS BIGINT) AS cn
-  FROM bi w1 JOIN bi w2 ON w2.src = w1.src AND w1.dst < w2.dst
-  GROUP BY 1, 2 HAVING count(*) >= 2
-)
-SELECT c.a AS entity_a, c.b AS entity_b, c.cn
-FROM lp_cand c LEFT JOIN coocc e
-  ON e.entity_a = c.a AND e.entity_b = c.b
-WHERE e.entity_a IS NULL
-"""
-
-
 # r6: int8 scalar quantization on the integer e3 grid — identical
 # arithmetic to the Spark builder; all-positive DIV operands keep
 # truncating vs floor division equivalent.
@@ -1643,72 +1533,6 @@ SELECT vec_id,
               i -> qc[i] * i)) AS BIGINT) AS q_checksum
 FROM q
 """
-
-
-# r6b: graph analytics over the same co-occurrence edge frame the
-# pagerank/triangles oracles build.
-_GRAPH_EDGE_CTES = f"""{_KG_CTES},
-doc_ents AS (
-  SELECT DISTINCT mm.doc_id, e.entity_id
-  FROM mm JOIN eids e ON e.label = mm.root
-),
-coocc AS (
-  SELECT a.entity_id AS entity_a, b.entity_id AS entity_b
-  FROM doc_ents a JOIN doc_ents b
-    ON b.doc_id = a.doc_id AND a.entity_id < b.entity_id
-  GROUP BY 1, 2
-),
-pr_edges AS MATERIALIZED (
-  SELECT entity_a AS src, entity_b AS dst FROM coocc
-  UNION ALL
-  SELECT entity_b AS src, entity_a AS dst FROM coocc
-),
-pr_nodes AS MATERIALIZED (SELECT DISTINCT entity_id FROM eids)"""
-
-_KC_ITER = """,
-kc{k} AS MATERIALIZED (
-  SELECT e.src AS entity_id FROM pr_edges e
-  JOIN kc{km1} a ON a.entity_id = e.src
-  JOIN kc{km1} b ON b.entity_id = e.dst
-  GROUP BY e.src HAVING count(*) >= 3
-)"""
-
-# 8 unrolled peeling rounds ≥ the fixture's convergence depth (5 at
-# sf0.01); the Spark side peels to the fixpoint, which coincides.
-ENTITY_KCORE_SQL = (
-    _GRAPH_EDGE_CTES
-    + ",\nkc0 AS MATERIALIZED (SELECT entity_id FROM pr_nodes)"
-    + "".join(_KC_ITER.format(k=k, km1=k - 1) for k in range(1, 9))
-    + """
-SELECT entity_id FROM kc8 ORDER BY entity_id
-"""
-)
-
-_LP_ITER = """,
-lp{k} AS MATERIALIZED (
-  SELECT p.entity_id, coalesce(w.label, p.label) AS label
-  FROM lp{km1} p
-  LEFT JOIN (
-    SELECT entity_id, label FROM (
-      SELECT e.src AS entity_id, l.label,
-             row_number() OVER (PARTITION BY e.src
-                                ORDER BY count(*) DESC, l.label) AS rn
-      FROM pr_edges e JOIN lp{km1} l ON l.entity_id = e.dst
-      GROUP BY e.src, l.label
-    ) WHERE rn = 1
-  ) w ON w.entity_id = p.entity_id
-)"""
-
-# 4 fixed synchronous rounds — part of the operator definition.
-ENTITY_COMMUNITIES_SQL = (
-    _GRAPH_EDGE_CTES
-    + ",\nlp0 AS MATERIALIZED "
-    + "(SELECT entity_id, entity_id AS label FROM pr_nodes)"
-    + "".join(_LP_ITER.format(k=k, km1=k - 1) for k in range(1, 5))
-    + """
-SELECT entity_id, label FROM lp4 ORDER BY entity_id
-"""
-)
 
 
 # r5: training_export with the contamination gate spliced into the
@@ -2130,38 +1954,6 @@ SELECT g, s, o FROM quads WHERE g = 'ex:reg3'
 """
 
 
-# r6: multi-source BFS hop distance — 4 unrolled rounds (same fixed
-# horizon as cc.bfs_hops); seeds = entity_id % 17 == 0.
-_BFS_ITER = """,
-bf{k} AS MATERIALIZED (
-  SELECT e.dst AS entity_id, {k} AS dist
-  FROM pr_edges e JOIN bf{km1} f ON f.entity_id = e.src
-  WHERE e.dst NOT IN (SELECT entity_id FROM st{km1})
-  GROUP BY e.dst
-),
-st{k} AS MATERIALIZED (
-  SELECT entity_id FROM st{km1} UNION ALL SELECT entity_id FROM bf{k}
-)"""
-
-ENTITY_HOPS_SQL = (
-    _GRAPH_EDGE_CTES
-    + """,
-bf0 AS MATERIALIZED (
-  SELECT entity_id, 0 AS dist FROM pr_nodes
-  WHERE substring(entity_id, 13, 1) IN ('0', '1')
-),
-st0 AS (SELECT entity_id FROM bf0)"""
-    + "".join(_BFS_ITER.format(k=k, km1=k - 1) for k in range(1, 5))
-    + """
-SELECT entity_id, CAST(dist AS INT) AS dist FROM (
-  SELECT * FROM bf0 UNION ALL SELECT * FROM bf1 UNION ALL
-  SELECT * FROM bf2 UNION ALL SELECT * FROM bf3 UNION ALL
-  SELECT * FROM bf4
-)
-"""
-)
-
-
 # r6: deterministic source-weighted resampling — one row per emitted
 # copy; weights {0.5, 1, 1.5, 2}× by srcnum % 4, fractional copy via
 # the grammar affine hash (index 200).
@@ -2467,50 +2259,6 @@ FROM attrs ORDER BY e
 """
 
 
-# r6c: Adamic-Adar + Jaccard link prediction — identical wedge
-# enumeration to ENTITY_LINK_PRED_SQL with the bitlen-quantized
-# inverse-log hinge weight (1e6 DIV bitlen(deg)) and an e6 Jaccard on
-# full endpoint degrees; sums CAST to BIGINT (HUGEINT trap).
-ENTITY_LINK_ADAMIC_SQL = f"""
-{_KG_CTES},
-doc_ents AS (
-  SELECT DISTINCT mm.doc_id, e.entity_id
-  FROM mm JOIN eids e ON e.label = mm.root
-),
-coocc AS MATERIALIZED (
-  SELECT a.entity_id AS entity_a, b.entity_id AS entity_b
-  FROM doc_ents a JOIN doc_ents b
-    ON b.doc_id = a.doc_id AND a.entity_id < b.entity_id
-  GROUP BY 1, 2
-),
-bi_all AS MATERIALIZED (
-  SELECT entity_a AS src, entity_b AS dst FROM coocc
-  UNION ALL
-  SELECT entity_b AS src, entity_a AS dst FROM coocc
-),
-deg AS MATERIALIZED (SELECT src, count(*) AS deg FROM bi_all GROUP BY src),
-bi2 AS MATERIALIZED (
-  SELECT b.src, b.dst,
-         CAST(1000000 // length(bin(d.deg)) AS BIGINT) AS w
-  FROM bi_all b JOIN deg d USING (src)
-  WHERE d.deg <= 64
-),
-aa_cand AS (
-  SELECT w1.dst AS a, w2.dst AS b, CAST(count(*) AS BIGINT) AS cn,
-         CAST(sum(w1.w) AS BIGINT) AS aa
-  FROM bi2 w1 JOIN bi2 w2 ON w2.src = w1.src AND w1.dst < w2.dst
-  GROUP BY 1, 2 HAVING count(*) >= 2
-)
-SELECT c.a AS entity_a, c.b AS entity_b, c.cn, c.aa,
-       CAST((1000000 * c.cn) // (da.deg + db.deg - c.cn) AS BIGINT) AS jac_e6
-FROM aa_cand c
-JOIN deg da ON da.src = c.a
-JOIN deg db ON db.src = c.b
-LEFT JOIN coocc e ON e.entity_a = c.a AND e.entity_b = c.b
-WHERE e.entity_a IS NULL
-"""
-
-
 # r6c: containment near-dup — C = |∩| / min(|A|,|B|) on the distinct
 # shingle sets, integer e6 (1e6·|∩| // min len; shingle sets are never
 # empty — the index sequence is tail-padded to ≥ 1).
@@ -2621,54 +2369,6 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, dot_e6 FROM (
 """
 
 
-# r6c: deterministic negative-edge sampling — identical affine-hash
-# corruption arithmetic to the Spark builder (rolling char hash mod
-# FP_MOD, per-slot affine mod HASH_P mod |entities|, id-ordered rank
-# lookup, degenerate + accidental-positive drops).
-KG_NEGATIVE_EDGES_SQL = f"""
-{_KG_CTES},
-doc_ents AS (
-  SELECT DISTINCT mm.doc_id, e.entity_id
-  FROM mm JOIN eids e ON e.label = mm.root
-),
-coocc AS MATERIALIZED (
-  SELECT a.entity_id AS entity_a, b.entity_id AS entity_b
-  FROM doc_ents a JOIN doc_ents b
-    ON b.doc_id = a.doc_id AND a.entity_id < b.entity_id
-  GROUP BY 1, 2
-),
-eidx AS MATERIALIZED (
-  SELECT entity_id,
-         row_number() OVER (ORDER BY entity_id) - 1 AS rank
-  FROM (SELECT DISTINCT entity_id FROM entities)
-),
-nn AS (SELECT count(*) AS n FROM eidx),
-hc AS (
-  SELECT entity_a, entity_b,
-    list_reduce(list_prepend(CAST(0 AS BIGINT),
-      list_transform(string_split(entity_a || '|' || entity_b, ''),
-                     c -> CAST(ascii(c) AS BIGINT))),
-      (a, b) -> (a * 31 + b) % 1000000007) AS hcode
-  FROM coocc
-),
-negcand AS (
-  SELECT hc.entity_a, hc.entity_b, s.i AS slot, e.entity_id AS neg_entity
-  FROM hc
-  CROSS JOIN nn
-  CROSS JOIN (SELECT unnest(generate_series(1, 2)) AS i) s
-  JOIN eidx e
-    ON e.rank = CASE s.i WHEN 1 THEN (749446868 * hcode + 12191404) % 2147483647 % nn.n WHEN 2 THEN (1763351096 * hcode + 12231907) % 2147483647 % nn.n END
-  WHERE e.entity_id != hc.entity_a AND e.entity_id != hc.entity_b
-)
-SELECT c.entity_a, c.entity_b, CAST(c.slot AS INT) AS slot, c.neg_entity
-FROM negcand c
-LEFT JOIN coocc p
-  ON p.entity_a = least(c.entity_a, c.neg_entity)
- AND p.entity_b = greatest(c.entity_a, c.neg_entity)
-WHERE p.entity_a IS NULL
-"""
-
-
 # r6c: quality-aware keeper — the min-id clusters re-decided by
 # (quality_e6 DESC, doc_id ASC) within each cluster.
 DEDUP_KEEP_BEST_SQL = f"""
@@ -2702,37 +2402,6 @@ LANGID_CONFUSION_SQL = f"""
 WITH {_LANGID_CTES}
 SELECT lang, predicted_lang, CAST(count(*) AS BIGINT) AS n_docs
 FROM lpred GROUP BY 1, 2
-"""
-
-
-# r6c: one message-passing round — neighbor degree/score aggregation
-# over the bidirectional co-occurrence edges.
-ENTITY_NEIGHBOR_AGG_SQL = f"""
-{_KG_CTES},
-doc_ents AS (
-  SELECT DISTINCT mm.doc_id, e.entity_id
-  FROM mm JOIN eids e ON e.label = mm.root
-),
-coocc AS MATERIALIZED (
-  SELECT a.entity_id AS entity_a, b.entity_id AS entity_b
-  FROM doc_ents a JOIN doc_ents b
-    ON b.doc_id = a.doc_id AND a.entity_id < b.entity_id
-  GROUP BY 1, 2
-),
-bi AS MATERIALIZED (
-  SELECT entity_a AS src, entity_b AS dst FROM coocc
-  UNION ALL
-  SELECT entity_b AS src, entity_a AS dst FROM coocc
-),
-deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM bi GROUP BY src)
-SELECT b.src AS entity_id,
-       CAST(count(*) AS BIGINT) AS n_neighbors,
-       CAST(sum(d.deg) AS BIGINT) AS nbr_deg_sum,
-       CAST(sum(at.score) AS BIGINT) AS nbr_score_sum
-FROM bi b
-JOIN deg d ON d.src = b.dst
-JOIN attrs at ON at.entity_id = b.dst
-GROUP BY b.src
 """
 
 
@@ -2790,113 +2459,6 @@ SELECT token, CAST(count(*) AS BIGINT) AS n_entities,
 FROM hashed GROUP BY token
 """
 KG_LABEL_INDEX_SQL = KG_LABEL_INDEX_SQL.replace("{_KG_CTES}", _KG_CTES)
-
-
-# r6c: shared coocc CTE tail for the graph-analytics additions.
-_COOCC_TAIL = """,
-doc_ents AS (
-  SELECT DISTINCT mm.doc_id, e.entity_id
-  FROM mm JOIN eids e ON e.label = mm.root
-),
-coocc AS MATERIALIZED (
-  SELECT a.entity_id AS entity_a, b.entity_id AS entity_b
-  FROM doc_ents a JOIN doc_ents b
-    ON b.doc_id = a.doc_id AND a.entity_id < b.entity_id
-  GROUP BY 1, 2
-)"""
-
-# r6c: local clustering coefficient — triangles over ordered edges +
-# degree over the bidirectional frame, coefficient on the e6 integer
-# grid ('//' = integer division; deg < 2 pins 0).
-ENTITY_CLUSTERING_SQL = f"""
-{_KG_CTES}{_COOCC_TAIL},
-deg AS (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS degree FROM (
-    SELECT entity_a AS node FROM coocc
-    UNION ALL SELECT entity_b FROM coocc
-  ) GROUP BY node
-),
-tri AS MATERIALIZED (
-  SELECT ab.entity_a AS a, ab.entity_b AS b, bc.entity_b AS c
-  FROM coocc ab
-  JOIN coocc bc ON bc.entity_a = ab.entity_b
-  JOIN coocc ac ON ac.entity_a = ab.entity_a AND ac.entity_b = bc.entity_b
-),
-tc AS (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS n_triangles FROM (
-    SELECT a AS node FROM tri
-    UNION ALL SELECT b FROM tri
-    UNION ALL SELECT c FROM tri
-  ) GROUP BY node
-)
-SELECT d.node AS entity_id, d.degree,
-       COALESCE(tc.n_triangles, 0) AS n_triangles,
-       CAST(CASE WHEN d.degree >= 2
-                 THEN (2000000 * COALESCE(tc.n_triangles, 0))
-                      // (d.degree * (d.degree - 1))
-                 ELSE 0 END AS BIGINT) AS clustering_e6
-FROM deg d LEFT JOIN tc USING (node)
-"""
-
-# r6c: log2-bucketed degree distribution (bucket = bitlen(degree)).
-ENTITY_DEGREE_HIST_SQL = f"""
-{_KG_CTES}{_COOCC_TAIL},
-deg AS (
-  SELECT node, CAST(COUNT(*) AS BIGINT) AS degree FROM (
-    SELECT entity_a AS node FROM coocc
-    UNION ALL SELECT entity_b FROM coocc
-  ) GROUP BY node
-)
-SELECT CAST(length(bin(degree)) AS INT) AS bucket,
-       CAST(COUNT(*) AS BIGINT) AS n_entities,
-       MIN(degree) AS min_degree,
-       MAX(degree) AS max_degree
-FROM deg GROUP BY bucket
-"""
-
-# r6c: personalized PageRank — seed indicator from the minted digest's
-# first hex char (engine-agnostic string rule), 4 unrolled iterations,
-# teleport mass returning only to seeds.
-_PPR_ITER = """,
-ppr{k} AS (
-  SELECT n.entity_id, n.is_seed,
-         CAST(CASE WHEN n.is_seed THEN 150000 ELSE 0 END
-              + (17 * COALESCE(inc.s, 0)) // 20 AS BIGINT) AS score
-  FROM ppr_nodes n LEFT JOIN (
-    SELECT e.dst AS entity_id, SUM(p.score // d.d) AS s
-    FROM ppr_edges e
-    JOIN ppr{km1} p ON p.entity_id = e.src
-    JOIN ppr_deg d ON d.src = e.src
-    GROUP BY e.dst
-  ) inc USING (entity_id)
-)"""
-
-ENTITY_PPR_SQL = (
-    f"""{_KG_CTES}{_COOCC_TAIL},
-ppr_edges AS MATERIALIZED (
-  SELECT entity_a AS src, entity_b AS dst FROM coocc
-  UNION ALL
-  SELECT entity_b AS src, entity_a AS dst FROM coocc
-),
-ppr_deg AS MATERIALIZED (
-  SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM ppr_edges GROUP BY src
-),
-ppr_nodes AS MATERIALIZED (
-  SELECT DISTINCT entity_id,
-         ascii(substr(entity_id, {len(G.ENTITY_IRI_PREFIX) + 1}, 1)) % 4 = 0
-           AS is_seed
-  FROM eids
-),
-ppr0 AS (
-  SELECT entity_id, is_seed,
-         CAST(CASE WHEN is_seed THEN 1000000 ELSE 0 END AS BIGINT) AS score
-  FROM ppr_nodes
-)"""
-    + "".join(_PPR_ITER.format(k=k, km1=k - 1) for k in range(1, 5))
-    + """
-SELECT entity_id, is_seed, score FROM ppr4
-"""
-)
 
 
 # r6c: PMI collocations — log-domain integer score (overflow-safe at
@@ -2992,33 +2554,6 @@ SELECT doc_a, doc_b, pair_kind,
 FROM cand
 JOIN shingled sa ON sa.doc_id = cand.doc_a
 JOIN shingled sb ON sb.doc_id = cand.doc_b
-"""
-
-
-# r6c: top-3 co-occurrence neighbors per entity.
-ENTITY_TOP_NEIGHBORS_SQL = f"""
-{_KG_CTES},
-doc_ents AS (
-  SELECT DISTINCT mm.doc_id, e.entity_id
-  FROM mm JOIN eids e ON e.label = mm.root
-),
-coocc AS MATERIALIZED (
-  SELECT a.entity_id AS entity_a, b.entity_id AS entity_b,
-         CAST(COUNT(*) AS BIGINT) AS n_docs
-  FROM doc_ents a JOIN doc_ents b
-    ON b.doc_id = a.doc_id AND a.entity_id < b.entity_id
-  GROUP BY 1, 2
-),
-bi AS (
-  SELECT entity_a AS entity_id, entity_b AS neighbor_id, n_docs FROM coocc
-  UNION ALL
-  SELECT entity_b, entity_a, n_docs FROM coocc
-)
-SELECT entity_id, neighbor_id, n_docs, CAST(rank AS INT) AS rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY entity_id
-                               ORDER BY n_docs DESC, neighbor_id) AS rank
-  FROM bi
-) WHERE rank <= 3
 """
 
 
@@ -3210,38 +2745,6 @@ FROM pb
 """
 
 
-# r6c: deterministic fixed-fanout neighbor sampling (charcode order).
-_NS_KEY = _CHARCODE.format(col="entity_id || '|' || neighbor_id")
-ENTITY_NEIGHBOR_SAMPLE_SQL = f"""
-{_KG_CTES},
-doc_ents AS (
-  SELECT DISTINCT mm.doc_id, e.entity_id
-  FROM mm JOIN eids e ON e.label = mm.root
-),
-coocc AS MATERIALIZED (
-  SELECT a.entity_id AS entity_a, b.entity_id AS entity_b
-  FROM doc_ents a JOIN doc_ents b
-    ON b.doc_id = a.doc_id AND a.entity_id < b.entity_id
-  GROUP BY 1, 2
-),
-bi AS (
-  SELECT entity_a AS entity_id, entity_b AS neighbor_id FROM coocc
-  UNION ALL
-  SELECT entity_b, entity_a FROM coocc
-),
-keyed AS (
-  SELECT entity_id, neighbor_id,
-         CAST({_NS_KEY} AS BIGINT) AS samp_key
-  FROM bi
-)
-SELECT entity_id, neighbor_id, samp_key, CAST(rn AS INT) AS samp_rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY entity_id
-                               ORDER BY samp_key, neighbor_id) AS rn
-  FROM keyed
-) WHERE rn <= 2
-"""
-
-
 # r6c: negated property set — forward edges except the excluded preds.
 SPARQL_PATH_NPS_SQL = f"""
 {_KG_CTES},
@@ -3364,36 +2867,6 @@ FROM coocc c
 JOIN eclass ca ON ca.entity_id = c.entity_a
 JOIN eclass cb ON cb.entity_id = c.entity_b
 GROUP BY 1, 2
-"""
-
-
-# r6c: degree-assortativity exact moment sums over directed endpoints.
-ENTITY_DEGREE_MOMENTS_SQL = f"""
-{_KG_CTES},
-doc_ents AS (
-  SELECT DISTINCT mm.doc_id, e.entity_id
-  FROM mm JOIN eids e ON e.label = mm.root
-),
-coocc AS MATERIALIZED (
-  SELECT a.entity_id AS entity_a, b.entity_id AS entity_b
-  FROM doc_ents a JOIN doc_ents b
-    ON b.doc_id = a.doc_id AND a.entity_id < b.entity_id
-  GROUP BY 1, 2
-),
-bi AS (
-  SELECT entity_a AS src, entity_b AS dst FROM coocc
-  UNION ALL SELECT entity_b, entity_a FROM coocc
-),
-deg AS (SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM bi GROUP BY src)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_edges,
-       CAST(SUM(dx.d) AS BIGINT) AS sum_x,
-       CAST(SUM(dy.d) AS BIGINT) AS sum_y,
-       CAST(SUM(dx.d * dy.d) AS BIGINT) AS sum_xy,
-       CAST(SUM(dx.d * dx.d) AS BIGINT) AS sum_x2,
-       CAST(SUM(dy.d * dy.d) AS BIGINT) AS sum_y2
-FROM bi
-JOIN deg dx ON dx.src = bi.src
-JOIN deg dy ON dy.src = bi.dst
 """
 
 

@@ -837,39 +837,6 @@ def kg_entity_cooccurrence(spark, sf_dir):
     )
 
 
-def _coocc_edges(spark, sf_dir):
-    """Co-occurrence pairs in both orientations — the undirected edge
-    frame the graph-analytics family (pagerank/triangles/kcore/LPA)
-    shares."""
-    pairs = kg_entity_cooccurrence(spark, sf_dir).select("entity_a", "entity_b")
-    return pairs.select(
-        F.col("entity_a").alias("src"), F.col("entity_b").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("entity_b").alias("src"), F.col("entity_a").alias("dst"))
-    )
-
-
-def entity_kcore(spark, sf_dir):
-    """Round-6b: 3-core membership over the entity co-occurrence graph
-    — iterative peeling to a fixpoint (cc.kcore; the DuckDB oracle
-    unrolls 8 rounds, ≥ the fixture's peeling depth, and the fixpoint
-    makes the two identical once converged)."""
-    return cc_mod.kcore(
-        _coocc_edges(spark, sf_dir), k=3, node_col="entity_id"
-    )
-
-
-def entity_communities(spark, sf_dir):
-    """Round-6b: deterministic synchronous label propagation (4 fixed
-    rounds, most-frequent neighbor label, min-label tie-break) — the
-    community-detection companion to entity_pagerank; round count is
-    part of the operator definition, identical on both engines."""
-    nodes = run_pipeline_cached(spark, sf_dir).comps.select("entity_id")
-    return cc_mod.label_propagation(
-        _coocc_edges(spark, sf_dir), nodes, n_iter=4, node_col="entity_id"
-    )
-
-
 def kg_bgp_match(spark, sf_dir):
     """SPARQL BGP over the constructed graph (the store's query side):
     every Commerce-class entity with its label and score —
@@ -1333,105 +1300,6 @@ def contamination_check(spark, sf_dir):
     return D.contamination_flags(_t(spark, sf_dir, "documents"))
 
 
-def entity_pagerank(spark, sf_dir, n_iter: int = 5):
-    """Round-5: PageRank over the entity co-occurrence graph — the
-    KG-analytics centrality a store consumer derives from the edge
-    layer.  INTEGER-EXACT variant: scores live in µ-units (start
-    1_000_000), each iteration is
-
-        score' = 150_000 + (17 · Σ_in (score div outdeg)) div 20
-
-    i.e. damping 0.85 = 17/20 and the per-edge contribution uses
-    integer division — additions of BIGINTs are order-independent, so
-    the result is bit-identical on any engine / any partitioning
-    (cross-engine float summation is not; the DuckDB oracle unrolls
-    the same 5 iterations as CTEs).  Scale shape: each iteration is
-    one edge join + one map-side-combined aggregate — O(E) per round,
-    the same plan family as the CC loop."""
-    nodes = run_pipeline_cached(spark, sf_dir).comps.select("entity_id")
-    return cc_mod.pagerank_int(
-        _coocc_edges(spark, sf_dir), nodes, n_iter=n_iter, node_col="entity_id"
-    ).withColumnRenamed("node", "entity_id")
-
-
-def entity_triangle_counts(spark, sf_dir):
-    """Round-5: per-entity TRIANGLE participation over the
-    co-occurrence graph — the clustering-signal companion to
-    entity_pagerank.  Triangles enumerate over ORDERED edges (a<b<c):
-    each triangle appears exactly once in the 3-way equi-join, then
-    fans out to its three corners for the per-entity count (map-side
-    combined).  Ordered-edge enumeration is the standard O(E^{3/2})
-    shape — no node ever joins its full neighborhood twice."""
-    pairs = (
-        kg_entity_cooccurrence(spark, sf_dir)
-        .select("entity_a", "entity_b")
-        .localCheckpoint(eager=False)
-    )
-    ab = pairs.select(F.col("entity_a").alias("a"), F.col("entity_b").alias("b"))
-    bc = pairs.select(F.col("entity_a").alias("b"), F.col("entity_b").alias("c"))
-    ac = pairs.select(F.col("entity_a").alias("a"), F.col("entity_b").alias("c"))
-    tri = ab.join(bc, "b").join(ac, ["a", "c"])
-    corners = (
-        tri.select(F.col("a").alias("entity_id"))
-        .unionByName(tri.select(F.col("b").alias("entity_id")))
-        .unionByName(tri.select(F.col("c").alias("entity_id")))
-    )
-    return corners.groupBy("entity_id").agg(
-        F.count("*").alias("n_triangles")
-    )
-
-
-def entity_link_prediction(spark, sf_dir):
-    """Round-6: common-neighbor LINK PREDICTION over the entity
-    co-occurrence graph — for every non-adjacent pair (a < b) sharing
-    >= 2 neighbors, the common-neighbor count (the classic
-    integer-exact link-prediction score; Adamic-Adar's 1/log weights
-    are floats and cross-engine-fragile, so the contract sticks to
-    counts).  Wedge enumeration joins the bidirectional edge frame on
-    the hinge node, with HUB hinges (degree > 64) excluded — a hub's
-    wedge fan-out is quadratic in its degree while its common-neighbor
-    evidence is uninformative (everything co-occurs with it), so the
-    cap is both the web-scale guard and standard LP practice: the
-    enumeration becomes O(V * cap^2) instead of O(sum deg^2).  One
-    anti-join then removes already-connected pairs."""
-    HINGE_CAP = 64
-    pairs = (
-        kg_entity_cooccurrence(spark, sf_dir)
-        .select("entity_a", "entity_b")
-        .localCheckpoint(eager=False)
-    )
-    edges = pairs.select(
-        F.col("entity_a").alias("src"), F.col("entity_b").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("entity_b").alias("src"), F.col("entity_a").alias("dst"))
-    )
-    deg = edges.groupBy("src").agg(F.count("*").alias("_deg"))
-    edges = (
-        edges.join(deg, "src").filter(F.col("_deg") <= HINGE_CAP).drop("_deg")
-    )
-    w1 = edges.select(F.col("src").alias("hinge"), F.col("dst").alias("a"))
-    w2 = edges.select(F.col("src").alias("hinge"), F.col("dst").alias("b"))
-    cand = (
-        w1.join(w2, "hinge")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").cast("bigint").alias("cn"))
-        .filter(F.col("cn") >= 2)
-    )
-    return (
-        cand.join(
-            pairs,
-            (cand["a"] == pairs["entity_a"]) & (cand["b"] == pairs["entity_b"]),
-            "left_anti",
-        )
-        .select(
-            F.col("a").alias("entity_a"),
-            F.col("b").alias("entity_b"),
-            "cn",
-        )
-    )
-
-
 def training_export_clean(spark, sf_dir):
     """Round-5: training_export WITH the contamination gate — the full
     end-of-pipeline decision: quality → langid → near-dup keeper →
@@ -1848,24 +1716,6 @@ def kg_sparql_modify(spark, sf_dir):
                 BIND(LCASE(?o) AS ?u) }
     ''')
     return rdfio.read_nquads_store(spark, store).select("g", "s", "p", "o")
-
-
-def entity_hops(spark, sf_dir):
-    """Round-6: multi-source BFS hop distance (4 fixed rounds) over
-    the entity co-occurrence graph from a deterministic seed set
-    (first hex digit of the minted id hash ∈ {0, 1} — entity ids are
-    IRI strings 'ex://entity/<32hex>#id') — the graph-exploration
-    companion to
-    pagerank/k-core/LPA (cc.bfs_hops: frontier semi-join + settled
-    anti-join per round; the DuckDB oracle unrolls the same 4
-    rounds, so horizon truncation is identical)."""
-    nodes = run_pipeline_cached(spark, sf_dir).comps.select("entity_id")
-    seeds = nodes.filter(
-        F.substring("entity_id", 13, 1).isin("0", "1")
-    )
-    return cc_mod.bfs_hops(
-        _coocc_edges(spark, sf_dir), seeds, n_rounds=4, node_col="entity_id"
-    )
 
 
 def doc_resample(spark, sf_dir):
@@ -2408,70 +2258,6 @@ def kg_sparql_term_ctors(spark, sf_dir):
     )
 
 
-def entity_link_adamic(spark, sf_dir):
-    """Round-6c: Adamic-Adar + Jaccard link prediction, INTEGER-exact.
-    The common-neighbor wedge enumeration of entity_link_prediction,
-    reweighted by hinge informativeness: w(z) = 1_000_000 DIV
-    bitlen(deg(z)) — the log2-quantized inverse-log weight (the float
-    1/ln(deg) flaps across engines; bitlen is bit-identical), summed
-    exactly in int64.  jac_e6 = 1e6·cn DIV (deg(a)+deg(b)−cn) with
-    full (uncapped) endpoint degrees.  Hub hinges (degree > 64) are
-    excluded from wedge enumeration — the same O(V·cap²) web-scale
-    guard, so cn/aa are exact on the hub-capped wedge graph while the
-    Jaccard denominator keeps true degrees (documented estimator)."""
-    HINGE_CAP = 64
-    pairs = (
-        kg_entity_cooccurrence(spark, sf_dir)
-        .select("entity_a", "entity_b")
-        .localCheckpoint(eager=False)
-    )
-    edges = pairs.select(
-        F.col("entity_a").alias("src"), F.col("entity_b").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("entity_b").alias("src"), F.col("entity_a").alias("dst"))
-    )
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    ek = edges.join(deg, "src").filter(F.col("deg") <= HINGE_CAP)
-    w1 = ek.select(
-        F.col("src").alias("hinge"),
-        F.col("dst").alias("a"),
-        F.expr("CAST(1000000 DIV length(bin(deg)) AS BIGINT)").alias("w"),
-    )
-    w2 = ek.select(F.col("src").alias("hinge"), F.col("dst").alias("b"))
-    cand = (
-        w1.join(w2, "hinge")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(
-            F.count("*").cast("bigint").alias("cn"),
-            F.sum("w").cast("bigint").alias("aa"),
-        )
-        .filter(F.col("cn") >= 2)
-    )
-    dega = deg.select(F.col("src").alias("a"), F.col("deg").alias("deg_a"))
-    degb = deg.select(F.col("src").alias("b"), F.col("deg").alias("deg_b"))
-    scored = (
-        cand.join(dega, "a")
-        .join(degb, "b")
-        .withColumn(
-            "jac_e6",
-            F.expr("CAST((1000000 * cn) DIV (deg_a + deg_b - cn) AS BIGINT)"),
-        )
-    )
-    return (
-        scored.join(
-            pairs,
-            (scored["a"] == pairs["entity_a"]) & (scored["b"] == pairs["entity_b"]),
-            "left_anti",
-        )
-        .select(
-            F.col("a").alias("entity_a"),
-            F.col("b").alias("entity_b"),
-            "cn", "aa", "jac_e6",
-        )
-    )
-
-
 def dedup_containment(spark, sf_dir):
     """Round-6c: asymmetric containment near-dup — pairs where the
     smaller 3-gram shingle set is ≥ 80 % contained in the larger
@@ -2617,75 +2403,6 @@ def ann_mips(spark, sf_dir):
     return A.ann_mips(_t(spark, sf_dir, "embeddings"))
 
 
-def kg_negative_edges(spark, sf_dir):
-    """Round-6c: deterministic NEGATIVE-EDGE SAMPLING — the standard
-    KG-embedding training-data prep (TransE-family corruption): every
-    positive co-occurrence edge yields NEG_SLOTS corrupted-tail
-    candidates, drawn by the grammar's affine hash family over the
-    edge's char-level rolling hash, indexed into the id-ordered entity
-    list; degenerate draws (either endpoint) and accidental positives
-    (the corrupted pair exists) are dropped — so the emitted set is
-    exactly reproducible on any engine, unlike rand() sampling.
-
-    Scale notes: the global row_number ranks only the ENTITY DIM (the
-    vocabulary, orders of magnitude below the edge set; at true
-    cluster scale PBG-style per-shard negative pools replace the
-    global index — the hash arithmetic is unchanged); the entity
-    count is a 1-row driver aggregate; the index lookup is one
-    equi-join on rank and the positive check one anti-join."""
-    pos = (
-        kg_entity_cooccurrence(spark, sf_dir)
-        .select("entity_a", "entity_b")
-        .localCheckpoint(eager=False)
-    )
-    ents = kg_entities(spark, sf_dir).select("entity_id").distinct()
-    ranked = ents.withColumn(
-        "rank", F.row_number().over(Window.orderBy("entity_id")) - 1
-    ).localCheckpoint(eager=False)
-    n = ranked.count()
-
-    hcode = (
-        "aggregate(split(concat(entity_a, '|', entity_b), ''),"
-        " CAST(0 AS BIGINT),"
-        f" (acc, c) -> (acc * 31 + ascii(c)) % {G.FP_MOD})"
-    )
-    slots = pos.withColumn("hcode", F.expr(hcode)).withColumn(
-        "slot", F.explode(F.sequence(F.lit(1), F.lit(G.NEG_SLOTS)))
-    )
-    idx_cases = None
-    for i in range(1, G.NEG_SLOTS + 1):
-        a, b = G.hash_a(G.NEG_HASH_OFFSET + i), G.hash_b(G.NEG_HASH_OFFSET + i)
-        expr = (F.lit(a) * F.col("hcode") + F.lit(b)) % F.lit(G.HASH_P) % F.lit(n)
-        idx_cases = (
-            F.when(F.col("slot") == i, expr)
-            if idx_cases is None
-            else idx_cases.when(F.col("slot") == i, expr)
-        )
-    cand = (
-        slots.withColumn("rank", idx_cases.cast("bigint"))
-        .join(ranked, "rank")
-        .select(
-            "entity_a", "entity_b", "slot",
-            F.col("entity_id").alias("neg_entity"),
-        )
-        .filter(
-            (F.col("neg_entity") != F.col("entity_a"))
-            & (F.col("neg_entity") != F.col("entity_b"))
-        )
-    )
-    corrupted = cand.withColumn(
-        "pa", F.least("entity_a", "neg_entity")
-    ).withColumn("pb", F.greatest("entity_a", "neg_entity"))
-    pos_pairs = pos.select(
-        F.col("entity_a").alias("pa"), F.col("entity_b").alias("pb")
-    )
-    return (
-        corrupted.join(pos_pairs, ["pa", "pb"], "left_anti")
-        .select("entity_a", "entity_b", F.col("slot").cast("int").alias("slot"),
-                "neg_entity")
-    )
-
-
 def dedup_keep_best(spark, sf_dir):
     """Round-6c: QUALITY-AWARE dedup keeper — the near-dup clusters of
     dedup_clusters re-decided by content quality instead of min-id:
@@ -2730,45 +2447,6 @@ def langid_confusion(spark, sf_dir):
     return (
         pred.groupBy("lang", "predicted_lang")
         .agg(F.count("*").cast("bigint").alias("n_docs"))
-    )
-
-
-def entity_neighbor_agg(spark, sf_dir):
-    """Round-6c: one GNN-style MESSAGE-PASSING round over the entity
-    co-occurrence graph — per entity, aggregate its 1-hop neighbors'
-    features (degree and proxy score): the feature-preparation stage
-    of graph-ML training data (a GraphSAGE/GCN layer is exactly this
-    join-aggregate; iterating it is the cc/pagerank loop pattern).
-    Scale shape: degree is one aggregate, the neighbor feature ride is
-    one equi-join edge→(neighbor features) + one groupBy on the source
-    — no adjacency list ever materializes per row."""
-    pairs = (
-        kg_entity_cooccurrence(spark, sf_dir)
-        .select("entity_a", "entity_b")
-        .localCheckpoint(eager=False)
-    )
-    edges = pairs.select(
-        F.col("entity_a").alias("src"), F.col("entity_b").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("entity_b").alias("src"), F.col("entity_a").alias("dst"))
-    )
-    deg = edges.groupBy("src").agg(F.count("*").cast("bigint").alias("deg"))
-    score = kg_entity_attrs(spark, sf_dir).select(
-        F.col("entity_id").alias("dst"), F.col("score").alias("n_score")
-    )
-    nbr = (
-        edges.join(deg.withColumnRenamed("src", "dst"), "dst")
-        .join(score, "dst")
-        .groupBy("src")
-        .agg(
-            F.count("*").cast("bigint").alias("n_neighbors"),
-            F.sum("deg").cast("bigint").alias("nbr_deg_sum"),
-            F.sum("n_score").cast("bigint").alias("nbr_score_sum"),
-        )
-    )
-    return nbr.select(
-        F.col("src").alias("entity_id"),
-        "n_neighbors", "nbr_deg_sum", "nbr_score_sum",
     )
 
 
@@ -2829,73 +2507,6 @@ def kg_label_index(spark, sf_dir):
             F.count("*").cast("bigint").alias("n_entities"),
             F.expr(f"CAST(sum(eh) % {G.FP_MOD} AS BIGINT)").alias("postings_hash"),
         )
-    )
-
-
-def entity_clustering_coef(spark, sf_dir):
-    """Round-6c: LOCAL CLUSTERING COEFFICIENT per entity over the
-    co-occurrence graph — the per-node companion to
-    entity_triangle_counts: clustering_e6 = (2e6 · triangles) div
-    (deg·(deg−1)), all-BIGINT so both engines agree bit-exactly (a
-    float ratio would not hash-compare).  One ordered-edge triangle
-    enumeration + one degree aggregate (cc.clustering_int); the same
-    O(E^{3/2}) plan family as the triangle query — no node ever joins
-    its full neighborhood twice."""
-    pairs = (
-        kg_entity_cooccurrence(spark, sf_dir)
-        .select("entity_a", "entity_b")
-    )
-    return cc_mod.clustering_int(pairs, node_col="entity_id")
-
-
-def entity_degree_hist(spark, sf_dir):
-    """Round-6c: log2-bucketed DEGREE DISTRIBUTION of the co-occurrence
-    graph (the power-law observability readout every graph pipeline
-    ships): bucket = bitlen(degree) so bucket k holds degrees in
-    [2^(k-1), 2^k).  Two map-side-combined aggregates over the
-    bidirectional edge frame — O(E), no joins, scale-trivial."""
-    deg = (
-        _coocc_edges(spark, sf_dir)
-        .groupBy("src")
-        .agg(F.count("*").cast("bigint").alias("degree"))
-    )
-    return (
-        deg.select(
-            F.length(F.bin(F.col("degree"))).cast("int").alias("bucket"),
-            "degree",
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count("*").cast("bigint").alias("n_entities"),
-            F.min("degree").alias("min_degree"),
-            F.max("degree").alias("max_degree"),
-        )
-    )
-
-
-def entity_ppr(spark, sf_dir, n_iter: int = 4):
-    """Round-6c: PERSONALIZED PageRank from a deterministic seed set —
-    the seed-restricted relatedness/recommendation primitive (which
-    entities are close to THESE?).  Seeds: first hex digit of the
-    minted entity digest has ascii % 4 == 0 (engine-agnostic string
-    rule — both sides compute it from the same entity_id column, no
-    RNG).  Scores in µ-units with integer damping 17/20 and teleport
-    mass returning only to seeds (cc.ppr_int); 4 unrolled iterations
-    mirrored as CTEs in the DuckDB oracle.  O(E) per round."""
-    pfx = len(G.ENTITY_IRI_PREFIX)
-    nodes = (
-        run_pipeline_cached(spark, sf_dir).comps.select("entity_id")
-        .withColumn(
-            "is_seed",
-            F.expr(f"ascii(substr(entity_id, {pfx + 1}, 1)) % 4 = 0"),
-        )
-    )
-    return (
-        cc_mod.ppr_int(
-            nodes, _coocc_edges(spark, sf_dir), n_iter=n_iter, node_col="entity_id"
-        )
-        .withColumnRenamed("node", "entity_id")
-        .select("entity_id", "is_seed", "score")
     )
 
 
@@ -3015,41 +2626,6 @@ def dedup_incremental_pairs(spark, sf_dir):
     from . import dedup as D
 
     return D.minhash_incremental_pairs(_t(spark, sf_dir, "documents"))
-
-
-def entity_top_neighbors(spark, sf_dir):
-    """Round-6c: TOP-K RELATED ENTITIES — per entity the 3 strongest
-    co-occurrence neighbors by (n_docs DESC, neighbor ASC): the
-    "related entities" panel every KG serving layer precomputes.
-    Per-group rank over the bidirectional edge frame: rn <= k compiles
-    to WindowGroupLimit (partial top-k BEFORE the shuffle), so the
-    exchange carries at most k rows per entity — no global sort at any
-    scale."""
-    pairs = kg_entity_cooccurrence(spark, sf_dir)
-    bi = pairs.select(
-        F.col("entity_a").alias("entity_id"),
-        F.col("entity_b").alias("neighbor_id"),
-        "n_docs",
-    ).unionByName(
-        pairs.select(
-            F.col("entity_b").alias("entity_id"),
-            F.col("entity_a").alias("neighbor_id"),
-            "n_docs",
-        )
-    )
-    w = Window.partitionBy("entity_id").orderBy(
-        F.desc("n_docs"), F.asc("neighbor_id")
-    )
-    return (
-        bi.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select(
-            "entity_id",
-            "neighbor_id",
-            F.col("n_docs").cast("bigint").alias("n_docs"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
 
 
 def dedup_minhash_calibration(spark, sf_dir):
@@ -3274,42 +2850,6 @@ def vocab_growth(spark, sf_dir):
     )
 
 
-def entity_neighbor_sample(spark, sf_dir):
-    """Round-6c: DETERMINISTIC FIXED-FANOUT NEIGHBOR SAMPLING — the
-    GraphSAGE-style train-prep stage: per entity, 2 neighbors chosen by
-    the char-level rolling hash of the (entity, neighbor) pair string —
-    an unbiased, reproducible stand-in for rand() (which would differ
-    per engine/run), complementary to entity_top_neighbors' strength
-    ranking.  rn <= fanout compiles to WindowGroupLimit: the exchange
-    carries at most `fanout` rows per entity, the property that lets a
-    10^12-edge graph be sampled in one pass."""
-    pairs = kg_entity_cooccurrence(spark, sf_dir)
-    bi = pairs.select(
-        F.col("entity_a").alias("entity_id"),
-        F.col("entity_b").alias("neighbor_id"),
-    ).unionByName(
-        pairs.select(
-            F.col("entity_b").alias("entity_id"),
-            F.col("entity_a").alias("neighbor_id"),
-        )
-    )
-    key = _charcode_expr("concat(entity_id, '|', neighbor_id)")
-    w = Window.partitionBy("entity_id").orderBy(
-        F.asc("samp_key"), F.asc("neighbor_id")
-    )
-    return (
-        bi.withColumn("samp_key", F.expr(key))
-        .withColumn("samp_rank", F.row_number().over(w))
-        .filter(F.col("samp_rank") <= 2)
-        .select(
-            "entity_id",
-            "neighbor_id",
-            F.col("samp_key").cast("bigint").alias("samp_key"),
-            F.col("samp_rank").cast("int").alias("samp_rank"),
-        )
-    )
-
-
 def kg_sparql_path_nps(spark, sf_dir):
     """Round-6c: NEGATED PROPERTY SET path — all outgoing edges of
     Commerce entities EXCEPT rdf:type and ex:score
@@ -3448,33 +2988,6 @@ def kg_class_cooccurrence(spark, sf_dir):
             F.count("*").cast("bigint").alias("n_pairs"),
             F.sum("n_docs").cast("bigint").alias("n_doc_links"),
         )
-    )
-
-
-def entity_degree_moments(spark, sf_dir):
-    """Round-6c: DEGREE-ASSORTATIVITY MOMENT SUMS — over directed
-    edge endpoints (src-degree x, dst-degree y): n, Σx, Σy, Σxy, Σx²,
-    Σy², all exact BIGINT (the Pearson assortativity itself needs a
-    sqrt, so the contract publishes the exact moments and the consumer
-    divides — the only way the number is bit-identical across
-    engines).  One degree aggregate + two slim joins + one 1-row
-    aggregate."""
-    edges = _coocc_edges(spark, sf_dir)
-    deg = edges.groupBy("src").agg(F.count("*").cast("bigint").alias("d"))
-    ep = (
-        edges.join(deg.withColumnRenamed("d", "dx"), "src")
-        .join(
-            deg.select(F.col("src").alias("dst"), F.col("d").alias("dy")),
-            "dst",
-        )
-    )
-    return ep.agg(
-        F.count("*").cast("bigint").alias("n_edges"),
-        F.sum("dx").cast("bigint").alias("sum_x"),
-        F.sum("dy").cast("bigint").alias("sum_y"),
-        F.sum(F.col("dx") * F.col("dy")).cast("bigint").alias("sum_xy"),
-        F.sum(F.col("dx") * F.col("dx")).cast("bigint").alias("sum_x2"),
-        F.sum(F.col("dy") * F.col("dy")).cast("bigint").alias("sum_y2"),
     )
 
 

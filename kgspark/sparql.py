@@ -63,6 +63,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .bgp import HIDDEN_PREFIXES
+from .rdfio import compact_str
 from .session import local_frame
 
 _TOKEN = re.compile(
@@ -157,31 +158,39 @@ def _take_path_term(p: _P) -> str:
             return out
 
 
-def _parse_patterns(p: _P, term=None) -> list[tuple[str, str, str]]:
-    """Triple patterns up to the closing '}' (not consumed); ``term``
-    maps a token to the text it matches (default :func:`_term`)."""
-    term = term or _term
+_GROUP_KEYWORDS = ("OPTIONAL", "FILTER", "UNION", "VALUES", "BIND", "MINUS",
+                   "GRAPH")
+
+
+def _at_triple(p: _P) -> bool:
+    """True while the next token starts a triple pattern of the block."""
+    return (p.peek() not in ("}", "{", None)
+            and p.peek().upper() not in _GROUP_KEYWORDS)
+
+
+def _take_subject_predicate(p: _P) -> tuple[str, str]:
+    s = _term(p.take())
+    pred = _term(_take_path_term(p))
+    return s, "rdf:type" if pred == "a" else pred  # SPARQL shorthand
+
+
+def _parse_patterns(p: _P) -> list[tuple[str, str, str]]:
+    """Triple patterns up to the closing '}' (not consumed)."""
     pats = []
-    while p.peek() not in ("}", "{", None):
-        up = (p.peek() or "").upper()
-        if up in ("OPTIONAL", "FILTER", "UNION", "VALUES", "BIND", "MINUS",
-                  "GRAPH"):
-            break
-        s = p.take()
-        pred = _take_path_term(p)
-        if pred == "a":  # SPARQL rdf:type shorthand
-            pred = "rdf:type"
-        o = p.take()
+    while _at_triple(p):
+        pats.append(_take_subject_predicate(p) + (_term(p.take()),))
         p.kw(".")  # trailing dot optional before }
-        pats.append((term(s), term(pred), term(o)))
     return pats
 
 
 def _term(tok: str) -> str:
+    """A query token → the text it matches: a quoted literal loses its
+    quotes, and a bracketed IRI is compacted to the prefixed form the
+    store and the triples table hold (``rdfio.compact_str``)."""
     if tok.startswith('"') and tok.endswith('"'):
         return tok[1:-1]
     if tok.startswith("<") and tok.endswith(">") and len(tok) >= 2:
-        return tok[1:-1]  # bracketed IRI — match on the bare IRI text
+        return compact_str(tok[1:-1])
     return tok
 
 
@@ -1527,22 +1536,30 @@ def _unescape_str(s: str) -> str:
 
 
 def _ground_term(tok: str) -> str:
-    from .rdfio import compact_str
-
     if tok.startswith("?"):
         raise ValueError(
             "INSERT DATA / DELETE DATA must be ground — no variables"
         )
-    return compact_str(_term(tok))
+    return _term(tok)
 
 
-def _pattern_term(tok: str) -> str:
-    """A DELETE WHERE pattern token: a bracketed IRI is compacted like
-    the ground terms of a DATA block, since the store holds compact
-    IRIs; literals and variables keep their text."""
-    from .rdfio import compact_str
-
-    return compact_str(_term(tok)) if tok.startswith("<") else _term(tok)
+def _take_object(p: _P) -> tuple:
+    """The object of an update-block triple with its @lang or ^^datatype
+    suffix → (o, o_kind, o_lang, o_datatype): a literal's unescaped
+    text, a constant IRI's compact text, or a variable kept with its
+    '?' and a None o_kind."""
+    o = p.take()
+    if o.startswith("?"):
+        return o, None, "", ""
+    if not o.startswith('"'):
+        return _term(o), "iri", "", ""
+    lang = dt = ""
+    nxt = p.peek() or ""
+    if nxt.startswith("@"):
+        lang = p.take()[1:]
+    elif nxt.startswith("^^"):
+        dt = _ground_term(p.take()[2:])
+    return _unescape_str(_term(o)), "literal", lang, dt
 
 
 def _parse_data_triples(p: _P) -> list[tuple]:
@@ -1553,27 +1570,15 @@ def _parse_data_triples(p: _P) -> list[tuple]:
 
     rows = []
     while p.peek() not in ("}", None) and (p.peek() or "").upper() != "GRAPH":
-        s = p.take()
-        pred = p.take()
-        if pred == "a":
-            pred = "rdf:type"
-        o = p.take()
-        o_kind, o_lang, o_dt = "iri", "", ""
-        if o.startswith('"'):
-            o_kind = "literal"
-            nxt = p.peek()
-            if nxt is not None and nxt.startswith("@"):
-                o_lang = p.take()[1:]
-            elif nxt is not None and nxt.startswith("^^"):
-                o_dt = _ground_term(p.take()[2:])
+        s, pred = _take_subject_predicate(p)
+        o, o_kind, o_lang, o_dt = _take_object(p)
         if _parse_path(pred) is not None:
             raise ValueError(
                 f"property path not allowed in a DATA block: {pred!r}"
             )
         rows.append((
             _ground_term(s), _ground_term(pred),
-            _unescape_str(_term(o)) if o_kind == "literal"
-            else _ground_term(o),
+            o if o_kind == "literal" else _ground_term(o),
             o_kind, o_lang, o_dt,
         ))
         p.kw(".")
@@ -1611,43 +1616,55 @@ def _parse_quad_data(p: _P) -> list[tuple]:
     return quads
 
 
-def _parse_quad_patterns(p: _P) -> list[tuple]:
+def _parse_quad_patterns(p: _P) -> dict:
     """DELETE WHERE body: quad patterns only (the spec's QuadPattern —
     no FILTER/OPTIONAL).  Bare patterns get the implicit shared graph
     variable ``?__g``: they match within a single named graph at a
     time and delete from that graph — the per-document-graph semantics
     of this store (a bare pattern spanning two graphs is not a match).
-    ``GRAPH <iri>/{?v} { … }`` scopes explicitly."""
+    ``GRAPH <iri>/{?v} { … }`` scopes explicitly.
+
+    → ``patterns``, the (g, s, p, o) text of each pattern, and
+    ``objects``, each object's (o_kind, o_lang, o_datatype) (a None
+    o_kind for a variable)."""
     from .bgp import _parse_path
 
+    def triples() -> list[tuple]:
+        rows = []
+        while _at_triple(p):
+            rows.append(_take_subject_predicate(p) + _take_object(p))
+            p.kw(".")
+        return rows
+
     p.expect("{")
-    pats: list[tuple] = []
+    quads: list[tuple] = []
     while (p.peek() or "}") != "}":
         if (p.peek() or "").upper() == "GRAPH":
             p.take()
-            gterm = _pattern_term(p.take())
+            gterm = _term(p.take())
             p.expect("{")
-            inner = _parse_patterns(p, _pattern_term)
+            inner = triples()
             p.expect("}")
             p.kw(".")
-            pats += [(gterm,) + t for t in inner]
+            quads += [(gterm,) + t for t in inner]
         else:
-            inner = _parse_patterns(p, _pattern_term)
+            inner = triples()
             if not inner:
                 raise ValueError(
                     f"SPARQL UPDATE parse error at {p.peek()!r} — "
                     "DELETE WHERE allows quad patterns only"
                 )
-            pats += [("?__g",) + t for t in inner]
+            quads += [("?__g",) + t for t in inner]
     p.expect("}")
-    if not pats:
+    if not quads:
         raise ValueError("empty DELETE WHERE block")
-    for _g, _s, _p, _o in pats:
-        if not _p.startswith("?") and _parse_path(_p) is not None:
+    for q in quads:
+        if not q[2].startswith("?") and _parse_path(q[2]) is not None:
             raise ValueError(
-                f"property path not allowed in DELETE WHERE: {_p!r}"
+                f"property path not allowed in DELETE WHERE: {q[2]!r}"
             )
-    return pats
+    return {"patterns": [q[:4] for q in quads],
+            "objects": [q[4:] for q in quads]}
 
 
 def _parse_using(p: _P) -> tuple[list[str], list[str]]:
@@ -1668,7 +1685,7 @@ def _parse_using(p: _P) -> tuple[list[str], list[str]]:
 def parse_update(update: str) -> list[dict]:
     """Parse an UPDATE request (operations chained with ';') → op
     specs: {"op": "insert_data"|"delete_data", "quads": […]},
-    {"op": "delete_where", "patterns": […]}, {"op": "clear",
+    {"op": "delete_where", "patterns": […], "objects": […]}, {"op": "clear",
     "scope": "graph"|"default"|"named"|"all", "graph": iri?,
     "silent": bool}."""
     p = _P(_tokenize(update))
@@ -1713,9 +1730,7 @@ def parse_update(update: str) -> list[dict]:
             if p.kw("DATA"):
                 ops.append({"op": "delete_data", "quads": _parse_quad_data(p)})
             elif p.kw("WHERE"):
-                ops.append(
-                    {"op": "delete_where", "patterns": _parse_quad_patterns(p)}
-                )
+                ops.append({"op": "delete_where", **_parse_quad_patterns(p)})
             elif p.peek() == "{":
                 # modify form: DELETE { tpl } [INSERT { tpl }] WHERE { g }
                 dels = _parse_quad_templates(p)
@@ -1848,6 +1863,26 @@ def store_update(
     return {"ops": results}
 
 
+def _object_key(o: str, o_kind: str, o_lang: str, o_datatype: str) -> str:
+    """One text per RDF object term: an IRI is its text, a literal its
+    quoted text with any @lang or ^^datatype (an IRI never starts with
+    '"', and neither a tag nor a datatype holds one)."""
+    if o_kind != "literal":
+        return o
+    return (f'"{o}"' + (f"@{o_lang}" if o_lang else "")
+            + (f"^^{o_datatype}" if o_datatype else ""))
+
+
+def _object_key_col():
+    """:func:`_object_key` of a quad frame's object columns."""
+    def suffix(mark: str, c: str):
+        return F.when(F.col(c) != "", F.concat(F.lit(mark), c)).otherwise("")
+
+    literal = F.concat(F.lit('"'), "o", F.lit('"'), suffix("@", "o_lang"),
+                       suffix("^^", "o_datatype"))
+    return F.when(F.col("o_kind") == "literal", literal).otherwise(F.col("o"))
+
+
 def _exec_update_op(
     spark, path: str, op: dict, default_graph: str, allow_product: bool
 ) -> dict:
@@ -1904,29 +1939,38 @@ def _exec_update_op(
             scope = sorted(named & dirs.keys())
         if not dirs or scope == []:
             return {"op": kind, "graphs": [], "quads": 0}
-        quads = rdfio.read_nquads_store(spark, path, graph=scope)
-        sol = _conjunction(
-            quads, op["patterns"], allow_product=allow_product
-        )
+        # match on RDF terms: the object column holds each quad's
+        # object key, and a constant object pattern its own key
+        quads = rdfio.read_nquads_store(spark, path, graph=scope) \
+            .withColumn("o", _object_key_col())
+        patterns = [
+            (g, s_, p_, o if kind_ is None else _object_key(o, kind_, lang, dt))
+            for (g, s_, p_, o), (kind_, lang, dt)
+            in zip(op["patterns"], op["objects"])
+        ]
+        sol = _conjunction(quads, patterns, allow_product=allow_product)
 
         def term(t: str):
             return F.col(_var(t)) if t.startswith("?") else F.lit(t)
 
         dels = None
-        for g4 in op["patterns"]:
+        for g4 in patterns:
             inst = sol.select(
                 term(g4[0]).alias("g"), term(g4[1]).alias("s"),
-                term(g4[2]).alias("p"), term(g4[3]).alias("o"),
+                term(g4[2]).alias("p"), term(g4[3]).alias("_okey"),
             )
             dels = inst if dels is None else dels.unionByName(inst)
-        dels = dels.dropna(subset=["g", "s", "p", "o"]).distinct()
+        # every instantiated pattern is a quad its solution matched, so
+        # the distinct instances are exactly the quads removed
+        dels = dels.dropna().distinct()
         per_graph = {r["g"]: r["n"] for r in dels.groupBy("g").agg(
             F.count("*").alias("n")).collect()}
         if not per_graph:
             return {"op": kind, "graphs": [], "quads": 0}
         affected, n_dels = sorted(per_graph), sum(per_graph.values())
         existing = rdfio.read_nquads_store(spark, path, graph=affected)
-        remaining = existing.join(dels, ["g", "s", "p", "o"], "left_anti")
+        remaining = existing.withColumn("_okey", _object_key_col()).join(
+            dels, ["g", "s", "p", "_okey"], "left_anti").drop("_okey")
         nonempty = rdfio._replace_graphs_unlocked(remaining, path)
         rdfio._remove_graph_dirs(
             path, [g for g in affected if g not in nonempty]
@@ -2056,37 +2100,14 @@ def _parse_quad_templates(p: _P) -> list[tuple]:
     def _tpl_triples() -> list[tuple]:
         rows = []
         while p.peek() not in ("}", None) and (p.peek() or "").upper() != "GRAPH":
-            s = p.take()
-            pred = p.take()
-            if pred == "a":
-                pred = "rdf:type"
-            o = p.take()
-            o_kind, o_lang, o_dt = "iri", "", ""
-            if o.startswith('"'):
-                o_kind = "literal"
-                nxt = p.peek()
-                if nxt is not None and nxt.startswith("@"):
-                    o_lang = p.take()[1:]
-                elif nxt is not None and nxt.startswith("^^"):
-                    o_dt = _ground_term(p.take()[2:])
-            elif o.startswith("?"):
-                o_kind = None  # resolved at execution
+            s, pred = _take_subject_predicate(p)
+            # a variable object's None o_kind is resolved at execution
+            obj = _take_object(p)
             if not pred.startswith("?") and _parse_path(pred) is not None:
                 raise ValueError(
                     f"property path not allowed in a template: {pred!r}"
                 )
-
-            def keep(t: str) -> str:
-                from .rdfio import compact_str
-
-                return t if t.startswith("?") else compact_str(_term(t))
-
-            rows.append((
-                keep(s), keep(pred),
-                _unescape_str(_term(o)) if o_kind == "literal"
-                else keep(o),
-                o_kind, o_lang, o_dt,
-            ))
+            rows.append((s, pred) + obj)
             p.kw(".")
         return rows
 

@@ -1,5 +1,5 @@
-"""Connected components: partition validity, salting equivalence,
-hub-skew synthetic case, determinism across parallelism."""
+"""Connected components: partition validity, the hub-skew synthetic
+case on both paths, long-chain convergence."""
 
 from __future__ import annotations
 
@@ -8,12 +8,12 @@ from pyspark.sql import functions as F
 from kgspark import cc
 
 
-def _labels(spark, edges_rows, nodes_rows, **kw):
+def _labels(spark, edges_rows, nodes_rows):
     edges = spark.createDataFrame(edges_rows, "norm_a string, norm_b string")
     nodes = spark.createDataFrame([(n,) for n in nodes_rows], "node string")
     return {
         r["node"]: r["label"]
-        for r in cc.connected_components(edges, nodes, **kw).collect()
+        for r in cc.connected_components(edges, nodes).collect()
     }
 
 
@@ -27,15 +27,16 @@ def test_basic_components(spark):
 
 
 def test_chain_converges(spark):
-    """Path graph exercises multi-iteration propagation."""
+    """A path graph is one component labelled by its min node."""
     n = 24
     edges = [(f"n{i:02d}", f"n{i+1:02d}") for i in range(n - 1)]
     got = _labels(spark, edges, [f"n{i:02d}" for i in range(n)])
     assert set(got.values()) == {"n00"}
 
 
-def test_hub_skew_salted_equals_unsalted(spark):
-    """One hub entity connected to 30% of nodes (north_rule skew case)."""
+def test_hub_skew_salted_equals_unsalted(monkeypatch, spark):
+    """One hub entity connected to 30% of nodes (north_rule skew case):
+    the driver union-find and contraction give the same labels."""
     spokes = [("hub", f"s{i:03d}") for i in range(300)]
     others = [(f"p{i:03d}", f"q{i:03d}") for i in range(100)]
     nodes = (
@@ -44,10 +45,11 @@ def test_hub_skew_salted_equals_unsalted(spark):
         + [f"p{i:03d}" for i in range(100)]
         + [f"q{i:03d}" for i in range(100)]
     )
-    plain = _labels(spark, spokes + others, nodes, salt_buckets=1)
-    salted = _labels(spark, spokes + others, nodes, salt_buckets=8)
-    assert plain == salted
-    assert sum(1 for v in plain.values() if v == "hub") == 301
+    driver = _labels(spark, spokes + others, nodes)
+    monkeypatch.setattr(cc, "DRIVER_THRESHOLD", 0)
+    contracted = _labels(spark, spokes + others, nodes)
+    assert driver == contracted
+    assert sum(1 for v in driver.values() if v == "hub") == 301
 
 
 def test_partition_validity(spark, sf_dir, oracle):
@@ -74,146 +76,3 @@ def oracle_components_dict(oracle):
 
     norms = sorted(oracle["mentions"]["norm_text"].unique())
     return oracle_components(norms, oracle["edges"])
-
-
-def test_pagerank_int_star_graph(spark):
-    """Star graph: the hub accumulates the leaves' contributions and
-    outranks them; isolated node settles at the base score."""
-    from kgspark.cc import pagerank_int
-
-    leaves = [f"l{i}" for i in range(6)]
-    und = [("hub", l) for l in leaves]
-    edges = spark.createDataFrame(
-        und + [(b, a) for a, b in und], "src string, dst string"
-    )
-    nodes = spark.createDataFrame(
-        [("hub",)] + [(l,) for l in leaves] + [("iso",)], "node string"
-    )
-    out = {r["node"]: r["score"] for r in pagerank_int(edges, nodes).collect()}
-    assert out["hub"] > out["l0"] > out["iso"]
-    assert len({out[l] for l in leaves}) == 1  # symmetric leaves agree
-    # iso has no in-edges: fixed point 150_000 + 0
-    assert out["iso"] == 150_000
-    # determinism across partitionings
-    out2 = {
-        r["node"]: r["score"]
-        for r in pagerank_int(edges.repartition(7), nodes.repartition(3)).collect()
-    }
-    assert out == out2
-
-
-# ---------------------------------------------------------------- round-6b:
-# k-core peeling and deterministic synchronous label propagation
-
-
-def _both_ways(spark, pairs):
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(pairs, "a string, b string")
-    return df.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionByName(df.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-
-
-def test_kcore_peels_pendants_and_keeps_clique(spark):
-    from kgspark.cc import kcore
-
-    # K4 (abcd) with a pendant chain e-f hanging off a
-    pairs = [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"),
-             ("b", "d"), ("c", "d"), ("a", "e"), ("e", "f")]
-    out = {r["node"] for r in kcore(_both_ways(spark, pairs), k=3).collect()}
-    assert out == {"a", "b", "c", "d"}
-
-
-def test_kcore_empty_when_everything_peels(spark):
-    from kgspark.cc import kcore
-
-    # a path has no 3-core; cascading peel must reach the empty fixpoint
-    pairs = [("a", "b"), ("b", "c"), ("c", "d")]
-    assert kcore(_both_ways(spark, pairs), k=3).count() == 0
-
-
-def test_label_propagation_converges_to_min_label(spark):
-    from kgspark.cc import kcore, label_propagation
-    from pyspark.sql import functions as F
-
-    pairs = [("a", "b"), ("b", "c"), ("a", "c")]  # triangle + isolated z
-    nodes = spark.createDataFrame(
-        [("a",), ("b",), ("c",), ("z",)], "node string"
-    )
-    out = {
-        r["node"]: r["label"]
-        for r in label_propagation(
-            _both_ways(spark, pairs), nodes, n_iter=4
-        ).collect()
-    }
-    # sync LPA with min-label tie-break floods the triangle with "a";
-    # the isolated node keeps its own label
-    assert out == {"a": "a", "b": "a", "c": "a", "z": "z"}
-
-
-def test_label_propagation_two_communities(spark):
-    from kgspark.cc import label_propagation
-
-    # two disjoint triangles: each floods with its own min label
-    # (a bridge edge would let min labels leak across — by design)
-    pairs = [("a", "b"), ("b", "c"), ("a", "c"),
-             ("x", "y"), ("y", "z"), ("x", "z")]
-    nodes = [(n,) for n in "abcxyz"]
-    nd = spark.createDataFrame(nodes, "node string")
-    out = {
-        r["node"]: r["label"]
-        for r in label_propagation(
-            _both_ways(spark, pairs), nd, n_iter=4
-        ).collect()
-    }
-    assert {out[n] for n in "ab"} == {"a"}
-    assert {out[n] for n in "yz"} == {"x"}
-
-
-def test_clustering_int_triangle_plus_pendant(spark):
-    """Triangle a-b-c plus pendant a-d: a has deg 3 / 1 triangle
-    (coef 2e6/6 = 333333), b and c deg 2 / 1 triangle (coef 1e6),
-    d deg 1 (coef pinned 0)."""
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("a", "c"), ("b", "c"), ("a", "d")],
-        "a string, b string",
-    )
-    got = {
-        r["node"]: (r["degree"], r["n_triangles"], r["clustering_e6"])
-        for r in cc.clustering_int(pairs).collect()
-    }
-    assert got == {
-        "a": (3, 1, 333333),
-        "b": (2, 1, 1000000),
-        "c": (2, 1, 1000000),
-        "d": (1, 0, 0),
-    }
-
-
-def test_ppr_int_seed_locality(spark):
-    """Path s - m - f with seed s: the seed keeps the teleport floor
-    and stays the top-scored node (the path is bipartite, so the
-    propagated mass OSCILLATES between the {s,f} and {m} sides each
-    round — hand-unrolled round-4 values pinned exactly)."""
-    edges = spark.createDataFrame(
-        [("s", "m"), ("m", "s"), ("m", "f"), ("f", "m")],
-        "src string, dst string",
-    )
-    nodes = spark.createDataFrame(
-        [("s", True), ("m", False), ("f", False)],
-        "node string, is_seed boolean",
-    )
-    out = {r["node"]: r["score"] for r in cc.ppr_int(nodes, edges, n_iter=4).collect()}
-    # hand unroll: r1 (150000, 850000, 0) → r2 (511250, 127500, 361250)
-    # → r3 (204187, 741625, 54187) → r4 below; seed strictly on top.
-    assert out == {"s": 465_190, "m": 219_617, "f": 315_190}
-    assert max(out, key=out.get) == "s"
-    # hand-check round 1: s = 150000 + 17*(1000000 div 2... ) —
-    # contributions: only s has mass 1e6, outdeg(s)=1 → m gets
-    # 17*1000000//20 = 850000; s gets 150000; f gets 0.
-    r1 = {
-        r["node"]: r["score"]
-        for r in cc.ppr_int(nodes, edges, n_iter=1).collect()
-    }
-    assert r1 == {"s": 150_000, "m": 850_000, "f": 0}

@@ -1,5 +1,5 @@
-"""Adaptive CC: the driver-local union-find and the distributed
-min-label loop must produce identical labels."""
+"""Adaptive CC: the driver-local union-find and distributed contraction
+must produce identical labels, and the edge count picks the path."""
 
 from __future__ import annotations
 
@@ -9,26 +9,28 @@ from pyspark.sql import functions as F
 from kgspark import cc, extract, fixtures, link
 
 
-def test_paths_agree_on_fixture(spark, sf_dir):
+def _labels(df):
+    return {(r["node"], r["label"]) for r in df.collect()}
+
+
+def test_paths_agree_on_fixture(monkeypatch, spark, sf_dir):
     m = extract.mentions_df(fixtures.flat_spans(spark, sf_dir))
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     edges = link.scored_edges(m, emb).localCheckpoint()
     nodes = m.select(F.col("norm_text").alias("node")).distinct().localCheckpoint()
-    local = {(r["node"], r["label"]) for r in cc._driver_union_find(edges, nodes, "node").collect()}
-    dist = {
-        (r["node"], r["label"])
-        for r in cc._distributed_cc(edges, nodes, "node", 50, 1).collect()
-    }
+    local = _labels(cc.connected_components(edges, nodes))
+    monkeypatch.setattr(cc, "DRIVER_THRESHOLD", 0)
+    dist = _labels(cc.connected_components(edges, nodes))
     assert local == dist
 
 
-def test_driver_path_never_collects_singletons(spark):
-    """Round-2 verdict #3: the driver union-find must only ever collect
+def test_driver_path_never_collects_singletons(monkeypatch, spark):
+    """Round-2 verdict #3: the driver union-find must only ever fetch
     edge endpoints — a corpus with few edges but a huge singleton node
-    set stays distributed-side.  Guarded by banning DataFrame.collect on
-    anything except the (tiny) edge frame, then checking labels."""
+    set stays distributed-side.  Guarded by recording every frame
+    fetched to the driver while the labels are planned."""
     edges = spark.createDataFrame([("a", "b"), ("b", "c")], "norm_a string, norm_b string")
-    DataFrame = type(edges)  # the concrete (classic) class overrides collect
+    DataFrame = type(edges)  # the concrete (classic) class
     singles = spark.range(2000).select(
         F.concat(F.lit("s"), F.lpad(F.col("id").cast("string"), 6, "0")).alias("node")
     )
@@ -36,51 +38,46 @@ def test_driver_path_never_collects_singletons(spark):
         spark.createDataFrame([("a",), ("b",), ("c",)], "node string")
     )
 
-    real_collect = DataFrame.collect
-    collected_schemas = []
+    fetched = []
 
-    def spying(self):
-        collected_schemas.append(set(self.columns))
-        return real_collect(self)
+    def spy(name):
+        real = getattr(DataFrame, name)
 
-    DataFrame.collect = spying
-    try:
-        out = cc._driver_union_find(edges, nodes, "node")
-        plan_built = True
-    finally:
-        DataFrame.collect = real_collect
-    assert plan_built
-    # the only collect during UF construction is the edge frame
-    assert collected_schemas == [{"norm_a", "norm_b"}]
+        def spying(self, *a, **k):
+            fetched.append(set(self.columns))
+            return real(self, *a, **k)
 
-    rows = {(r["node"], r["label"]) for r in out.collect()}
+        monkeypatch.setattr(DataFrame, name, spying)
+
+    for name in ("collect", "toArrow", "toPandas", "toLocalIterator"):
+        spy(name)
+    out = cc.connected_components(edges, nodes)
+    monkeypatch.undo()
+    # the only driver fetch while building the labels is the edge frame
+    assert fetched == [{"norm_a", "norm_b"}]
+
+    rows = _labels(out)
     assert ("a", "a") in rows and ("b", "a") in rows and ("c", "a") in rows
     assert ("s000000", "s000000") in rows and ("s001999", "s001999") in rows
     assert len(rows) == 2003
 
 
-def test_threshold_routing(spark):
+def test_threshold_routing(monkeypatch, spark):
     edges = spark.createDataFrame([("a", "b")], "norm_a string, norm_b string")
     nodes = spark.createDataFrame([("a",), ("b",), ("c",)], "node string")
-    # tiny graph → driver path; force distributed with threshold=0
-    small = {(r["node"], r["label"]) for r in cc.connected_components(edges, nodes).collect()}
-    forced = {
-        (r["node"], r["label"])
-        for r in cc.connected_components(edges, nodes, driver_threshold=0).collect()
-    }
+    # tiny graph → driver path; force contraction with threshold 0
+    small = _labels(cc.connected_components(edges, nodes))
+    monkeypatch.setattr(cc, "DRIVER_THRESHOLD", 0)
+    forced = _labels(cc.connected_components(edges, nodes))
     assert small == forced == {("a", "a"), ("b", "a"), ("c", "c")}
 
 
 def test_driver_threshold_default_and_env(monkeypatch, spark):
     """Round-5 (verdict #7): the adaptive switchover defaults to 500k
-    edges (50 MB collected, safe on a shared driver) and the
-    distributed path engages past it — proven by making the driver
-    path explode."""
-    from kgspark import cc as cc_mod
-
-    assert cc_mod.DEFAULT_DRIVER_THRESHOLD == 500_000
-    monkeypatch.setenv("KGSPARK_CC_DRIVER_THRESHOLD", "10")
-    assert cc_mod._driver_threshold_default() == 10
+    edges (50 MB fetched, safe on a shared driver) and the distributed
+    path engages past it — proven by making the driver path explode."""
+    assert cc.DRIVER_THRESHOLD == 500_000
+    monkeypatch.setattr(cc, "DRIVER_THRESHOLD", 10)
 
     edges = spark.createDataFrame(
         [(f"v{i}", f"v{i+1}") for i in range(20)],
@@ -95,16 +92,12 @@ def test_driver_threshold_default_and_env(monkeypatch, spark):
     def boom(*a, **k):
         raise AssertionError("driver path used above threshold")
 
-    monkeypatch.setattr(cc_mod, "_driver_union_find", boom)
-    # 20 edges > threshold 10 → distributed path, identical labels
-    labels = {
-        (r["node"], r["label"])
-        for r in cc_mod.connected_components(edges, nodes).collect()
-    }
+    monkeypatch.setattr(cc, "_driver_union_find", boom)
+    # 20 edges > threshold 10 → contraction, identical labels
+    labels = _labels(cc.connected_components(edges, nodes))
     assert all(lab == "v0" for _, lab in labels) and len(labels) == 21
 
-    # ≤ threshold → the driver path IS used (make distributed explode)
-    monkeypatch.setattr(cc_mod, "_driver_union_find", boom)
+    # ≤ threshold → the driver path IS used
     small = spark.createDataFrame(
         [("a", "b"), ("b", "c")], "norm_a string, norm_b string"
     )
@@ -112,4 +105,4 @@ def test_driver_threshold_default_and_env(monkeypatch, spark):
         [("a",), ("b",), ("c",)], "node string"
     )
     with pytest.raises(AssertionError, match="driver path"):
-        cc_mod.connected_components(small, small_nodes)
+        cc.connected_components(small, small_nodes)

@@ -203,35 +203,6 @@ def test_line_dup_stats_detects_shared_paragraph(spark):
     assert rows[1]["boiler_rate_e6"] == 500000  # 1 of 2 windows
 
 
-def test_bfs_hops_chain_and_horizon(spark):
-    """cc.bfs_hops on a 7-node chain seeded at one end: dist = node
-    index up to the 4-round horizon; nodes past the horizon are
-    absent; a disconnected seedless node never appears."""
-    from kgspark.cc import bfs_hops
-    import pyspark.sql.functions as F
-
-    chain = [(i, i + 1) for i in range(6)]  # 0-1-2-3-4-5-6
-    edges = spark.createDataFrame(
-        chain + [(b, a) for a, b in chain], "src long, dst long"
-    )
-    seeds = spark.createDataFrame([(0,)], "node long")
-    got = {
-        (r["node"], r["dist"])
-        for r in bfs_hops(edges, seeds, n_rounds=4).collect()
-    }
-    assert got == {(0, 0), (1, 1), (2, 2), (3, 3), (4, 4)}  # 5,6 past horizon
-
-    # multi-source: min distance wins, frontier union is exact
-    seeds2 = spark.createDataFrame([(0,), (6,)], "node long")
-    got2 = {
-        (r["node"], r["dist"])
-        for r in bfs_hops(edges, seeds2, n_rounds=4).collect()
-    }
-    assert got2 == {
-        (0, 0), (6, 0), (1, 1), (5, 1), (2, 2), (4, 2), (3, 3),
-    }
-
-
 def test_doc_resample_is_map_only(spark, sf_dir):
     """Resampling must be a pure map stage: no Exchange, no Python —
     the copy expansion is explode(sequence) over native columns."""
@@ -379,12 +350,6 @@ def test_embedding_quantize_values(spark):
     assert (v2["maxabs_e3"], v2["mean_abs_err_e6"], v2["q_checksum"]) == (0, 0, 0)
 
 
-def test_link_prediction_shape_and_cap(spark, sf_dir):
-    p = _plan(Q.entity_link_prediction(spark, sf_dir))
-    for bad in ["CartesianProduct", "BroadcastNestedLoopJoin"]:
-        assert bad not in p
-
-
 def test_cms_estimates_upper_bound(spark, sf_dir):
     """CMS point estimates are one-sided: estimate >= truth for every
     probed token, and the estimate of a unique heavy hitter in a tiny
@@ -436,37 +401,6 @@ def test_sparql_ask_describe(spark, sf_dir):
     assert "CartesianProduct" not in _plan(d)
 
 
-def test_link_adamic_plan_and_weights(spark, sf_dir):
-    p = _plan(Q.entity_link_adamic(spark, sf_dir))
-    for bad in ["CartesianProduct", "BroadcastNestedLoopJoin"]:
-        assert bad not in p
-
-
-def test_link_adamic_values(spark, tmp_path):
-    # bipartite graph a-z1, a-z2, a-z3, b-z1, b-z2 (deg: a=3, b=2,
-    # z1=z2=2, z3=1): pair (a,b) via hinges z1,z2 → cn=2,
-    # w(z)=1e6 DIV bitlen(2)=500000 each → aa=1000000,
-    # jac_e6 = 2e6 DIV (3+2-2) = 666666; the mirror pair (z1,z2) via
-    # hinges a,b → w(a)=1e6 DIV bitlen(3)=500000 too, jac denominator
-    # 2+2-2 → 1000000
-    import pandas as pd
-
-    docs = pd.DataFrame({"entity_a": ["a", "a", "a"],
-                         "entity_b": ["z1", "z2", "z3"]})
-    more = pd.DataFrame({"entity_a": ["b", "b"], "entity_b": ["z1", "z2"]})
-    coocc = pd.concat([docs, more], ignore_index=True)
-    import kgspark.queries as QQ
-    from unittest import mock
-
-    cdf = spark.createDataFrame(coocc)
-    with mock.patch.object(QQ, "kg_entity_cooccurrence",
-                           lambda s, d: cdf):
-        out = {tuple(r) for r in
-               QQ.entity_link_adamic(spark, "unused").collect()}
-    assert out == {("a", "b", 2, 1000000, 666666),
-                   ("z1", "z2", 2, 1000000, 1000000)}
-
-
 def test_bpe_vocab_merges_hand_case(spark, tmp_path):
     import pandas as pd
 
@@ -494,54 +428,6 @@ def test_bpe_vocab_merges_skips_self_pairs(spark, tmp_path):
     # (a,a)=3 is the raw argmax but self-pairs are excluded from
     # SELECTION → (a,$)=3 wins (lhs tie-break vs (a,b)=1 irrelevant)
     assert out == [(1, "a", "$", 3)]
-
-
-def test_negative_edges_partitioning_invariant_and_clean(spark, sf_dir):
-    """Corruption sampling is hash-deterministic: identical output at
-    2 vs 32 shuffle partitions; no emitted corrupted pair may be a
-    positive edge or touch its own head/tail degenerately."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-
-    def run():
-        return {tuple(r) for r in
-                Q.kg_negative_edges(spark, sf_dir).collect()}
-
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
-        lo = run()
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
-        hi = run()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    assert lo == hi and len(lo) > 0
-
-    pos = {(r["entity_a"], r["entity_b"]) for r in
-           Q.kg_entity_cooccurrence(spark, sf_dir)
-           .select("entity_a", "entity_b").collect()}
-    for a, b, slot, neg in lo:
-        assert neg != a and neg != b
-        assert (min(a, neg), max(a, neg)) not in pos
-
-
-def test_neighbor_agg_hand_case(spark, sf_dir):
-    """Triangle a-b, a-c (deg a=2, b=1, c=1): a's neighbor sums =
-    deg(b)+deg(c)=2; b's = deg(a)=2 — checked via mock co-occurrence
-    with unit scores."""
-    import pandas as pd
-    from unittest import mock
-
-    import kgspark.queries as QQ
-
-    coocc = spark.createDataFrame(
-        pd.DataFrame({"entity_a": ["a", "a"], "entity_b": ["b", "c"]}))
-    attrs = spark.createDataFrame(
-        pd.DataFrame({"entity_id": ["a", "b", "c"], "score": [10, 20, 30]}))
-    with mock.patch.object(QQ, "kg_entity_cooccurrence", lambda s, d: coocc), \
-         mock.patch.object(QQ, "kg_entity_attrs", lambda s, d: attrs):
-        out = {r["entity_id"]: (r["n_neighbors"], r["nbr_deg_sum"],
-                                r["nbr_score_sum"])
-               for r in QQ.entity_neighbor_agg(spark, "x").collect()}
-    assert out == {"a": (2, 2, 50), "b": (1, 2, 10), "c": (1, 2, 10)}
 
 
 def test_bpe_encode_compresses(spark, tmp_path):
@@ -574,14 +460,6 @@ def test_label_index_partitioning_invariant(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert lo == hi and len(lo) > 0
-
-
-def test_top_neighbors_plans_window_group_limit(spark, sf_dir):
-    """rn <= 3 per entity must compile to WindowGroupLimit (partial
-    top-k before the exchange) — the property that bounds the shuffle
-    to k rows per entity at any scale."""
-    p = _plan(Q.entity_top_neighbors(spark, sf_dir))
-    assert "WindowGroupLimit" in p, p[:1500]
 
 
 def test_incremental_dedup_subset_and_planted_pair(spark, sf_dir):
@@ -622,22 +500,6 @@ def test_incremental_dedup_subset_and_planted_pair(spark, sf_dir):
         for r in D.minhash_incremental_pairs(planted).collect()
     }
     assert got[(10, 10001)] == ("new-old", 1000000)
-
-
-def test_neighbor_sample_plans_window_group_limit(spark, sf_dir):
-    """Fixed-fanout sampling must keep WindowGroupLimit and pick
-    exactly <= 2 deterministic neighbors per entity."""
-    df = Q.entity_neighbor_sample(spark, sf_dir)
-    p = _plan(df)
-    assert "WindowGroupLimit" in p, p[:1500]
-    rows = df.collect()
-    from collections import Counter
-
-    per = Counter(r["entity_id"] for r in rows)
-    assert all(v <= 2 for v in per.values())
-    # re-run → bit-identical (hash order, no rand())
-    again = {tuple(r) for r in Q.entity_neighbor_sample(spark, sf_dir).collect()}
-    assert {tuple(r) for r in rows} == again
 
 
 def test_tpch_q5_star_join_broadcasts_dims(spark, sf_dir):

@@ -1354,3 +1354,14 @@ def test_term_ctor_rejects_complex_arg(trin):
             'SELECT ?v WHERE { ?s ex:name ?n . '
             'BIND(STRLANG(CONCAT(?n, "x"), "en") AS ?v) }',
         )
+
+
+def test_bracketed_iri_matches_compact_table(tri):
+    """A full bracketed IRI in a pattern matches the compact prefixed
+    form the triples table holds, in subject and object position."""
+    assert _rows(sparql_select(
+        tri, "SELECT ?o WHERE { <http://example.org/kg#a> ex:knows ?o }"
+    )) == {("ex:b",)}
+    assert _rows(sparql_select(
+        tri, "SELECT ?s WHERE { ?s ex:knows <http://example.org/kg#b> }"
+    )) == {("ex:a",)}

@@ -668,3 +668,46 @@ def test_store_emptied_by_delete_reads_empty(spark, tmp_path):
     assert df.columns == ["g", "s", "p", "o", "o_kind", "o_lang", "o_datatype"]
     r = store_update(spark, store, "DELETE WHERE { ?s ?p ?o }")
     assert r["ops"][0]["quads"] == 0
+
+
+def test_delete_where_matches_object_term_kind(spark, tmp_path):
+    """DELETE WHERE matches the object as an RDF term: a literal that
+    spells an IRI is not that IRI, a language tag and a datatype are
+    part of the literal, and ``quads`` counts the quads removed."""
+    store = str(tmp_path / "store")
+    store_update(spark, store, '''
+        INSERT DATA { GRAPH ex:g1 {
+          ex:a ex:p ex:b . ex:a ex:p "ex:b" .
+          ex:a ex:q "chat"@en . ex:a ex:q "chat"@fr .
+          ex:a ex:r "5"^^xsd:integer . ex:a ex:r "5" } }''')
+
+    def kinds():
+        return {
+            (r["p"], r["o"], r["o_kind"], r["o_lang"], r["o_datatype"])
+            for r in rdfio.read_nquads_store(spark, store).collect()
+        }
+
+    r = store_update(spark, store,
+                     'DELETE WHERE { GRAPH ex:g1 { ex:a ex:p "ex:b" } }')
+    assert r["ops"][0]["quads"] == 1
+    assert {k for k in kinds() if k[0] == "ex:p"} == {
+        ("ex:p", "ex:b", "iri", "", "")}
+    r = store_update(spark, store,
+                     'DELETE WHERE { GRAPH ex:g1 { ex:a ex:q "chat"@fr } }')
+    assert r["ops"][0]["quads"] == 1
+    r = store_update(spark, store,
+                     'DELETE WHERE { GRAPH ex:g1 { ex:a ex:r "5" } }')
+    assert r["ops"][0]["quads"] == 1
+    assert kinds() == {
+        ("ex:p", "ex:b", "iri", "", ""),
+        ("ex:q", "chat", "literal", "en", ""),
+        ("ex:r", "5", "literal", "", "xsd:integer"),
+    }
+    # a variable object deletes the matched quad with its own term kind
+    r = store_update(spark, store,
+                     "DELETE WHERE { GRAPH ex:g1 { ex:a ex:q ?o } }")
+    assert r["ops"][0]["quads"] == 1
+    r = store_update(spark, store,
+                     "DELETE WHERE { GRAPH ex:g1 { ex:a ex:p ex:b } }")
+    assert r["ops"][0]["quads"] == 1
+    assert kinds() == {("ex:r", "5", "literal", "", "xsd:integer")}
