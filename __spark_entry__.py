@@ -110,9 +110,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_prefix_dup_groups": Q.doc_prefix_dup_groups,           # truncation-dup detector (r6e)
         "doc_zorder_key": Q.doc_zorder_key,                         # Morton export layout key (r6e)
         "embedding_pq_codes": Q.embedding_pq_codes,                 # product quantization (r6e)
-        "embedding_knn_graph": Q.embedding_knn_graph,               # kNN graph build (r6e)
         "kg_entity_provenance": Q.kg_entity_provenance,             # proxy provenance audit (r6e)
-        # training-data-pipeline operators (task brief: dedup/ANN/text)
+        # training-data-pipeline operators (dedup/text)
         "dedup_exact": Q.dedup_exact,
         "contamination_check": Q.contamination_check,  # train/eval leak detector (r5)
         "dedup_minhash_pairs": Q.dedup_minhash_pairs,       # MinHash+LSH
@@ -126,13 +125,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_simhash_pairs": Q.dedup_simhash_pairs,
         "ngram_jaccard_pairs": Q.ngram_jaccard_pairs,
         "dedup_containment": Q.dedup_containment,  # asymmetric C>=0.8 (r6c)
-        "embedding_neardup": Q.embedding_neardup,
-        "embedding_neardup_trained": Q.embedding_neardup_trained,  # Lloyd-assigned cells
-        "ann_topk": Q.ann_topk,                             # brute-force ANN
-        "ann_ivf": Q.ann_ivf,                               # IVF-cell ANN
-        "ann_ivf_probe": Q.ann_ivf_probe,                   # trained IVF, nprobe=2
-        "ann_recall": Q.ann_recall,
-        "ann_mips": Q.ann_mips,                    # int-exact inner-product top-k (r6c)                         # recall@k eval (r3)
         "distinct_kmv_sketch": Q.distinct_kmv_sketch,       # KMV sketch (r3)
         "doc_split_assign": Q.doc_split_assign,             # det. train/val/test (r3)
         "doc_quota_sample": Q.doc_quota_sample,             # balanced per-stratum top-k (r5)
@@ -283,7 +275,6 @@ def oracle_sql() -> dict[str, str]:
         "kg_label_collisions": OS.KG_LABEL_COLLISIONS_SQL,
         "kg_component_size_hist": OS.KG_COMPONENT_SIZE_HIST_SQL,
         "embedding_pq_codes": OS.EMBEDDING_PQ_CODES_SQL,
-        "embedding_knn_graph": OS.EMBEDDING_KNN_GRAPH_SQL,
         "kg_entity_provenance": OS.ENTITY_PROVENANCE_SQL,
         "heavy_hitters_cms": OS.HEAVY_HITTERS_CMS_SQL,
         "bpe_merge_pairs": OS.BPE_MERGE_PAIRS_SQL,
@@ -309,13 +300,6 @@ def oracle_sql() -> dict[str, str]:
             "dedup_simhash_pairs": OS.SIMHASH_PAIRS_SQL,
             "ngram_jaccard_pairs": OS.NGRAM_JACCARD_SQL,
             "dedup_containment": OS.DEDUP_CONTAINMENT_SQL,
-            "embedding_neardup": OS.EMBEDDING_NEARDUP_SQL,
-            "embedding_neardup_trained": OS.EMBEDDING_NEARDUP_TRAINED_SQL,
-            "ann_topk": OS.ANN_TOPK_SQL,
-            "ann_ivf": OS.ANN_IVF_SQL,
-            "ann_ivf_probe": OS.ANN_IVF_PROBE_SQL,
-            "ann_recall": OS.ANN_RECALL_SQL,
-        "ann_mips": OS.ANN_MIPS_SQL,
             "distinct_kmv_sketch": OS.KMV_SKETCH_SQL,
             "doc_split_assign": OS.DOC_SPLIT_SQL,
             "doc_pack_assign": OS.DOC_PACK_SQL,

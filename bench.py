@@ -146,7 +146,6 @@ def _run_bench(sf_dir: str, cpus: int, rep: int = 1, with_queries: bool = True,
     bench_query_names = [
         "kg_spans_flat", "kg_media_features", "dedup_minhash_pairs",
         "dedup_simhash_pairs", "ngram_jaccard_pairs", "langid",
-        "ann_topk", "ann_ivf_probe", "embedding_neardup",
         "text_quality",
         # round-4 store query surface (amortize the memoized
         # pipeline chain across the three)

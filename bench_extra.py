@@ -26,7 +26,6 @@ import time
 BENCH_QUERIES = [
     "kg_spans_flat", "kg_media_features", "dedup_minhash_pairs",
     "dedup_simhash_pairs", "ngram_jaccard_pairs", "langid",
-    "ann_topk", "ann_ivf_probe", "embedding_neardup",
     "text_quality",
     "kg_sparql_topk", "kg_sameas_degree",
     "kg_entity_media", "doc_pack_assign",

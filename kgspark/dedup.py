@@ -507,75 +507,6 @@ def dedup_clusters(
     )
 
 
-# --- embedding cosine near-dup -------------------------------------------------------
-def embedding_neardup_trained(
-    embeddings: DataFrame, cosine_min: float = 0.25
-) -> DataFrame:
-    """Near-dup embedding pairs within TRAINED quantizer cells: every
-    vector re-assigned to its nearest integer-centroid cell
-    (ann.assign_cells — a Lloyd assignment step, not the fixture's
-    given labels), pair enumeration restricted to the assigned cell.
-    The cell is a similarity-preserving bucket derived from the data
-    itself; block sizes stay bounded by the quantizer granularity."""
-    from .ann import assign_cells
-    from .link import _cosine_batch_once
-
-    cells = assign_cells(embeddings)
-    e = (
-        embeddings.select("vec_id", "embedding")
-        .join(cells, "vec_id")
-        .select("vec_id", "cell", "embedding")
-    )
-    a = e.alias("a")
-    b = e.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.col("a.cell").alias("cell"),
-            # _once variant: keeps the threshold filter ABOVE the single
-            # ArrowEvalPython node (one kernel evaluation per pair)
-            _cosine_batch_once(F.col("a.embedding"), F.col("b.embedding")).alias(
-                "cosine"
-            ),
-        )
-        .filter(F.col("cosine") >= cosine_min)
-    )
-
-
-def embedding_neardup(embeddings: DataFrame, cosine_min: float = 0.25) -> DataFrame:
-    """Near-dup embedding pairs within an IVF cell (= label column),
-    double-precision cosine, threshold filter."""
-    from .link import _cosine_batch_once
-
-    e = embeddings.select("vec_id", "label", "embedding")
-    a = e.alias("a")
-    b = e.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.col("a.label").alias("label"),
-            # _once variant: keeps the threshold filter ABOVE the single
-            # ArrowEvalPython node (one kernel evaluation per pair)
-            _cosine_batch_once(F.col("a.embedding"), F.col("b.embedding")).alias(
-                "cosine"
-            ),
-        )
-        .filter(F.col("cosine") >= cosine_min)
-    )
-
-
 def contamination_flags(
     docs: DataFrame, eval_mod: int = 97, min_shared: int = 8
 ) -> DataFrame:

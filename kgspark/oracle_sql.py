@@ -742,7 +742,7 @@ WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
 
 
 # ---------------------------------------------------------------------------
-# Training-data-pipeline oracles (dedup / ANN / text analysis).
+# Training-data-pipeline oracles (dedup / text analysis).
 # Shared shingle CTE: token 3-gram codes (grammar.py NGRAM_N family).
 # ---------------------------------------------------------------------------
 _TC_NULL = (
@@ -926,86 +926,6 @@ FROM jac WHERE jaccard >= 0.01
 # side reaches the identical set via the prefix-filtered inverted-index
 # join over shingle codes — no source/lang blocking on either side.
 
-EMBEDDING_NEARDUP_SQL = """
-SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label AS label,
-       CAST(round(1e6 * list_cosine_similarity(a.embedding::DOUBLE[],
-                                               b.embedding::DOUBLE[])) AS BIGINT)
-         AS cosine_e6
-FROM embeddings a JOIN embeddings b
-  ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.25
-"""
-
-# Trained-quantizer near-dup: re-assign every vector to its nearest
-# integer centroid, then pair within the ASSIGNED cell.
-EMBEDDING_NEARDUP_TRAINED_SQL = """
-WITH vd AS (
-  SELECT vec_id, i AS dim,
-         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS q
-  FROM embeddings, UNNEST(generate_series(1, len(embedding))) t(i)
-),
-cd AS (
-  SELECT label, i AS dim,
-         CAST(sum(CAST(round(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT))
-              AS BIGINT) AS v
-  FROM embeddings, UNNEST(generate_series(1, len(embedding))) t(i)
-  GROUP BY label, i
-),
-sc AS (
-  SELECT vd.vec_id, cd.label,
-         CAST(sum(vd.q * cd.v) AS BIGINT) AS dot,
-         CAST(sum(vd.q * vd.q) AS BIGINT) AS qq
-  FROM vd JOIN cd USING (dim) GROUP BY 1, 2
-),
-cn AS (SELECT label, CAST(sum(v * v) AS BIGINT) AS vv FROM cd GROUP BY label),
-assigned AS (
-  SELECT vec_id, label AS cell FROM (
-    SELECT sc.vec_id, sc.label,
-           CAST(dot AS DOUBLE) / sqrt(CAST(qq AS DOUBLE) * CAST(vv AS DOUBLE))
-             AS ccos
-    FROM sc JOIN cn USING (label)
-  )
-  QUALIFY row_number() OVER (PARTITION BY vec_id
-                             ORDER BY ccos DESC, label ASC) = 1
-)
-SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, aa.cell AS cell,
-       CAST(round(1e6 * list_cosine_similarity(a.embedding::DOUBLE[],
-                                               b.embedding::DOUBLE[])) AS BIGINT)
-         AS cosine_e6
-FROM embeddings a
-JOIN assigned aa ON aa.vec_id = a.vec_id
-JOIN assigned ab ON ab.cell = aa.cell
-JOIN embeddings b ON b.vec_id = ab.vec_id AND a.vec_id < b.vec_id
-WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.25
-"""
-
-ANN_TOPK_SQL = """
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         row_number() OVER (
-           PARTITION BY q.vec_id
-           ORDER BY list_cosine_similarity(q.embedding::DOUBLE[],
-                                           c.embedding::DOUBLE[]) DESC,
-                    c.vec_id ASC) AS rank
-  FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
-  WHERE q.vec_id < 20
-) WHERE rank <= 5
-"""
-
-ANN_IVF_SQL = """
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         row_number() OVER (
-           PARTITION BY q.vec_id
-           ORDER BY list_cosine_similarity(q.embedding::DOUBLE[],
-                                           c.embedding::DOUBLE[]) DESC,
-                    c.vec_id ASC) AS rank
-  FROM embeddings q JOIN embeddings c
-    ON c.vec_id != q.vec_id AND c.label = q.label
-  WHERE q.vec_id < 20
-) WHERE rank <= 3
-"""
-
 TOP_TERMS_TFIDF_SQL = """
 WITH toks AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
@@ -1093,43 +1013,6 @@ SELECT n.lang,
 FROM kmv_n n LEFT JOIN kmv_kth k USING (lang)
 """
 
-ANN_RECALL_SQL = """
-WITH exact3 AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           row_number() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY list_cosine_similarity(q.embedding::DOUBLE[],
-                                             c.embedding::DOUBLE[]) DESC,
-                      c.vec_id ASC) AS rank
-    FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
-    WHERE q.vec_id < 20
-  ) WHERE rank <= 3
-), ivf3 AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           row_number() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY list_cosine_similarity(q.embedding::DOUBLE[],
-                                             c.embedding::DOUBLE[]) DESC,
-                      c.vec_id ASC) AS rank
-    FROM embeddings q JOIN embeddings c
-      ON c.vec_id != q.vec_id AND c.label = q.label
-    WHERE q.vec_id < 20
-  ) WHERE rank <= 3
-), hits AS (
-  SELECT e.query_id, count(*) AS n_hits
-  FROM exact3 e
-  JOIN ivf3 i ON i.query_id = e.query_id AND i.neighbor_id = e.neighbor_id
-  GROUP BY e.query_id
-)
-SELECT q.query_id,
-       CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-       CAST(floor(1e6 * coalesce(h.n_hits, 0) / 3) AS BIGINT) AS recall_e6
-FROM (SELECT DISTINCT query_id FROM exact3) q
-LEFT JOIN hits h USING (query_id)
-"""
-
 # O12 XSLT-analogue oracle: the template semantics restated directly
 # over the documents table (title = first 3 tokens, lang-tagged; plain
 # dc:language literal; xsd:integer size).
@@ -1149,52 +1032,6 @@ SELECT s, p, o, o_kind, o_lang, o_datatype FROM (
   SELECT 'doc://' || id, 'ex:size', CAST(len(toks) AS VARCHAR),
          'literal', '', 'xsd:integer' FROM d
 )
-"""
-
-ANN_IVF_PROBE_SQL = """
-WITH qd AS (
-  SELECT vec_id AS query_id, i AS dim,
-         CAST(round(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) AS q
-  FROM embeddings, UNNEST(generate_series(1, len(embedding))) t(i)
-  WHERE vec_id < 20
-),
-cd AS (
-  SELECT label, i AS dim,
-         CAST(sum(CAST(round(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT))
-              AS BIGINT) AS v
-  FROM embeddings, UNNEST(generate_series(1, len(embedding))) t(i)
-  GROUP BY label, i
-),
-sc AS (
-  SELECT qd.query_id, cd.label,
-         CAST(sum(qd.q * cd.v) AS BIGINT) AS dot,
-         CAST(sum(qd.q * qd.q) AS BIGINT) AS qq
-  FROM qd JOIN cd USING (dim) GROUP BY 1, 2
-),
-cn AS (SELECT label, CAST(sum(v * v) AS BIGINT) AS vv FROM cd GROUP BY label),
-cellcos AS (
-  SELECT query_id, label,
-         CAST(dot AS DOUBLE) / sqrt(CAST(qq AS DOUBLE) * CAST(vv AS DOUBLE))
-           AS ccos
-  FROM sc JOIN cn USING (label)
-),
-probed AS (
-  SELECT query_id, label FROM cellcos
-  QUALIFY row_number() OVER (PARTITION BY query_id
-                             ORDER BY ccos DESC, label ASC) <= 2
-)
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         row_number() OVER (
-           PARTITION BY q.vec_id
-           ORDER BY list_cosine_similarity(q.embedding::DOUBLE[],
-                                           c.embedding::DOUBLE[]) DESC,
-                    c.vec_id ASC) AS rank
-  FROM embeddings q
-  JOIN probed p ON p.query_id = q.vec_id
-  JOIN embeddings c ON c.label = p.label AND c.vec_id != q.vec_id
-  WHERE q.vec_id < 20
-) WHERE rank <= 3
 """
 
 _STOP_LIST = ", ".join(f"'{t}'" for t in G.STOP_TOKENS)
@@ -2344,31 +2181,6 @@ UNION ALL SELECT 3, lhs, rhs, cnt FROM m3
 """
 
 
-# r6c: integer-exact MIPS top-k — e3-quantized components, int64 dot
-# (scale e6), rank by (dot DESC, neighbor_id).
-ANN_MIPS_SQL = """
-WITH v AS (
-  SELECT vec_id,
-         list_transform(embedding,
-           x -> CAST(round(1000 * CAST(x AS DOUBLE)) AS BIGINT)) AS e3
-  FROM embeddings
-),
-q AS (SELECT * FROM v WHERE vec_id < 20),
-s AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         CAST(list_sum(list_transform(generate_series(1, len(q.e3)),
-                                      i -> q.e3[i] * c.e3[i]))
-              AS BIGINT) AS dot_e6
-  FROM q JOIN v c ON c.vec_id != q.vec_id
-)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, dot_e6 FROM (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-                               ORDER BY dot_e6 DESC, neighbor_id) AS rank
-  FROM s
-) WHERE rank <= 5
-"""
-
-
 # r6c: quality-aware keeper — the min-id clusters re-decided by
 # (quality_e6 DESC, doc_id ASC) within each cluster.
 DEDUP_KEEP_BEST_SQL = f"""
@@ -3158,21 +2970,6 @@ SELECT CAST(length(bin(sz)) AS INT) AS bucket,
        CAST(count(*) AS BIGINT) AS n_components,
        CAST(sum(sz) AS BIGINT) AS n_nodes
 FROM sizes GROUP BY 1
-"""
-
-
-# r6e: k-NN graph — same-cell top-3 neighbors for EVERY vector.
-EMBEDDING_KNN_GRAPH_SQL = """
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         row_number() OVER (
-           PARTITION BY q.vec_id
-           ORDER BY list_cosine_similarity(q.embedding::DOUBLE[],
-                                           c.embedding::DOUBLE[]) DESC,
-                    c.vec_id ASC) AS rank
-  FROM embeddings q JOIN embeddings c
-    ON c.vec_id != q.vec_id AND c.label = q.label
-) WHERE rank <= 3
 """
 
 

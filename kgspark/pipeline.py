@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import cc, extract, fixtures, generate, link
-from . import grammar as G
 
 TERM_COLS = ["s", "p", "o", "o_kind", "o_lang", "o_datatype"]
 
@@ -93,12 +92,8 @@ STAGES: dict[str, Stage] = {
     "base_triples": Stage(
         ("spans", "mentions"), lambda f, m: extract.base_quads(f, m), "doc"
     ),
-    # mention tokens are the ENTITY_TOKENS alternation by construction —
-    # pass the fixed dictionary, skipping the observed-vocab job
     "edges": Stage(
-        ("mentions", "embeddings"),
-        lambda m, e: link.scored_edges(m, e, vocab=sorted(G.ENTITY_TOKENS)),
-        "global",
+        ("mentions", "embeddings"), lambda m, e: link.scored_edges(m, e), "global"
     ),
     "labels": Stage(("edges", "mentions", "extra_triples"), _labels, "global"),
     # ONE aggregation per component feeds entities, attrs, props, media

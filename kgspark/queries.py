@@ -350,7 +350,7 @@ def tpch_q19(spark, sf_dir):
     )
 
 
-# --- training-data-pipeline operators (dedup / ANN / text analysis) ----------
+# --- training-data-pipeline operators (dedup / text analysis) ----------------
 def dedup_exact(spark, sf_dir):
     from . import dedup as D
 
@@ -396,44 +396,6 @@ def ngram_jaccard_pairs(spark, sf_dir):
     return pairs.select("doc_a", "doc_b", e6(F.col("jaccard")).alias("jaccard_e6"))
 
 
-def embedding_neardup(spark, sf_dir):
-    from . import dedup as D
-
-    p = D.embedding_neardup(_t(spark, sf_dir, "embeddings"))
-    return p.select(
-        "vec_a", "vec_b", "label",
-        F.round(F.col("cosine") * F.lit(1000000.0)).cast("bigint").alias("cosine_e6"),
-    )
-
-
-def embedding_neardup_trained(spark, sf_dir):
-    from . import dedup as D
-
-    p = D.embedding_neardup_trained(_t(spark, sf_dir, "embeddings"))
-    return p.select(
-        "vec_a", "vec_b", "cell",
-        F.round(F.col("cosine") * F.lit(1000000.0)).cast("bigint").alias("cosine_e6"),
-    )
-
-
-def ann_topk(spark, sf_dir):
-    from . import ann as A
-
-    return A.ann_topk(_t(spark, sf_dir, "embeddings"))
-
-
-def ann_ivf(spark, sf_dir):
-    from . import ann as A
-
-    return A.ann_ivf(_t(spark, sf_dir, "embeddings"))
-
-
-def ann_ivf_probe(spark, sf_dir):
-    from . import ann as A
-
-    return A.ann_ivf_probe(_t(spark, sf_dir, "embeddings"))
-
-
 def text_quality(spark, sf_dir):
     from . import textstats as TS
 
@@ -456,32 +418,6 @@ def langid(spark, sf_dir):
     from . import textstats as TS
 
     return TS.langid(spark, _t(spark, sf_dir, "documents"))
-
-
-def ann_recall(spark, sf_dir):
-    """ANN quality evaluation: per-query recall@k of the IVF
-    cell-restricted search against the exact brute-force top-k — the
-    standard accuracy metric for the similarity-search suite, computed
-    as one distributed job (semi-join hit counting, no collect).
-    Deterministic because both rankings are."""
-    from . import ann
-
-    emb = _t(spark, sf_dir, "embeddings")
-    k = 3
-    exact = ann.ann_topk(emb, n_queries=20, k=k).select("query_id", "neighbor_id")
-    ivf = ann.ann_ivf(emb, n_queries=20, k=k).select("query_id", "neighbor_id")
-    hits = (
-        exact.join(ivf, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-    qs = exact.select("query_id").distinct()
-    n_hits = F.coalesce("n_hits", F.lit(0)).cast("bigint")
-    return qs.join(hits, "query_id", "left").select(
-        "query_id",
-        n_hits.alias("n_hits"),
-        F.floor(F.lit(1e6) * n_hits / F.lit(k)).cast("bigint").alias("recall_e6"),
-    )
 
 
 def distinct_kmv_sketch(spark, sf_dir):
@@ -2397,12 +2333,6 @@ def bpe_vocab_merges(spark, sf_dir, rounds: int = 3, return_vocab: bool = False)
     return (merges, sym) if return_vocab else merges
 
 
-def ann_mips(spark, sf_dir):
-    from . import ann as A
-
-    return A.ann_mips(_t(spark, sf_dir, "embeddings"))
-
-
 def dedup_keep_best(spark, sf_dir):
     """Round-6c: QUALITY-AWARE dedup keeper — the near-dup clusters of
     dedup_clusters re-decided by content quality instead of min-id:
@@ -2579,7 +2509,7 @@ def term_pmi(spark, sf_dir):
 def embedding_srp_buckets(spark, sf_dir):
     """Round-6c: SIGN-RANDOM-PROJECTION LSH signatures over the
     embedding table — the hyperplane bucketing family for cosine
-    similarity (complementing the cell-grid in embedding_neardup):
+    similarity:
     bit k of the 16-bit signature is [Σ_d sign(k,d)·e3_d ≥ 0] with the
     ±1 hyperplane components minted from the grammar affine-hash
     family (grammar.SRP_*) — deterministic int64 arithmetic, so both
@@ -3452,15 +3382,6 @@ def kg_component_size_hist(spark, sf_dir):
             F.sum("size").cast("bigint").alias("n_nodes"),
         )
     )
-
-
-def embedding_knn_graph(spark, sf_dir):
-    """Round-6: k-NN graph construction over the embedding table (the
-    HNSW/GraphSAGE input structure) — see kgspark/ann.py knn_graph for
-    the cell-keyed self-join scale shape."""
-    from . import ann
-
-    return ann.knn_graph(_t(spark, sf_dir, "embeddings"), k=3)
 
 
 def kg_store_diff(spark, sf_dir):

@@ -159,8 +159,7 @@ def stream_entity_index(
     input_dir: str,
     cat,
     checkpoint_dir: str,
-    n_embeddings: int = 500,
-    embeddings_path: str | None = None,
+    embeddings_path: str,
 ) -> None:
     """Continuously-maintained entity index — the twined-daemon
     semantic (O32 triggers × O40–O43): each micro-batch of documents
@@ -185,12 +184,11 @@ def stream_entity_index(
     from-scratch batch run over all documents (tested)."""
     from . import cc as cc_mod
     from . import generate as gen
-    from . import grammar as G
     from . import link
     from .catalog import with_bucket
 
     n_buckets = cat.n_buckets
-    emb = spark.read.parquet(embeddings_path) if embeddings_path else None
+    emb = spark.read.parquet(embeddings_path)
 
     def process_batch(df, epoch_id: int) -> None:
         if df.isEmpty():
@@ -215,10 +213,7 @@ def stream_entity_index(
         else:
             m_all = m_batch
 
-        edges = link.scored_edges(
-            m_all, emb, n_embeddings=n_embeddings,
-            vocab=sorted(G.ENTITY_TOKENS),
-        )
+        edges = link.scored_edges(m_all, emb)
         norms = m_all.select(F.col("norm_text").alias("node")).distinct()
         labels_all = cc_mod.connected_components(edges, norms).localCheckpoint(
             eager=True

@@ -1,43 +1,10 @@
-"""ANN + text-analysis operators."""
+"""Text-analysis operators."""
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import functions as F
 
-from kgspark import ann as A
 from kgspark import textstats as TS
-
-
-def test_ann_topk_matches_numpy(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    got = A.ann_topk(emb, n_queries=5, k=3).collect()
-    rows = emb.collect()
-    mat = np.stack([np.array(r["embedding"], dtype=np.float64) for r in rows])
-    ids = np.array([r["vec_id"] for r in rows])
-    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    sims = mat @ mat.T
-    want = {}
-    for qi, q in enumerate(ids):
-        if q >= 5:
-            continue
-        order = sorted(
-            [(float(-sims[qi, j]), int(ids[j])) for j in range(len(ids)) if ids[j] != q]
-        )
-        want[q] = [n for _, n in order[:3]]
-    by_q = {}
-    for r in got:
-        by_q.setdefault(r["query_id"], []).append((r["rank"], r["neighbor_id"]))
-    for q, lst in by_q.items():
-        assert [n for _, n in sorted(lst)] == want[q]
-
-
-def test_ann_ivf_subset_of_cell(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    got = A.ann_ivf(emb, n_queries=5, k=3)
-    labels = {r["vec_id"]: r["label"] for r in emb.select("vec_id", "label").collect()}
-    for r in got.collect():
-        assert labels[r["query_id"]] == labels[r["neighbor_id"]]
 
 
 def test_quality_bounds(spark, sf_dir):
@@ -115,33 +82,6 @@ def test_curate_corpus_policy(spark, sf_dir):
     dups = {r["doc_id"] for r in cl.filter(F.col("doc_id") != F.col("keep_doc_id")).collect()}
     flagged = {r["doc_id"] for r in out.filter(F.col("reason") == "near_duplicate").collect()}
     assert flagged <= dups
-
-
-def test_ann_mips_is_jvm_only_and_exact(spark, sf_dir):
-    """MIPS scoring must stay whole-stage-codegen: the int64 dot via
-    zip_with/aggregate needs no Python evaluation (unlike the cosine
-    path's Pandas UDF)."""
-    from kgspark.ann import ann_mips
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    df = ann_mips(emb)
-    p = df._jdf.queryExecution().executedPlan().toString()
-    for bad in ["ArrowEvalPython", "BatchEvalPython", "MapInPandas"]:
-        assert bad not in p
-    # hand check one query against numpy on the same e3 grid
-    import numpy as np
-
-    rows = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
-            for r in emb.collect()}
-    e3 = {k: np.round(1000 * v).astype(np.int64) for k, v in rows.items()}
-    got = [(r["neighbor_id"], r["dot_e6"]) for r in
-           df.filter("query_id = 3").orderBy("rank").collect()]
-    full = sorted(
-        ((int(e3[3] @ v), -k) for k, v in e3.items() if k != 3),
-        reverse=True,
-    )[:5]
-    want = [(-nk, d) for d, nk in full]
-    assert [g for g in got] == want
 
 
 def test_term_pmi_hand_case(spark, tmp_path):

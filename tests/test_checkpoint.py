@@ -179,7 +179,7 @@ def test_entity_media_stage_materialized_and_correct(spark, sf_dir, clean_run):
     flat = fixtures.flat_spans(fixtures.with_spans(docs))
     m = extract.mentions_df(flat).localCheckpoint()
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    edges = link.scored_edges(m, emb, n_embeddings=500)
+    edges = link.scored_edges(m, emb)
     labels = cc.connected_components(
         edges, m.select(F.col("norm_text").alias("node")).distinct()
     )

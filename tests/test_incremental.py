@@ -13,7 +13,7 @@ def _stage(spark, docs):
     flat = fixtures.flat_spans(fixtures.with_spans(docs))
     m = extract.mentions_df(flat).localCheckpoint()
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    edges = link.scored_edges(m, emb, n_embeddings=500).localCheckpoint()
+    edges = link.scored_edges(m, emb).localCheckpoint()
     labels = cc.connected_components(
         edges, m.select(F.col("norm_text").alias("node")).distinct()
     ).localCheckpoint()

@@ -2,7 +2,12 @@
 
 from __future__ import annotations
 
+from itertools import combinations
+
+import pandas as pd
+
 from kgspark import extract, fixtures, grammar as G, link
+from tests.oracle_kg import oracle_norm_edges, vec_id
 
 
 def test_tokcode_collision_free():
@@ -24,29 +29,28 @@ def test_scored_edges_match_oracle(spark, sf_dir, oracle):
     assert got == want
 
 
-def test_candidates_are_blocking_superset(spark, sf_dir, oracle):
-    """Every oracle edge must be generated as a candidate (recall=1 of
-    the 1-token-band blocking)."""
-    m = extract.mentions_df(fixtures.flat_spans(spark, sf_dir))
-    norms = link.distinct_norms(m, 500)
-    cands = {
-        (r["norm_a"], r["norm_b"]) for r in link.candidate_pairs(norms).collect()
-    }
-    want = {(r.norm_a, r.norm_b) for r in oracle["edges"].itertuples()}
-    assert want <= cands
-
-
-def test_block_cap_drops_hot_tokens(spark):
-    rows = [(f"n{i} hot", ) for i in range(20)]
-    norms_df = spark.createDataFrame(rows, "norm_text string").selectExpr(
-        "norm_text", "array_distinct(split(norm_text, ' ')) AS tokset",
-        "0 AS vec_id",
+def test_block_cap_drops_hot_tokens(spark, monkeypatch):
+    """The inverted join caps each token's posting list at BLOCK_CAP.
+    Every set below holds ``hot``, the lowest token in bit order, so
+    every cross-set pair is emitted at ``hot``: uncapped the edges equal
+    the oracle's, and a cap below ``hot``'s block drops them all."""
+    hot, *rest = link.VOCAB
+    norms = [f"{hot} {t}" for t in rest[:6]] + [
+        f"{hot} {a} {b}" for a, b in zip(rest[:5], rest[1:6])
+    ]
+    m = spark.createDataFrame([(n,) for n in norms], "norm_text string")
+    # identical vectors: cosine 1 everywhere, so the J >= 0.5 band is in
+    emb_rows = [(i, [1.0, 0.5, 0.25]) for i in range(50)]
+    emb = spark.createDataFrame(emb_rows, "vec_id long, embedding array<float>")
+    want = oracle_norm_edges(
+        pd.DataFrame({"norm_text": norms}),
+        pd.DataFrame(emb_rows, columns=["vec_id", "embedding"]),
     )
-    # cap below the hot-token block size: 'hot' block (20) is dropped,
-    # singleton 'n{i}' blocks survive → no pairs at all
-    assert link.candidate_pairs(norms_df, block_cap=10).count() == 0
-    # uncapped: the hot token pairs everything
-    assert link.candidate_pairs(norms_df, block_cap=None).count() == 20 * 19 // 2
+    monkeypatch.setattr(link, "CART_GROUPS_MAX", -1)  # force the index join
+    got = {(r["norm_a"], r["norm_b"]) for r in link.scored_edges(m, emb).collect()}
+    assert got == set(zip(want["norm_a"], want["norm_b"])) and got
+    monkeypatch.setattr(link, "BLOCK_CAP", len(norms) - 1)
+    assert link.scored_edges(m, emb).count() == 0
 
 
 def test_acceptance_thresholds(spark, sf_dir, oracle):
@@ -89,71 +93,78 @@ def test_explicit_sameas_merges_components(spark, sf_dir):
 
 
 def test_vocab_probe_is_driver_bounded(spark, monkeypatch):
-    """Round-3 verdict #1: with vocab=None on an OPEN vocabulary
-    (> 62 tokens) the driver must never receive more than 63 rows from
-    the probe — the old unbounded distinct().collect() shipped the
-    whole token dictionary driver-side.  Spy on DataFrame.collect and
-    record every result size."""
-    # 80-token open vocabulary (tokcode-collision-free: distinct
-    # first-two chars), pairwise-overlapping norms
-    def tok(i):
-        return f"{chr(97 + i // 26)}{chr(97 + i % 26)}tok"
-
-    rows = [(f"{tok(i)} {tok(i + 1)}",) for i in range(79)]
+    """Every driver fetch of scored_edges is bounded: the one stats row
+    and the embedding dictionary of at most its n rows.  Spy on
+    DataFrame.collect and toArrow and record every result size."""
+    v = link.VOCAB
+    rows = [(f"{v[i]} {v[i + 1]}",) for i in range(len(v) - 1)]
+    rows += [(f"{v[i]} {v[i + 1]} {v[i + 2]}",) for i in range(len(v) - 2)]
     m = spark.createDataFrame(rows, "norm_text string")
 
     # patch the RUNTIME DataFrame class (pyspark.sql.classic on 4.x —
     # the pyspark.sql.DataFrame facade is never dispatched through)
     cls = type(m)
-    collects: list[tuple[list[str], int]] = []
-    orig = cls.collect
+    fetches: list[tuple[str, list[str], int]] = []
+    orig_collect, orig_arrow = cls.collect, cls.toArrow
 
-    def spy(self):
-        rows = orig(self)
-        collects.append((list(self.columns), len(rows)))
-        return rows
+    def spy_collect(self):
+        out = orig_collect(self)
+        fetches.append(("collect", list(self.columns), len(out)))
+        return out
 
-    monkeypatch.setattr(cls, "collect", spy)
+    def spy_arrow(self):
+        out = orig_arrow(self)
+        fetches.append(("toArrow", list(self.columns), out.num_rows))
+        return out
+
+    monkeypatch.setattr(cls, "collect", spy_collect)
+    monkeypatch.setattr(cls, "toArrow", spy_arrow)
+    n = 500
     emb = spark.createDataFrame(
-        [(i, [float(i), 1.0, 0.5]) for i in range(500)],
+        [(i, [float(i), 1.0, 0.5]) for i in range(n)],
         "vec_id long, embedding array<float>",
     )
-    out = link.scored_edges(m, emb, n_embeddings=500)
-    n = len(orig(out))  # count via un-spied collect
-    assert n >= 0
-    # two deliberate bounded collects are allowed: the token PROBE
-    # (≤ 63 rows by construction) and the r7 embedding-DICTIONARY
-    # fetch for the zero-join cosine kernel (≤ KGSPARK_EMB_DICT_MAX,
-    # here n_embeddings = 500).  Anything else is a regression.
-    probe_sizes = [n for cols, n in collects if cols == ["tok"]]
-    dict_sizes = [n for cols, n in collects if cols == ["vec_id", "embedding"]]
-    other = [(c, n) for c, n in collects
-             if c not in (["tok"], ["vec_id", "embedding"])]
-    assert probe_sizes, "expected the probe collect to run"
-    assert max(probe_sizes) <= 63, f"probe shipped {max(probe_sizes)} rows"
-    assert all(n <= 500 for n in dict_sizes)
-    assert not other, f"unexpected driver collects: {other}"
+    out = link.scored_edges(m, emb)
+    assert len(orig_collect(out)) > 0  # un-spied
+    assert sorted(fetches) == [
+        ("collect", ["n", "unk"], 1),
+        ("toArrow", ["vec_id", "embedding"], n),
+    ]
 
 
-def test_sparse_vec_id_space_falls_back_to_join_scorer(spark):
-    """r7: the in-kernel dictionary is indexed by vec_id, so a SPARSE
-    id space (few rows, huge max id) must take the join scorer even
-    though the row count passes the dictionary guard — and both
-    scorers must agree exactly."""
-    rows = [(f"alpha t{i}",) for i in range(6)] + [("alpha t0 extra",)]
-    m = spark.createDataFrame(rows, "norm_text string")
-    # 40 embeddings, ids scattered up to ~10^9: mat would be 10^9 rows
-    emb = spark.createDataFrame(
-        [(i * 27_000_011, [float((i * 7) % 5) + 0.1, 1.0, 0.5])
-         for i in range(40)],
-        "vec_id long, embedding array<float>",
+def test_sparse_vec_id_space_ignores_out_of_range_rows(spark):
+    """vec_id is fingerprint % n_emb, so no mention references a row
+    whose id lies outside [0, n_emb): such rows are ignored (no matrix
+    of max-id rows), and the edges equal the oracle's, which reads only
+    in-range rows — whatever the out-of-range rows hold."""
+    n_in, n_out = 30, 10
+    in_rows = [(i, [1.0, 2.0 * (i % 3), 0.5]) for i in range(n_in)]
+
+    def table(fill):
+        out_rows = [(k * 27_000_011, fill) for k in range(1, n_out + 1)]
+        return in_rows + out_rows
+
+    # norms whose vec id hits an in-range row of the 40-row table
+    toks = link.VOCAB[:8]
+    norms = [
+        " ".join(c)
+        for k in (2, 3)
+        for c in combinations(toks, k)
+        if vec_id(" ".join(c), n_in + n_out) < n_in
+    ]
+    m = spark.createDataFrame([(x,) for x in norms], "norm_text string")
+    ddl = "vec_id long, embedding array<float>"
+
+    def edges(rows):
+        return {
+            (r["norm_a"], r["norm_b"])
+            for r in link.scored_edges(m, spark.createDataFrame(rows, ddl)).collect()
+        }
+
+    got = edges(table([0.0, 1.0, 0.0]))
+    want = oracle_norm_edges(
+        pd.DataFrame({"norm_text": norms}),
+        pd.DataFrame(table([0.0, 1.0, 0.0]), columns=["vec_id", "embedding"]),
     )
-    sparse = link.scored_edges(m, emb, n_embeddings=40)
-    # the join path is the pre-r7 scorer (already oracle-covered);
-    # here: it runs without a giant matrix allocation and is stable
-    a = sorted(map(tuple, sparse.collect()))
-    b = sorted(map(tuple, link.scored_edges(m, emb, n_embeddings=40).collect()))
-    assert a == b
-    # and the prefilter reports the sparse space as not-applicable
-    mat, acc = link._emb_prefilter(emb, 40)
-    assert mat is None and acc is None
+    assert got == set(zip(want["norm_a"], want["norm_b"])) and got
+    assert edges(table([1.0, 0.0, 0.5])) == got

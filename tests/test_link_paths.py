@@ -1,75 +1,22 @@
-"""The two scored_edges implementations (int64 bitmask for ≤62-token
-dictionaries; sorted-int-array general path) must produce identical
-edge sets; the general path must also handle a >62-token vocabulary."""
+"""scored_edges' two pair-discovery paths (broadcast bitmask cartesian
+and salted inverted join) produce identical edges, and a mention token
+outside the grammar's closed vocabulary raises."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import pytest
 
-from kgspark import extract, fixtures, grammar as G, link
+from kgspark import extract, fixtures, link
 
 
-def test_array_equals_bitmask_on_fixture(spark, sf_dir):
-    m = extract.mentions_df(fixtures.flat_spans(spark, sf_dir))
-    norms = link.distinct_norms(m, 500).localCheckpoint()
+def test_non_grammar_token_raises(spark, sf_dir):
+    """Token sets are bitmasks over grammar.ENTITY_TOKENS: a token
+    outside it raises, counting the offending distinct token sets."""
+    rows = [("data zzz",), ("zzz",), ("data key",), ("key data",)]
+    m = spark.createDataFrame(rows, "norm_text string")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    vocab = [
-        r["tok"]
-        for r in norms.select(F.explode("tokset").alias("tok")).distinct()
-        .orderBy("tok").collect()
-    ]
-    bm = {
-        (r["norm_a"], r["norm_b"], round(r["jaccard"], 9))
-        for r in link._scored_edges_bitmask(
-            norms, emb, vocab, G.COSINE_JACCARD_MIN, None
-        ).collect()
-    }
-    ar = {
-        (r["norm_a"], r["norm_b"], round(r["jaccard"], 9))
-        for r in link._scored_edges_array(
-            norms, emb, G.COSINE_JACCARD_MIN, None
-        ).collect()
-    }
-    assert bm == ar and len(bm) > 0
-
-
-def test_wide_vocabulary_takes_array_path(spark, sf_dir):
-    """Synthetic mentions over a 70-token vocabulary route through the
-    array path and still link exact-duplicate token sets."""
-    rows = []
-    for i in range(70):
-        rows.append((f"d{i}", "en", "s0", 0, 0, f"w{i:02d} shared", f"w{i:02d} shared", f"ex://s0/w{i:02d}_shared"))
-    # two norms with identical token sets in different order → J=1 edge
-    rows.append(("dx", "en", "s1", 0, 0, "w00 w01", "w00 w01", "ex://s1/w00_w01"))
-    rows.append(("dy", "en", "s2", 0, 0, "w01 w00", "w01 w00", "ex://s2/w01_w00"))
-    m = spark.createDataFrame(
-        rows,
-        "doc_id string, lang string, source string, span_pos int, "
-        "mention_ord int, mention_text string, norm_text string, mention_iri string",
-    )
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    edges = {(r["norm_a"], r["norm_b"]) for r in link.scored_edges(m, emb).collect()}
-    assert ("w00 w01", "w01 w00") in edges
-
-
-def test_incomplete_caller_vocab_falls_back_to_array_path(spark, sf_dir):
-    """A caller-supplied vocab missing observed tokens must NOT corrupt
-    the bitmask join (array_position=0 → bit -1 → silent Jaccard skew);
-    scored_edges detects the unknown token and falls back to the exact
-    array path, producing the same edges as the self-derived vocab."""
-    m = extract.mentions_df(fixtures.flat_spans(spark, sf_dir)).localCheckpoint()
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    good = {
-        (r["norm_a"], r["norm_b"])
-        for r in link.scored_edges(m, emb).collect()
-    }
-    # drop a token that definitely occurs ('data' is in every fixture)
-    bad_vocab = sorted(set(G.ENTITY_TOKENS) - {"data"})
-    got = {
-        (r["norm_a"], r["norm_b"])
-        for r in link.scored_edges(m, emb, vocab=bad_vocab).collect()
-    }
-    assert got == good and len(good) > 0
+    with pytest.raises(ValueError, match=r"^2 distinct mention token sets"):
+        link.scored_edges(m, emb)
 
 
 def test_cartesian_and_index_bitmask_paths_agree(spark, sf_dir, monkeypatch):

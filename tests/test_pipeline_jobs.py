@@ -3,7 +3,7 @@
 Under AQE every ``localCheckpoint(eager=False)`` runs its upstream
 shuffle stages when it is called, so each checkpoint in a chain adds
 serial jobs and a blocking driver round-trip.  A ``run_pipeline`` build
-plus one ``triples.count()`` at sf0.001 submits 31 jobs; the chain of
+plus one ``triples.count()`` at sf0.001 submits 29 jobs; the chain of
 membership, classes, attrs and quads checkpoints that the one-pass
 generate stage replaced submitted 42, because each checkpoint re-ran the
 joins below it.  The bound leaves room for a few jobs of AQE variation,

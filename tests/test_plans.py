@@ -91,41 +91,6 @@ def test_minhash_band_join_is_slim(spark, sf_dir):
             assert "shingles" not in l, "band join carries shingle arrays:\n" + l
 
 
-def test_ann_ivf_probe_restricts_before_scoring(spark, sf_dir):
-    """Round-2 verdict #1: the trained-IVF probe must shrink the
-    candidate set BEFORE the cosine kernel runs.  Locked invariants:
-    no nested-loop join over the full corpus anywhere in the plan, and
-    exactly one ArrowEvalPython whose inputs are the already-probed
-    (BroadcastHashJoin-ed) candidate rows."""
-    from kgspark import ann
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    p = _plan(ann.ann_ivf_probe(emb))
-    assert "BroadcastNestedLoopJoin" not in p, (
-        "probe path scores the full corpus x queries cross product"
-    )
-    assert p.count("ArrowEvalPython") == 1
-    # the kernel must sit ABOVE the probed join: every join appears
-    # later in the (top-down printed) plan than the Arrow operator
-    lines = p.splitlines()
-    arrow_at = next(i for i, l in enumerate(lines) if "ArrowEvalPython" in l)
-    join_ats = [i for i, l in enumerate(lines) if "BroadcastHashJoin" in l]
-    assert join_ats and min(join_ats) > arrow_at, (
-        "cosine kernel is not above the probed candidate joins"
-    )
-
-
-def test_embedding_neardup_single_kernel_eval(spark, sf_dir):
-    """Round-2 verdict #2: the threshold filter must not duplicate the
-    cosine kernel (filter pushed below the projection = two
-    ArrowEvalPython nodes each scoring every pair)."""
-    from kgspark import dedup as D
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    for df in [D.embedding_neardup(emb), D.embedding_neardup_trained(emb)]:
-        assert _plan(df).count("ArrowEvalPython") == 1
-
-
 def test_tpch_q3_no_eager_collect(spark, sf_dir):
     """Plan construction must not run a driver-side collect (the
     segment pick is a lazy broadcast 1-row aggregate, not a scalar

@@ -37,7 +37,7 @@ FAST = [
     # round-6e additions
     "kg_entity_provenance", "dedup_winnow_pairs", "kg_void_summary",
     "kg_graph_hash", "doc_zorder_key", "embedding_pq_codes",
-    "kg_store_merge", "kg_component_size_hist", "embedding_knn_graph",
+    "kg_store_merge", "kg_component_size_hist",
     "kg_store_diff", "kg_parse_error_stats", "embedding_dim_stats",
     "kg_attr_coverage", "kg_label_collisions", "doc_prefix_dup_groups",
 ]

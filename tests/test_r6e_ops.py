@@ -279,21 +279,6 @@ def test_runtime_bloom_filter_prunes_fact_side(spark, sf_dir):
             spark.conf.set(k, v)
 
 
-def test_knn_graph_invariants(spark, sf_dir):
-    """Every vector gets exactly k=3 same-cell neighbors, no self
-    edges, ranks dense 1..3."""
-    from kgspark.queries import embedding_knn_graph
-
-    rows = embedding_knn_graph(spark, sf_dir).collect()
-    import collections
-
-    per_q = collections.defaultdict(list)
-    for r in rows:
-        assert r["query_id"] != r["neighbor_id"]
-        per_q[r["query_id"]].append(r["rank"])
-    assert all(sorted(v) == [1, 2, 3] for v in per_q.values())
-
-
 def test_component_size_hist_conserves_nodes(spark, sf_dir):
     from kgspark.queries import kg_component_size_hist, kg_sameas_degree
 

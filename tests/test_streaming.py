@@ -159,7 +159,7 @@ def test_stream_entity_index_equals_batch(spark, sf_dir, doc_stream_dir, tmp_pat
     """O32 × O40: the continuously-maintained entity index (per-batch
     incremental regeneration) converges to the from-scratch batch index
     after the stream drains — attrs AND props."""
-    from kgspark import cc, generate as gen, grammar as G, link
+    from kgspark import cc, generate as gen, link
     from kgspark.catalog import ParquetCatalog
 
     cat = ParquetCatalog(str(tmp_path / "wh_idx"), 8)
@@ -175,8 +175,7 @@ def test_stream_entity_index_equals_batch(spark, sf_dir, doc_stream_dir, tmp_pat
     flat = fixtures.flat_spans(fixtures.with_spans(docs))
     m = extract.mentions_df(flat).localCheckpoint()
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    edges = link.scored_edges(m, emb, n_embeddings=500,
-                              vocab=sorted(G.ENTITY_TOKENS))
+    edges = link.scored_edges(m, emb)
     labels = cc.connected_components(
         edges, m.select(F.col("norm_text").alias("node")).distinct()
     ).localCheckpoint()
@@ -197,3 +196,35 @@ def test_stream_entity_index_equals_batch(spark, sf_dir, doc_stream_dir, tmp_pat
         embeddings_path=f"{sf_dir}/embeddings.parquet",
     )
     assert {tuple(r) for r in cat.read(spark, "live_attrs").collect()} == want_attrs
+
+
+def test_stream_entity_index_links_with_table_row_count(
+    spark, sf_dir, doc_stream_dir, tmp_path
+):
+    """Streaming assigns vec ids modulo the embedding table's row count,
+    as a batch build does: on a 300-row table the drained live labels
+    equal the batch labels (a fixed modulus of 500 linked extra
+    pairs)."""
+    from kgspark import cc, link
+    from kgspark.catalog import ParquetCatalog
+
+    emb_path = str(tmp_path / "emb300")
+    spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+        "vec_id < 300"
+    ).write.parquet(emb_path)
+    cat = ParquetCatalog(str(tmp_path / "wh_300"), 8)
+    S.stream_entity_index(
+        spark, doc_stream_dir, cat, str(tmp_path / "scp_300"),
+        embeddings_path=emb_path,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    m = extract.mentions_df(fixtures.flat_spans(fixtures.with_spans(docs)))
+    edges = link.scored_edges(m, spark.read.parquet(emb_path))
+    labels = cc.connected_components(
+        edges, m.select(F.col("norm_text").alias("node")).distinct()
+    )
+    want = {tuple(r) for r in labels.collect()}
+    live = cat.read(spark, "live_labels").select(*labels.columns)
+    got = {tuple(r) for r in live.collect()}
+    assert got == want and len(want) > 0
