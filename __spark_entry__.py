@@ -97,7 +97,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tpch_q14": Q.tpch_q14,                                     # pushed month filter
         "tpch_q19": Q.tpch_q19,                                     # OR-of-conjunctions join
         # store maintenance, KG quality metrics and corpus layout (r6e)
-        "dedup_winnow_pairs": Q.dedup_winnow_pairs,                 # MOSS winnowing pairs (r6e)
         "kg_store_merge": Q.kg_store_merge,                         # CDC MERGE upsert into store (r6e)
         "kg_store_diff": Q.kg_store_diff,                           # anti-entropy replica diff (r6e)
         "kg_parse_error_stats": Q.kg_parse_error_stats,             # ingest drop-rate metric (r6e)
@@ -111,32 +110,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_zorder_key": Q.doc_zorder_key,                         # Morton export layout key (r6e)
         "embedding_pq_codes": Q.embedding_pq_codes,                 # product quantization (r6e)
         "kg_entity_provenance": Q.kg_entity_provenance,             # proxy provenance audit (r6e)
-        # training-data-pipeline operators (dedup/text)
-        "dedup_exact": Q.dedup_exact,
-        "contamination_check": Q.contamination_check,  # train/eval leak detector (r5)
-        "dedup_minhash_pairs": Q.dedup_minhash_pairs,       # MinHash+LSH
-        "dedup_clusters": Q.dedup_clusters,
-        "dedup_keep_best": Q.dedup_keep_best,      # quality-aware keeper (r6c)                 # near-dup keeper decision
-        "dedup_rate_by_source": Q.dedup_rate_by_source,     # per-source drop metric (r5)
-        "para_dedup": Q.para_dedup,                         # paragraph boilerplate pairs (r6)
+        # training-data-pipeline operators (text)
         "doc_repetition_stats": Q.doc_repetition_stats,     # Gopher repetition flags (r6b)
-        "boilerplate_rate": Q.boilerplate_rate,             # exact cross-doc para dedup (r6b)
-        "doc_simhash": Q.doc_simhash,
-        "dedup_simhash_pairs": Q.dedup_simhash_pairs,
-        "ngram_jaccard_pairs": Q.ngram_jaccard_pairs,
-        "dedup_containment": Q.dedup_containment,  # asymmetric C>=0.8 (r6c)
-        "distinct_kmv_sketch": Q.distinct_kmv_sketch,       # KMV sketch (r3)
         "doc_split_assign": Q.doc_split_assign,             # det. train/val/test (r3)
         "doc_quota_sample": Q.doc_quota_sample,             # balanced per-stratum top-k (r5)
         "doc_resample": Q.doc_resample,                     # source-weighted resampling (r6)
         "doc_bigram_surprisal": Q.doc_bigram_surprisal,     # integer perplexity proxy (r6)
         "doc_chunk": Q.doc_chunk,                           # RAG token-window chunking (r6)
-        "dedup_ngram_coverage": Q.dedup_ngram_coverage,     # dup-shingle fraction (r6)
         "rdf_turtle_bnode_roundtrip": Q.rdf_turtle_bnode_roundtrip,  # [ ] / ( ) forms (r6)
         "term_pmi": Q.term_pmi,                        # log-domain PMI collocations (r6c)
         "embedding_srp_buckets": Q.embedding_srp_buckets,  # SRP-LSH histogram (r6c)
-        "dedup_incremental_pairs": Q.dedup_incremental_pairs,  # arriving-batch LSH (r6c)
-        "dedup_minhash_calibration": Q.dedup_minhash_calibration,  # estimator error (r6c)
         "doc_surprisal_heldout": Q.doc_surprisal_heldout,  # cross-split LM filter (r6c)
         "kg_sparql_values": Q.kg_sparql_values,        # VALUES + MIN/MAX aggs (r6c)
         "kg_sparql_path_nps": Q.kg_sparql_path_nps,    # negated property set (r6c)
@@ -147,7 +130,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_type_token_ratio": Q.doc_type_token_ratio,  # lexical diversity e6 (r6c)
         "kg_class_cooccurrence": Q.kg_class_cooccurrence,  # schema-level affinity (r6c)
         "vocab_growth": Q.vocab_growth,                # Heaps-law growth curve (r6c)
-        "dedup_cluster_size_hist": Q.dedup_cluster_size_hist,  # cluster-size readout (r6c)
         "corpus_stats_by_source": Q.corpus_stats_by_source,  # per-source corpus card (r6c)
         "embedding_quantize": Q.embedding_quantize,          # int8 SQ + recon error (r6)
         "kg_label_index": Q.kg_label_index,                    # O7 inverted label index (r6c)
@@ -159,8 +141,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_sparql_ask": Q.kg_sparql_ask,                    # ASK existence probes (r6)
         "kg_sparql_describe": Q.kg_sparql_describe,          # DESCRIBE outgoing edges (r6)
         "doc_pack_assign": Q.doc_pack_assign,               # sequence packing (r4)
-        "training_export": Q.training_export,               # curate→split→pack composed (r4)
-        "training_export_clean": Q.training_export_clean,   # + contamination gate (r5)
         "top_terms_tfidf": Q.top_terms_tfidf,               # int-exact tf-idf top-k (r3)
         "text_quality": Q.text_quality,
         "token_counts": Q.token_counts,
@@ -169,7 +149,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "langid_confusion": Q.langid_confusion,    # classifier eval matrix (r6c)                                 # full oracle (r2)
         "pii_scrub": Q.pii_scrub,                           # PII redaction (r6)
         "pii_rate_by_source": Q.pii_rate_by_source,         # PII filter-rate metric (r6)
-        "curate_corpus": Q.curate_corpus,                   # composed keep/drop decision
         # RDF serialization round-trips (O9-O11 reference parity)
         "rdf_ntriples_roundtrip": Q.rdf_ntriples_roundtrip,
         "rdf_turtle_roundtrip": Q.rdf_turtle_roundtrip,
@@ -237,18 +216,13 @@ def oracle_sql() -> dict[str, str]:
         "kg_sparql_term_ctors": OS.SPARQL_TERM_CTORS_SQL,
         "kg_sparql_construct_where": OS.SPARQL_CONSTRUCT_WHERE_SQL,
         "kg_sparql_load": OS.KG_SPARQL_LOAD_SQL,
-        "contamination_check": OS.CONTAMINATION_SQL,
-        "training_export_clean": OS.TRAINING_EXPORT_CLEAN_SQL,
         "doc_quota_sample": OS.DOC_QUOTA_SAMPLE_SQL,
         "doc_resample": OS.DOC_RESAMPLE_SQL,
         "doc_bigram_surprisal": OS.DOC_BIGRAM_SURPRISAL_SQL,
         "doc_chunk": OS.DOC_CHUNK_SQL,
-        "dedup_ngram_coverage": OS.DEDUP_NGRAM_COVERAGE_SQL,
         "rdf_turtle_bnode_roundtrip": OS.RDF_TURTLE_BNODE_SQL,
         "term_pmi": OS.TERM_PMI_SQL,
         "embedding_srp_buckets": OS.EMBEDDING_SRP_SQL,
-        "dedup_incremental_pairs": OS.DEDUP_INCREMENTAL_SQL,
-        "dedup_minhash_calibration": OS.DEDUP_MINHASH_CALIB_SQL,
         "doc_surprisal_heldout": OS.DOC_SURPRISAL_HELDOUT_SQL,
         "kg_sparql_values": OS.SPARQL_VALUES_SQL,
         "kg_sparql_path_nps": OS.SPARQL_PATH_NPS_SQL,
@@ -259,12 +233,10 @@ def oracle_sql() -> dict[str, str]:
         "doc_type_token_ratio": OS.DOC_TTR_SQL,
         "kg_class_cooccurrence": OS.KG_CLASS_COOCC_SQL,
         "vocab_growth": OS.VOCAB_GROWTH_SQL,
-        "dedup_cluster_size_hist": OS.DEDUP_CLUSTER_HIST_SQL,
         "corpus_stats_by_source": OS.CORPUS_STATS_SQL,
         "embedding_quantize": OS.EMBEDDING_QUANTIZE_SQL,
         "kg_label_index": OS.KG_LABEL_INDEX_SQL,
         "doc_search_topk": OS.DOC_SEARCH_TOPK_SQL,
-        "dedup_winnow_pairs": OS.DEDUP_WINNOW_SQL,
         "kg_void_summary": OS.KG_VOID_SUMMARY_SQL,
         "kg_graph_hash": OS.KG_GRAPH_HASH_SQL,
         "kg_store_merge": OS.KG_STORE_MERGE_SQL,
@@ -282,28 +254,15 @@ def oracle_sql() -> dict[str, str]:
         "bpe_encode_counts": OS.BPE_ENCODE_SQL,
         "kg_sparql_ask": OS.SPARQL_ASK_SQL,
         "kg_sparql_describe": OS.SPARQL_DESCRIBE_SQL,
-        "dedup_rate_by_source": OS.DEDUP_RATE_BY_SOURCE_SQL,
-        "para_dedup": OS.PARA_DEDUP_SQL,
         "doc_repetition_stats": OS.DOC_REPETITION_SQL,
-        "boilerplate_rate": OS.BOILERPLATE_RATE_SQL,
         "kg_media_features": OS.MEDIA_FEATURES_SQL,
         "doc_prefix_dup_groups": OS.DOC_PREFIX_DUP_SQL,
         "doc_zorder_key": OS.DOC_ZORDER_KEY_SQL,
     }
     out.update(
         {
-            "dedup_exact": OS.DEDUP_EXACT_SQL,
-            "dedup_minhash_pairs": OS.MINHASH_LSH_PAIRS_SQL,
-            "dedup_clusters": OS.DEDUP_CLUSTERS_SQL,
-            "dedup_keep_best": OS.DEDUP_KEEP_BEST_SQL,
-            "doc_simhash": OS.DOC_SIMHASH_SQL,
-            "dedup_simhash_pairs": OS.SIMHASH_PAIRS_SQL,
-            "ngram_jaccard_pairs": OS.NGRAM_JACCARD_SQL,
-            "dedup_containment": OS.DEDUP_CONTAINMENT_SQL,
-            "distinct_kmv_sketch": OS.KMV_SKETCH_SQL,
             "doc_split_assign": OS.DOC_SPLIT_SQL,
             "doc_pack_assign": OS.DOC_PACK_SQL,
-            "training_export": OS.TRAINING_EXPORT_SQL,
             "top_terms_tfidf": OS.TOP_TERMS_TFIDF_SQL,
             "text_quality": OS.TEXT_QUALITY_SQL,
             "token_counts": OS.TOKEN_COUNTS_SQL,
@@ -312,7 +271,6 @@ def oracle_sql() -> dict[str, str]:
         "langid_confusion": OS.LANGID_CONFUSION_SQL,
         "pii_scrub": OS.PII_SCRUB_SQL,
         "pii_rate_by_source": OS.PII_RATE_BY_SOURCE_SQL,
-            "curate_corpus": OS.CURATE_SQL,
             # round-trips must reproduce the independent FULL-TERM oracle
             # (lossless including @lang tags and ^^datatypes)
             "rdf_ntriples_roundtrip": OS.TRIPLES_FULL_SQL,

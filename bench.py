@@ -144,9 +144,7 @@ def _run_bench(sf_dir: str, cpus: int, rep: int = 1, with_queries: bool = True,
     timings: dict[str, float] = {}
     stages: dict[str, dict] = {}
     bench_query_names = [
-        "kg_spans_flat", "kg_media_features", "dedup_minhash_pairs",
-        "dedup_simhash_pairs", "ngram_jaccard_pairs", "langid",
-        "text_quality",
+        "kg_spans_flat", "kg_media_features", "langid", "text_quality",
         # round-4 store query surface (amortize the memoized
         # pipeline chain across the three)
         "kg_sparql_topk", "kg_sameas_degree",
@@ -178,7 +176,7 @@ def _run_bench(sf_dir: str, cpus: int, rep: int = 1, with_queries: bool = True,
             # noisy-neighbor windows (BENCH/BASELINE.md §0) otherwise
             # hit the SAME query at the same sequence offset in every
             # pass, defeating the per-query min (r5/r6: the 6× outlier
-            # slot wandered between minhash and simhash run-to-run).
+            # slot wandered between queries run-to-run).
             order = (
                 bench_query_names if pass_i % 2 == 0
                 else list(reversed(bench_query_names))
@@ -339,8 +337,8 @@ def _scale_child(sf_dir: str, cpus: int, rep: int) -> dict:
 def _stress(sf_dir: str, cpus: int) -> dict:
     """Scale-stress one notch up (round-4 verdict #8): the headline
     extract pipeline at ×1 vs ×REP identical-content replication
-    (per-document work — the 100 TB-dominant term), and the dedup/text
-    family at ×1 vs ×REP content-VARIED replication (independent-corpus
+    (per-document work — the 100 TB-dominant term), and langid at ×1
+    vs ×REP content-VARIED replication (independent-corpus
     growth; see _varied_documents).  REP defaults to 10 — sf0.1×10 ≈
     sf1-equivalent.  Reports per-stage times at both levels and the
     time ratio; on a fixed-size machine linear data scaling is ratio ≈
@@ -349,7 +347,6 @@ def _stress(sf_dir: str, cpus: int) -> dict:
     from pyspark.sql import functions as F
 
     from kgspark.session import get_spark
-    from kgspark import dedup as D
     from kgspark import textstats as TS
 
     rep = int(os.environ.get("SPARK_GRAFT_STRESS_REP", "10"))
@@ -382,9 +379,6 @@ def _stress(sf_dir: str, cpus: int) -> dict:
             timings[name] = dt
             stages[name] = {"rows": n, "sec": dt}
 
-        timed("dedup_minhash_pairs", lambda: D.minhash_lsh_pairs(vd).count())
-        timed("dedup_simhash_pairs", lambda: D.simhash_pairs(vd).count())
-        timed("ngram_jaccard_pairs", lambda: D.ngram_jaccard_pairs(vd).count())
         timed("langid", lambda: TS.langid(spark, vd).count())
 
         # --- store / SPARQL surface (round-6 verdict #7) ------------

@@ -166,49 +166,3 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
         (F.col("top_token_e6") > F.lit(G.REP_TOP_TOKEN_E6))
         | (F.col("dup_bigram_e6") > F.lit(G.REP_DUP_BIGRAM_E6)),
     )
-
-
-# --- corpus-level exact paragraph dedup (round 6b, C4-style) -----------------
-
-def line_dup_stats(docs: DataFrame, min_docs: int | None = None) -> DataFrame:
-    """Boilerplate detection by EXACT cross-document repetition: a
-    paragraph (dedup.paragraphs token window — swap in split-on-
-    newline for a real corpus) appearing in >= min_docs DISTINCT
-    documents is boilerplate; returns per-document paragraph counts,
-    boilerplate counts and the removal rate in e6 fixed-point.
-
-    Scale shape: one explode to paragraphs, a (para-text)-keyed
-    distinct-doc count (two-level hash aggregate), one shuffle join
-    back on the paragraph text, one per-doc aggregate.  At 100 TB the
-    join key would be xxhash64(text) instead of the text itself — same
-    plan, 8-byte shuffle keys; kept as text here for cross-engine
-    oracle exactness."""
-    from . import dedup
-    from . import grammar as G
-
-    if min_docs is None:
-        min_docs = G.LINE_DUP_MIN_DOCS
-    paras = dedup.paragraphs(docs).select("doc_id", "para_id", "text")
-    counts = paras.groupBy("text").agg(
-        F.countDistinct("doc_id").alias("n_docs_with")
-    )
-    flagged = paras.join(counts, "text").select(
-        "doc_id",
-        (F.col("n_docs_with") >= F.lit(min_docs)).cast("bigint").alias("dup"),
-    )
-    return (
-        flagged.groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_paras"),
-            F.sum("dup").alias("n_boiler"),
-        )
-        .select(
-            "doc_id",
-            F.col("n_paras").cast("bigint").alias("n_paras"),
-            F.col("n_boiler").cast("bigint").alias("n_boiler"),
-            F.floor(
-                F.lit(1e6) * F.col("n_boiler").cast("double")
-                / F.col("n_paras").cast("double")
-            ).cast("bigint").alias("boiler_rate_e6"),
-        )
-    )

@@ -199,21 +199,6 @@ def tokcode_py(t: str) -> int:
     return c0 * 65536 + c1 * 256 + len(t)
 
 
-# MinHash-LSH (near-dup dedup over documents; also O21 banding).
-MINHASH_PERMS = 64
-LSH_BANDS = 32
-LSH_ROWS = 2                         # MINHASH_PERMS = LSH_BANDS * LSH_ROWS
-DEDUP_JACCARD_TAU = 0.6              # near-dup acceptance (post-LSH verify)
-# P(miss | J=0.6) = (1 - 0.6^2)^32 ≈ 6e-7 → LSH-then-verify ≡ all-pairs.
-
-# SimHash near-dup.
-SIMHASH_BITS = 62                    # keep int64-positive
-SIMHASH_HASH_OFFSET = MINHASH_PERMS  # simhash bit b uses hash index 64+b
-HAMMING_TAU = 3
-
-# n-gram Jaccard dedup.
-NGRAM_N = 3
-
 # Sequence packing (training-data concat-and-chunk): documents are
 # hash-sharded, then greedily concatenated in doc_id order within each
 # (split, shard); training sequence boundaries fall every
@@ -222,16 +207,9 @@ NGRAM_N = 3
 PACK_CAPACITY = 256
 PACK_SHARDS = 16
 
-# KMV distinct sketch — SINGLE source of k for the Spark builder
-# (queries.distinct_kmv_sketch) AND the DuckDB oracle
-# (oracle_sql.KMV_SKETCH_SQL); a per-call parameter silently diverged
-# from the hardcoded oracle (round-3 ADVICE).
-KMV_K = 128
-
 # Count-Min sketch (heavy-hitter estimation over the token stream) —
 # d rows × w buckets; row i uses hash index CMS_HASH_OFFSET + i of the
-# shared family (disjoint from minhash 0..63 and simhash 64..125).
-# Token identity enters via the char-level rolling hash
+# shared family.  Token identity enters via the char-level rolling hash
 # charcode(t) = fold((a, c) -> (31a + ascii(c)) % HASH_P, 0, chars(t))
 # — the same 31-multiplier family as the doc fingerprint, exact int64
 # on every engine.  Shared by queries.heavy_hitters_cms and
@@ -241,9 +219,8 @@ CMS_W = 512
 CMS_HASH_OFFSET = 256
 CMS_TOP_K = 20
 
-# Sign-random-projection LSH over embeddings (cosine bucketing — the
-# hyperplane-family alternative to the cell-grid in dedup.embedding
-# near-dup): plane k's component d (0-based) has sign +1 iff
+# Sign-random-projection LSH over embeddings (cosine bucketing):
+# plane k's component d (0-based) has sign +1 iff
 #   ((hash_a(SRP_HASH_IDX) * (k*dim + d) + hash_b(SRP_HASH_IDX))
 #     % HASH_P) % 2 == 0
 # else −1; bit k of the signature = [Σ_d sign(k,d)·e3_d ≥ 0].  Pure
@@ -274,13 +251,6 @@ BPE_TOKEN_PATTERN = r"[a-z]+|[0-9]+|[^a-z0-9 ]"
 # ---------------------------------------------------------------------------
 LANGID_TOP_N = 400
 
-# Corpus-curation policy (kgspark/curate.py): a doc is kept iff
-#   quality_e6 ≥ QUALITY_MIN_E6            (drops the worst ~10%)
-#   AND predicted_lang == lang             (langid agreement)
-#   AND it is not a non-keeper member of a near-dup cluster.
-# reason = first failing rule in that order, else 'keep'.
-QUALITY_MIN_E6 = 560_000
-
 # Rolling-hash document fingerprint: acc = (acc*31 + tokcode) % FP_MOD.
 FP_MOD = 1000000007
 
@@ -301,13 +271,6 @@ PII_RULES = [  # (kind, pattern, replacement)
     ("idnum", r"\b\d{8,}\b", "<ID>"),
 ]
 
-# Paragraph-granularity dedup (round 6, boilerplate removal): the
-# fixture text has no paragraph breaks, so paragraphs are deterministic
-# PARA_TOKENS-token windows; a paragraph's composite key is
-# doc_id * PARA_KEY_MUL + para_id (para_id < PARA_KEY_MUL asserted).
-PARA_TOKENS = 12
-PARA_KEY_MUL = 1000
-
 # Gopher-style repetition-quality thresholds (round 6b): a doc is
 # flagged when its most-frequent token exceeds REP_TOP_TOKEN_E6 of all
 # tokens, or its duplicate-bigram mass (n_bigrams - distinct bigrams)
@@ -317,39 +280,3 @@ PARA_KEY_MUL = 1000
 # discriminative split.
 REP_TOP_TOKEN_E6 = 140_000
 REP_DUP_BIGRAM_E6 = 65_000
-
-# Corpus-level exact paragraph dedup (round 6b, C4-style boilerplate
-# removal): a paragraph occurring in >= LINE_DUP_MIN_DOCS distinct
-# documents is boilerplate.  The soup corpus never repeats a 12-token
-# window across documents, so the contract query prepends BOILER_TEXT
-# (exactly PARA_TOKENS tokens — one full window) to docs with
-# doc_id % 3 != 1, identically on both engines.
-LINE_DUP_MIN_DOCS = 2
-BOILER_TEXT = (
-    "subscribe newsletter footer nav copyright contact"
-    " about privacy terms search login home"
-)
-
-# ---------------------------------------------------------------------------
-# Negative-edge sampling (round 6c; KG-embedding training-data prep):
-# for every positive co-occurrence edge, NEG_SLOTS corrupted tails are
-# drawn deterministically — slot i uses hash index NEG_HASH_OFFSET + i
-# of the same affine family over the edge's char-level rolling hash
-# (mod FP_MOD), indexed into the id-ordered entity list.  Offsets
-# 256..259 are the CMS rows; 300+ is reserved for negatives.
-# ---------------------------------------------------------------------------
-NEG_HASH_OFFSET = 300
-NEG_SLOTS = 2
-
-# ---------------------------------------------------------------------------
-# Winnowing (MOSS-style fingerprint selection, Schleimer et al. 2003):
-# over the positional token-3-gram code stream, each full trailing
-# window of WINNOW_W consecutive codes selects its minimum — density
-# ~2/(w+1) of positions, with the guarantee every WINNOW_W-window
-# shares at least one selected fingerprint with any verbatim copy.
-# Codes selected by more than WINNOW_MAX_DF documents are boilerplate
-# band-stops and are excluded from pair enumeration (the same hot-key
-# cap the LSH family applies).
-# ---------------------------------------------------------------------------
-WINNOW_W = 4
-WINNOW_MAX_DF = 64

@@ -742,190 +742,8 @@ WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
 
 
 # ---------------------------------------------------------------------------
-# Training-data-pipeline oracles (dedup / text analysis).
-# Shared shingle CTE: token 3-gram codes (grammar.py NGRAM_N family).
+# Training-data-pipeline oracles (text analysis).
 # ---------------------------------------------------------------------------
-_TC_NULL = (
-    "(ascii(substr(coalesce({t}, ''), 1, 1))::BIGINT * 65536"
-    " + ascii(substr(coalesce({t}, ''), 2, 1))::BIGINT * 256"
-    " + length(coalesce({t}, ''))::BIGINT)"
-)
-
-SHINGLES_CTE = f"""
-dtok AS (
-  SELECT doc_id, lang, source, string_split(text, ' ') AS toks FROM documents
-),
-shingled AS (
-  SELECT doc_id, lang, source,
-    list_distinct(list_transform(
-      generate_series(1, greatest(len(toks) - 2, 1)),
-      i -> (({_TC_NULL.format(t='toks[i]')} * 31
-             + {_TC_NULL.format(t='toks[i+1]')}) * 31
-             + {_TC_NULL.format(t='toks[i+2]')}) % {G.FP_MOD}
-    )) AS shingles
-  FROM dtok
-)
-"""
-
-DEDUP_EXACT_SQL = f"""
-WITH keyed AS (
-  SELECT doc_id,
-    list_reduce(
-      list_prepend(0::BIGINT,
-        list_transform(list_slice(string_split(text, ' '), 1, 8),
-                       t -> {_TOKCODE})),
-      (a, b) -> (a*31 + b) % {G.FP_MOD}) AS key_fp
-  FROM documents
-)
-SELECT key_fp, count(*) AS n_docs, min(doc_id) AS keep_doc_id
-FROM keyed GROUP BY key_fp HAVING count(*) > 1
-"""
-
-# MinHash signatures via a permutation-parameter VALUES table.
-_PERMS_ROWS = ", ".join(
-    f"({i}, {G.hash_a(i)}, {G.hash_b(i)})" for i in range(G.MINHASH_PERMS)
-)
-
-MINHASH_LSH_PAIRS_SQL = f"""
-WITH {SHINGLES_CTE},
-perms(i, a, b) AS (VALUES {_PERMS_ROWS}),
-codes AS (SELECT doc_id, unnest(shingles) AS code FROM shingled),
-sig AS (
-  SELECT doc_id, i, min((a * code + b) % {G.HASH_P}) AS mh
-  FROM codes CROSS JOIN perms GROUP BY doc_id, i
-),
-bands AS (
-  SELECT doc_id, CAST(i // {G.LSH_ROWS} AS INT) AS band_id,
-         max(CASE WHEN i % {G.LSH_ROWS} = 0 THEN mh END) * {G.HASH_P}
-           + max(CASE WHEN i % {G.LSH_ROWS} = 1 THEN mh END) AS band_hash
-  FROM sig GROUP BY doc_id, CAST(i // {G.LSH_ROWS} AS INT)
-),
-cand AS (
-  SELECT a.doc_id AS doc_a, c.doc_id AS doc_b
-  FROM bands a JOIN bands c
-    ON a.band_id = c.band_id AND a.band_hash = c.band_hash
-   AND a.doc_id < c.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-  CAST(floor(1e6 * (len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
-    / (len(sa.shingles) + len(sb.shingles)
-       - len(list_intersect(sa.shingles, sb.shingles))))) AS BIGINT)
-    AS jaccard_e6
-FROM cand
-JOIN shingled sa ON sa.doc_id = cand.doc_a
-JOIN shingled sb ON sb.doc_id = cand.doc_b
-"""
-
-_CLUSTERS_CTES = f"""
-perms(i, a, b) AS (VALUES {_PERMS_ROWS}),
-codes AS (SELECT doc_id, unnest(shingles) AS code FROM shingled),
-sig AS (
-  SELECT doc_id, i, min((a * code + b) % {G.HASH_P}) AS mh
-  FROM codes CROSS JOIN perms GROUP BY doc_id, i
-),
-bands AS (
-  SELECT doc_id, CAST(i // {G.LSH_ROWS} AS INT) AS band_id,
-         max(CASE WHEN i % {G.LSH_ROWS} = 0 THEN mh END) * {G.HASH_P}
-           + max(CASE WHEN i % {G.LSH_ROWS} = 1 THEN mh END) AS band_hash
-  FROM sig GROUP BY doc_id, CAST(i // {G.LSH_ROWS} AS INT)
-),
-cand AS (
-  SELECT a.doc_id AS doc_a, c.doc_id AS doc_b
-  FROM bands a JOIN bands c
-    ON a.band_id = c.band_id AND a.band_hash = c.band_hash
-   AND a.doc_id < c.doc_id
-  GROUP BY 1, 2
-),
-nd AS MATERIALIZED (
-  SELECT doc_a, doc_b FROM cand
-  JOIN shingled sa ON sa.doc_id = cand.doc_a
-  JOIN shingled sb ON sb.doc_id = cand.doc_b
-  WHERE len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
-      / (len(sa.shingles) + len(sb.shingles)
-         - len(list_intersect(sa.shingles, sb.shingles))) >= 0.01
-),
-nodes AS (SELECT doc_a AS n FROM nd UNION SELECT doc_b FROM nd),
-bidir AS (SELECT doc_a AS s, doc_b AS d FROM nd
-          UNION SELECT doc_b, doc_a FROM nd),
-reach AS (
-  SELECT n AS node, n AS label FROM nodes
-  UNION
-  SELECT b.d, r.label FROM reach r JOIN bidir b ON b.s = r.node
-),
-ckeep AS MATERIALIZED (
-  SELECT node AS doc_id, CAST(min(label) AS BIGINT) AS keep_doc_id
-  FROM reach GROUP BY node
-)
-"""
-
-DEDUP_CLUSTERS_SQL = f"""
-WITH RECURSIVE {SHINGLES_CTE}, {_CLUSTERS_CTES}
-SELECT doc_id, keep_doc_id FROM ckeep
-"""
-
-_SIM_PERMS_ROWS = ", ".join(
-    f"({b}, {G.hash_a(G.SIMHASH_HASH_OFFSET + b)}, {G.hash_b(G.SIMHASH_HASH_OFFSET + b)})"
-    for b in range(G.SIMHASH_BITS)
-)
-
-DOC_SIMHASH_SQL = f"""
-WITH {SHINGLES_CTE},
-sperms(bit, a, b) AS (VALUES {_SIM_PERMS_ROWS}),
-codes AS (SELECT doc_id, lang, unnest(shingles) AS code FROM shingled),
-votes AS (
-  SELECT doc_id, lang, bit,
-         sum(CASE WHEN ((a * code + b) % {G.HASH_P}) % 2 = 1 THEN 1 ELSE -1 END) AS v
-  FROM codes CROSS JOIN sperms GROUP BY doc_id, lang, bit
-)
-SELECT doc_id, lang,
-       CAST(sum(CASE WHEN v > 0 THEN (1::BIGINT << bit) ELSE 0 END) AS BIGINT)
-         AS simhash
-FROM votes GROUP BY doc_id, lang
-"""
-
-SIMHASH_PAIRS_SQL = f"""
-WITH {SHINGLES_CTE},
-sperms(bit, a, b) AS (VALUES {_SIM_PERMS_ROWS}),
-codes AS (SELECT doc_id, lang, unnest(shingles) AS code FROM shingled),
-votes AS (
-  SELECT doc_id, lang, bit,
-         sum(CASE WHEN ((a * code + b) % {G.HASH_P}) % 2 = 1 THEN 1 ELSE -1 END) AS v
-  FROM codes CROSS JOIN sperms GROUP BY doc_id, lang, bit
-),
-sh AS (
-  SELECT doc_id, lang,
-         CAST(sum(CASE WHEN v > 0 THEN (1::BIGINT << bit) ELSE 0 END) AS BIGINT)
-           AS simhash
-  FROM votes GROUP BY doc_id, lang
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {G.HAMMING_TAU}
-"""
-# NOTE: the oracle states the PURE hamming criterion (all-pairs is fine
-# in DuckDB at sf0.01); the Spark side reaches the identical set via
-# exact pigeonhole segment blocking — no metadata (lang/source) blocking
-# on either side.
-
-NGRAM_JACCARD_SQL = f"""
-WITH {SHINGLES_CTE},
-jac AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         len(list_intersect(a.shingles, b.shingles))::DOUBLE
-           / (len(a.shingles) + len(b.shingles)
-              - len(list_intersect(a.shingles, b.shingles))) AS jaccard
-  FROM shingled a JOIN shingled b ON a.doc_id < b.doc_id
-)
-SELECT doc_a, doc_b,
-       CAST(floor(1e6 * jaccard) AS BIGINT) AS jaccard_e6
-FROM jac WHERE jaccard >= 0.01
-"""
-# NOTE: all-pairs exact Jaccard (fine in DuckDB at sf0.01); the Spark
-# side reaches the identical set via the prefix-filtered inverted-index
-# join over shingle codes — no source/lang blocking on either side.
-
 TOP_TERMS_TFIDF_SQL = """
 WITH toks AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
@@ -980,37 +798,6 @@ FROM (
     )
   )
 )
-"""
-
-_KMV_K = G.KMV_K  # single shared constant with queries.distinct_kmv_sketch
-KMV_SKETCH_SQL = f"""
-WITH {SHINGLES_CTE},
-kmv_codes AS (
-  SELECT DISTINCT lang, code FROM (
-    SELECT lang, unnest(shingles) AS code FROM shingled
-  )
-),
-kmv_hs AS (
-  SELECT DISTINCT lang,
-         ({G.hash_a(0)} * code + {G.hash_b(0)}) % {G.HASH_P} AS h
-  FROM kmv_codes
-),
-kmv_ranked AS (
-  SELECT lang, h, row_number() OVER (PARTITION BY lang ORDER BY h) AS rn
-  FROM kmv_hs
-),
-kmv_n AS (SELECT lang, count(*) AS n_codes FROM kmv_codes GROUP BY lang),
-kmv_kth AS (
-  SELECT lang, max(h) AS kth_min FROM kmv_ranked WHERE rn <= {_KMV_K}
-  GROUP BY lang HAVING count(*) = {_KMV_K}
-)
-SELECT n.lang,
-       CAST(n.n_codes AS BIGINT) AS n_codes,
-       CAST(coalesce(k.kth_min, 0) AS BIGINT) AS kth_min,
-       CAST(CASE WHEN k.kth_min IS NOT NULL
-                 THEN {(_KMV_K - 1) * G.HASH_P} // k.kth_min
-                 ELSE n.n_codes END AS BIGINT) AS est
-FROM kmv_n n LEFT JOIN kmv_kth k USING (lang)
 """
 
 # O12 XSLT-analogue oracle: the template semantics restated directly
@@ -1122,82 +909,6 @@ lpred AS MATERIALIZED (
 LANGID_SQL = f"""
 WITH {_LANGID_CTES}
 SELECT doc_id, lang, predicted_lang FROM lpred
-"""
-
-# --- corpus curation oracle (grammar.py policy over the composed ops) -------
-_QUAL_CTE = f"""
-qual AS (
-  SELECT doc_id,
-    CAST(floor(1e6 * (0.5 * (1 - stop_ratio)
-        + 0.3 * least(1.0, n_tokens / 50.0)
-        + 0.2 * distinct_ratio)) AS BIGINT) AS quality_e6
-  FROM (
-    SELECT doc_id, len(toks) AS n_tokens,
-      len(list_filter(toks, t -> t IN ({_STOP_LIST})))::DOUBLE / len(toks)
-        AS stop_ratio,
-      len(list_distinct(toks))::DOUBLE / len(toks) AS distinct_ratio
-    FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
-  )
-)
-"""
-
-CURATE_SQL = f"""
-WITH RECURSIVE {SHINGLES_CTE}, {_CLUSTERS_CTES}, {_LANGID_CTES}, {_QUAL_CTE}
-SELECT doc_id, reason, CAST(reason = 'keep' AS INT) AS keep FROM (
-  SELECT documents.doc_id,
-    CASE WHEN q.quality_e6 < {G.QUALITY_MIN_E6} THEN 'low_quality'
-         WHEN p.predicted_lang <> p.lang THEN 'lang_mismatch'
-         WHEN k.keep_doc_id IS NOT NULL AND k.keep_doc_id <> documents.doc_id
-              THEN 'near_duplicate'
-         ELSE 'keep' END AS reason
-  FROM documents
-  JOIN qual q USING (doc_id)
-  JOIN lpred p USING (doc_id)
-  LEFT JOIN ckeep k USING (doc_id)
-)
-"""
-
-# Composed training export: the CURATE decision selects survivors,
-# split+pack assignment runs over them only (pack SQL restricted by a
-# semi-join on the kept set).
-TRAINING_EXPORT_SQL = f"""
-WITH RECURSIVE {SHINGLES_CTE}, {_CLUSTERS_CTES}, {_LANGID_CTES}, {_QUAL_CTE},
-curated AS (
-  SELECT documents.doc_id,
-    CASE WHEN q.quality_e6 < {G.QUALITY_MIN_E6} THEN 'low_quality'
-         WHEN p.predicted_lang <> p.lang THEN 'lang_mismatch'
-         WHEN k.keep_doc_id IS NOT NULL AND k.keep_doc_id <> documents.doc_id
-              THEN 'near_duplicate'
-         ELSE 'keep' END AS reason
-  FROM documents
-  JOIN qual q USING (doc_id)
-  JOIN lpred p USING (doc_id)
-  LEFT JOIN ckeep k USING (doc_id)
-),
-kept AS (SELECT doc_id FROM curated WHERE reason = 'keep'),
-sized AS (
-  SELECT d.doc_id,
-         CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
-              ELSE 'test' END AS split,
-         CAST((({G.hash_a(2)} * d.doc_id + {G.hash_b(2)}) % {G.HASH_P})
-                % {G.PACK_SHARDS} AS INT) AS shard,
-         CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tok
-  FROM (
-    SELECT doc_id, text,
-           (({G.hash_a(1)} * doc_id + {G.hash_b(1)}) % {G.HASH_P}) % 100 AS b
-    FROM documents
-  ) d
-  JOIN kept USING (doc_id)
-)
-SELECT doc_id, split, shard, n_tok,
-       CAST(start // {G.PACK_CAPACITY} AS BIGINT) AS seq_id,
-       CAST(start % {G.PACK_CAPACITY} AS BIGINT) AS seq_off
-FROM (
-  SELECT doc_id, split, shard, n_tok,
-         sum(n_tok) OVER (PARTITION BY split, shard ORDER BY doc_id
-                          ROWS UNBOUNDED PRECEDING) - n_tok AS start
-  FROM sized
-)
 """
 
 PREDICATE_COUNTS_SQL = f"""
@@ -1312,30 +1023,6 @@ GROUP BY t1.s
 """
 
 
-# r5: train/eval contamination — shared-3-gram-code counts vs the
-# eval-corpus code union, 0 kept for clean documents.
-CONTAMINATION_SQL = f"""
-WITH {SHINGLES_CTE},
-ev AS (
-  SELECT DISTINCT unnest(shingles) AS code
-  FROM shingled WHERE doc_id % 97 = 0
-),
-tr AS (
-  SELECT doc_id, unnest(shingles) AS code
-  FROM shingled WHERE doc_id % 97 <> 0
-),
-sh AS (
-  SELECT tr.doc_id, CAST(COUNT(*) AS BIGINT) AS n_shared
-  FROM tr JOIN ev USING (code) GROUP BY tr.doc_id
-)
-SELECT t.doc_id,
-       COALESCE(sh.n_shared, 0) AS n_shared,
-       COALESCE(sh.n_shared, 0) >= 8 AS flagged
-FROM (SELECT doc_id FROM shingled WHERE doc_id % 97 <> 0) t
-LEFT JOIN sh USING (doc_id)
-"""
-
-
 # r6: int8 scalar quantization on the integer e3 grid — identical
 # arithmetic to the Spark builder; all-positive DIV operands keep
 # truncating vs floor division equivalent.
@@ -1372,31 +1059,6 @@ FROM q
 """
 
 
-# r5: training_export with the contamination gate spliced into the
-# kept set (same composed-oracle pattern; eval docs and ≥8-shared-code
-# documents drop before split+pack).
-TRAINING_EXPORT_CLEAN_SQL = TRAINING_EXPORT_SQL.replace(
-    "kept AS (SELECT doc_id FROM curated WHERE reason = 'keep'),",
-    """kept0 AS (SELECT doc_id FROM curated WHERE reason = 'keep'),
-ct_ev AS (
-  SELECT DISTINCT unnest(shingles) AS code
-  FROM shingled WHERE doc_id % 97 = 0
-),
-ct_sh AS (
-  SELECT tr.doc_id, COUNT(*) AS n_shared
-  FROM (SELECT doc_id, unnest(shingles) AS code
-        FROM shingled WHERE doc_id % 97 <> 0) tr
-  JOIN ct_ev USING (code) GROUP BY tr.doc_id
-),
-kept AS (
-  SELECT k.doc_id FROM kept0 k
-  LEFT JOIN ct_sh USING (doc_id)
-  WHERE k.doc_id % 97 <> 0 AND COALESCE(ct_sh.n_shared, 0) < 8
-),""",
-)
-assert TRAINING_EXPORT_CLEAN_SQL != TRAINING_EXPORT_SQL
-
-
 # r5: balanced quota sample — k lowest-hash docs per (lang, source).
 DOC_QUOTA_SAMPLE_SQL = f"""
 SELECT doc_id, lang, source, CAST(rn AS INT) AS rn
@@ -1413,21 +1075,6 @@ WHERE rn <= 10
 """
 
 
-# r5: per-source near-dup drop rate (pipeline observability).
-DEDUP_RATE_BY_SOURCE_SQL = f"""
-WITH RECURSIVE {SHINGLES_CTE}, {_CLUSTERS_CTES}
-SELECT d.source,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(CASE WHEN k.keep_doc_id IS NOT NULL
-                      AND k.keep_doc_id <> d.doc_id THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_dropped,
-       CAST(floor(1e6 * SUM(CASE WHEN k.keep_doc_id IS NOT NULL
-                                  AND k.keep_doc_id <> d.doc_id
-                                 THEN 1 ELSE 0 END)::DOUBLE
-                  / COUNT(*)) AS BIGINT) AS drop_rate_e6
-FROM documents d LEFT JOIN ckeep k USING (doc_id)
-GROUP BY d.source
-"""
 # r6: SPARQL UPDATE end-state — pre-state (nation → per-region graphs)
 # minus CLEAR ex:reg0, minus DELETE WHERE o='CHINA', minus the ground
 # DELETE DATA row, plus the two INSERT DATA rows.
@@ -1507,78 +1154,6 @@ SELECT source,
                   / COUNT(*)) AS BIGINT) AS pii_rate_e6
 FROM scrubbed
 GROUP BY source
-"""
-
-# r6: paragraph-granularity near-dup (boilerplate) — paragraphs are
-# PARA_TOKENS-token windows keyed doc_id·PARA_KEY_MUL + para_id, then
-# the exact minhash-LSH chain runs over the paragraph table.
-_PARA_CTES = f"""
-dtokp AS (
-  SELECT doc_id, lang, source, string_split(text, ' ') AS toks
-  FROM documents
-),
-pidx AS (
-  SELECT doc_id, lang, source, toks,
-         unnest(generate_series(
-           1, greatest(CAST(ceil(len(toks) / {G.PARA_TOKENS}.0) AS BIGINT), 1)
-         )) AS i
-  FROM dtokp
-),
-paras AS (
-  SELECT doc_id * {G.PARA_KEY_MUL} + (i - 1) AS doc_id, lang, source,
-         array_to_string(
-           list_slice(toks, (i-1)*{G.PARA_TOKENS} + 1,
-                      (i-1)*{G.PARA_TOKENS} + {G.PARA_TOKENS}), ' ') AS text
-  FROM pidx
-)
-"""
-
-PARA_DEDUP_SQL = f"""
-WITH {_PARA_CTES},
-dtok AS (
-  SELECT doc_id, lang, source, string_split(text, ' ') AS toks FROM paras
-),
-shingled AS (
-  SELECT doc_id, lang, source,
-    list_distinct(list_transform(
-      generate_series(1, greatest(len(toks) - 2, 1)),
-      i -> (({_TC_NULL.format(t='toks[i]')} * 31
-             + {_TC_NULL.format(t='toks[i+1]')}) * 31
-             + {_TC_NULL.format(t='toks[i+2]')}) % {G.FP_MOD}
-    )) AS shingles
-  FROM dtok
-),
-perms(i, a, b) AS (VALUES {_PERMS_ROWS}),
-codes AS (SELECT doc_id, unnest(shingles) AS code FROM shingled),
-sig AS (
-  SELECT doc_id, i, min((a * code + b) % {G.HASH_P}) AS mh
-  FROM codes CROSS JOIN perms GROUP BY doc_id, i
-),
-bands AS (
-  SELECT doc_id, CAST(i // {G.LSH_ROWS} AS INT) AS band_id,
-         max(CASE WHEN i % {G.LSH_ROWS} = 0 THEN mh END) * {G.HASH_P}
-           + max(CASE WHEN i % {G.LSH_ROWS} = 1 THEN mh END) AS band_hash
-  FROM sig GROUP BY doc_id, CAST(i // {G.LSH_ROWS} AS INT)
-),
-cand AS (
-  SELECT a.doc_id AS doc_a, c.doc_id AS doc_b
-  FROM bands a JOIN bands c
-    ON a.band_id = c.band_id AND a.band_hash = c.band_hash
-   AND a.doc_id < c.doc_id
-  WHERE a.doc_id // {G.PARA_KEY_MUL} <> c.doc_id // {G.PARA_KEY_MUL}
-  GROUP BY 1, 2
-)
-SELECT CAST(cand.doc_a // {G.PARA_KEY_MUL} AS BIGINT) AS doc_a,
-       CAST(cand.doc_a % {G.PARA_KEY_MUL} AS BIGINT) AS para_a,
-       CAST(cand.doc_b // {G.PARA_KEY_MUL} AS BIGINT) AS doc_b,
-       CAST(cand.doc_b % {G.PARA_KEY_MUL} AS BIGINT) AS para_b,
-       CAST(floor(1e6 * (len(list_intersect(sa.shingles, sb.shingles))::DOUBLE
-         / (len(sa.shingles) + len(sb.shingles)
-            - len(list_intersect(sa.shingles, sb.shingles))))) AS BIGINT)
-         AS jaccard_e6
-FROM cand
-JOIN shingled sa ON sa.doc_id = cand.doc_a
-JOIN shingled sb ON sb.doc_id = cand.doc_b
 """
 
 # r6: SELECT projection expressions + ORDER BY expression keys.
@@ -1697,44 +1272,6 @@ SELECT td.doc_id,
                 AS BIGINT) > {G.REP_DUP_BIGRAM_E6}) AS rep_flagged
 FROM td LEFT JOIN bd ON bd.doc_id = td.doc_id
 ORDER BY td.doc_id
-"""
-
-# r6b: corpus-level exact paragraph dedup — BOILER_TEXT prepended for
-# doc_id % 3 != 1, PARA_TOKENS windows, >= LINE_DUP_MIN_DOCS distinct
-# docs = boilerplate.
-BOILERPLATE_RATE_SQL = f"""
-WITH aug AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 3 != 1
-              THEN '{G.BOILER_TEXT} ' || text ELSE text END AS text
-  FROM documents
-),
-dtokp AS (SELECT doc_id, string_split(text, ' ') AS toks FROM aug),
-pidx AS (
-  SELECT doc_id, toks,
-         unnest(generate_series(
-           1, greatest(CAST(ceil(len(toks) / {G.PARA_TOKENS}.0) AS BIGINT), 1)
-         )) AS i
-  FROM dtokp
-),
-paras AS (
-  SELECT doc_id, i - 1 AS para_id,
-         array_to_string(
-           list_slice(toks, (i - 1) * {G.PARA_TOKENS} + 1,
-                      (i - 1) * {G.PARA_TOKENS} + {G.PARA_TOKENS}), ' ')
-           AS text
-  FROM pidx
-),
-counts AS (SELECT text, count(DISTINCT doc_id) AS ndocs FROM paras GROUP BY 1),
-flagged AS (
-  SELECT p.doc_id,
-         CASE WHEN c.ndocs >= {G.LINE_DUP_MIN_DOCS} THEN 1 ELSE 0 END AS dup
-  FROM paras p JOIN counts c ON c.text = p.text
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_paras,
-       CAST(sum(dup) AS BIGINT) AS n_boiler,
-       CAST(floor(1e6 * sum(dup) / count(*)) AS BIGINT) AS boiler_rate_e6
-FROM flagged GROUP BY doc_id ORDER BY doc_id
 """
 
 # r6: LOAD end state — the seed quad plus the nation table routed into
@@ -1870,29 +1407,6 @@ SELECT doc_id, CAST(chunk_id AS INT) AS chunk_id,
          list_slice(toks, chunk_id * 12 + 1, chunk_id * 12 + 16), ' '
        ) AS chunk_text
 FROM ch
-"""
-
-
-# r6: duplicated-n-gram coverage — per doc, the fraction of its
-# distinct 3-token shingles (the engine-shared code family in
-# SHINGLES_CTE) that occur in >= 2 documents.  with_shingles emits
-# DISTINCT codes per doc, so COUNT(*) per code == doc frequency.
-DEDUP_NGRAM_COVERAGE_SQL = f"""
-WITH {SHINGLES_CTE},
-ex AS (
-  SELECT doc_id, unnest(shingles) AS code FROM shingled
-),
-dfc AS (
-  SELECT code, CAST(count(*) AS BIGINT) AS df FROM ex GROUP BY code
-)
-SELECT ex.doc_id,
-       CAST(count(*) AS BIGINT) AS n_shingles,
-       CAST(sum(CASE WHEN dfc.df >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_dup,
-       CAST((1000000 * sum(CASE WHEN dfc.df >= 2 THEN 1 ELSE 0 END))
-            // count(*) AS BIGINT) AS dup_frac_e6
-FROM ex JOIN dfc USING (code)
-GROUP BY ex.doc_id
 """
 
 
@@ -2096,23 +1610,6 @@ FROM attrs ORDER BY e
 """
 
 
-# r6c: containment near-dup — C = |∩| / min(|A|,|B|) on the distinct
-# shingle sets, integer e6 (1e6·|∩| // min len; shingle sets are never
-# empty — the index sequence is tail-padded to ≥ 1).
-DEDUP_CONTAINMENT_SQL = f"""
-WITH {SHINGLES_CTE},
-cont AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         CAST(1000000 * len(list_intersect(a.shingles, b.shingles))
-              AS BIGINT)
-           // least(len(a.shingles), len(b.shingles)) AS cont_e6
-  FROM shingled a JOIN shingled b ON a.doc_id < b.doc_id
-)
-SELECT doc_a, doc_b, CAST(cont_e6 AS BIGINT) AS cont_e6
-FROM cont WHERE cont_e6 >= 800000
-"""
-
-
 # r6c: JSON-LD @list roundtrip — positional rows straight from the
 # nation table (pos = per-region rank by nationkey), names as plain
 # literals, keys as xsd:integer-typed lexical forms.
@@ -2178,34 +1675,6 @@ m3 AS MATERIALIZED ({_bpe_pick('s3')})
 SELECT 1 AS rnd, lhs, rhs, cnt FROM m1
 UNION ALL SELECT 2, lhs, rhs, cnt FROM m2
 UNION ALL SELECT 3, lhs, rhs, cnt FROM m3
-"""
-
-
-# r6c: quality-aware keeper — the min-id clusters re-decided by
-# (quality_e6 DESC, doc_id ASC) within each cluster.
-DEDUP_KEEP_BEST_SQL = f"""
-WITH RECURSIVE {SHINGLES_CTE}, {_CLUSTERS_CTES},
-q AS (
-  SELECT doc_id,
-    CAST(floor(1e6 * (0.5 * (1 - len(list_filter(string_split(text, ' '),
-                       t -> t IN ({_STOP_LIST})))::DOUBLE
-                       / len(string_split(text, ' ')))
-        + 0.3 * least(1.0, len(string_split(text, ' ')) / 50.0)
-        + 0.2 * len(list_distinct(string_split(text, ' ')))::DOUBLE
-                / len(string_split(text, ' ')))) AS BIGINT) AS quality_e6
-  FROM documents
-),
-best AS (
-  SELECT keep_doc_id, doc_id AS best_doc_id FROM (
-    SELECT c.keep_doc_id, c.doc_id,
-           row_number() OVER (PARTITION BY c.keep_doc_id
-                              ORDER BY q.quality_e6 DESC, c.doc_id)
-             AS rn
-    FROM ckeep c JOIN q USING (doc_id)
-  ) WHERE rn = 1
-)
-SELECT c.doc_id, CAST(b.best_doc_id AS BIGINT) AS keep_doc_id
-FROM ckeep c JOIN best b USING (keep_doc_id)
 """
 
 
@@ -2329,91 +1798,6 @@ SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_vecs,
        CAST(SUM(vec_id) AS BIGINT) AS sum_vec_id,
        CAST(COUNT(*) * (COUNT(*) - 1) // 2 AS BIGINT) AS n_cand_pairs
 FROM sigs GROUP BY bucket
-"""
-
-
-# r6c: incremental minhash dedup — band collisions with at least one
-# NEW side (doc_id % 10 = 0), old×old excluded in the join condition.
-DEDUP_INCREMENTAL_SQL = f"""
-WITH {SHINGLES_CTE},
-perms(i, a, b) AS (VALUES {_PERMS_ROWS}),
-codes AS (SELECT doc_id, unnest(shingles) AS code FROM shingled),
-sig AS (
-  SELECT doc_id, i, min((a * code + b) % {G.HASH_P}) AS mh
-  FROM codes CROSS JOIN perms GROUP BY doc_id, i
-),
-bands AS (
-  SELECT doc_id, doc_id % 10 = 0 AS is_new,
-         CAST(i // {G.LSH_ROWS} AS INT) AS band_id,
-         max(CASE WHEN i % {G.LSH_ROWS} = 0 THEN mh END) * {G.HASH_P}
-           + max(CASE WHEN i % {G.LSH_ROWS} = 1 THEN mh END) AS band_hash
-  FROM sig GROUP BY doc_id, doc_id % 10 = 0, CAST(i // {G.LSH_ROWS} AS INT)
-),
-cand AS (
-  SELECT a.doc_id AS doc_a, c.doc_id AS doc_b,
-         CASE WHEN a.is_new AND c.is_new THEN 'new-new'
-              ELSE 'new-old' END AS pair_kind
-  FROM bands a JOIN bands c
-    ON a.band_id = c.band_id AND a.band_hash = c.band_hash
-   AND a.doc_id < c.doc_id AND (a.is_new OR c.is_new)
-  GROUP BY 1, 2, 3
-)
-SELECT doc_a, doc_b, pair_kind,
-  CAST((1000000 * len(list_intersect(sa.shingles, sb.shingles)))
-       // (len(sa.shingles) + len(sb.shingles)
-           - len(list_intersect(sa.shingles, sb.shingles))) AS BIGINT)
-    AS jaccard_e6
-FROM cand
-JOIN shingled sa ON sa.doc_id = cand.doc_a
-JOIN shingled sb ON sb.doc_id = cand.doc_b
-"""
-
-
-# r6c: MinHash estimator calibration — signature-position agreement vs
-# exact shingle Jaccard per LSH candidate pair.
-DEDUP_MINHASH_CALIB_SQL = f"""
-WITH {SHINGLES_CTE},
-perms(i, a, b) AS (VALUES {_PERMS_ROWS}),
-codes AS (SELECT doc_id, unnest(shingles) AS code FROM shingled),
-sig AS MATERIALIZED (
-  SELECT doc_id, i, min((a * code + b) % {G.HASH_P}) AS mh
-  FROM codes CROSS JOIN perms GROUP BY doc_id, i
-),
-bands AS (
-  SELECT doc_id, CAST(i // {G.LSH_ROWS} AS INT) AS band_id,
-         max(CASE WHEN i % {G.LSH_ROWS} = 0 THEN mh END) * {G.HASH_P}
-           + max(CASE WHEN i % {G.LSH_ROWS} = 1 THEN mh END) AS band_hash
-  FROM sig GROUP BY doc_id, CAST(i // {G.LSH_ROWS} AS INT)
-),
-cand AS (
-  SELECT a.doc_id AS doc_a, c.doc_id AS doc_b
-  FROM bands a JOIN bands c
-    ON a.band_id = c.band_id AND a.band_hash = c.band_hash
-   AND a.doc_id < c.doc_id
-  GROUP BY 1, 2
-),
-est AS (
-  SELECT cand.doc_a, cand.doc_b,
-         CAST((1000000 * SUM(CASE WHEN sa.mh = sb.mh THEN 1 ELSE 0 END))
-              // {G.MINHASH_PERMS} AS BIGINT) AS est_jaccard_e6
-  FROM cand
-  JOIN sig sa ON sa.doc_id = cand.doc_a
-  JOIN sig sb ON sb.doc_id = cand.doc_b AND sb.i = sa.i
-  GROUP BY 1, 2
-)
-SELECT est.doc_a, est.doc_b, est.est_jaccard_e6,
-  CAST((1000000 * len(list_intersect(sa.shingles, sb.shingles)))
-       // (len(sa.shingles) + len(sb.shingles)
-           - len(list_intersect(sa.shingles, sb.shingles))) AS BIGINT)
-    AS exact_jaccard_e6,
-  CAST(abs(est.est_jaccard_e6
-       - (1000000 * len(list_intersect(sa.shingles, sb.shingles)))
-         // (len(sa.shingles) + len(sb.shingles)
-             - len(list_intersect(sa.shingles, sb.shingles)))) AS BIGINT)
-    AS abs_err_e6
-FROM est
-JOIN shingled sa ON sa.doc_id = est.doc_a
-JOIN shingled sb ON sb.doc_id = est.doc_b
 """
 
 
@@ -2566,19 +1950,6 @@ FROM tri t1
 JOIN tri t2 ON t2.s = t1.s
 WHERE t1.p = 'rdf:type' AND t1.o = 'ex:Commerce'
   AND t2.p NOT IN ('rdf:type', 'ex:score')
-"""
-
-
-# r6c: near-dup cluster size histogram over the keeper table.
-DEDUP_CLUSTER_HIST_SQL = f"""
-WITH RECURSIVE {SHINGLES_CTE}, {_CLUSTERS_CTES},
-sizes AS (
-  SELECT keep_doc_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
-  FROM ckeep GROUP BY keep_doc_id
-)
-SELECT cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters,
-       CAST(COUNT(*) * (cluster_size - 1) AS BIGINT) AS n_dropped_docs
-FROM sizes GROUP BY cluster_size
 """
 
 
@@ -2774,47 +2145,6 @@ SELECT e.entity_id,
        CAST(max(mm.doc_id) AS BIGINT) AS last_doc
 FROM mm JOIN eids e ON e.label = mm.root
 GROUP BY 1
-"""
-
-
-# r6e: winnowing (MOSS) fingerprint selection + verbatim-overlap pairs.
-DEDUP_WINNOW_SQL = f"""
-WITH dtok AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-),
-posed AS (
-  SELECT doc_id,
-         unnest(generate_series(1, greatest(len(toks) - 2, 1))) AS pos,
-         toks
-  FROM dtok
-),
-pc AS (
-  SELECT doc_id, pos,
-         (({_TC_NULL.format(t='toks[pos]')} * 31
-           + {_TC_NULL.format(t='toks[pos+1]')}) * 31
-           + {_TC_NULL.format(t='toks[pos+2]')}) % {G.FP_MOD} AS code
-  FROM posed
-),
-sel AS (
-  SELECT doc_id, pos, code,
-         min(code) OVER (PARTITION BY doc_id ORDER BY pos
-           ROWS BETWEEN {G.WINNOW_W - 1} PRECEDING AND CURRENT ROW) AS wmin
-  FROM pc
-),
-fps AS MATERIALIZED (
-  SELECT DISTINCT doc_id, code FROM sel
-  WHERE pos >= {G.WINNOW_W} AND code = wmin
-),
-keep AS MATERIALIZED (
-  SELECT code FROM fps GROUP BY code
-  HAVING count(*) BETWEEN 2 AND {G.WINNOW_MAX_DF}
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       CAST(count(*) AS BIGINT) AS n_shared
-FROM fps a
-JOIN keep k ON k.code = a.code
-JOIN fps b ON b.code = a.code AND a.doc_id < b.doc_id
-GROUP BY 1, 2
 """
 
 

@@ -350,52 +350,7 @@ def tpch_q19(spark, sf_dir):
     )
 
 
-# --- training-data-pipeline operators (dedup / text analysis) ----------------
-def dedup_exact(spark, sf_dir):
-    from . import dedup as D
-
-    return D.exact_dup_groups(_t(spark, sf_dir, "documents"))
-
-
-def dedup_minhash_pairs(spark, sf_dir):
-    from . import dedup as D
-
-    pairs = D.minhash_lsh_pairs(_t(spark, sf_dir, "documents"))
-    return pairs.select("doc_a", "doc_b", e6(F.col("jaccard")).alias("jaccard_e6"))
-
-
-def dedup_clusters(spark, sf_dir):
-    """Near-dup clusters → canonical keeper per cluster.  The fixture
-    has no true near-dups (max trigram J ≈ 0.02), so the contract
-    decision threshold is 0.01 — the clustering machinery under test;
-    the production τ (DEDUP_JACCARD_TAU) is exercised on planted
-    duplicates in tests/test_dedup.py."""
-    from . import dedup as D
-
-    return D.dedup_clusters(_t(spark, sf_dir, "documents"), jaccard_min=0.01)
-
-
-def doc_simhash(spark, sf_dir):
-    from . import dedup as D
-
-    return D.doc_simhash(_t(spark, sf_dir, "documents"))
-
-
-def dedup_simhash_pairs(spark, sf_dir):
-    from . import dedup as D
-
-    return D.simhash_pairs(_t(spark, sf_dir, "documents")).select(
-        "doc_a", "doc_b", F.col("hamming").cast("int").alias("hamming")
-    )
-
-
-def ngram_jaccard_pairs(spark, sf_dir):
-    from . import dedup as D
-
-    pairs = D.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"))
-    return pairs.select("doc_a", "doc_b", e6(F.col("jaccard")).alias("jaccard_e6"))
-
-
+# --- training-data-pipeline operators (text analysis) -------------------------
 def text_quality(spark, sf_dir):
     from . import textstats as TS
 
@@ -418,66 +373,6 @@ def langid(spark, sf_dir):
     from . import textstats as TS
 
     return TS.langid(spark, _t(spark, sf_dir, "documents"))
-
-
-def distinct_kmv_sketch(spark, sf_dir):
-    """KMV (k-minimum-values) distinct-count sketch per language over
-    the shingle-code universe — the task brief's "novel sketch" slot.
-    k = grammar.KMV_K, shared with the DuckDB oracle (a per-call k
-    parameter silently diverged from the oracle — round-3 ADVICE).
-
-    The sketch state is the k smallest values of h(code) where h is the
-    grammar's integer hash family (pure int64 → bit-identical on every
-    engine), so unlike HLL this sketch is DETERMINISTIC and the DuckDB
-    oracle checks it value-exactly.  Estimator: (k-1)·P / kth_min
-    (integer division).  Scale shape: the per-partition top-k of a
-    monotone hash merges associatively — at cluster scale the k minima
-    reduce map-side first; here the window row_number does the same in
-    two phases (WindowGroupLimit partial → final).  Also reports the
-    exact distinct count for error inspection."""
-    from .dedup import with_shingles
-
-    k = G.KMV_K
-    sh = with_shingles(_t(spark, sf_dir, "documents"))
-    # codes feeds BOTH the sketch path and the exact count — share the
-    # materialized distinct instead of recomputing the shingle chain
-    codes = (
-        sh.select("lang", F.explode("shingles").alias("code"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    a0, b0 = G.hash_a(0), G.hash_b(0)
-    hs = codes.select(
-        "lang",
-        ((F.lit(a0) * F.col("code") + F.lit(b0)) % F.lit(G.HASH_P)).alias("h"),
-    ).distinct()
-    # rn <= k (not == k) so Spark's WindowGroupLimit prunes each input
-    # partition to its k smallest BEFORE the per-lang shuffle — the
-    # reducer sees ≤ k·P rows instead of every hash of the language;
-    # kth value = max of the k survivors (only when a full k exist)
-    w = Window.partitionBy("lang").orderBy("h")
-    kth = (
-        hs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .groupBy("lang")
-        .agg(F.max("h").alias("kth_min"), F.count("*").alias("nk"))
-        .filter(F.col("nk") == k)
-        .select("lang", "kth_min")
-    )
-    n = codes.groupBy("lang").agg(F.count("*").alias("n_codes"))
-    est_num = (k - 1) * G.HASH_P
-    return n.join(kth, "lang", "left").select(
-        "lang",
-        F.col("n_codes").cast("bigint").alias("n_codes"),
-        F.coalesce("kth_min", F.lit(0)).cast("bigint").alias("kth_min"),
-        F.when(
-            F.col("kth_min").isNotNull(),
-            F.expr(f"{est_num} DIV kth_min"),
-        )
-        .otherwise(F.col("n_codes"))
-        .cast("bigint")
-        .alias("est"),
-    )
 
 
 def doc_split_assign(spark, sf_dir):
@@ -515,12 +410,7 @@ def doc_pack_assign(spark, sf_dir):
     across shards, one shuffle, deterministic at any parallelism
     (doc_id is unique ⇒ the window order is total).  Sequence identity
     is (split, shard, seq_id)."""
-    return _pack_assign(_t(spark, sf_dir, "documents"))
-
-
-def _pack_assign(docs):
-    """Shared packing kernel over any (doc_id, text) frame — used by
-    doc_pack_assign (whole corpus) and training_export (survivors)."""
+    docs = _t(spark, sf_dir, "documents")
     h_split = (
         F.lit(G.hash_a(1)) * F.col("doc_id") + F.lit(G.hash_b(1))
     ) % F.lit(G.HASH_P) % 100
@@ -548,23 +438,6 @@ def _pack_assign(docs):
         F.expr(f"start DIV {G.PACK_CAPACITY}").cast("bigint").alias("seq_id"),
         (F.col("start") % G.PACK_CAPACITY).cast("bigint").alias("seq_off"),
     )
-
-
-def training_export(spark, sf_dir):
-    """The composed END of the training-data pipeline: corpus curation
-    (quality → langid → near-dup keeper) selects the survivors, then
-    the deterministic split + sequence packing runs over the SURVIVING
-    documents only — the actual export a 100 TB pretraining run
-    consumes.  Composes three already-oracle-exact operator families
-    into one decision + assignment with ONE composed DuckDB oracle
-    (same pattern as curate_corpus).  Scale shape: the curation joins
-    are per-doc, the packing cumsum is per-(split, shard) — dropping a
-    document re-packs only its shard's tail, never the corpus."""
-    from .curate import curate_corpus
-
-    docs = _t(spark, sf_dir, "documents")
-    kept = curate_corpus(spark, docs).filter(F.col("keep") == 1).select("doc_id")
-    return _pack_assign(docs.join(kept, "doc_id"))
 
 
 def top_terms_tfidf(spark, sf_dir, k: int = 3):
@@ -601,14 +474,6 @@ def top_terms_tfidf(spark, sf_dir, k: int = 3):
         .filter(F.col("rn") <= k)
         .select("doc_id", "term", F.col("score").cast("bigint").alias("score"), "rn")
     )
-
-
-def curate_corpus(spark, sf_dir):
-    """Composed keep/drop curation decision (quality → langid →
-    near-dup keeper; grammar.py policy)."""
-    from .curate import curate_corpus as C
-
-    return C(spark, _t(spark, sf_dir, "documents"))
 
 
 # --- RDF round-trip + triple/quad-table queries --------------------------------
@@ -1226,36 +1091,6 @@ def kg_sparql_group_concat(spark, sf_dir):
     )
 
 
-def contamination_check(spark, sf_dir):
-    """Round-5 training-pipeline op: per-train-document count of
-    3-gram codes shared with the (deterministic stand-in) eval corpus,
-    flagged at >= 8 — the benchmark-leak detector.  Broadcast eval
-    code set; see dedup.contamination_flags for the 100 TB shape."""
-    from . import dedup as D
-
-    return D.contamination_flags(_t(spark, sf_dir, "documents"))
-
-
-def training_export_clean(spark, sf_dir):
-    """Round-5: training_export WITH the contamination gate — the full
-    end-of-pipeline decision: quality → langid → near-dup keeper →
-    benchmark-leak exclusion (eval docs AND documents sharing ≥8
-    3-gram codes with the eval corpus are dropped) → split → pack.
-    One composed DuckDB oracle (derived from TRAINING_EXPORT_SQL with
-    the contamination CTEs spliced into the kept set)."""
-    from . import dedup as D
-    from .curate import curate_corpus
-
-    docs = _t(spark, sf_dir, "documents")
-    kept = curate_corpus(spark, docs).filter(F.col("keep") == 1).select("doc_id")
-    clean = (
-        D.contamination_flags(docs)
-        .filter(~F.col("flagged"))
-        .select("doc_id")
-    )
-    return _pack_assign(docs.join(kept, "doc_id").join(clean, "doc_id"))
-
-
 def doc_quota_sample(spark, sf_dir, k: int = 10):
     """Round-5 curation op: BALANCED subcorpus selection — per
     (lang, source) stratum, keep exactly the k lowest-HASH documents
@@ -1270,39 +1105,6 @@ def doc_quota_sample(spark, sf_dir, k: int = 10):
         docs.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .select("doc_id", "lang", "source", F.col("rn").cast("int").alias("rn"))
-    )
-
-
-def dedup_rate_by_source(spark, sf_dir):
-    """Round-5 pipeline-observability metric: per SOURCE, document
-    count, near-dup drop count (cluster members that are not their
-    cluster's keeper), and the drop rate as floor(1e6·x) — the number
-    an operator watches to catch a crawler feeding duplicate shards.
-    One broadcast-sized join of the keeper decision back to the doc
-    dimension + a map-side-combined per-source aggregate."""
-    from . import dedup as D
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    keep = D.dedup_clusters(_t(spark, sf_dir, "documents"), jaccard_min=0.01)
-    joined = docs.join(keep, "doc_id", "left")
-    dropped = F.when(
-        F.col("keep_doc_id").isNotNull()
-        & (F.col("keep_doc_id") != F.col("doc_id")),
-        1,
-    ).otherwise(0)
-    return (
-        joined.groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(dropped).cast("bigint").alias("n_dropped"),
-        )
-        .select(
-            "source", "n_docs", "n_dropped",
-            F.floor(
-                F.lit(1e6) * F.col("n_dropped").cast("double")
-                / F.col("n_docs").cast("double")
-            ).cast("bigint").alias("drop_rate_e6"),
-        )
     )
 
 
@@ -1394,40 +1196,6 @@ def doc_repetition_stats(spark, sf_dir):
     from . import curation
 
     return curation.repetition_stats(_t(spark, sf_dir, "documents"))
-
-
-def boilerplate_rate(spark, sf_dir):
-    """Corpus-level EXACT paragraph dedup (round 6b, C4-style
-    boilerplate removal).  The soup corpus never repeats a 12-token
-    window across documents, so docs with doc_id % 3 != 1 get
-    grammar.BOILER_TEXT prepended (one full paragraph window) — those
-    documents must come back with n_boiler >= 1, the rest 0."""
-    from . import curation
-    from . import grammar as G
-
-    docs = _t(spark, sf_dir, "documents")
-    aug = docs.select(
-        "doc_id", "lang", "source",
-        F.when(
-            F.col("doc_id") % 3 != 1,
-            F.concat(F.lit(G.BOILER_TEXT + " "), F.col("text")),
-        ).otherwise(F.col("text")).alias("text"),
-    )
-    return curation.line_dup_stats(aug)
-
-
-def para_dedup(spark, sf_dir):
-    """Paragraph-granularity near-dup pairs (boilerplate removal,
-    round 6): deterministic token-window paragraphs → composite-keyed
-    minhash-LSH (the document machinery, unchanged) → cross-document
-    paragraph pairs with exact shingle Jaccard."""
-    from . import dedup as D
-
-    pairs = D.para_minhash_pairs(_t(spark, sf_dir, "documents"))
-    return pairs.select(
-        "doc_a", "para_a", "doc_b", "para_b",
-        e6(F.col("jaccard")).alias("jaccard_e6"),
-    )
 
 
 def rdf_jsonld_compacted_roundtrip(spark, sf_dir):
@@ -1660,9 +1428,8 @@ def doc_resample(spark, sf_dir):
     valuable sources, down-sample the rest) with NO randomness:
     weight_e6 = 500k + (srcnum % 4)·500k ∈ {0.5, 1, 1.5, 2}×; integer
     copies = weight div 1e6; the fractional copy decided per doc by
-    the grammar affine hash (family index 200 — clear of the
-    minhash/simhash perm range 0..127).  One
-    output row per emitted copy — explode(sequence) keeps the blow-up
+    the grammar affine hash (family index 200).  One output row per
+    emitted copy — explode(sequence) keeps the blow-up
     vectorized and bounded by the weight table, and the whole stage
     is map-only (zero shuffle) at any scale."""
     a, b = G.hash_a(200), G.hash_b(200)
@@ -1777,49 +1544,6 @@ def doc_chunk(spark, sf_dir):
         .cast("int").alias("n_tok"),
         F.expr(f"array_join(slice(toks, chunk_id * {S} + 1, {C}), ' ')")
         .alias("chunk_text"),
-    )
-
-
-def dedup_ngram_coverage(spark, sf_dir):
-    """Round-6: duplicated-n-gram coverage (the approximate
-    substring-dedup *metric* of Lee et al.'s "Deduplicating Training
-    Data" — per document, what fraction of its 3-token shingles also
-    occur in some other document).  Reuses the engine-shared shingle
-    code family (dedup.with_shingles / oracle SHINGLES_CTE), so both
-    engines group by identical BIGINT codes.
-
-    Scale shape: strictly linear — explode distinct shingles to slim
-    (doc_id, code) rows, doc-frequency per code via one groupBy, join
-    the df back on code (output rows == input rows, no pair
-    enumeration), then one per-doc aggregate.  No arrays ride any
-    shuffle past the explode."""
-    from . import dedup
-
-    docs = _t(spark, sf_dir, "documents")
-    ex = (
-        dedup.with_shingles(docs)
-        .select("doc_id", F.explode("shingles").alias("code"))
-    )
-    df_per_code = ex.groupBy("code").agg(
-        F.count("*").cast("bigint").alias("df")
-    )
-    per_doc = (
-        ex.join(df_per_code, "code")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_shingles"),
-            F.sum(F.when(F.col("df") >= 2, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_dup"),
-        )
-    )
-    return per_doc.select(
-        "doc_id",
-        "n_shingles",
-        "n_dup",
-        F.expr("CAST((1000000 * n_dup) DIV n_shingles AS BIGINT)").alias(
-            "dup_frac_e6"
-        ),
     )
 
 
@@ -2194,20 +1918,6 @@ def kg_sparql_term_ctors(spark, sf_dir):
     )
 
 
-def dedup_containment(spark, sf_dir):
-    """Round-6c: asymmetric containment near-dup — pairs where the
-    smaller 3-gram shingle set is ≥ 80 % contained in the larger
-    (dedup.containment_pairs): catches short-inside-long verbatim
-    embeddings that symmetric Jaccard misses.  Integer-e6 score."""
-    from . import dedup as D
-
-    sh = D.with_shingles(_t(spark, sf_dir, "documents"))
-    pairs = D.containment_pairs(sh, "doc_id", "shingles")
-    return pairs.select(
-        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "cont_e6"
-    )
-
-
 def rdf_jsonld_list_roundtrip(spark, sf_dir):
     """Round-6c: JSON-LD ordered collections, label-free roundtrip —
     one compacted document per region carrying the region's nations
@@ -2331,38 +2041,6 @@ def bpe_vocab_merges(spark, sf_dir, rounds: int = 3, return_vocab: bool = False)
         spark, out_rows, "rnd int, lhs string, rhs string, cnt bigint"
     )
     return (merges, sym) if return_vocab else merges
-
-
-def dedup_keep_best(spark, sf_dir):
-    """Round-6c: QUALITY-AWARE dedup keeper — the near-dup clusters of
-    dedup_clusters re-decided by content quality instead of min-id:
-    keeper = the cluster member with the highest quality_e6 (tie →
-    min doc_id), the policy real curation pipelines use (keep the
-    best copy, not the first-crawled).  One max_by-struct aggregate
-    per cluster + one join back; the struct packs (quality, -doc_id)
-    so the tie-break rides the same max."""
-    from . import dedup as D
-    from .textstats import text_quality
-
-    docs = _t(spark, sf_dir, "documents")
-    clusters = D.dedup_clusters(docs, jaccard_min=0.01)  # contract tau
-    q = text_quality(docs).select("doc_id", "quality_e6")
-    member_q = clusters.join(q, "doc_id")
-    keepers = (
-        member_q.groupBy("keep_doc_id")
-        .agg(
-            F.max(F.struct("quality_e6", (-F.col("doc_id")).alias("neg_id")))
-            .alias("best")
-        )
-        .select(
-            "keep_doc_id",
-            (-F.col("best.neg_id")).cast("bigint").alias("best_doc_id"),
-        )
-    )
-    return (
-        clusters.join(keepers, "keep_doc_id")
-        .select("doc_id", F.col("best_doc_id").alias("keep_doc_id"))
-    )
 
 
 def langid_confusion(spark, sf_dir):
@@ -2543,30 +2221,6 @@ def embedding_srp_buckets(spark, sf_dir):
             F.expr("CAST(n_vecs * (n_vecs - 1) DIV 2 AS BIGINT)"),
         )
     )
-
-
-def dedup_incremental_pairs(spark, sf_dir):
-    """Round-6c: INCREMENTAL near-dup — the arriving-batch form (new =
-    doc_id % 10 == 0, the deterministic 10% batch): LSH band collisions
-    where at least one side is new, old×old excluded inside the join
-    condition (dedup.minhash_incremental_pairs).  At 100 TB the index's
-    band table is a stored artifact; per-batch cost is independent of
-    the old×old pair mass — the shape that makes daily dedup runs
-    affordable."""
-    from . import dedup as D
-
-    return D.minhash_incremental_pairs(_t(spark, sf_dir, "documents"))
-
-
-def dedup_minhash_calibration(spark, sf_dir):
-    """Round-6c: MinHash estimator calibration — per LSH candidate
-    pair, the 64-perm signature estimate vs the exact shingle Jaccard
-    (both e6) and the absolute error (dedup.minhash_calibration): the
-    measurement that sizes MINHASH_PERMS/bands for a target error at
-    production scale."""
-    from . import dedup as D
-
-    return D.minhash_calibration(_t(spark, sf_dir, "documents"))
 
 
 def doc_surprisal_heldout(spark, sf_dir):
@@ -2798,31 +2452,6 @@ def kg_sparql_path_nps(spark, sf_dir):
           ?e !(rdf:type|ex:score) ?o
         }
         """,
-    )
-
-
-def dedup_cluster_size_hist(spark, sf_dir):
-    """Round-6c: NEAR-DUP CLUSTER SIZE HISTOGRAM — per cluster size,
-    how many clusters and how many docs get dropped ((size−1) each):
-    the dedup observability readout that tells you whether you face a
-    long tail of doubletons or a few mega-clusters (very different
-    remediation).  Two aggregates over the keeper table — linear."""
-    from . import dedup as D
-
-    clusters = D.dedup_clusters(_t(spark, sf_dir, "documents"), jaccard_min=0.01)
-    sizes = clusters.groupBy("keep_doc_id").agg(
-        F.count("*").cast("bigint").alias("cluster_size")
-    )
-    return (
-        sizes.groupBy("cluster_size")
-        .agg(F.count("*").cast("bigint").alias("n_clusters"))
-        .select(
-            "cluster_size",
-            "n_clusters",
-            (F.col("n_clusters") * (F.col("cluster_size") - 1))
-            .cast("bigint")
-            .alias("n_dropped_docs"),
-        )
     )
 
 
@@ -3072,45 +2701,6 @@ def kg_entity_provenance(spark, sf_dir):
         F.countDistinct("source").cast("bigint").alias("n_sources"),
         F.min("doc_id").cast("bigint").alias("first_doc"),
         F.max("doc_id").cast("bigint").alias("last_doc"),
-    )
-
-
-def dedup_winnow_pairs(spark, sf_dir):
-    """Round-6: winnowing near-verbatim pair detection (the MOSS
-    fingerprint scheme) — per document, every full trailing window of
-    WINNOW_W consecutive positional 3-gram codes selects its minimum;
-    documents sharing selected fingerprints become candidate pairs with
-    their shared-fingerprint count.  Winnowing's guarantee (any
-    verbatim run of WINNOW_W+2 tokens shares >= 1 fingerprint) makes
-    this the *recall-bounded* verbatim-overlap detector, at ~2/(w+1)
-    of the full shingle mass.
-
-    Scale shape: slim (doc_id, pos, code) rows through the per-doc
-    ROWS-frame window; pair enumeration only on the winnowed subset,
-    with codes above WINNOW_MAX_DF docs excluded as boilerplate
-    band-stops (the hot-key cap), so no code contributes more than
-    MAX_DF^2 pairs."""
-    from . import dedup
-
-    docs = _t(spark, sf_dir, "documents")
-    fps = dedup.winnow_fingerprints(docs)
-    dfc = fps.groupBy("code").agg(F.count("*").cast("bigint").alias("df"))
-    keep = dfc.filter(
-        (F.col("df") >= 2) & (F.col("df") <= G.WINNOW_MAX_DF)
-    ).select("code")
-    a = fps.join(keep, "code").alias("a")
-    b = fps.join(keep, "code").alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.code") == F.col("b.code"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .agg(F.count("*").cast("bigint").alias("n_shared"))
     )
 
 

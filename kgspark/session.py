@@ -5,7 +5,10 @@ SURVEY.md §3.1).  The local-mode default comes from the machine:
 ``local[os.cpu_count()]`` (``KGSPARK_MASTER`` overrides it), with one
 shuffle partition per core and at least 8; on a real cluster the same
 builder is used via ``spark-submit --py-files`` with master/executor
-conf supplied externally (see runner.py docstring).
+conf supplied externally (see runner.py docstring).  Under
+spark-submit the submitted master and driver memory stand: the JVM is
+already running with them, so a master that disagrees raises instead
+of being silently replaced.
 """
 
 from __future__ import annotations
@@ -13,6 +16,7 @@ from __future__ import annotations
 import os
 
 import pyarrow as pa
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
@@ -37,7 +41,22 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("KGSPARK_MASTER", f"local[{os.cpu_count()}]")
+    master = master or os.environ.get("KGSPARK_MASTER")
+    # spark-submit starts the driver JVM before Python runs and hands
+    # its gateway over in PYSPARK_GATEWAY_PORT; a plain interpreter has
+    # no JVM yet, and must not start one here, because launch-time conf
+    # (driver memory) only applies when the builder starts it.
+    submitted = "PYSPARK_GATEWAY_PORT" in os.environ
+    if submitted:
+        SparkContext._ensure_initialized()
+        submit_master = SparkConf().get("spark.master")
+        if master and master != submit_master:
+            raise ValueError(
+                f"master {master!r} disagrees with the submitted master "
+                f"{submit_master!r}"
+            )
+        master = submit_master
+    master = master or f"local[{os.cpu_count()}]"
     spec = master[6:-1] if master.startswith("local[") else ""
     cores = int(spec) if spec.isdigit() else os.cpu_count() or 1
     if shuffle_partitions is None:
@@ -56,13 +75,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("KGSPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # InferFiltersFromGenerate adds `size(e) > 0 AND isnotnull(e)`
         # below every Generate; predicate pushdown then substitutes the
         # generator input's PROJECTION into that filter, so an expensive
-        # synthesized array (the span builder, shingle builders) is
+        # synthesized array (the span builder) is
         # re-evaluated per row at the scan — serially, below the
         # repartition — just to skip rows the generator (outer=false)
         # would drop anyway.  Optimizer-only rule: excluding it cannot
@@ -70,6 +88,8 @@ def get_spark(
         # (r7: kg_spans_flat 1.05 s → 0.36 s warm; scale-independent).
         .config(EXCLUDED_RULES, excluded_rules(extra.pop(EXCLUDED_RULES, "")))
     )
+    if not submitted:
+        b = b.config("spark.driver.memory", os.environ.get("KGSPARK_DRIVER_MEM", "8g"))
     for k, v in extra.items():
         b = b.config(k, v)
     spark = b.getOrCreate()

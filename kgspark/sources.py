@@ -1,29 +1,19 @@
 """Document sources (SURVEY.md O1/O2/O4).
 
 Twine ingests from AMQP plus file injection (``twine-inject``/CLI
-`[U~]`); documents arrive in multiple wire formats.  Here: fixed-schema
-readers for parquet / JSON-lines / CSV (never schema inference in the
-hot path) and the Anansi-envelope unwrapper (O4): spans of
-``kind='envelope'`` carry a JSON body ``{"kind": ..., "text": ...,
-"media_ref": ...}`` that is unwrapped natively (``from_json``, no
-Python) and re-dispatched to the per-kind processors.
+`[U~]`).  Documents arrive as the fixed-schema ``documents.parquet``
+table, read directly by the runner.  This module holds the
+Anansi-envelope unwrapper (O4): spans of ``kind='envelope'`` carry a
+JSON body ``{"kind": ..., "text": ..., "media_ref": ...}`` that is
+unwrapped natively (``from_json``, no Python) and re-dispatched to the
+per-kind processors.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-DOCUMENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
 
 ENVELOPE_SCHEMA = T.StructType(
     [
@@ -32,17 +22,6 @@ ENVELOPE_SCHEMA = T.StructType(
         T.StructField("media_ref", T.StringType()),
     ]
 )
-
-
-def read_documents(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    """O2 multi-format document reader with the fixed schema."""
-    if fmt == "parquet":
-        return spark.read.parquet(path)
-    if fmt == "json":
-        return spark.read.schema(DOCUMENTS_SCHEMA).json(path)
-    if fmt == "csv":
-        return spark.read.schema(DOCUMENTS_SCHEMA).option("header", True).csv(path)
-    raise ValueError(f"unknown document format: {fmt}")
 
 
 def unwrap_envelopes(flat: DataFrame) -> DataFrame:

@@ -52,38 +52,6 @@ def test_langid_accuracy_on_rotation_signal(spark, sf_dir):
     assert acc >= 0.95, f"langid accuracy {acc:.3f} below 0.95"
 
 
-def test_curate_corpus_policy(spark, sf_dir):
-    """Composed curation decision: keep iff no rule fails, reasons are
-    consistent with the component operators."""
-    from pyspark.sql import functions as F
-
-    from kgspark import grammar as G
-    from kgspark.curate import curate_corpus
-    from kgspark.dedup import dedup_clusters
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = curate_corpus(spark, docs).localCheckpoint()
-    assert out.count() == docs.count(), "one decision per document"
-    assert out.filter(
-        (F.col("keep") == 1) != (F.col("reason") == "keep")
-    ).count() == 0
-    # low_quality rows really are below the threshold
-    q = TS.text_quality(docs).select("doc_id", "quality_e6")
-    bad = (
-        out.filter(F.col("reason") == "low_quality")
-        .join(q, "doc_id")
-        .filter(F.col("quality_e6") >= G.QUALITY_MIN_E6)
-        .count()
-    )
-    assert bad == 0
-    # near_duplicate rows are exactly the cluster non-keepers that
-    # passed the earlier rules
-    cl = dedup_clusters(docs, jaccard_min=0.01)
-    dups = {r["doc_id"] for r in cl.filter(F.col("doc_id") != F.col("keep_doc_id")).collect()}
-    flagged = {r["doc_id"] for r in out.filter(F.col("reason") == "near_duplicate").collect()}
-    assert flagged <= dups
-
-
 def test_term_pmi_hand_case(spark, tmp_path):
     """5 copies of 'x y', 5 of 'p q', 5 of 'x q': c(x,y)=c(p,q)=c(x,q)=5,
     unigrams x=10 y=5 p=5 q=10, N=30, M=15 — pmi_bits for (x,y) =

@@ -27,13 +27,12 @@ def test_tfidf_dictionary_not_broadcast_hinted(spark, sf_dir):
 
 
 def test_new_ops_partitioning_invariant(spark, sf_dir):
-    """kmv / split / pack results are identical at 2 vs 32 shuffle
+    """split / pack results are identical at 2 vs 32 shuffle
     partitions (no partition-order dependence)."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
 
     def run_all():
         return [
-            {tuple(r) for r in Q.distinct_kmv_sketch(spark, sf_dir).collect()},
             {tuple(r) for r in Q.doc_split_assign(spark, sf_dir).collect()},
             {tuple(r) for r in Q.doc_pack_assign(spark, sf_dir).collect()},
         ]
@@ -88,22 +87,6 @@ def test_entity_media_rule_joins_broadcast(spark, sf_dir):
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
     assert p.count("BroadcastHashJoin") >= 2, p[:2000]
-
-
-def test_setsim_hybrid_union_feeds_pair_count(spark, sf_dir):
-    """Round-5 hybrid skew handling: the cold (unsalted) and hot
-    (salt²) candidate joins UNION before the per-pair count aggregate
-    — one Union node above the pair-count HashAggregate pair, no
-    cartesian/BNLJ anywhere, and the aggregate is partial+final
-    (map-side combine)."""
-    from kgspark import dedup as D
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    p = _plan(D.ngram_jaccard_pairs(docs))
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-    assert "Union" in p
-    assert p.count("HashAggregate") >= 2
 
 
 def test_path_seq_no_cartesian(spark, sf_dir):
@@ -180,27 +163,6 @@ def test_repetition_stats_plan_two_level_agg(spark, sf_dir):
     assert "HashAggregate" in p
     for bad in ["BatchEvalPython", "ArrowEvalPython", "MapInPandas"]:
         assert bad not in p, f"repetition_stats fell off the JVM: {bad}"
-
-
-def test_line_dup_stats_detects_shared_paragraph(spark):
-    """Two docs sharing an identical 12-token window are flagged; the
-    unique doc is not."""
-    from kgspark.curation import line_dup_stats
-    import kgspark.grammar as G
-
-    boiler = G.BOILER_TEXT
-    df = spark.createDataFrame(
-        [
-            (1, "en", "s", boiler + " unique tail one two"),
-            (2, "en", "s", boiler + " other words here now"),
-            (3, "en", "s", "completely different text with no shared window"),
-        ],
-        "doc_id long, lang string, source string, text string",
-    )
-    rows = {r["doc_id"]: r for r in line_dup_stats(df).collect()}
-    assert rows[1]["n_boiler"] == 1 and rows[2]["n_boiler"] == 1
-    assert rows[3]["n_boiler"] == 0
-    assert rows[1]["boiler_rate_e6"] == 500000  # 1 of 2 windows
 
 
 def test_doc_resample_is_map_only(spark, sf_dir):
@@ -288,39 +250,6 @@ def test_doc_chunk_boundaries(spark):
     assert d1[1]["chunk_text"].split(" ") == [f"t{i}" for i in range(13, 21)]
     assert [(r["start_tok"], r["n_tok"]) for r in by_doc[2]] == [(1, 16)]
     assert [(r["n_tok"], r["chunk_text"]) for r in by_doc[3]] == [(1, "solo")]
-
-
-def test_ngram_coverage_is_linear(spark, sf_dir):
-    """Coverage metric must never enumerate doc pairs: no nested-loop
-    join, and the only joins are the df-per-code equi-join."""
-    p = _plan(Q.dedup_ngram_coverage(spark, sf_dir))
-    for bad in ["CartesianProduct", "BroadcastNestedLoopJoin"]:
-        assert bad not in p
-    for bad in ["BatchEvalPython", "ArrowEvalPython", "MapInPandas"]:
-        assert bad not in p, f"coverage fell off the JVM: {bad}"
-
-
-def test_ngram_coverage_values(spark):
-    """Two docs sharing one shingle, one doc disjoint: shared shingle
-    counts as dup on both sides, disjoint doc has dup_frac 0."""
-    from unittest import mock
-
-    docs = spark.createDataFrame(
-        [
-            (1, "a b c d", "en", "s1"),      # shingles: abc, bcd
-            (2, "a b c x", "en", "s1"),      # shingles: abc, bcx
-            (3, "p q r", "en", "s2"),        # shingle: pqr
-        ],
-        "doc_id long, text string, lang string, source string",
-    )
-    with mock.patch.object(Q, "_t", lambda s, d, n: docs):
-        out = {r["doc_id"]: r
-               for r in Q.dedup_ngram_coverage(spark, "x").collect()}
-    assert out[1]["n_shingles"] == 2 and out[1]["n_dup"] == 1
-    assert out[1]["dup_frac_e6"] == 500_000
-    assert out[2]["n_shingles"] == 2 and out[2]["n_dup"] == 1
-    assert out[3]["n_shingles"] == 1 and out[3]["n_dup"] == 0
-    assert out[3]["dup_frac_e6"] == 0
 
 
 def test_embedding_quantize_map_only(spark, sf_dir):
@@ -460,46 +389,6 @@ def test_label_index_partitioning_invariant(spark, sf_dir):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert lo == hi and len(lo) > 0
-
-
-def test_incremental_dedup_subset_and_planted_pair(spark, sf_dir):
-    """The incremental pair set == the full LSH pair set restricted to
-    pairs touching the new batch (no pair lost by incrementality, no
-    old×old pair leaked), and a planted near-dup crossing the
-    new/old boundary is found tagged new-old."""
-    from kgspark import dedup as D
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    inc = {
-        (r["doc_a"], r["doc_b"]): r["pair_kind"]
-        for r in D.minhash_incremental_pairs(docs).collect()
-    }
-    full = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.minhash_lsh_pairs(docs).collect()
-    }
-    want = {
-        (a, b) for (a, b) in full if a % 10 == 0 or b % 10 == 0
-    }
-    assert set(inc) == want
-    assert all(
-        (k == "new-new") == (a % 10 == 0 and b % 10 == 0)
-        for (a, b), k in inc.items()
-    )
-    # planted: doc 10 (new) duplicated as doc 10001 (old) → found new-old
-    import pandas as pd
-
-    src = docs.filter("doc_id = 10").toPandas()
-    clone = src.copy()
-    clone["doc_id"] = 10001
-    planted = spark.createDataFrame(
-        pd.concat([docs.toPandas(), clone], ignore_index=True)
-    )
-    got = {
-        (r["doc_a"], r["doc_b"]): (r["pair_kind"], r["jaccard_e6"])
-        for r in D.minhash_incremental_pairs(planted).collect()
-    }
-    assert got[(10, 10001)] == ("new-old", 1000000)
 
 
 def test_tpch_q5_star_join_broadcasts_dims(spark, sf_dir):

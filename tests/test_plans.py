@@ -54,43 +54,6 @@ def test_pipeline_no_single_partition_exchange(spark, sf_dir):
     assert "Exchange SinglePartition" not in p
 
 
-def _join_condition_lines(plan: str) -> list[str]:
-    return [
-        l for l in plan.splitlines()
-        if ("Join" in l or "Sort" in l and "Merge" in l) and "Join" in l
-    ]
-
-
-def test_neardup_pair_joins_not_metadata_blocked(spark, sf_dir):
-    """simhash/ngram pair enumeration must join on similarity-preserving
-    keys derived from the content fingerprints (segments / shingle
-    codes), never on low-cardinality metadata columns (lang, source) —
-    metadata blocking is quadratic-within-block at corpus scale."""
-    from kgspark import dedup as D
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    for df in [D.simhash_pairs(docs), D.ngram_jaccard_pairs(docs)]:
-        joins = _join_condition_lines(_plan(df))
-        assert joins, "expected at least one join in the pair plan"
-        for l in joins:
-            assert "lang#" not in l and "source#" not in l, (
-                "pair join keyed on a metadata column:\n" + l
-            )
-
-
-def test_minhash_band_join_is_slim(spark, sf_dir):
-    """The LSH band self-join must not carry shingle arrays through the
-    shuffle: no 'shingles' attribute may appear in any join of the
-    candidate-pair plan (arrays join back only AFTER pair distinct)."""
-    from kgspark import dedup as D
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    p = _plan(D.minhash_lsh_pairs(docs))
-    for l in _join_condition_lines(p):
-        if "band_hash" in l:
-            assert "shingles" not in l, "band join carries shingle arrays:\n" + l
-
-
 def test_tpch_q3_no_eager_collect(spark, sf_dir):
     """Plan construction must not run a driver-side collect (the
     segment pick is a lazy broadcast 1-row aggregate, not a scalar

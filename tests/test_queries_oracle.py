@@ -20,22 +20,21 @@ FAST = [
     "top10_orders", "tpch_q4", "tpch_q14", "tpch_q19",
     # round-4 additions (pipeline-derived ones read the stages of the
     # one memoized run_pipeline_cached pipeline)
-    "distinct_kmv_sketch", "kg_entity_media", "kg_media_triples",
+    "kg_entity_media", "kg_media_triples",
     "kg_bgp_filter", "kg_bgp_union", "kg_sameas_closure", "kg_sameas_degree",
     "kg_sparql_topk", "kg_sparql_construct", "kg_sparql_groupby",
-    "kg_sparql_lang", "kg_sparql_graph", "doc_pack_assign", "training_export",
+    "kg_sparql_lang", "kg_sparql_graph", "doc_pack_assign",
     # round-6 additions
-    "pii_scrub", "pii_rate_by_source", "kg_sparql_update", "para_dedup",
+    "pii_scrub", "pii_rate_by_source", "kg_sparql_update",
     "kg_sparql_select_expr", "rdf_jsonld_compacted_roundtrip",
     "kg_sparql_optional_exists", "kg_sparql_modify",
     # round-6c additions
     "term_pmi", "embedding_srp_buckets", "vocab_growth",
-    "doc_surprisal_heldout", "dedup_incremental_pairs",
-    "dedup_minhash_calibration", "embedding_label_centroids",
+    "doc_surprisal_heldout", "embedding_label_centroids",
     "embedding_kmeans_assign", "embedding_kmeans_inertia",
     "doc_type_token_ratio", "corpus_stats_by_source",
     # round-6e additions
-    "kg_entity_provenance", "dedup_winnow_pairs", "kg_void_summary",
+    "kg_entity_provenance", "kg_void_summary",
     "kg_graph_hash", "doc_zorder_key", "embedding_pq_codes",
     "kg_store_merge", "kg_component_size_hist",
     "kg_store_diff", "kg_parse_error_stats", "embedding_dim_stats",

@@ -1,13 +1,22 @@
 """Session configuration: a caller's optimizer-rule exclusions are
-merged with the built-in one instead of replacing it, and the default
-master is sized from the machine."""
+merged with the built-in one instead of replacing it, the default
+master is sized from the machine, and a spark-submit master stands."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+from pathlib import Path
+
+import pyspark
 import pytest
 from pyspark.sql import SparkSession
 
 from kgspark import session as S
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 def test_excluded_rules_merge():
@@ -57,3 +66,44 @@ def test_default_master_from_cpu_count(monkeypatch, cpus, partitions):
 
     monkeypatch.setenv("KGSPARK_MASTER", "local[5]")
     assert _builder_options(monkeypatch)["spark.master"] == "local[5]"
+
+
+def test_submit_time_master_is_honoured(tmp_path):
+    """Under spark-submit the session runs on the submitted master and
+    driver memory; an explicit ``master=`` or ``KGSPARK_MASTER`` that
+    disagrees raises instead of replacing it."""
+    probe = tmp_path / "probe.py"
+    probe.write_text(textwrap.dedent("""
+        import os
+        from kgspark.session import get_spark
+
+        try:
+            get_spark(master="local[3]")
+        except ValueError:
+            print("raised arg")
+        os.environ["KGSPARK_MASTER"] = "local[3]"
+        try:
+            get_spark()
+        except ValueError:
+            print("raised env")
+        os.environ["KGSPARK_MASTER"] = "local[2]"
+        sc = get_spark().sparkContext
+        print("master", sc.master)
+        print("memory", sc.getConf().get("spark.driver.memory"))
+        sc.stop()
+    """))
+    submit = Path(pyspark.__file__).parent / "bin" / "spark-submit"
+    env = {**os.environ, "PYTHONPATH": str(REPO),
+           "PYSPARK_PYTHON": sys.executable,
+           "PYSPARK_DRIVER_PYTHON": sys.executable}
+    env.pop("KGSPARK_MASTER", None)
+    out = subprocess.run(
+        [str(submit), "--master", "local[2]", "--driver-memory", "1g",
+         str(probe)],
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    lines = out.stdout.splitlines()
+    assert "master local[2]" in lines, out.stdout
+    assert "memory 1g" in lines, out.stdout
+    assert "raised arg" in lines and "raised env" in lines, out.stdout
