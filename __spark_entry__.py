@@ -103,52 +103,28 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_void_summary": Q.kg_void_summary,                       # VoID dataset stats (r6e)
         "kg_graph_hash": Q.kg_graph_hash,                           # canonical graph hash (r6e)
         "kg_component_size_hist": Q.kg_component_size_hist,         # CC size distribution (r6e)
-        "embedding_dim_stats": Q.embedding_dim_stats,               # per-dim standardization stats (r6e)
         "kg_attr_coverage": Q.kg_attr_coverage,                     # KG completeness metric (r6e)
         "kg_label_collisions": Q.kg_label_collisions,               # label ambiguity metric (r6e)
         "doc_prefix_dup_groups": Q.doc_prefix_dup_groups,           # truncation-dup detector (r6e)
         "doc_zorder_key": Q.doc_zorder_key,                         # Morton export layout key (r6e)
-        "embedding_pq_codes": Q.embedding_pq_codes,                 # product quantization (r6e)
         "kg_entity_provenance": Q.kg_entity_provenance,             # proxy provenance audit (r6e)
         # training-data-pipeline operators (text)
-        "doc_repetition_stats": Q.doc_repetition_stats,     # Gopher repetition flags (r6b)
         "doc_split_assign": Q.doc_split_assign,             # det. train/val/test (r3)
         "doc_quota_sample": Q.doc_quota_sample,             # balanced per-stratum top-k (r5)
         "doc_resample": Q.doc_resample,                     # source-weighted resampling (r6)
         "doc_bigram_surprisal": Q.doc_bigram_surprisal,     # integer perplexity proxy (r6)
         "doc_chunk": Q.doc_chunk,                           # RAG token-window chunking (r6)
         "rdf_turtle_bnode_roundtrip": Q.rdf_turtle_bnode_roundtrip,  # [ ] / ( ) forms (r6)
-        "term_pmi": Q.term_pmi,                        # log-domain PMI collocations (r6c)
-        "embedding_srp_buckets": Q.embedding_srp_buckets,  # SRP-LSH histogram (r6c)
         "doc_surprisal_heldout": Q.doc_surprisal_heldout,  # cross-split LM filter (r6c)
         "kg_sparql_values": Q.kg_sparql_values,        # VALUES + MIN/MAX aggs (r6c)
         "kg_sparql_path_nps": Q.kg_sparql_path_nps,    # negated property set (r6c)
-        "embedding_label_centroids": Q.embedding_label_centroids,  # k-means M-step (r6c)
-        "embedding_kmeans_assign": Q.embedding_kmeans_assign,  # k-means E-step (r6c)
-        "embedding_kmeans_inertia": Q.embedding_kmeans_inertia,  # convergence metric (r6c)
-        "embedding_kmeans_train": Q.embedding_kmeans_train,  # 2 Lloyd rounds unrolled (r6c)
         "doc_type_token_ratio": Q.doc_type_token_ratio,  # lexical diversity e6 (r6c)
         "kg_class_cooccurrence": Q.kg_class_cooccurrence,  # schema-level affinity (r6c)
-        "vocab_growth": Q.vocab_growth,                # Heaps-law growth curve (r6c)
-        "corpus_stats_by_source": Q.corpus_stats_by_source,  # per-source corpus card (r6c)
-        "embedding_quantize": Q.embedding_quantize,          # int8 SQ + recon error (r6)
         "kg_label_index": Q.kg_label_index,                    # O7 inverted label index (r6c)
         "doc_search_topk": Q.doc_search_topk,                  # BM25-shaped top-10 search (r6c)
-        "heavy_hitters_cms": Q.heavy_hitters_cms,            # count-min sketch top-k (r6)
-        "bpe_merge_pairs": Q.bpe_merge_pairs,                # BPE pair counts round 1 (r6)
-        "bpe_vocab_merges": Q.bpe_vocab_merges,              # iterative 3-round BPE (r6c)
-        "bpe_encode_counts": Q.bpe_encode_counts,            # tokenizer application (r6c)
         "kg_sparql_ask": Q.kg_sparql_ask,                    # ASK existence probes (r6)
         "kg_sparql_describe": Q.kg_sparql_describe,          # DESCRIBE outgoing edges (r6)
         "doc_pack_assign": Q.doc_pack_assign,               # sequence packing (r4)
-        "top_terms_tfidf": Q.top_terms_tfidf,               # int-exact tf-idf top-k (r3)
-        "text_quality": Q.text_quality,
-        "token_counts": Q.token_counts,
-        "doc_fingerprint": Q.doc_fingerprint,
-        "langid": Q.langid,
-        "langid_confusion": Q.langid_confusion,    # classifier eval matrix (r6c)                                 # full oracle (r2)
-        "pii_scrub": Q.pii_scrub,                           # PII redaction (r6)
-        "pii_rate_by_source": Q.pii_rate_by_source,         # PII filter-rate metric (r6)
         # RDF serialization round-trips (O9-O11 reference parity)
         "rdf_ntriples_roundtrip": Q.rdf_ntriples_roundtrip,
         "rdf_turtle_roundtrip": Q.rdf_turtle_roundtrip,
@@ -221,20 +197,11 @@ def oracle_sql() -> dict[str, str]:
         "doc_bigram_surprisal": OS.DOC_BIGRAM_SURPRISAL_SQL,
         "doc_chunk": OS.DOC_CHUNK_SQL,
         "rdf_turtle_bnode_roundtrip": OS.RDF_TURTLE_BNODE_SQL,
-        "term_pmi": OS.TERM_PMI_SQL,
-        "embedding_srp_buckets": OS.EMBEDDING_SRP_SQL,
         "doc_surprisal_heldout": OS.DOC_SURPRISAL_HELDOUT_SQL,
         "kg_sparql_values": OS.SPARQL_VALUES_SQL,
         "kg_sparql_path_nps": OS.SPARQL_PATH_NPS_SQL,
-        "embedding_label_centroids": OS.EMBEDDING_CENTROIDS_SQL,
-        "embedding_kmeans_assign": OS.EMBEDDING_KMEANS_ASSIGN_SQL,
-        "embedding_kmeans_inertia": OS.EMBEDDING_KMEANS_INERTIA_SQL,
-        "embedding_kmeans_train": OS.EMBEDDING_KMEANS_TRAIN_SQL,
         "doc_type_token_ratio": OS.DOC_TTR_SQL,
         "kg_class_cooccurrence": OS.KG_CLASS_COOCC_SQL,
-        "vocab_growth": OS.VOCAB_GROWTH_SQL,
-        "corpus_stats_by_source": OS.CORPUS_STATS_SQL,
-        "embedding_quantize": OS.EMBEDDING_QUANTIZE_SQL,
         "kg_label_index": OS.KG_LABEL_INDEX_SQL,
         "doc_search_topk": OS.DOC_SEARCH_TOPK_SQL,
         "kg_void_summary": OS.KG_VOID_SUMMARY_SQL,
@@ -242,19 +209,12 @@ def oracle_sql() -> dict[str, str]:
         "kg_store_merge": OS.KG_STORE_MERGE_SQL,
         "kg_store_diff": OS.KG_STORE_DIFF_SQL,
         "kg_parse_error_stats": OS.KG_PARSE_ERROR_STATS_SQL,
-        "embedding_dim_stats": OS.EMBEDDING_DIM_STATS_SQL,
         "kg_attr_coverage": OS.KG_ATTR_COVERAGE_SQL,
         "kg_label_collisions": OS.KG_LABEL_COLLISIONS_SQL,
         "kg_component_size_hist": OS.KG_COMPONENT_SIZE_HIST_SQL,
-        "embedding_pq_codes": OS.EMBEDDING_PQ_CODES_SQL,
         "kg_entity_provenance": OS.ENTITY_PROVENANCE_SQL,
-        "heavy_hitters_cms": OS.HEAVY_HITTERS_CMS_SQL,
-        "bpe_merge_pairs": OS.BPE_MERGE_PAIRS_SQL,
-        "bpe_vocab_merges": OS.BPE_VOCAB_MERGES_SQL,
-        "bpe_encode_counts": OS.BPE_ENCODE_SQL,
         "kg_sparql_ask": OS.SPARQL_ASK_SQL,
         "kg_sparql_describe": OS.SPARQL_DESCRIBE_SQL,
-        "doc_repetition_stats": OS.DOC_REPETITION_SQL,
         "kg_media_features": OS.MEDIA_FEATURES_SQL,
         "doc_prefix_dup_groups": OS.DOC_PREFIX_DUP_SQL,
         "doc_zorder_key": OS.DOC_ZORDER_KEY_SQL,
@@ -263,14 +223,6 @@ def oracle_sql() -> dict[str, str]:
         {
             "doc_split_assign": OS.DOC_SPLIT_SQL,
             "doc_pack_assign": OS.DOC_PACK_SQL,
-            "top_terms_tfidf": OS.TOP_TERMS_TFIDF_SQL,
-            "text_quality": OS.TEXT_QUALITY_SQL,
-            "token_counts": OS.TOKEN_COUNTS_SQL,
-            "doc_fingerprint": OS.DOC_FINGERPRINT_SQL,
-            "langid": OS.LANGID_SQL,
-        "langid_confusion": OS.LANGID_CONFUSION_SQL,
-        "pii_scrub": OS.PII_SCRUB_SQL,
-        "pii_rate_by_source": OS.PII_RATE_BY_SOURCE_SQL,
             # round-trips must reproduce the independent FULL-TERM oracle
             # (lossless including @lang tags and ^^datatypes)
             "rdf_ntriples_roundtrip": OS.TRIPLES_FULL_SQL,

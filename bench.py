@@ -58,44 +58,6 @@ def _scaled_documents(spark, sf_dir: str, rep: int):
     )
 
 
-def _varied_documents(spark, sf_dir: str, rep: int):
-    """documents × rep with DISTINCT content per replica: every token
-    gets a replica-salt prefix, so similarity structure WITHIN a
-    replica is preserved while cross-replica pairs vanish — modeling
-    rep× independent corpus growth.  (Replicating identical bytes —
-    _scaled_documents — is right for the per-document extract pipeline
-    but pathological for similarity joins: an all-duplicates corpus's
-    pair output grows ×rep², a different workload than scale-up.)"""
-    from pyspark.sql import functions as F
-
-    import string
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    if rep <= 1:
-        return docs
-    # Per-replica CAESAR ROTATION of the alphabet — a bijection on
-    # characters, so every replica has exactly the original's token
-    # diversity, length structure, and within-replica similarity graph,
-    # while token codes are disjoint across replicas.  (A constant
-    # multi-char token prefix instead COLLAPSES the engine's
-    # first-two-chars tokcode space per replica and turns the
-    # similarity joins into an artificial near-all-pairs corpus —
-    # measured ×80 wall before this fix.)
-    alpha = string.ascii_lowercase
-    salted = F.col("text")
-    for r in range(1, min(rep, 26)):
-        rot = alpha[r:] + alpha[:r]
-        salted = F.when(
-            F.col("_r") % 26 == r, F.translate(F.col("text"), alpha, rot)
-        ).otherwise(salted)
-    return (
-        docs.withColumn("_r", F.explode(F.sequence(F.lit(0), F.lit(rep - 1))))
-        .withColumn("doc_id", F.col("doc_id") + F.col("_r").cast("long") * 1_000_000_000)
-        .withColumn("text", salted)
-        .drop("_r")
-    )
-
-
 def _staged_pipeline(spark, docs_df, emb_df, timings, stages):
     """Times the in-memory executor's stages (pipeline.STAGES) as each
     is first built and counted: a leaf's time includes the driver work
@@ -144,7 +106,7 @@ def _run_bench(sf_dir: str, cpus: int, rep: int = 1, with_queries: bool = True,
     timings: dict[str, float] = {}
     stages: dict[str, dict] = {}
     bench_query_names = [
-        "kg_spans_flat", "kg_media_features", "langid", "text_quality",
+        "kg_spans_flat", "kg_media_features",
         # round-4 store query surface (amortize the memoized
         # pipeline chain across the three)
         "kg_sparql_topk", "kg_sameas_degree",
@@ -337,9 +299,8 @@ def _scale_child(sf_dir: str, cpus: int, rep: int) -> dict:
 def _stress(sf_dir: str, cpus: int) -> dict:
     """Scale-stress one notch up (round-4 verdict #8): the headline
     extract pipeline at ×1 vs ×REP identical-content replication
-    (per-document work — the 100 TB-dominant term), and langid at ×1
-    vs ×REP content-VARIED replication (independent-corpus
-    growth; see _varied_documents).  REP defaults to 10 — sf0.1×10 ≈
+    (per-document work — the 100 TB-dominant term), plus the store and
+    SPARQL surface at both levels.  REP defaults to 10 — sf0.1×10 ≈
     sf1-equivalent.  Reports per-stage times at both levels and the
     time ratio; on a fixed-size machine linear data scaling is ratio ≈
     REP, so a stage is flagged when ratio > 2·REP (a skew/memory cliff
@@ -347,7 +308,6 @@ def _stress(sf_dir: str, cpus: int) -> dict:
     from pyspark.sql import functions as F
 
     from kgspark.session import get_spark
-    from kgspark import textstats as TS
 
     rep = int(os.environ.get("SPARK_GRAFT_STRESS_REP", "10"))
     # local mode runs everything in ONE JVM: the ×REP working set
@@ -370,16 +330,12 @@ def _stress(sf_dir: str, cpus: int) -> dict:
         docs = _scaled_documents(spark, sf_dir, r)
         _staged_pipeline(spark, docs, emb, timings, stages)
 
-        vd = _varied_documents(spark, sf_dir, r).localCheckpoint(eager=True)
-
         def timed(name, fn):
             t0 = time.time()
             n = fn()
             dt = round(time.time() - t0, 3)
             timings[name] = dt
             stages[name] = {"rows": n, "sec": dt}
-
-        timed("langid", lambda: TS.langid(spark, vd).count())
 
         # --- store / SPARQL surface (round-6 verdict #7) ------------
         # GRAPH-pruned store scan: the store grows ×r (same ≤512-graph
@@ -415,10 +371,9 @@ def _stress(sf_dir: str, cpus: int) -> dict:
 
         # SPARQL path closure at scale: the ×1 pipeline's sameAs graph
         # replicated r× into DISJOINT node namespaces (components ×r,
-        # component SIZES preserved — independent-corpus growth, the
-        # shape Caesar-varied docs can't produce because rotation
-        # breaks entity-token detection).  Cost must track components,
-        # i.e. stay ~linear in r.
+        # component SIZES preserved — independent-corpus growth; a
+        # character-rotated corpus would break entity-token detection).
+        # Cost must track components, i.e. stay ~linear in r.
         from kgspark.pipeline import run_pipeline_cached
 
         t1 = run_pipeline_cached(spark, sf_dir).triples

@@ -24,7 +24,7 @@ import sys
 import time
 
 BENCH_QUERIES = [
-    "kg_spans_flat", "kg_media_features", "langid", "text_quality",
+    "kg_spans_flat", "kg_media_features",
     "kg_sparql_topk", "kg_sameas_degree",
     "kg_entity_media", "doc_pack_assign",
 ]

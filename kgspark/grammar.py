@@ -39,9 +39,6 @@ ENTITY_TOKENS = [
     "table", "value", "vector", "window",
 ]
 
-# Non-entity tokens (stopwords / verbs / adjectives).
-STOP_TOKENS = sorted(set(VOCAB) - set(ENTITY_TOKENS))
-
 # Regex extracting maximal entity-token runs from a SPACE-PADDED span
 # text (' ' || text || ' ').  Group 1 is the run.  Works identically in
 # Java regex (Spark), RE2 (DuckDB — no lookarounds used) and Python re.
@@ -207,76 +204,5 @@ def tokcode_py(t: str) -> int:
 PACK_CAPACITY = 256
 PACK_SHARDS = 16
 
-# Count-Min sketch (heavy-hitter estimation over the token stream) —
-# d rows × w buckets; row i uses hash index CMS_HASH_OFFSET + i of the
-# shared family.  Token identity enters via the char-level rolling hash
-# charcode(t) = fold((a, c) -> (31a + ascii(c)) % HASH_P, 0, chars(t))
-# — the same 31-multiplier family as the doc fingerprint, exact int64
-# on every engine.  Shared by queries.heavy_hitters_cms and
-# oracle_sql.HEAVY_HITTERS_CMS_SQL.
-CMS_D = 4
-CMS_W = 512
-CMS_HASH_OFFSET = 256
-CMS_TOP_K = 20
-
-# Sign-random-projection LSH over embeddings (cosine bucketing):
-# plane k's component d (0-based) has sign +1 iff
-#   ((hash_a(SRP_HASH_IDX) * (k*dim + d) + hash_b(SRP_HASH_IDX))
-#     % HASH_P) % 2 == 0
-# else −1; bit k of the signature = [Σ_d sign(k,d)·e3_d ≥ 0].  Pure
-# int64 arithmetic on the e3 grid — bit-identical on every engine,
-# unlike a float Gaussian projection.  Shared by
-# queries.embedding_srp_buckets and oracle_sql.EMBEDDING_SRP_SQL.
-SRP_PLANES = 16
-SRP_HASH_IDX = CMS_HASH_OFFSET + CMS_D  # next free slot in the family
-
-# Quality scoring stopword set = STOP_TOKENS; token-count regex:
-BPE_TOKEN_PATTERN = r"[a-z]+|[0-9]+|[^a-z0-9 ]"
-
-# ---------------------------------------------------------------------------
-# Language-ID (char-trigram frequency profiles) — grammar shared by the
-# Spark implementation (textstats.langid) and the DuckDB oracle.
-#
-# The fixture's text is language-independent by construction, so a
-# deterministic synthetic language signal is injected: each lang
-# Caesar-rotates a–z by  rot(lang) = (ascii(l[0])*31 + ascii(l[1])) % 26
-# (distinct per fixture lang: de=3 en=17 es=22 fr=0 zh=12) at the
-# TRIGRAM-CODE level; code = sh(c1)*65536 + sh(c2)*256 + sh(c3) with
-# sh(a) = 97 + (a-97+rot) % 26 for a ∈ [97,122], identity otherwise.
-# Profiles = top LANGID_TOP_N codes per lang by (count desc, code asc);
-# score(doc, lang) = Σ over the doc's codes (with multiplicity) of the
-# profile count; prediction = argmax, ties broken by min lang.  Integer
-# TF scoring (not NB log-probs) is a documented deviation: it is exact
-# in int64 on every engine, so the query gets a full value-hash oracle.
-# ---------------------------------------------------------------------------
-LANGID_TOP_N = 400
-
 # Rolling-hash document fingerprint: acc = (acc*31 + tokcode) % FP_MOD.
 FP_MOD = 1000000007
-
-# ---------------------------------------------------------------------------
-# PII / content-filter curation (round 6, kgspark/curation.py + the
-# DuckDB oracle).  Rules apply IN ORDER (sequential regexp_replace —
-# order is part of the spec); match counts are taken on the ORIGINAL
-# text per rule.  Patterns stay inside the Java-regex ∩ RE2 common
-# subset (no lookaround/backrefs) so Spark and DuckDB agree bit-exactly.
-#
-# The fixture corpus is PII-free word soup by construction, so the
-# contract queries inject a deterministic contact fragment derived from
-# doc_id (PII_AUGMENT below, identical SQL on both engines) for docs
-# with doc_id % 3 != 0 — the redactor must strip exactly that fragment.
-PII_RULES = [  # (kind, pattern, replacement)
-    ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
-    ("phone", r"\b\d{3}[-.]\d{4}\b", "<PHONE>"),
-    ("idnum", r"\b\d{8,}\b", "<ID>"),
-]
-
-# Gopher-style repetition-quality thresholds (round 6b): a doc is
-# flagged when its most-frequent token exceeds REP_TOP_TOKEN_E6 of all
-# tokens, or its duplicate-bigram mass (n_bigrams - distinct bigrams)
-# exceeds REP_DUP_BIGRAM_E6 — both in 1e6 fixed-point so the flag is a
-# pure integer comparison on every engine.  Values sit at ~p90 of the
-# fixture corpus distribution (measured sf0.01), giving the flag a
-# discriminative split.
-REP_TOP_TOKEN_E6 = 140_000
-REP_DUP_BIGRAM_E6 = 65_000

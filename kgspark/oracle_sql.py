@@ -744,27 +744,6 @@ WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
 # ---------------------------------------------------------------------------
 # Training-data-pipeline oracles (text analysis).
 # ---------------------------------------------------------------------------
-TOP_TERMS_TFIDF_SQL = """
-WITH toks AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-),
-toks_f AS (SELECT doc_id, term FROM toks WHERE term != ''),
-tf AS (SELECT doc_id, term, count(*) AS tf FROM toks_f GROUP BY doc_id, term),
-df AS (SELECT term, count(*) AS df FROM
-       (SELECT DISTINCT doc_id, term FROM toks_f) GROUP BY term),
-n AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
-scored AS (
-  SELECT tf.doc_id, tf.term,
-         tf.tf * length(bin(n.n // df.df)) AS score
-  FROM tf JOIN df USING (term) CROSS JOIN n
-)
-SELECT doc_id, term, CAST(score AS BIGINT) AS score, rn FROM (
-  SELECT *, row_number() OVER (PARTITION BY doc_id
-                               ORDER BY score DESC, term ASC) AS rn
-  FROM scored
-) WHERE rn <= 3
-"""
-
 DOC_SPLIT_SQL = f"""
 SELECT doc_id, lang,
        CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val'
@@ -819,96 +798,6 @@ SELECT s, p, o, o_kind, o_lang, o_datatype FROM (
   SELECT 'doc://' || id, 'ex:size', CAST(len(toks) AS VARCHAR),
          'literal', '', 'xsd:integer' FROM d
 )
-"""
-
-_STOP_LIST = ", ".join(f"'{t}'" for t in G.STOP_TOKENS)
-
-TEXT_QUALITY_SQL = f"""
-WITH d AS (
-  SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents
-), feats AS (
-  SELECT doc_id,
-    len(toks) AS n_tokens,
-    len(list_distinct(toks)) AS n_distinct,
-    len(list_filter(toks, t -> t IN ({_STOP_LIST})))::DOUBLE / len(toks)
-      AS stop_ratio,
-    (length(text) - (len(toks) - 1))::DOUBLE / len(toks) AS mean_len,
-    len(list_distinct(toks))::DOUBLE / len(toks) AS distinct_ratio
-  FROM d
-)
-SELECT doc_id, n_tokens, n_distinct,
-  CAST(floor(1e6 * stop_ratio) AS BIGINT) AS stop_ratio_e6,
-  CAST(floor(1e6 * mean_len) AS BIGINT) AS mean_tok_len_e6,
-  CAST(floor(1e6 * (0.5 * (1 - stop_ratio)
-      + 0.3 * least(1.0, n_tokens / 50.0)
-      + 0.2 * distinct_ratio)) AS BIGINT) AS quality_e6
-FROM feats
-"""
-
-TOKEN_COUNTS_SQL = f"""
-SELECT doc_id,
-  len(string_split(text, ' ')) AS n_ws_tokens,
-  len(regexp_extract_all(text, '{G.BPE_TOKEN_PATTERN}')) AS n_bpe_tokens
-FROM documents
-"""
-
-DOC_FINGERPRINT_SQL = f"""
-SELECT doc_id,
-  list_reduce(
-    list_prepend(0::BIGINT,
-      list_transform(string_split(text, ' '), t -> {_TOKCODE})),
-    (a, b) -> (a*31 + b) % {G.FP_MOD}) AS fingerprint
-FROM documents
-"""
-
-# --- language-ID oracle (grammar.py LANGID spec, integer-exact) -------------
-def _sh(a: str) -> str:
-    return f"(CASE WHEN {a} BETWEEN 97 AND 122 THEN 97 + ({a} - 97 + rot) % 26 ELSE {a} END)"
-
-
-_TRI_CODE = (
-    f"{_sh('ascii(substr(text, i, 1))')}::BIGINT * 65536"
-    f" + {_sh('ascii(substr(text, i+1, 1))')}::BIGINT * 256"
-    f" + {_sh('ascii(substr(text, i+2, 1))')}::BIGINT"
-)
-
-_LANGID_CTES = f"""
-d AS (
-  SELECT doc_id, lang, text,
-         (ascii(substr(lang, 1, 1))*31 + ascii(substr(lang, 2, 1))) % 26 AS rot
-  FROM documents
-),
-tris AS (
-  SELECT doc_id, lang,
-         unnest(list_transform(generate_series(1, length(text) - 2),
-                               i -> {_TRI_CODE})) AS code
-  FROM d WHERE length(text) >= 3
-),
-counts AS (SELECT lang AS cand, code, count(*) AS cnt FROM tris GROUP BY 1, 2),
-profile AS (
-  SELECT cand, code, cnt FROM counts
-  QUALIFY row_number() OVER (PARTITION BY cand ORDER BY cnt DESC, code ASC)
-          <= {G.LANGID_TOP_N}
-),
-scores AS (
-  SELECT t.doc_id, p.cand, CAST(sum(p.cnt) AS BIGINT) AS score
-  FROM tris t JOIN profile p USING (code) GROUP BY 1, 2
-),
-universe AS (
-  SELECT doc_id, lang, cand
-  FROM documents CROSS JOIN (SELECT DISTINCT lang AS cand FROM documents)
-),
-lpred AS MATERIALIZED (
-  SELECT doc_id, lang, cand AS predicted_lang
-  FROM universe LEFT JOIN scores USING (doc_id, cand)
-  QUALIFY row_number() OVER (PARTITION BY doc_id
-                             ORDER BY coalesce(score, 0) DESC, cand ASC) = 1
-)
-"""
-
-LANGID_SQL = f"""
-WITH {_LANGID_CTES}
-SELECT doc_id, lang, predicted_lang FROM lpred
 """
 
 PREDICATE_COUNTS_SQL = f"""
@@ -1023,42 +912,6 @@ GROUP BY t1.s
 """
 
 
-# r6: int8 scalar quantization on the integer e3 grid — identical
-# arithmetic to the Spark builder; all-positive DIV operands keep
-# truncating vs floor division equivalent.
-EMBEDDING_QUANTIZE_SQL = """
-WITH v AS (
-  SELECT vec_id,
-         list_transform(embedding,
-           x -> CAST(round(1000 * CAST(x AS DOUBLE)) AS BIGINT)) AS xe3
-  FROM embeddings
-),
-m AS (
-  SELECT vec_id, xe3,
-         list_max(list_transform(xe3, v -> abs(v))) AS maxabs
-  FROM v
-),
-q AS (
-  SELECT vec_id, xe3, maxabs,
-         list_transform(xe3,
-           v -> CASE WHEN maxabs = 0 THEN CAST(0 AS BIGINT)
-                ELSE CAST((CASE WHEN v >= 0 THEN 1 ELSE -1 END)
-                     * ((254 * abs(v) + maxabs) // (2 * maxabs))
-                     AS BIGINT) END) AS qc
-  FROM m
-)
-SELECT vec_id,
-       maxabs AS maxabs_e3,
-       CAST((1000000 * CAST(list_sum(list_transform(
-              generate_series(1, len(xe3)),
-              i -> abs(127 * xe3[i] - qc[i] * maxabs))) AS BIGINT))
-            // (127 * len(xe3) * 1000) AS BIGINT) AS mean_abs_err_e6,
-       CAST(list_sum(list_transform(generate_series(1, len(qc)),
-              i -> qc[i] * i)) AS BIGINT) AS q_checksum
-FROM q
-"""
-
-
 # r5: balanced quota sample — k lowest-hash docs per (lang, source).
 DOC_QUOTA_SAMPLE_SQL = f"""
 SELECT doc_id, lang, source, CAST(rn AS INT) AS rn
@@ -1096,64 +949,6 @@ survivors AS (
 SELECT g, s, p, o FROM survivors
 UNION ALL SELECT 'urn:x-kgspark:default', 'ex:extra', 'ex:name', 'ATLANTIS'
 UNION ALL SELECT 'ex:reg9', 'ex:nat99', 'ex:flag', 'ex:new'
-"""
-
-# r6: PII curation — the augmentation string, redaction chain and
-# per-rule counts are COMPOSED from grammar.PII_RULES so both engines
-# share one spec (sequential replace order included).  DuckDB
-# regexp_replace needs the explicit 'g' flag (Spark is global by
-# default).
-_PII_AUG = (
-    "(CASE WHEN doc_id % 3 <> 0 THEN text"
-    " || ' contact u' || CAST(doc_id AS VARCHAR)"
-    " || '@ex' || CAST(doc_id % 7 AS VARCHAR)"
-    " || '.com call 555-'"
-    " || lpad(CAST((doc_id*37) % 10000 AS VARCHAR), 4, '0')"
-    " || ' ref ' || CAST(doc_id*13 + 10000000 AS VARCHAR)"
-    " ELSE text END)"
-)
-
-
-def _pii_scrub_expr(src: str) -> str:
-    out = src
-    for _kind, pat, repl in G.PII_RULES:
-        out = f"regexp_replace({out}, '{pat}', '{repl}', 'g')"
-    return out
-
-
-def _pii_count_cols(src: str) -> str:
-    return ", ".join(
-        f"CAST(len(regexp_extract_all({src}, '{pat}')) AS BIGINT)"
-        f" AS n_{kind}"
-        for kind, pat, _repl in G.PII_RULES
-    )
-
-
-PII_SCRUB_SQL = f"""
-SELECT doc_id,
-       {_pii_scrub_expr(_PII_AUG)} AS clean_text,
-       {_pii_count_cols(_PII_AUG)},
-       CAST({' + '.join(f"len(regexp_extract_all({_PII_AUG}, '{p}'))"
-                        for _k, p, _r in G.PII_RULES)} AS BIGINT) AS n_pii
-FROM documents
-"""
-
-PII_RATE_BY_SOURCE_SQL = f"""
-WITH scrubbed AS (
-  SELECT source,
-         {' + '.join(f"len(regexp_extract_all({_PII_AUG}, '{p}'))"
-                     for _k, p, _r in G.PII_RULES)} AS n_pii
-  FROM documents
-)
-SELECT source,
-       CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(CASE WHEN n_pii > 0 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_docs_pii,
-       CAST(SUM(n_pii) AS BIGINT) AS n_redactions,
-       CAST(floor(1e6 * SUM(CASE WHEN n_pii > 0 THEN 1 ELSE 0 END)::DOUBLE
-                  / COUNT(*)) AS BIGINT) AS pii_rate_e6
-FROM scrubbed
-GROUP BY source
 """
 
 # r6: SELECT projection expressions + ORDER BY expression keys.
@@ -1235,43 +1030,6 @@ SELECT DISTINCT s, p, o FROM (
   UNION ALL
   SELECT e AS s, 'ex:score' AS p, n AS o FROM sol
 )
-"""
-
-# r6b: Gopher-style repetition metrics — two-level (doc, term) then
-# (doc) aggregates per granularity, e6 fixed-point, grammar-threshold
-# flag.  Identical IEEE op order to the Spark side (1e6*num then /den).
-DOC_REPETITION_SQL = f"""
-WITH tok AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents
-),
-tc AS (SELECT doc_id, t, count(*) c FROM tok GROUP BY 1, 2),
-td AS (
-  SELECT doc_id, sum(c) n, max(c) topc, count(*) ntypes FROM tc GROUP BY 1
-),
-bl AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
-bg AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(ts)),
-                               i -> ts[i] || ' ' || ts[i + 1])) AS b
-  FROM bl WHERE len(ts) >= 2
-),
-bc AS (SELECT doc_id, b, count(*) c FROM bg GROUP BY 1, 2),
-bd AS (
-  SELECT doc_id, sum(c) nb, max(c) topb, count(*) nbtypes FROM bc GROUP BY 1
-)
-SELECT td.doc_id,
-       CAST(td.n AS BIGINT) AS n_tokens,
-       CAST(floor(1e6 * td.topc / td.n) AS BIGINT) AS top_token_e6,
-       CAST(floor(1e6 * (td.n - td.ntypes) / td.n) AS BIGINT) AS dup_token_e6,
-       CAST(coalesce(floor(1e6 * bd.topb / bd.nb), 0) AS BIGINT)
-         AS top_bigram_e6,
-       CAST(coalesce(floor(1e6 * (bd.nb - bd.nbtypes) / bd.nb), 0) AS BIGINT)
-         AS dup_bigram_e6,
-       (CAST(floor(1e6 * td.topc / td.n) AS BIGINT) > {G.REP_TOP_TOKEN_E6}
-        OR CAST(coalesce(floor(1e6 * (bd.nb - bd.nbtypes) / bd.nb), 0)
-                AS BIGINT) > {G.REP_DUP_BIGRAM_E6}) AS rep_flagged
-FROM td LEFT JOIN bd ON bd.doc_id = td.doc_id
-ORDER BY td.doc_id
 """
 
 # r6: LOAD end state — the seed quad plus the nation table routed into
@@ -1444,7 +1202,7 @@ FROM raw GROUP BY ALL
 
 
 # ---------------------------------------------------------------------------
-# Round-6c: sketch / tokenizer-training / ASK / DESCRIBE.
+# Round-6c: ASK / DESCRIBE and the shared char-code hash.
 # ---------------------------------------------------------------------------
 
 # Char-level rolling hash (grammar charcode): fold (31a + ascii(c)) % P
@@ -1455,77 +1213,6 @@ _CHARCODE = (
     " c -> CAST(ascii(c) AS BIGINT))),"
     f" (a, c) -> (a * 31 + c) % {G.HASH_P})"
 )
-
-_CMS_ROW_UNION = "\nUNION ALL\n".join(
-    f"SELECT cnt, hcode, {i} AS r,"
-    f" ((({G.hash_a(G.CMS_HASH_OFFSET + i)} * hcode"
-    f" + {G.hash_b(G.CMS_HASH_OFFSET + i)}) % {G.HASH_P})"
-    f" % {G.CMS_W}) AS b FROM hc"
-    for i in range(G.CMS_D)
-)
-
-_CMS_TOP_UNION = "\nUNION ALL\n".join(
-    f"SELECT token, cnt, rnk, {i} AS r,"
-    f" ((({G.hash_a(G.CMS_HASH_OFFSET + i)} * hcode"
-    f" + {G.hash_b(G.CMS_HASH_OFFSET + i)}) % {G.HASH_P})"
-    f" % {G.CMS_W}) AS b FROM top"
-    for i in range(G.CMS_D)
-)
-
-HEAVY_HITTERS_CMS_SQL = f"""
-WITH tok AS (
-  SELECT unnest(list_filter(string_split(text, ' '), t -> t != '')) AS token
-  FROM documents
-),
-tc AS (SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY 1),
-hc AS MATERIALIZED (
-  SELECT token, cnt, {_CHARCODE.format(col='token')} AS hcode FROM tc
-),
-sk AS MATERIALIZED (
-  SELECT r, b, CAST(sum(cnt) AS BIGINT) AS bucket_cnt
-  FROM ({_CMS_ROW_UNION}) GROUP BY 1, 2
-),
-top AS MATERIALIZED (
-  SELECT token, cnt, hcode,
-         row_number() OVER (ORDER BY cnt DESC, token) AS rnk
-  FROM hc QUALIFY rnk <= {G.CMS_TOP_K}
-),
-est AS (
-  SELECT t.token, t.cnt, t.rnk, min(sk.bucket_cnt) AS cms_count
-  FROM ({_CMS_TOP_UNION}) t JOIN sk USING (r, b)
-  GROUP BY 1, 2, 3
-)
-SELECT token, CAST(rnk AS INTEGER) AS rnk, cnt AS true_count,
-       cms_count, cms_count - cnt AS overcount
-FROM est
-"""
-
-
-# One BPE merge round: weighted adjacent-symbol pair counts over the
-# word-frequency table, symbols = chars + '$' end-of-word marker.
-BPE_MERGE_PAIRS_SQL = f"""
-WITH tok AS (
-  SELECT unnest(list_filter(string_split(text, ' '), t -> t != '')) AS word
-  FROM documents
-),
-wf AS (SELECT word, CAST(count(*) AS BIGINT) AS wf FROM tok GROUP BY 1),
-sym AS (
-  SELECT wf, list_append(string_split(word, ''), '$') AS cs FROM wf
-),
-pr AS (
-  SELECT cs[i] AS lhs, cs[i + 1] AS rhs, wf
-  FROM sym, unnest(generate_series(1, len(cs) - 1)) AS u(i)
-),
-pc AS (
-  SELECT lhs, rhs, CAST(sum(wf) AS BIGINT) AS cnt FROM pr GROUP BY 1, 2
-)
-SELECT CAST(rnk AS INTEGER) AS rnk, lhs, rhs, cnt FROM (
-  SELECT lhs, rhs, cnt,
-         row_number() OVER (ORDER BY cnt DESC, lhs, rhs) AS rnk
-  FROM pc
-) WHERE rnk <= {G.CMS_TOP_K}
-"""
-
 
 # SPARQL ASK: existence probes as int-cast booleans.
 SPARQL_ASK_SQL = f"""
@@ -1630,93 +1317,6 @@ FROM ranked
 """
 
 
-# r6c: multi-round BPE — three unrolled merge rounds; per round the
-# argmax non-self pair (count DESC, lhs, rhs) applies to every symbol
-# list via the same flag/drop/substitute array rewrite as the Spark
-# loop body (lhs ≠ rhs ⇒ matches never overlap ⇒ the simultaneous
-# rewrite is the greedy result).
-def _bpe_round(prev: str, m: str) -> str:
-    return f"""
-  SELECT word, wf, list_transform(
-      list_filter(generate_series(1, len(cs)),
-        i -> NOT (coalesce(cs[i - 1], '') = {m}.lhs
-                  AND cs[i] = {m}.rhs)),
-      i -> CASE WHEN coalesce(cs[i + 1], '') = {m}.rhs
-                 AND cs[i] = {m}.lhs
-            THEN {m}.lhs || {m}.rhs ELSE cs[i] END) AS cs
-  FROM {prev}, {m}
-"""
-
-
-def _bpe_pick(prev: str) -> str:
-    return f"""
-  SELECT lhs, rhs, CAST(sum(wf) AS BIGINT) AS cnt FROM (
-    SELECT cs[i] AS lhs, cs[i + 1] AS rhs, wf
-    FROM {prev}, unnest(generate_series(1, len(cs) - 1)) AS u(i)
-  ) GROUP BY 1, 2 HAVING lhs != rhs
-  ORDER BY cnt DESC, lhs, rhs LIMIT 1
-"""
-
-
-BPE_VOCAB_MERGES_SQL = f"""
-WITH tok AS (
-  SELECT unnest(list_filter(string_split(text, ' '), t -> t != '')) AS word
-  FROM documents
-),
-wf AS (SELECT word, CAST(count(*) AS BIGINT) AS wf FROM tok GROUP BY 1),
-s1 AS MATERIALIZED (
-  SELECT word, wf, list_append(string_split(word, ''), '$') AS cs FROM wf
-),
-m1 AS MATERIALIZED ({_bpe_pick('s1')}),
-s2 AS MATERIALIZED ({_bpe_round('s1', 'm1')}),
-m2 AS MATERIALIZED ({_bpe_pick('s2')}),
-s3 AS MATERIALIZED ({_bpe_round('s2', 'm2')}),
-m3 AS MATERIALIZED ({_bpe_pick('s3')})
-SELECT 1 AS rnd, lhs, rhs, cnt FROM m1
-UNION ALL SELECT 2, lhs, rhs, cnt FROM m2
-UNION ALL SELECT 3, lhs, rhs, cnt FROM m3
-"""
-
-
-# r6c: language-ID confusion matrix over the langid oracle chain.
-LANGID_CONFUSION_SQL = f"""
-WITH {_LANGID_CTES}
-SELECT lang, predicted_lang, CAST(count(*) AS BIGINT) AS n_docs
-FROM lpred GROUP BY 1, 2
-"""
-
-
-# r6c: tokenizer application — the 3-round vocabulary applied to every
-# document (word-level join + per-doc sums), sharing the merge-round
-# CTE generators with BPE_VOCAB_MERGES_SQL.
-BPE_ENCODE_SQL = f"""
-WITH tok AS (
-  SELECT unnest(list_filter(string_split(text, ' '), t -> t != '')) AS word
-  FROM documents
-),
-wf AS (SELECT word, CAST(count(*) AS BIGINT) AS wf FROM tok GROUP BY 1),
-s1 AS MATERIALIZED (
-  SELECT word, wf, list_append(string_split(word, ''), '$') AS cs FROM wf
-),
-m1 AS MATERIALIZED ({_bpe_pick('s1')}),
-s2 AS MATERIALIZED ({_bpe_round('s1', 'm1')}),
-m2 AS MATERIALIZED ({_bpe_pick('s2')}),
-s3 AS MATERIALIZED ({_bpe_round('s2', 'm2')}),
-m3 AS MATERIALIZED ({_bpe_pick('s3')}),
-s4 AS MATERIALIZED ({_bpe_round('s3', 'm3')}),
-dwords AS (
-  SELECT doc_id,
-         unnest(list_filter(string_split(text, ' '), t -> t != '')) AS word
-  FROM documents
-)
-SELECT d.doc_id,
-       CAST(sum(length(d.word) + 1) AS BIGINT) AS n_syms_before,
-       CAST(sum(len(s4.cs)) AS BIGINT) AS n_syms_after
-FROM dwords d JOIN s4 USING (word)
-GROUP BY d.doc_id
-"""
-
-
 # r6c: label inverted index — token postings pinned by the commutative
 # rolling-hash checksum (sum of per-entity char hashes mod FP_MOD).
 KG_LABEL_INDEX_SQL = f"""
@@ -1740,65 +1340,6 @@ SELECT token, CAST(count(*) AS BIGINT) AS n_entities,
 FROM hashed GROUP BY token
 """
 KG_LABEL_INDEX_SQL = KG_LABEL_INDEX_SQL.replace("{_KG_CTES}", _KG_CTES)
-
-
-# r6c: PMI collocations — log-domain integer score (overflow-safe at
-# any corpus size; see queries.term_pmi).
-TERM_PMI_SQL = """
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split(text, ' '), t -> t != '') AS toks
-  FROM documents
-),
-uni AS MATERIALIZED (
-  SELECT w, CAST(COUNT(*) AS BIGINT) AS c
-  FROM toks, UNNEST(toks) AS u(w) GROUP BY w
-),
-bi AS MATERIALIZED (
-  SELECT toks[i] AS w1, toks[i+1] AS w2, CAST(COUNT(*) AS BIGINT) AS c_xy
-  FROM toks, UNNEST(generate_series(1, len(toks) - 1)) AS t(i)
-  WHERE len(toks) >= 2
-  GROUP BY 1, 2
-),
-tot AS (
-  SELECT (SELECT SUM(c) FROM uni) AS n_tokens,
-         (SELECT SUM(c_xy) FROM bi) AS n_bigrams
-)
-SELECT b.w1, b.w2, b.c_xy,
-       CAST(length(bin(b.c_xy)) + 2 * length(bin(CAST(t.n_tokens AS BIGINT)))
-            - length(bin(CAST(t.n_bigrams AS BIGINT)))
-            - length(bin(x.c)) - length(bin(y.c)) AS INT) AS pmi_bits
-FROM bi b
-JOIN uni x ON x.w = b.w1
-JOIN uni y ON y.w = b.w2
-CROSS JOIN tot t
-WHERE b.c_xy >= 5
-"""
-
-
-# r6c: sign-random-projection LSH bucket histogram (grammar.SRP_*).
-EMBEDDING_SRP_SQL = f"""
-WITH v AS (
-  SELECT vec_id,
-         list_transform(embedding,
-           x -> CAST(round(1000 * CAST(x AS DOUBLE)) AS BIGINT)) AS e3
-  FROM embeddings
-),
-sigs AS (
-  SELECT vec_id,
-         CAST(list_sum(list_transform(generate_series(0, {G.SRP_PLANES - 1}),
-           k -> CASE WHEN list_sum(list_transform(generate_series(1, len(e3)),
-                  d -> (CASE WHEN (({G.hash_a(G.SRP_HASH_IDX)} * (k * len(e3) + d - 1)
-                                   + {G.hash_b(G.SRP_HASH_IDX)}) % {G.HASH_P}) % 2 = 0
-                        THEN 1 ELSE -1 END) * e3[d])) >= 0
-                THEN (1::BIGINT << k) ELSE 0 END)) AS BIGINT) AS bucket
-  FROM v
-)
-SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_vecs,
-       CAST(SUM(vec_id) AS BIGINT) AS sum_vec_id,
-       CAST(COUNT(*) * (COUNT(*) - 1) // 2 AS BIGINT) AS n_cand_pairs
-FROM sigs GROUP BY bucket
-"""
 
 
 # r6c: held-out bigram surprisal — train on even doc_ids, score odd;
@@ -1854,93 +1395,6 @@ GROUP BY t1.o
 """
 
 
-# r6c: k-means M-step — integer centroid per (label, dim); the mean
-# truncates toward zero (matching Spark's DIV on a sign-split).
-EMBEDDING_CENTROIDS_SQL = """
-WITH v AS (
-  SELECT label,
-         list_transform(embedding,
-           x -> CAST(round(1000 * CAST(x AS DOUBLE)) AS BIGINT)) AS e3
-  FROM embeddings
-),
-ex AS (
-  SELECT label, CAST(d - 1 AS INT) AS dim, e3[d] AS val
-  FROM v, UNNEST(generate_series(1, len(e3))) AS t(d)
-)
-SELECT CAST(label AS INT) AS label, dim,
-       CAST(COUNT(*) AS BIGINT) AS n_vecs,
-       CAST(CASE WHEN SUM(val) >= 0 THEN SUM(val) // COUNT(*)
-                 ELSE -((-SUM(val)) // COUNT(*)) END AS BIGINT) AS mean_e3
-FROM ex GROUP BY label, dim
-"""
-
-
-# r6c: k-means E-step — nearest integer centroid, ties to min label.
-EMBEDDING_KMEANS_ASSIGN_SQL = """
-WITH v AS (
-  SELECT vec_id, label,
-         list_transform(embedding,
-           x -> CAST(round(1000 * CAST(x AS DOUBLE)) AS BIGINT)) AS e3
-  FROM embeddings
-),
-ex AS (
-  SELECT label, d AS dim, e3[d] AS val
-  FROM v, UNNEST(generate_series(1, len(e3))) AS t(d)
-),
-cent AS (
-  SELECT label, dim,
-         CAST(CASE WHEN SUM(val) >= 0 THEN SUM(val) // COUNT(*)
-                   ELSE -((-SUM(val)) // COUNT(*)) END AS BIGINT) AS mean_e3
-  FROM ex GROUP BY label, dim
-),
-cent_arr AS (
-  SELECT label AS c_label,
-         list(mean_e3 ORDER BY dim) AS cent
-  FROM cent GROUP BY label
-),
-scored AS (
-  SELECT v.vec_id, c.c_label,
-         CAST(list_sum(list_transform(generate_series(1, len(v.e3)),
-              i -> (v.e3[i] - c.cent[i]) * (v.e3[i] - c.cent[i])))
-           AS BIGINT) AS dist
-  FROM v CROSS JOIN cent_arr c
-),
-sel AS (SELECT vec_id, MIN(dist) AS dist_e6 FROM scored GROUP BY vec_id)
-SELECT s.vec_id, CAST(MIN(sc.c_label) AS INT) AS assigned_label,
-       CAST(s.dist_e6 AS BIGINT) AS dist_e6
-FROM sel s JOIN scored sc ON sc.vec_id = s.vec_id AND sc.dist = s.dist_e6
-GROUP BY s.vec_id, s.dist_e6
-"""
-
-
-# r6c: vocabulary growth curve (Heaps-law readout) at 10-doc grain,
-# over word-trigram types (the unigram vocab is closed — saturates
-# in batch 0).
-VOCAB_GROWTH_SQL = """
-WITH dt AS (
-  SELECT doc_id // 10 AS batch,
-         list_filter(string_split(text, ' '), t -> t != '') AS t
-  FROM documents
-),
-toks AS (
-  SELECT batch, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS w
-  FROM dt, UNNEST(generate_series(1, len(t) - 2)) AS u(i)
-  WHERE len(t) >= 3
-),
-fb AS (
-  SELECT w, CAST(MIN(batch) AS BIGINT) AS first_batch FROM toks GROUP BY w
-),
-pb AS (
-  SELECT first_batch, CAST(COUNT(*) AS BIGINT) AS new_types
-  FROM fb GROUP BY first_batch
-)
-SELECT first_batch AS batch, new_types,
-       CAST(SUM(new_types) OVER (ORDER BY first_batch
-            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS vocab_size
-FROM pb
-"""
-
-
 # r6c: negated property set — forward edges except the excluded preds.
 SPARQL_PATH_NPS_SQL = f"""
 {_KG_CTES},
@@ -1950,65 +1404,6 @@ FROM tri t1
 JOIN tri t2 ON t2.s = t1.s
 WHERE t1.p = 'rdf:type' AND t1.o = 'ex:Commerce'
   AND t2.p NOT IN ('rdf:type', 'ex:score')
-"""
-
-
-# r6c: per-source corpus card.
-CORPUS_STATS_SQL = """
-WITH t AS (
-  SELECT source, lang,
-         CAST(len(list_filter(string_split(text, ' '), x -> x != ''))
-              AS BIGINT) AS n_toks
-  FROM documents
-)
-SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(n_toks) AS BIGINT) AS n_tokens,
-       CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
-       CAST((1000000 * SUM(n_toks)) // COUNT(*) AS BIGINT) AS mean_len_e6
-FROM t GROUP BY source
-"""
-
-
-# r6c: k-means inertia — aggregate over the E-step assignment.
-EMBEDDING_KMEANS_INERTIA_SQL = """
-WITH v AS (
-  SELECT vec_id, label,
-         list_transform(embedding,
-           x -> CAST(round(1000 * CAST(x AS DOUBLE)) AS BIGINT)) AS e3
-  FROM embeddings
-),
-ex AS (
-  SELECT label, d AS dim, e3[d] AS val
-  FROM v, UNNEST(generate_series(1, len(e3))) AS t(d)
-),
-cent AS (
-  SELECT label, dim,
-         CAST(CASE WHEN SUM(val) >= 0 THEN SUM(val) // COUNT(*)
-                   ELSE -((-SUM(val)) // COUNT(*)) END AS BIGINT) AS mean_e3
-  FROM ex GROUP BY label, dim
-),
-cent_arr AS (
-  SELECT label AS c_label,
-         list(mean_e3 ORDER BY dim) AS cent
-  FROM cent GROUP BY label
-),
-scored AS (
-  SELECT v.vec_id, c.c_label,
-         CAST(list_sum(list_transform(generate_series(1, len(v.e3)),
-              i -> (v.e3[i] - c.cent[i]) * (v.e3[i] - c.cent[i])))
-           AS BIGINT) AS dist
-  FROM v CROSS JOIN cent_arr c
-),
-sel AS (SELECT vec_id, MIN(dist) AS dist_e6 FROM scored GROUP BY vec_id),
-assigned AS (
-  SELECT s.vec_id, CAST(MIN(sc.c_label) AS INT) AS assigned_label,
-         CAST(s.dist_e6 AS BIGINT) AS dist_e6
-  FROM sel s JOIN scored sc ON sc.vec_id = s.vec_id AND sc.dist = s.dist_e6
-  GROUP BY s.vec_id, s.dist_e6
-)
-SELECT assigned_label, CAST(COUNT(*) AS BIGINT) AS n_members,
-       CAST(SUM(dist_e6) AS BIGINT) AS inertia_e6
-FROM assigned GROUP BY assigned_label
 """
 
 
@@ -2085,55 +1480,6 @@ SELECT doc_id, score, n_terms_hit, CAST(rank AS INT) AS rank FROM (
 """
 
 
-# r6c: two unrolled Lloyd iterations (M→E→M→E), integer-exact.
-_KM_M = """
-cent{r} AS (
-  SELECT cl, dim,
-         CAST(CASE WHEN SUM(val) >= 0 THEN SUM(val) // COUNT(*)
-                   ELSE -((-SUM(val)) // COUNT(*)) END AS BIGINT) AS m
-  FROM (
-    SELECT cl, d AS dim, e3[d] AS val
-    FROM {src}, UNNEST(generate_series(1, len(e3))) AS t(d)
-  ) GROUP BY cl, dim
-),
-cent_arr{r} AS (
-  SELECT cl AS c_label, list(m ORDER BY dim) AS cent
-  FROM cent{r} GROUP BY cl
-),
-scored{r} AS (
-  SELECT v.vec_id, v.e3, c.c_label,
-         CAST(list_sum(list_transform(generate_series(1, len(v.e3)),
-              i -> (v.e3[i] - c.cent[i]) * (v.e3[i] - c.cent[i])))
-           AS BIGINT) AS dist
-  FROM kmv v CROSS JOIN cent_arr{r} c
-),
-sel{r} AS (SELECT vec_id, MIN(dist) AS dist FROM scored{r} GROUP BY vec_id),
-assigned{r} AS (
-  SELECT s.vec_id, any_value(sc.e3) AS e3,
-         CAST(MIN(sc.c_label) AS INT) AS cl,
-         CAST(s.dist AS BIGINT) AS dist
-  FROM sel{r} s
-  JOIN scored{r} sc ON sc.vec_id = s.vec_id AND sc.dist = s.dist
-  GROUP BY s.vec_id, s.dist
-)"""
-
-EMBEDDING_KMEANS_TRAIN_SQL = (
-    """
-WITH kmv AS (
-  SELECT vec_id, CAST(label AS INT) AS cl,
-         list_transform(embedding,
-           x -> CAST(round(1000 * CAST(x AS DOUBLE)) AS BIGINT)) AS e3
-  FROM embeddings
-),"""
-    + _KM_M.format(r=1, src="kmv")
-    + ","
-    + _KM_M.format(r=2, src="assigned1")
-    + """
-SELECT vec_id, cl AS assigned_label, dist AS dist_e6 FROM assigned2
-"""
-)
-
-
 # r6e: per-entity provenance summary (spindle-style proxy audit record).
 ENTITY_PROVENANCE_SQL = f"""
 {_KG_CTES}
@@ -2199,56 +1545,6 @@ WITH base AS (
   FROM documents
 )
 SELECT doc_id, lang_b, len_b, CAST({_Z_BITS} AS BIGINT) AS zkey FROM base
-"""
-
-
-# r6e: product-quantization codes — per-subspace label centroids on
-# the e3 grid, nearest-centroid assignment, exact integer sq error.
-EMBEDDING_PQ_CODES_SQL = """
-WITH v AS (
-  SELECT vec_id, label,
-         list_transform(embedding,
-           x -> CAST(round(1000 * CAST(x AS DOUBLE)) AS BIGINT)) AS e3
-  FROM embeddings
-),
-ex AS (
-  SELECT label, d - 1 AS dim, e3[d] AS val
-  FROM v, UNNEST(generate_series(1, len(e3))) AS t(d)
-),
-cent AS (
-  SELECT label, dim,
-         CAST(CASE WHEN SUM(val) >= 0 THEN SUM(val) // COUNT(*)
-                   ELSE -((-SUM(val)) // COUNT(*)) END AS BIGINT) AS mean_e3
-  FROM ex GROUP BY label, dim
-),
-cent_arr AS (
-  SELECT label AS c_label, dim // 16 AS m,
-         list(mean_e3 ORDER BY dim) AS cent
-  FROM cent GROUP BY 1, 2
-),
-sub AS (
-  SELECT vec_id, m,
-         list_transform(generate_series(1, 16),
-                        i -> e3[m * 16 + i]) AS sub
-  FROM v, UNNEST(generate_series(0, 3)) AS t(m)
-),
-scored AS (
-  SELECT s.vec_id, s.m, c.c_label,
-         CAST(list_sum(list_transform(generate_series(1, 16),
-              i -> (s.sub[i] - c.cent[i]) * (s.sub[i] - c.cent[i])))
-           AS BIGINT) AS dist
-  FROM sub s JOIN cent_arr c ON c.m = s.m
-),
-sel AS (
-  SELECT vec_id, m, MIN(dist) AS sq_err FROM scored GROUP BY 1, 2
-)
-SELECT s.vec_id, CAST(s.m AS INT) AS subspace,
-       CAST(MIN(sc.c_label) AS INT) AS code,
-       CAST(s.sq_err AS BIGINT) AS sq_err
-FROM sel s
-JOIN scored sc ON sc.vec_id = s.vec_id AND sc.m = s.m
-              AND sc.dist = s.sq_err
-GROUP BY s.vec_id, s.m, s.sq_err
 """
 
 
@@ -2330,27 +1626,6 @@ SELECT n_lines, n_parsed,
        CAST((n_lines - n_parsed) * 1000000 // n_lines AS BIGINT)
          AS drop_rate_e6
 FROM c
-"""
-
-
-# r6e: per-dimension feature statistics on the e3 grid.
-EMBEDDING_DIM_STATS_SQL = """
-WITH v AS (
-  SELECT list_transform(embedding,
-           x -> CAST(round(1000 * CAST(x AS DOUBLE)) AS BIGINT)) AS e3
-  FROM embeddings
-),
-ex AS (
-  SELECT d - 1 AS dim, e3[d] AS x
-  FROM v, UNNEST(generate_series(1, len(e3))) AS t(d)
-)
-SELECT CAST(dim AS INT) AS dim,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(x) AS BIGINT) AS sum_e3,
-       CAST(sum(x * x) AS BIGINT) AS sum_sq_e6,
-       CAST(CASE WHEN sum(x) >= 0 THEN sum(x) // count(*)
-                 ELSE -((-sum(x)) // count(*)) END AS BIGINT) AS mean_e3
-FROM ex GROUP BY dim
 """
 
 

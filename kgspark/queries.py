@@ -351,30 +351,6 @@ def tpch_q19(spark, sf_dir):
 
 
 # --- training-data-pipeline operators (text analysis) -------------------------
-def text_quality(spark, sf_dir):
-    from . import textstats as TS
-
-    return TS.text_quality(_t(spark, sf_dir, "documents"))
-
-
-def token_counts(spark, sf_dir):
-    from . import textstats as TS
-
-    return TS.token_counts(_t(spark, sf_dir, "documents"))
-
-
-def doc_fingerprint(spark, sf_dir):
-    from . import textstats as TS
-
-    return TS.doc_fingerprints(_t(spark, sf_dir, "documents"))
-
-
-def langid(spark, sf_dir):
-    from . import textstats as TS
-
-    return TS.langid(spark, _t(spark, sf_dir, "documents"))
-
-
 def doc_split_assign(spark, sf_dir):
     """Deterministic train/val/test split (80/10/10) — the standard
     training-data-pipeline assignment, keyed on a hash of the DOC ID
@@ -437,42 +413,6 @@ def doc_pack_assign(spark, sf_dir):
         "doc_id", "split", "shard", "n_tok",
         F.expr(f"start DIV {G.PACK_CAPACITY}").cast("bigint").alias("seq_id"),
         (F.col("start") % G.PACK_CAPACITY).cast("bigint").alias("seq_off"),
-    )
-
-
-def top_terms_tfidf(spark, sf_dir, k: int = 3):
-    """Per-document top-k salient terms by an INTEGER-exact tf-idf:
-    score = tf · bitlen(N // df), where bitlen(x) = ⌊log2 x⌋ + 1 — a
-    log2-quantized idf computed entirely in int64, so the ranking is
-    bit-identical on every engine (a float ln() idf can flap at floor
-    boundaries between engines).  Scale shape: tf is a map-side-combined
-    groupBy; df a term-level aggregate joined back by term — NOT
-    broadcast-hinted, because an open-vocabulary corpus has a term
-    dictionary far too large to broadcast (AQE auto-broadcasts small
-    ones, shuffles big ones); top-k a per-doc window."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("term")
-    ).filter(F.col("term") != "")
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    df_ = toks.select("doc_id", "term").distinct().groupBy("term").agg(
-        F.count("*").alias("df")
-    )
-    n_docs = docs.agg(F.countDistinct("doc_id").alias("n")).select("n")
-    scored = (
-        tf.join(df_, "term")
-        .join(F.broadcast(n_docs))
-        .select(
-            "doc_id",
-            "term",
-            (F.col("tf") * F.length(F.bin(F.expr("n DIV df")))).alias("score"),
-        )
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("doc_id", "term", F.col("score").cast("bigint").alias("score"), "rn")
     )
 
 
@@ -1145,59 +1085,6 @@ def kg_sparql_update(spark, sf_dir):
     return rdfio.read_nquads_store(spark, store).select("g", "s", "p", "o")
 
 
-def _pii_augmented(docs):
-    """Deterministic PII-bearing text: the fixture corpus is PII-free
-    word soup, so docs with doc_id % 3 != 0 get a contact fragment
-    derived from doc_id (grammar.PII_RULES docstring; the oracle builds
-    the identical string in SQL) — email + phone + 8-digit id."""
-    frag = F.concat(
-        F.col("text"),
-        F.lit(" contact u"), F.col("doc_id").cast("string"),
-        F.lit("@ex"), (F.col("doc_id") % 7).cast("string"),
-        F.lit(".com call 555-"),
-        F.lpad(((F.col("doc_id") * 37) % 10000).cast("string"), 4, "0"),
-        F.lit(" ref "),
-        (F.col("doc_id") * 13 + 10000000).cast("string"),
-    )
-    return F.when(F.col("doc_id") % 3 != 0, frag).otherwise(F.col("text"))
-
-
-def pii_scrub(spark, sf_dir):
-    """PII redaction (round-6 curation operator): sequential
-    regexp_replace chain over grammar.PII_RULES + per-rule match
-    counts — native expressions only, no shuffle (a pure per-document
-    map, linear at any corpus size)."""
-    from . import curation
-
-    docs = _t(spark, sf_dir, "documents")
-    df = docs.select("doc_id", _pii_augmented(docs).alias("aug_text"))
-    out = curation.scrub_pii(df, "aug_text")
-    return out.select(
-        "doc_id", "clean_text", "n_email", "n_phone", "n_idnum", "n_pii"
-    )
-
-
-def pii_rate_by_source(spark, sf_dir):
-    """Per-source PII filter-rate metric (curation observability): one
-    map-side-combinable aggregate over the scrubbed corpus."""
-    from . import curation
-
-    docs = _t(spark, sf_dir, "documents")
-    df = docs.select(
-        "doc_id", "source", _pii_augmented(docs).alias("aug_text")
-    )
-    return curation.pii_rate_by_source(df, "aug_text")
-
-
-def doc_repetition_stats(spark, sf_dir):
-    """Gopher-style repetition quality (round 6b): per-doc top-token /
-    duplicate-bigram mass in e6 fixed-point + the grammar-thresholded
-    flag — the repetition-removal signal of an LLM curation pipeline."""
-    from . import curation
-
-    return curation.repetition_stats(_t(spark, sf_dir, "documents"))
-
-
 def rdf_jsonld_compacted_roundtrip(spark, sf_dir):
     """Round-6: the JSON-LD COMPACTED profile — prefixed-name node
     objects under an inline @context prefix map (the shape real-world
@@ -1460,9 +1347,9 @@ def doc_bigram_surprisal(spark, sf_dir):
     """Round-6: corpus-trained bigram surprisal — an integer-exact
     perplexity proxy for quality filtering.  Per-bigram surprisal =
     bitlen(prefix_count div bigram_count) ≈ log2 of the inverse
-    conditional probability (the same log2-quantized-idf trick as
-    top_terms_tfidf — a float ln() would flap across engines); the
-    doc score is the exact integer mean ×1e6.  Scale shape: per-doc
+    conditional probability (log2 quantized, since a float ln() would
+    flap across engines); the doc score is the exact integer mean
+    ×1e6.  Scale shape: per-doc
     bigram counts FIRST (map-side combine slims every later shuffle),
     corpus counts derived from those (never re-reads text), then two
     shuffle joins on the open-vocabulary bigram key — no broadcast,
@@ -1547,56 +1434,6 @@ def doc_chunk(spark, sf_dir):
     )
 
 
-def embedding_quantize(spark, sf_dir):
-    """Round-6: int8 SCALAR QUANTIZATION of the embedding column — the
-    standard ANN-index compression step (4x smaller vectors before an
-    IVF/HNSW build).  Everything happens on an integer e3 grid so both
-    engines agree bit-exactly (the cell_centroids_int convention):
-    components become round(1000*x) BIGINTs, the per-vector scale is
-    max|component|, and codes are symmetric round-half-up
-    sign(v) * ((254*|v| + maxabs) DIV (2*maxabs)) in [-127, 127] —
-    all-positive operands, so Spark's truncating DIV and DuckDB's
-    floor '//' agree.  Emits the scale, the exact mean absolute
-    reconstruction error (e6), and a position-weighted code checksum
-    (so the contract pins every code, not just the error).  Map-only:
-    zero shuffle, zero Python, linear at any corpus size."""
-    emb = _t(spark, sf_dir, "embeddings")
-    v = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x ->"
-            " CAST(round(1000 * CAST(x AS DOUBLE)) AS BIGINT))"
-        ).alias("xe3"),
-    ).withColumn(
-        "maxabs", F.expr("array_max(transform(xe3, v -> abs(v)))")
-    ).withColumn(
-        "q",
-        F.expr(
-            "transform(xe3, v -> CASE WHEN maxabs = 0 THEN CAST(0 AS BIGINT)"
-            " ELSE CAST((CASE WHEN v >= 0 THEN 1 ELSE -1 END)"
-            " * ((254 * abs(v) + maxabs) DIV (2 * maxabs)) AS BIGINT) END)"
-        ),
-    ).withColumn(
-        "errsum",
-        F.expr(
-            "aggregate(zip_with(xe3, q, (v, c) -> abs(127 * v - c * maxabs)),"
-            " CAST(0 AS BIGINT), (a, b) -> a + b)"
-        ),
-    )
-    return v.select(
-        "vec_id",
-        F.col("maxabs").alias("maxabs_e3"),
-        F.expr(
-            "CAST((1000000 * errsum) DIV (127 * size(xe3) * 1000) AS BIGINT)"
-        ).alias("mean_abs_err_e6"),
-        F.expr(
-            "aggregate(zip_with(q, sequence(CAST(1 AS BIGINT),"
-            " CAST(size(q) AS BIGINT)), (c, i) -> c * i),"
-            " CAST(0 AS BIGINT), (a, b) -> a + b)"
-        ).alias("q_checksum"),
-    )
-
-
 def rdf_turtle_bnode_roundtrip(spark, sf_dir):
     """Round-6: Turtle anonymous-bnode property lists "[ p o ; ... ]"
     and collections "( ... )" end-to-end.  Each document row is
@@ -1650,7 +1487,7 @@ def rdf_turtle_bnode_roundtrip(spark, sf_dir):
     )
 
 
-# --- round-6c: sketch / tokenizer-training operators -------------------------
+# --- round-6c: the shared char-code hash, ASK and DESCRIBE -------------------
 def _charcode_expr(col: str) -> str:
     """SQL for the char-level rolling hash of a token column — the
     grammar's charcode(t): fold (31*acc + ascii(c)) % HASH_P over the
@@ -1660,133 +1497,6 @@ def _charcode_expr(col: str) -> str:
         f"aggregate(transform(split({col}, ''),"
         " c -> CAST(ascii(c) AS BIGINT)), CAST(0 AS BIGINT),"
         f" (a, c) -> (a * 31 + c) % {G.HASH_P})"
-    )
-
-
-def heavy_hitters_cms(spark, sf_dir):
-    """Round-6: COUNT-MIN SKETCH heavy-hitter estimation over the token
-    stream — the streaming-sketch answer to "top terms without a full
-    vocabulary shuffle".  The sketch is CMS_D x CMS_W integer counters:
-    each distinct token's exact count (one map-side-combined groupBy)
-    is added into d = CMS_D buckets chosen by the grammar hash family
-    applied to the token's char-level rolling hash.  Point estimates
-    for the exact top CMS_TOP_K tokens are min over the d bucket
-    totals — always >= truth (one-sided error), so `overcount` is
-    non-negative by construction and the contract pins both the sketch
-    CONTENT (via the estimates) and the estimator.  Scale shape: the
-    sketch build is an associative sum keyed by (row, bucket) — at
-    most CMS_D*CMS_W = 2048 reducer groups regardless of corpus size —
-    and the top-k window prunes per-partition (WindowGroupLimit)
-    before its single-group final."""
-    D, W, OFF, K = G.CMS_D, G.CMS_W, G.CMS_HASH_OFFSET, G.CMS_TOP_K
-    docs = _t(spark, sf_dir, "documents")
-    tc = (
-        docs.select(
-            F.explode(
-                F.expr("filter(split(text, ' '), t -> t != '')")
-            ).alias("token")
-        )
-        .groupBy("token")
-        .agg(F.count("*").alias("cnt"))
-        .withColumn("hcode", F.expr(_charcode_expr("token")))
-        .localCheckpoint(eager=False)
-    )
-    buckets = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("r"),
-                (
-                    (
-                        (F.lit(G.hash_a(OFF + i)) * F.col("hcode")
-                         + F.lit(G.hash_b(OFF + i)))
-                        % F.lit(G.HASH_P)
-                    )
-                    % F.lit(W)
-                ).alias("b"),
-            )
-            for i in range(D)
-        ]
-    )
-    sk = (
-        tc.select("cnt", F.explode(buckets).alias("rb"))
-        .groupBy(F.col("rb.r").alias("r"), F.col("rb.b").alias("b"))
-        .agg(F.sum("cnt").alias("bucket_cnt"))
-    )
-    w = Window.orderBy(F.desc("cnt"), F.asc("token"))
-    top = (
-        tc.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= K)
-    )
-    return (
-        top.select("token", "cnt", "rnk", F.explode(buckets).alias("rb"))
-        .select("token", "cnt", "rnk",
-                F.col("rb.r").alias("r"), F.col("rb.b").alias("b"))
-        .join(sk, ["r", "b"])
-        .groupBy("token", "cnt", "rnk")
-        .agg(F.min("bucket_cnt").alias("cms_count"))
-        .select(
-            "token",
-            F.col("rnk").cast("int").alias("rnk"),
-            F.col("cnt").cast("bigint").alias("true_count"),
-            F.col("cms_count").cast("bigint").alias("cms_count"),
-            (F.col("cms_count") - F.col("cnt"))
-            .cast("bigint")
-            .alias("overcount"),
-        )
-    )
-
-
-def bpe_merge_pairs(spark, sf_dir):
-    """Round-6: ONE ROUND of BPE tokenizer training — the weighted
-    adjacent-symbol pair counts that drive the merge decision, over the
-    corpus word-frequency table (symbols start as characters plus the
-    '$' end-of-word marker, the standard formulation).  The full BPE
-    loop is a driver iteration re-invoking this stage after applying
-    the winning merge (like pagerank's join-per-round); the contract
-    pins round one exactly: top CMS_TOP_K pairs by (count DESC, lhs,
-    rhs) — a total order, so the cut is engine-independent.  Scale
-    shape: word counts first (map-side combine collapses the token
-    stream to the vocabulary), pair explode runs over DISTINCT words
-    only, and the top-k window prunes per-partition before its final
-    single-group pass."""
-    K = G.CMS_TOP_K
-    docs = _t(spark, sf_dir, "documents")
-    wf = (
-        docs.select(
-            F.explode(
-                F.expr("filter(split(text, ' '), t -> t != '')")
-            ).alias("word")
-        )
-        .groupBy("word")
-        .agg(F.count("*").alias("wf"))
-    )
-    pairs = wf.select(
-        "wf",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(split(word, ''))),"
-                " i -> named_struct("
-                "'lhs', element_at(concat(split(word, ''), array('$')), i),"
-                "'rhs', element_at(concat(split(word, ''), array('$')), i + 1)))"
-            )
-        ).alias("pr"),
-    )
-    pc = (
-        pairs.select("wf", F.col("pr.lhs").alias("lhs"),
-                     F.col("pr.rhs").alias("rhs"))
-        .groupBy("lhs", "rhs")
-        .agg(F.sum("wf").alias("cnt"))
-    )
-    w = Window.orderBy(F.desc("cnt"), F.asc("lhs"), F.asc("rhs"))
-    return (
-        pc.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= K)
-        .select(
-            F.col("rnk").cast("int").alias("rnk"),
-            "lhs",
-            "rhs",
-            F.col("cnt").cast("bigint").alias("cnt"),
-        )
     )
 
 
@@ -1961,134 +1671,6 @@ def rdf_jsonld_list_roundtrip(spark, sf_dir):
     )
 
 
-def bpe_vocab_merges(spark, sf_dir, rounds: int = 3, return_vocab: bool = False):
-    """Round-6c: MULTI-ROUND BPE tokenizer training — the iterative
-    loop bpe_merge_pairs pins one round of: per round, the winning
-    adjacent-symbol pair (count DESC, lhs, rhs over the weighted
-    vocabulary) is collected (a 1-row driver aggregate, the same
-    bounded pattern as CC/pagerank) and applied to every word's symbol
-    array via pure array exprs — flag matching positions, drop the
-    successor of each match, substitute the merged symbol.  SELF-pairs
-    (lhs = rhs) stay in the counts but are excluded from merge
-    SELECTION: their greedy application is overlap-ambiguous ("aaa")
-    and implementations disagree; with lhs ≠ rhs matches can never
-    overlap, so the simultaneous array rewrite IS the greedy result —
-    bit-identical across engines.  Scale shape: the loop body is two
-    narrow stages over the DISTINCT vocabulary (not the token stream);
-    state rides a lazily checkpointed (wf, cs) frame, rounds are a
-    fixed small constant (like the BFS horizon)."""
-    docs = _t(spark, sf_dir, "documents")
-    wf = (
-        docs.select(
-            F.explode(
-                F.expr("filter(split(text, ' '), t -> t != '')")
-            ).alias("word")
-        )
-        .groupBy("word")
-        .agg(F.count("*").alias("wf"))
-    )
-    sym = wf.select(
-        "word", "wf", F.expr("concat(split(word, ''), array('$'))").alias("cs")
-    ).localCheckpoint(eager=False)
-
-    out_rows: list[tuple] = []
-    for rnd in range(1, rounds + 1):
-        pc = (
-            sym.select(
-                "wf",
-                # zip of cs with its own 1-shift: a fully-merged word
-                # (single symbol) slices to two empty arrays and emits
-                # no pair (sequence(1, 0) would DESCEND and probe
-                # index 0 — the Spark reverse-sequence trap)
-                F.explode(
-                    F.expr(
-                        "zip_with(slice(cs, 1, size(cs) - 1),"
-                        " slice(cs, 2, size(cs) - 1),"
-                        " (l, r) -> named_struct('lhs', l, 'rhs', r))"
-                    )
-                ).alias("pr"),
-            )
-            .select("wf", F.col("pr.lhs").alias("lhs"), F.col("pr.rhs").alias("rhs"))
-            .groupBy("lhs", "rhs")
-            .agg(F.sum("wf").alias("cnt"))
-        )
-        top = (
-            pc.filter(F.col("lhs") != F.col("rhs"))
-            .orderBy(F.desc("cnt"), F.asc("lhs"), F.asc("rhs"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        lhs, rhs, cnt = top[0]["lhs"], top[0]["rhs"], int(top[0]["cnt"])
-        out_rows.append((rnd, lhs, rhs, cnt))
-        ql, qr = lhs.replace("'", "\\'"), rhs.replace("'", "\\'")
-        qm = (lhs + rhs).replace("'", "\\'")
-        # boundary probes ride IF (lazily evaluated — ANSI element_at
-        # throws on index 0 / past-the-end, and OR does not guarantee
-        # short-circuit); '' can never equal a symbol
-        merge = (
-            "transform("
-            " filter(sequence(1, size(cs)),"
-            f"  i -> NOT (IF(i <= 1, '', element_at(cs, i - 1)) = '{ql}'"
-            f"       AND element_at(cs, i) = '{qr}')),"
-            f" i -> IF(IF(i >= size(cs), '', element_at(cs, i + 1)) = '{qr}'"
-            f"         AND element_at(cs, i) = '{ql}', '{qm}',"
-            "          element_at(cs, i)))"
-        )
-        sym = sym.withColumn("cs", F.expr(merge)).localCheckpoint(eager=False)
-    merges = local_frame(
-        spark, out_rows, "rnd int, lhs string, rhs string, cnt bigint"
-    )
-    return (merges, sym) if return_vocab else merges
-
-
-def langid_confusion(spark, sf_dir):
-    """Round-6c: language-ID CONFUSION MATRIX — the evaluation metric
-    for the classifier operator (true fixture lang × predicted lang →
-    doc counts), one aggregate over the langid output; diagonal mass /
-    total = accuracy, off-diagonal cells show which language pairs the
-    trigram profiles confuse."""
-    from . import textstats as TS
-
-    pred = TS.langid(spark, _t(spark, sf_dir, "documents"))
-    return (
-        pred.groupBy("lang", "predicted_lang")
-        .agg(F.count("*").cast("bigint").alias("n_docs"))
-    )
-
-
-def bpe_encode_counts(spark, sf_dir):
-    """Round-6c: APPLY the learned tokenizer — every document encoded
-    with the 3-round BPE vocabulary of bpe_vocab_merges, reporting
-    per-doc symbol counts before (chars + end-of-word markers) and
-    after the merges: the compression the tokenizer actually buys,
-    and the train→apply loop closed in one engine.  Scale shape: the
-    merged symbol table is per-DISTINCT-word (the vocabulary); each
-    document encodes via one word-level equi-join + a per-doc sum —
-    the token stream itself is never re-segmented row by row."""
-    merges, sym = bpe_vocab_merges(spark, sf_dir, return_vocab=True)
-    word_syms = sym.select(
-        "word",
-        F.size("cs").cast("bigint").alias("n_after"),
-        (F.length("word") + 1).cast("bigint").alias("n_before"),
-    )
-    dwords = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.explode(
-            F.expr("filter(split(text, ' '), t -> t != '')")
-        ).alias("word"),
-    )
-    return (
-        dwords.join(word_syms, "word")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("n_before").cast("bigint").alias("n_syms_before"),
-            F.sum("n_after").cast("bigint").alias("n_syms_after"),
-        )
-    )
-
-
 def kg_label_index(spark, sf_dir):
     """Round-6c: label SEARCH-INDEX build (O7 extension — the
     entities/attrs index sink as an inverted index): label token →
@@ -2114,111 +1696,6 @@ def kg_label_index(spark, sf_dir):
         .agg(
             F.count("*").cast("bigint").alias("n_entities"),
             F.expr(f"CAST(sum(eh) % {G.FP_MOD} AS BIGINT)").alias("postings_hash"),
-        )
-    )
-
-
-def term_pmi(spark, sf_dir):
-    """Round-6c: PMI COLLOCATION MINING over adjacent word bigrams —
-    the classic phrase-detection stage (word2vec-style "new_york"
-    merging) on a fully LOG-DOMAIN integer score:
-
-        pmi_bits = bitlen(c_xy) + 2·bitlen(N) − bitlen(M)
-                   − bitlen(c_x) − bitlen(c_y)
-
-    ≈ log2(p(xy) / (p(x)·p(y))) within quantization — and, unlike the
-    ratio form (c_xy·N²) DIV (M·c_x·c_y), it can NEVER overflow int64
-    at any corpus size (N² at a 100 TB token count would), so the
-    quantized spec is also the scale-safe one.  Plan: per-doc bigram
-    counts first (map-side combine slims every shuffle), corpus counts
-    derived from those, two equi-joins on the word keys, corpus totals
-    as one broadcast 1-row frame.  Filter c_xy ≥ 5 (collocation
-    support)."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.expr("filter(split(text, ' '), t -> t != '')").alias("toks"),
-    )
-    uni = (
-        toks.select(F.explode("toks").alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").cast("bigint").alias("c"))
-    )
-    bi = (
-        toks.filter(F.size("toks") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "arrays_zip(slice(toks, 1, size(toks) - 1), "
-                    "slice(toks, 2, size(toks) - 1))"
-                )
-            ).alias("bg"),
-        )
-        .select(F.col("bg")["0"].alias("w1"), F.col("bg")["1"].alias("w2"))
-        .groupBy("w1", "w2")
-        .agg(F.count("*").cast("bigint").alias("c_xy"))
-    )
-    totals = uni.agg(
-        F.sum("c").cast("bigint").alias("n_tokens")
-    ).crossJoin(bi.agg(F.sum("c_xy").cast("bigint").alias("n_bigrams")))
-    return (
-        bi.filter(F.col("c_xy") >= 5)
-        .join(uni.select(F.col("w").alias("w1"), F.col("c").alias("c_x")), "w1")
-        .join(uni.select(F.col("w").alias("w2"), F.col("c").alias("c_y")), "w2")
-        .crossJoin(F.broadcast(totals))
-        .select(
-            "w1",
-            "w2",
-            "c_xy",
-            (
-                F.length(F.bin("c_xy"))
-                + 2 * F.length(F.bin("n_tokens"))
-                - F.length(F.bin("n_bigrams"))
-                - F.length(F.bin("c_x"))
-                - F.length(F.bin("c_y"))
-            )
-            .cast("int")
-            .alias("pmi_bits"),
-        )
-    )
-
-
-def embedding_srp_buckets(spark, sf_dir):
-    """Round-6c: SIGN-RANDOM-PROJECTION LSH signatures over the
-    embedding table — the hyperplane bucketing family for cosine
-    similarity:
-    bit k of the 16-bit signature is [Σ_d sign(k,d)·e3_d ≥ 0] with the
-    ±1 hyperplane components minted from the grammar affine-hash
-    family (grammar.SRP_*) — deterministic int64 arithmetic, so both
-    engines bucket identically (a float Gaussian projection would
-    not).  Output: per-bucket histogram (n_vecs, id checksum, candidate
-    pair count) — the LSH observability readout that sizes the
-    verify-stage join.  Map-only signature pass + one aggregate; at
-    100 TB the bucket key is exactly what the near-dup verify join
-    would shuffle on."""
-    A, B = G.hash_a(G.SRP_HASH_IDX), G.hash_b(G.SRP_HASH_IDX)
-    e3 = "transform(embedding, x -> CAST(round(1000 * CAST(x AS DOUBLE)) AS BIGINT))"
-    sig = (
-        f"aggregate(sequence(0, {G.SRP_PLANES - 1}), CAST(0 AS BIGINT), (acc, k) -> "
-        f"acc + IF(aggregate(sequence(1, size(e3)), CAST(0 AS BIGINT), (a, d) -> "
-        f"a + IF(((CAST({A} AS BIGINT) * (k * size(e3) + d - 1) + {B}) % {G.HASH_P}) % 2 = 0, "
-        f"CAST(1 AS BIGINT), CAST(-1 AS BIGINT)) * element_at(e3, d)) >= 0, "
-        f"shiftleft(CAST(1 AS BIGINT), k), CAST(0 AS BIGINT)))"
-    )
-    v = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.expr(e3).alias("e3")
-    )
-    return (
-        v.select("vec_id", F.expr(sig).alias("bucket"))
-        .groupBy("bucket")
-        .agg(
-            F.count("*").cast("bigint").alias("n_vecs"),
-            F.sum("vec_id").cast("bigint").alias("sum_vec_id"),
-        )
-        .withColumn(
-            "n_cand_pairs",
-            F.expr("CAST(n_vecs * (n_vecs - 1) DIV 2 AS BIGINT)"),
         )
     )
 
@@ -2315,125 +1792,6 @@ def kg_sparql_values(spark, sf_dir):
     )
 
 
-def embedding_label_centroids(spark, sf_dir):
-    """Round-6c: K-MEANS M-STEP over the embedding table — per-label
-    centroid on the e3 integer grid: mean_e3(label, dim) =
-    Σ e3 DIV n_vecs (exact BIGINT sums, order-independent — a float
-    mean would not hash-compare across engines).  posexplode →
-    one map-side-combined aggregate on (label, dim): the distributed
-    M-step shape at any scale (the shuffle carries one partial sum per
-    (label, dim, partition), never vectors)."""
-    v = _t(spark, sf_dir, "embeddings").select(
-        "label",
-        F.expr(
-            "transform(embedding, x -> CAST(round(1000 * CAST(x AS DOUBLE))"
-            " AS BIGINT))"
-        ).alias("e3"),
-    )
-    return (
-        v.select("label", F.posexplode("e3").alias("dim", "val"))
-        .groupBy("label", "dim")
-        .agg(
-            F.count("*").cast("bigint").alias("n_vecs"),
-            F.sum("val").cast("bigint").alias("sum_e3"),
-        )
-        .select(
-            F.col("label").cast("int").alias("label"),
-            F.col("dim").cast("int").alias("dim"),
-            "n_vecs",
-            F.expr(
-                "CAST(CASE WHEN sum_e3 >= 0 THEN sum_e3 DIV n_vecs "
-                "ELSE -((-sum_e3) DIV n_vecs) END AS BIGINT)"
-            ).alias("mean_e3"),
-        )
-    )
-
-
-def embedding_kmeans_assign(spark, sf_dir):
-    """Round-6c: K-MEANS E-STEP — every vector assigned to the nearest
-    label centroid by integer squared-L2 on the e3 grid (ties → min
-    label).  The centroid frame (k·dim rows) reassembles into k arrays
-    and BROADCASTS — the E-step join moves only the small side, the
-    vector table streams map-only; min_by picks the argmin in one
-    aggregate-free expression.  Truncation toward zero in the centroid
-    mean is part of the operator spec (matched by the oracle)."""
-    cents = (
-        embedding_label_centroids(spark, sf_dir)
-        .groupBy("label")
-        .agg(
-            F.expr("array_sort(collect_list(struct(dim, mean_e3)))").alias("cs")
-        )
-        .select(
-            F.col("label").alias("c_label"),
-            F.expr("transform(cs, s -> s.mean_e3)").alias("cent"),
-        )
-    )
-    v = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x -> CAST(round(1000 * CAST(x AS DOUBLE))"
-            " AS BIGINT))"
-        ).alias("e3"),
-    )
-    dist = F.expr(
-        "aggregate(zip_with(e3, cent, (a, b) -> (a - b) * (a - b)), "
-        "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    )
-    scored = v.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "c_label", dist.alias("dist")
-    )
-    return (
-        scored.groupBy("vec_id")
-        .agg(F.min(F.struct("dist", "c_label")).alias("best"))
-        .select(
-            "vec_id",
-            F.col("best.c_label").cast("int").alias("assigned_label"),
-            F.col("best.dist").cast("bigint").alias("dist_e6"),
-        )
-    )
-
-
-def vocab_growth(spark, sf_dir):
-    """Round-6c: VOCABULARY GROWTH CURVE (Heaps-law readout) — per
-    10-document batch, how many word-TRIGRAM types appear for the
-    FIRST time and the cumulative type count (the fixture's unigram
-    vocabulary is closed and saturates in batch 0; trigram types grow
-    for the whole corpus, which is the regime the curve is for).  No
-    quadratic state: each type
-    contributes once at its first batch (per-type min aggregate), then
-    one small per-batch count + running sum; the windowed frame is
-    corpus/10 rows — the batch grain is the scale knob (coarsen it,
-    the curve stays exact at the grain)."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.expr("CAST(doc_id DIV 10 AS BIGINT)").alias("batch"),
-        F.expr("filter(split(text, ' '), t -> t != '')").alias("t"),
-    )
-    first_batch = (
-        toks.filter(F.size("t") >= 3)
-        .select(
-            "batch",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(t) - 2), "
-                    "i -> concat_ws(' ', t[i-1], t[i], t[i+1]))"
-                )
-            ).alias("w"),
-        )
-        .groupBy("w")
-        .agg(F.min("batch").alias("first_batch"))
-    )
-    per_batch = first_batch.groupBy("first_batch").agg(
-        F.count("*").cast("bigint").alias("new_types")
-    )
-    w = Window.orderBy("first_batch").rowsBetween(Window.unboundedPreceding, 0)
-    return per_batch.select(
-        F.col("first_batch").alias("batch"),
-        "new_types",
-        F.sum("new_types").over(w).cast("bigint").alias("vocab_size"),
-    )
-
-
 def kg_sparql_path_nps(spark, sf_dir):
     """Round-6c: NEGATED PROPERTY SET path — all outgoing edges of
     Commerce entities EXCEPT rdf:type and ex:score
@@ -2452,46 +1810,6 @@ def kg_sparql_path_nps(spark, sf_dir):
           ?e !(rdf:type|ex:score) ?o
         }
         """,
-    )
-
-
-def corpus_stats_by_source(spark, sf_dir):
-    """Round-6c: CORPUS CARD — per source: doc count, token count,
-    mean doc length (e6), distinct languages (the dataset datasheet
-    row every curation pipeline publishes per shard/source).  One
-    map-side-combined aggregate; exact integer mean."""
-    docs = _t(spark, sf_dir, "documents")
-    return (
-        docs.select(
-            "source",
-            "lang",
-            F.expr("size(filter(split(text, ' '), t -> t != ''))")
-            .cast("bigint")
-            .alias("n_toks"),
-        )
-        .groupBy("source")
-        .agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum("n_toks").cast("bigint").alias("n_tokens"),
-            F.countDistinct("lang").cast("bigint").alias("n_langs"),
-        )
-        .withColumn(
-            "mean_len_e6",
-            F.expr("CAST((1000000 * n_tokens) DIV n_docs AS BIGINT)"),
-        )
-    )
-
-
-def embedding_kmeans_inertia(spark, sf_dir):
-    """Round-6c: K-MEANS INERTIA — per assigned cluster, the exact
-    BIGINT sum of squared distances to the centroid plus member count
-    (the convergence/elbow metric that closes the M-step → E-step →
-    inertia training loop).  One aggregate over the E-step output —
-    the iteration cost stays O(N·k·dim) map + O(k) shuffle rows."""
-    assign = embedding_kmeans_assign(spark, sf_dir)
-    return assign.groupBy("assigned_label").agg(
-        F.count("*").cast("bigint").alias("n_members"),
-        F.sum("dist_e6").cast("bigint").alias("inertia_e6"),
     )
 
 
@@ -2553,9 +1871,9 @@ def kg_class_cooccurrence(spark, sf_dir):
 def doc_search_topk(spark, sf_dir):
     """Round-6c: TOP-K DOCUMENT SEARCH — BM25-shaped integer scoring
     for a fixed query ('order data table'): score(d) =
-    Σ_t tf(t,d) · bitlen(N div df(t)), the same log2-quantized idf as
-    top_terms_tfidf, summed over matching query terms; top-10 by
-    (score DESC, doc_id).  Plan: the query-term filter prunes the
+    Σ_t tf(t,d) · bitlen(N div df(t)), a log2-quantized idf summed
+    over matching query terms; top-10 by (score DESC, doc_id).  Plan:
+    the query-term filter prunes the
     postings BEFORE any join (the inverted-index read pattern — at
     100 TB only the 3 query postings lists move), df joins back on the
     3-row term frame (broadcast), two-phase top-k caps the shuffle at
@@ -2600,81 +1918,6 @@ def doc_search_topk(spark, sf_dir):
         survivors.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= 10)
         .select("doc_id", "score", "n_terms_hit", F.col("rank").cast("int").alias("rank"))
-    )
-
-
-def embedding_kmeans_train(spark, sf_dir):
-    """Round-6c: TWO FULL LLOYD ITERATIONS — the actual distributed
-    k-means training loop, integer-exact end to end: M-step (exact
-    BIGINT centroid sums, truncate-toward-zero mean) → E-step
-    (broadcast centroids, integer squared-L2, min-label ties) →
-    M-step over the NEW assignment → E-step again; output = the
-    round-2 assignment.  Each round is one posexplode aggregate
-    (partial sums per (cluster, dim, partition)) + one broadcast
-    map — O(N·k·dim) compute, O(k·dim) shuffle rows per round, the
-    plan that runs unchanged at 10^12 vectors.  The DuckDB oracle
-    unrolls both rounds as CTEs — bit-identical because every
-    operation is int64."""
-    v = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("label").cast("int").alias("label"),
-        F.expr(
-            "transform(embedding, x -> CAST(round(1000 * CAST(x AS DOUBLE))"
-            " AS BIGINT))"
-        ).alias("e3"),
-    ).localCheckpoint(eager=False)
-
-    def m_step(assigned):
-        return (
-            assigned.select("cl", F.posexplode("e3").alias("dim", "val"))
-            .groupBy("cl", "dim")
-            .agg(F.sum("val").alias("s"), F.count("*").alias("c"))
-            .select(
-                "cl",
-                "dim",
-                F.expr(
-                    "CAST(CASE WHEN s >= 0 THEN s DIV c"
-                    " ELSE -((-s) DIV c) END AS BIGINT)"
-                ).alias("m"),
-            )
-            .groupBy("cl")
-            .agg(F.expr("array_sort(collect_list(struct(dim, m)))").alias("cs"))
-            .select(
-                F.col("cl").alias("c_label"),
-                F.expr("transform(cs, s -> s.m)").alias("cent"),
-            )
-        )
-
-    def e_step(cents):
-        dist = F.expr(
-            "aggregate(zip_with(e3, cent, (a, b) -> (a - b) * (a - b)), "
-            "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-        )
-        scored = v.crossJoin(F.broadcast(cents)).select(
-            "vec_id", "e3", "c_label", dist.alias("dist")
-        )
-        return (
-            scored.groupBy("vec_id")
-            .agg(
-                F.min(F.struct("dist", "c_label")).alias("best"),
-                # every row of a vec_id group carries the SAME e3 (the
-                # vector replicated k ways) — first() is deterministic
-                F.first("e3").alias("e3"),
-            )
-            .select(
-                "vec_id",
-                "e3",
-                F.col("best.c_label").cast("int").alias("cl"),
-                F.col("best.dist").cast("bigint").alias("dist"),
-            )
-        )
-
-    a1 = e_step(m_step(v.select(F.col("label").alias("cl"), "e3")))
-    a2 = e_step(m_step(a1.select("cl", "e3")))
-    return a2.select(
-        "vec_id",
-        F.col("cl").alias("assigned_label"),
-        F.col("dist").alias("dist_e6"),
     )
 
 
@@ -2788,94 +2031,6 @@ def doc_zorder_key(spark, sf_dir):
         z = hi + lo if z is None else z + hi + lo
     return base.select(
         "doc_id", "lang_b", "len_b", z.cast("bigint").alias("zkey")
-    )
-
-
-def embedding_pq_codes(spark, sf_dir):
-    """Round-6: PRODUCT QUANTIZATION codes — the ANN-index compression
-    step past scalar quantization (Jégou's PQ: split the vector into M
-    subspaces, code each subvector by its nearest per-subspace
-    centroid; the vector compresses to M small codes).  Codebooks are
-    the label centroids restricted to each subspace (the trained
-    M-step reused per 16-dim slice, sign-split DIV means on the e3
-    grid); assignment is integer squared-L2, ties -> min label; the
-    contract emits (vec_id, subspace, code, sq_err) so both the codes
-    AND the exact reconstruction error are pinned.
-
-    Scale shape: the codebook is k*M rows (tiny, broadcast); the
-    vector side explodes to M slim subvector rows, scores against the
-    broadcast codebook, and the argmin groupBy shuffles only
-    (vec_id, m, label, dist) int rows — no vector arrays ride the
-    shuffle after the local slice."""
-    M, SUB = 4, 16
-    v = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x -> CAST(round(1000 * CAST(x AS DOUBLE))"
-            " AS BIGINT))"
-        ).alias("e3"),
-    )
-    cents = (
-        _t(spark, sf_dir, "embeddings")
-        .select(
-            "label",
-            F.expr(
-                "transform(embedding, x -> CAST(round(1000 *"
-                " CAST(x AS DOUBLE)) AS BIGINT))"
-            ).alias("e3"),
-        )
-        .select("label", F.posexplode("e3").alias("dim", "val"))
-        .groupBy("label", "dim")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum("val").cast("bigint").alias("s"),
-        )
-        .select(
-            "label",
-            "dim",
-            F.expr(
-                "CAST(CASE WHEN s >= 0 THEN s DIV n"
-                " ELSE -((-s) DIV n) END AS BIGINT)"
-            ).alias("mean_e3"),
-        )
-        .withColumn("m", F.expr(f"CAST(dim DIV {SUB} AS INT)"))
-        .groupBy("label", "m")
-        .agg(
-            F.expr("array_sort(collect_list(struct(dim, mean_e3)))").alias(
-                "cs"
-            )
-        )
-        .select(
-            F.col("label").alias("c_label"),
-            "m",
-            F.expr("transform(cs, s -> s.mean_e3)").alias("cent"),
-        )
-    )
-    sub = v.select(
-        "vec_id",
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(0, {M - 1}),"
-                f" m -> slice(e3, m * {SUB} + 1, {SUB}))"
-            )
-        ).alias("m", "sub"),
-    )
-    dist = F.expr(
-        "aggregate(zip_with(sub, cent, (a, b) -> (a - b) * (a - b)),"
-        " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    )
-    scored = sub.join(F.broadcast(cents), "m").select(
-        "vec_id", "m", "c_label", dist.alias("dist")
-    )
-    return (
-        scored.groupBy("vec_id", "m")
-        .agg(F.min(F.struct("dist", "c_label")).alias("best"))
-        .select(
-            "vec_id",
-            F.col("m").cast("int").alias("subspace"),
-            F.col("best.c_label").cast("int").alias("code"),
-            F.col("best.dist").cast("bigint").alias("sq_err"),
-        )
     )
 
 
@@ -3056,43 +2211,6 @@ def kg_parse_error_stats(spark, sf_dir):
             "CAST(n_lines - n_parsed AS BIGINT) AS n_dropped",
             "CAST((n_lines - n_parsed) * 1000000 DIV n_lines AS BIGINT)"
             " AS drop_rate_e6",
-        )
-    )
-
-
-def embedding_dim_stats(spark, sf_dir):
-    """Round-6: PER-DIMENSION FEATURE STATISTICS — the standardization
-    table (mean + exact second-moment sums per dimension) a
-    normalization / whitening preprocessing step consumes.  All exact
-    BIGINT on the e3 grid: mean is the sign-split truncating DIV, and
-    variance is published as the exact moment pair (Σx, Σx²) because
-    finishing it needs a division the consumer should do in its own
-    precision (the degree-assortativity convention).  One posexplode +
-    one map-side-combined aggregate on (dim): 64 reducer groups at any
-    corpus size."""
-    v = _t(spark, sf_dir, "embeddings").select(
-        F.expr(
-            "transform(embedding, x -> CAST(round(1000 * CAST(x AS DOUBLE))"
-            " AS BIGINT))"
-        ).alias("e3")
-    )
-    return (
-        v.select(F.posexplode("e3").alias("dim", "x"))
-        .groupBy("dim")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum("x").cast("bigint").alias("sum_e3"),
-            F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sum_sq_e6"),
-        )
-        .select(
-            F.col("dim").cast("int").alias("dim"),
-            "n",
-            "sum_e3",
-            "sum_sq_e6",
-            F.expr(
-                "CAST(CASE WHEN sum_e3 >= 0 THEN sum_e3 DIV n"
-                " ELSE -((-sum_e3) DIV n) END AS BIGINT)"
-            ).alias("mean_e3"),
         )
     )
 

@@ -2232,25 +2232,21 @@ def _exec_modify(
             return F.col(v)
         return F.lit(t)
 
-    def inst(templates, with_terms: bool):
+    def inst(templates):
         out = None
         for g, s, pr, o, ok, ol, od in templates:
-            cols = [
+            row = sol.select(
                 col_of(g, default_graph).alias("g"),
                 col_of(s).alias("s"), col_of(pr).alias("p"),
                 col_of(o).alias("o"),
-            ]
-            if with_terms:
-                cols += [
-                    F.lit(ok).alias("o_kind"), F.lit(ol or "").alias("o_lang"),
-                    F.lit(od or "").alias("o_datatype"),
-                ]
-            row = sol.select(*cols)
+                F.lit(ok).alias("o_kind"), F.lit(ol or "").alias("o_lang"),
+                F.lit(od or "").alias("o_datatype"),
+            )
             out = row if out is None else out.unionByName(row)
         return out.dropna(subset=["g", "s", "p", "o"]).distinct()
 
-    dels = inst(op["delete"], with_terms=False) if op["delete"] else None
-    ins = inst(op["insert"], with_terms=True) if op["insert"] else None
+    dels = inst(op["delete"]) if op["delete"] else None
+    ins = inst(op["insert"]) if op["insert"] else None
     if ins is not None and quads is not None:
         # resolve NULL-kind (variable) objects against the store's
         # object-term table; deterministic literal-wins on the
@@ -2292,8 +2288,23 @@ def _exec_modify(
     n_del = 0
     remaining = existing
     if dels is not None and existing is not None:
-        remaining = existing.join(dels, ["g", "s", "p", "o"], "left_anti")
-        n_del = dels.count()
+        # a constant object matches by RDF term; a WHERE-bound variable
+        # by its text, since the WHERE ran over the term-free merge
+        d = dels.select(
+            F.col("g").alias("_dg"), F.col("s").alias("_ds"),
+            F.col("p").alias("_dp"), F.col("o").alias("_do"),
+            F.when(F.col("o_kind").isNotNull(), _object_key_col())
+            .alias("_dkey"),
+        )
+        keyed = existing.withColumn("_okey", _object_key_col())
+        hit = (
+            (keyed["g"] == d["_dg"]) & (keyed["s"] == d["_ds"])
+            & (keyed["p"] == d["_dp"])
+            & F.when(d["_dkey"].isNull(), keyed["o"] == d["_do"])
+            .otherwise(keyed["_okey"] == d["_dkey"])
+        )
+        remaining = keyed.join(d, hit, "left_anti").drop("_okey")
+        n_del = keyed.join(d, hit, "left_semi").count()
     new = remaining
     if ins is not None:
         new = ins if new is None else new.unionByName(ins)

@@ -16,16 +16,6 @@ def test_bgp_match_no_cartesian(spark, sf_dir):
     assert "CartesianProduct" not in p
 
 
-def test_tfidf_dictionary_not_broadcast_hinted(spark, sf_dir):
-    """At fixture scale AQE may still choose broadcast; the gate is that
-    the LOGICAL plan carries no explicit broadcast hint on the df side
-    (open-vocabulary dictionaries must be free to shuffle)."""
-    df = Q.top_terms_tfidf(spark, sf_dir)
-    logical = df._jdf.queryExecution().analyzed().toString()
-    # exactly one hint: the 1-row n_docs frame
-    assert logical.count("UnresolvedHint") <= 1 or logical.count("hint") <= 1
-
-
 def test_new_ops_partitioning_invariant(spark, sf_dir):
     """split / pack results are identical at 2 vs 32 shuffle
     partitions (no partition-order dependence)."""
@@ -107,62 +97,6 @@ def test_quota_sample_plans_window_group_limit(spark, sf_dir):
     quota sample scale."""
     p = _plan(Q.doc_quota_sample(spark, sf_dir))
     assert "WindowGroupLimit" in p, p[:1500]
-
-
-def test_pii_scrub_is_shuffle_free_native_map(spark, sf_dir):
-    """PII redaction must be a pure per-document column map: no
-    Exchange (shuffle) anywhere, no Python evaluation (the regex chain
-    is JVM-side whole-stage codegen)."""
-    p = _plan(Q.pii_scrub(spark, sf_dir))
-    assert "Exchange" not in p, "pii_scrub must not shuffle"
-    for bad in ["BatchEvalPython", "ArrowEvalPython", "MapInPandas"]:
-        assert bad not in p, f"pii_scrub fell off the JVM: {bad}"
-
-
-def test_pii_rule_order_is_sequential(spark):
-    """Rule order is part of the spec: a string that is an email AND
-    contains an 8+ digit run is consumed by the EARLIER email rule."""
-    from kgspark.curation import scrub_pii
-    import pyspark.sql.functions as F
-
-    df = spark.createDataFrame(
-        [(1, "mail 123456789@example.com and ref 987654321 end")],
-        "doc_id long, text string",
-    )
-    row = scrub_pii(df).select("clean_text", "n_email", "n_idnum").collect()[0]
-    assert row["clean_text"] == "mail <EMAIL> and ref <ID> end"
-    assert (row["n_email"], row["n_idnum"]) == (1, 2)  # counts on ORIGINAL
-
-
-def test_repetition_stats_values(spark):
-    """Hand-computable repetition metrics: 'a a a b' → top token 3/4,
-    dup tokens 2/4; bigrams ('a a','a a','a b') → top 2/3, dup 1/3.
-    Single-token doc gets zeroed bigram metrics, not NULL."""
-    from kgspark.curation import repetition_stats
-
-    df = spark.createDataFrame(
-        [(1, "a a a b"), (2, "x")], "doc_id long, text string"
-    )
-    rows = {r["doc_id"]: r for r in repetition_stats(df).collect()}
-    r1 = rows[1]
-    assert r1["n_tokens"] == 4
-    assert r1["top_token_e6"] == 750000
-    assert r1["dup_token_e6"] == 500000
-    assert r1["top_bigram_e6"] == 666666
-    assert r1["dup_bigram_e6"] == 333333
-    assert r1["rep_flagged"]  # 0.75 > 0.14 threshold
-    r2 = rows[2]
-    assert (r2["top_bigram_e6"], r2["dup_bigram_e6"]) == (0, 0)
-    assert r2["top_token_e6"] == 1000000 and r2["rep_flagged"]
-
-
-def test_repetition_stats_plan_two_level_agg(spark, sf_dir):
-    """The repetition metrics must aggregate (doc, term)->(doc) with
-    map-side partial aggregation and never evaluate Python."""
-    p = _plan(Q.doc_repetition_stats(spark, sf_dir))
-    assert "HashAggregate" in p
-    for bad in ["BatchEvalPython", "ArrowEvalPython", "MapInPandas"]:
-        assert bad not in p, f"repetition_stats fell off the JVM: {bad}"
 
 
 def test_doc_resample_is_map_only(spark, sf_dir):
@@ -252,127 +186,12 @@ def test_doc_chunk_boundaries(spark):
     assert [(r["n_tok"], r["chunk_text"]) for r in by_doc[3]] == [(1, "solo")]
 
 
-def test_embedding_quantize_map_only(spark, sf_dir):
-    p = _plan(Q.embedding_quantize(spark, sf_dir))
-    assert "Exchange" not in p, "quantization must not shuffle"
-    for bad in ["BatchEvalPython", "ArrowEvalPython", "MapInPandas"]:
-        assert bad not in p, f"quantization fell off the JVM: {bad}"
-
-
-def test_embedding_quantize_values(spark):
-    """[1.0, -0.5, 0.0] on the e3 grid: maxabs 1000, codes
-    [127, -64, 0] (symmetric round-half-up), errsum 500."""
-    from unittest import mock
-
-    emb = spark.createDataFrame(
-        [(1, [1.0, -0.5, 0.0]), (2, [0.0, 0.0, 0.0])],
-        "vec_id long, embedding array<float>",
-    )
-    with mock.patch.object(Q, "_t", lambda s, d, n: emb):
-        out = {r["vec_id"]: r
-               for r in Q.embedding_quantize(spark, "x").collect()}
-    v1 = out[1]
-    assert v1["maxabs_e3"] == 1000
-    assert v1["q_checksum"] == 127 * 1 + (-64) * 2 + 0 * 3
-    assert v1["mean_abs_err_e6"] == (1_000_000 * 500) // (127 * 3 * 1000)
-    v2 = out[2]  # zero vector: scale 0, all codes 0, zero error
-    assert (v2["maxabs_e3"], v2["mean_abs_err_e6"], v2["q_checksum"]) == (0, 0, 0)
-
-
-def test_cms_estimates_upper_bound(spark, sf_dir):
-    """CMS point estimates are one-sided: estimate >= truth for every
-    probed token, and the estimate of a unique heavy hitter in a tiny
-    corpus is exact (no collision in 4x512 buckets over ~5 tokens)."""
-    out = Q.heavy_hitters_cms(spark, sf_dir).collect()
-    assert len(out) > 0
-    for r in out:
-        assert r["overcount"] >= 0
-        assert r["cms_count"] >= r["true_count"]
-
-
-def test_cms_sketch_width_bound(spark):
-    """Sketch build must reduce to <= CMS_D * CMS_W counter groups."""
-    from unittest import mock
-    import kgspark.grammar as G
-
-    docs = spark.createDataFrame(
-        [(1, "a a a b"), (2, "a c")], "doc_id long, text string"
-    )
-    with mock.patch.object(Q, "_t", lambda s, d, n: docs):
-        out = {r["token"]: r for r in Q.heavy_hitters_cms(spark, "x").collect()}
-    assert out["a"]["true_count"] == 4
-    assert out["a"]["cms_count"] >= 4
-    assert out["a"]["rnk"] == 1
-    assert len(out) <= G.CMS_TOP_K
-
-
-def test_bpe_pairs_values(spark):
-    """'ab ab b' -> word freqs {ab:2, b:1}; pairs a>b:2, b>$:3."""
-    from unittest import mock
-
-    docs = spark.createDataFrame(
-        [(1, "ab ab b")], "doc_id long, text string"
-    )
-    with mock.patch.object(Q, "_t", lambda s, d, n: docs):
-        rows = Q.bpe_merge_pairs(spark, "x").collect()
-    by_pair = {(r["lhs"], r["rhs"]): r["cnt"] for r in rows}
-    assert by_pair[("b", "$")] == 3
-    assert by_pair[("a", "b")] == 2
-    top = min(rows, key=lambda r: r["rnk"])
-    assert (top["lhs"], top["rhs"]) == ("b", "$")
-
-
 def test_sparql_ask_describe(spark, sf_dir):
     asks = {r["q"]: r["ask"] for r in Q.kg_sparql_ask(spark, sf_dir).collect()}
     assert asks == {"commerce_scored": 1, "nosuch": 0}
     d = Q.kg_sparql_describe(spark, sf_dir)
     assert d.columns == ["s", "p", "o"]
     assert "CartesianProduct" not in _plan(d)
-
-
-def test_bpe_vocab_merges_hand_case(spark, tmp_path):
-    import pandas as pd
-
-    pd.DataFrame({
-        "doc_id": [1, 2], "text": ["ab ab ab cd", "ab cd cd"],
-        "lang": ["en", "en"], "source": ["s", "s"],
-        "n_chars": [11, 8],
-    }).to_parquet(f"{tmp_path}/documents.parquet")
-    out = [tuple(r) for r in
-           Q.bpe_vocab_merges(spark, str(tmp_path)).collect()]
-    # wf: ab=4, cd=3 → r1 (a,b)=4 beats (b,$)=4 on lhs; r2 merged
-    # symbol 'ab' pairs with '$'; r3 (c,d)=3 beats (d,$)=3 on lhs
-    assert out == [(1, "a", "b", 4), (2, "ab", "$", 4), (3, "c", "d", 3)]
-
-
-def test_bpe_vocab_merges_skips_self_pairs(spark, tmp_path):
-    import pandas as pd
-
-    pd.DataFrame({
-        "doc_id": [1], "text": ["aa aa aa ab"], "lang": ["en"],
-        "source": ["s"], "n_chars": [11],
-    }).to_parquet(f"{tmp_path}/documents.parquet")
-    out = [tuple(r) for r in
-           Q.bpe_vocab_merges(spark, str(tmp_path), rounds=1).collect()]
-    # (a,a)=3 is the raw argmax but self-pairs are excluded from
-    # SELECTION → (a,$)=3 wins (lhs tie-break vs (a,b)=1 irrelevant)
-    assert out == [(1, "a", "$", 3)]
-
-
-def test_bpe_encode_compresses(spark, tmp_path):
-    """'ab ab ab cd' + 'ab cd cd' learn (a,b), (ab,$), (c,d): word
-    'ab' → 1 symbol ('ab$'), word 'cd' → 2 ('cd','$'); doc 1 =
-    3·'ab' + 'cd' → before 3·3+3=12, after 3·1+2=5."""
-    import pandas as pd
-
-    pd.DataFrame({
-        "doc_id": [1, 2], "text": ["ab ab ab cd", "ab cd cd"],
-        "lang": ["en", "en"], "source": ["s", "s"],
-        "n_chars": [11, 8],
-    }).to_parquet(f"{tmp_path}/documents.parquet")
-    out = {r["doc_id"]: (r["n_syms_before"], r["n_syms_after"])
-           for r in Q.bpe_encode_counts(spark, str(tmp_path)).collect()}
-    assert out == {1: (12, 5), 2: (9, 5)}
 
 
 def test_label_index_partitioning_invariant(spark, sf_dir):

@@ -25,19 +25,16 @@ FAST = [
     "kg_sparql_topk", "kg_sparql_construct", "kg_sparql_groupby",
     "kg_sparql_lang", "kg_sparql_graph", "doc_pack_assign",
     # round-6 additions
-    "pii_scrub", "pii_rate_by_source", "kg_sparql_update",
+    "kg_sparql_update",
     "kg_sparql_select_expr", "rdf_jsonld_compacted_roundtrip",
     "kg_sparql_optional_exists", "kg_sparql_modify",
     # round-6c additions
-    "term_pmi", "embedding_srp_buckets", "vocab_growth",
-    "doc_surprisal_heldout", "embedding_label_centroids",
-    "embedding_kmeans_assign", "embedding_kmeans_inertia",
-    "doc_type_token_ratio", "corpus_stats_by_source",
+    "doc_surprisal_heldout", "doc_type_token_ratio",
     # round-6e additions
     "kg_entity_provenance", "kg_void_summary",
-    "kg_graph_hash", "doc_zorder_key", "embedding_pq_codes",
+    "kg_graph_hash", "doc_zorder_key",
     "kg_store_merge", "kg_component_size_hist",
-    "kg_store_diff", "kg_parse_error_stats", "embedding_dim_stats",
+    "kg_store_diff", "kg_parse_error_stats",
     "kg_attr_coverage", "kg_label_collisions", "doc_prefix_dup_groups",
 ]
 

@@ -1,6 +1,6 @@
 """Round-6e operator tests: canonical graph hash, TPC-H Q4/Q14/Q19
-plan shapes, VoID summary sanity, Z-order keys, product quantization,
-kNN graph and store maintenance."""
+plan shapes, VoID summary sanity, Z-order keys and store
+maintenance."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
@@ -96,31 +96,6 @@ def test_zorder_is_map_only(spark, sf_dir):
 
     plan = _plan(doc_zorder_key(spark, sf_dir))
     assert "Exchange" not in plan
-
-
-def test_pq_codes_invariants(spark, sf_dir):
-    """Every vector gets exactly 4 subspace codes from the label set;
-    PQ reconstruction error per subspace is bounded above by the
-    distance to ANY single codeword, in particular the vector's own
-    label centroid slice."""
-    from kgspark.queries import embedding_pq_codes
-
-    out = embedding_pq_codes(spark, sf_dir)
-    import collections
-
-    rows = out.collect()
-    per_vec = collections.Counter(r["vec_id"] for r in rows)
-    assert set(per_vec.values()) == {4}
-    assert all(0 <= r["code"] <= 9 for r in rows)
-    assert all(r["sq_err"] >= 0 for r in rows)
-
-
-def test_pq_codebook_join_is_broadcast(spark, sf_dir):
-    from kgspark.queries import embedding_pq_codes
-
-    plan = _plan(embedding_pq_codes(spark, sf_dir))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
 
 
 def test_q14_month_filter_pushed_to_scan(spark, sf_dir):

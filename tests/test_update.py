@@ -711,3 +711,34 @@ def test_delete_where_matches_object_term_kind(spark, tmp_path):
                      "DELETE WHERE { GRAPH ex:g1 { ex:a ex:p ex:b } }")
     assert r["ops"][0]["quads"] == 1
     assert kinds() == {("ex:r", "5", "literal", "", "xsd:integer")}
+
+
+def test_modify_deletes_constant_object_term(spark, tmp_path):
+    """The modify form's constant template object matches as an RDF
+    term (a literal that spells an IRI is not that IRI), and
+    ``deleted`` counts the store quads removed, not the templates."""
+    store = str(tmp_path / "store")
+    store_update(spark, store, '''
+        INSERT DATA { GRAPH ex:g1 {
+          ex:a ex:p ex:b . ex:a ex:p "ex:b" . ex:c ex:q "ex:b" } }''')
+
+    def terms():
+        return {
+            (r["s"], r["p"], r["o"], r["o_kind"])
+            for r in rdfio.read_nquads_store(spark, store).collect()
+        }
+
+    r = store_update(spark, store, '''
+        DELETE { GRAPH ex:g1 { ex:a ex:p "ex:b" } }
+        WHERE { ex:a ex:p ?o }''')
+    assert r["ops"][0]["deleted"] == 1
+    assert terms() == {
+        ("ex:a", "ex:p", "ex:b", "iri"),
+        ("ex:c", "ex:q", "ex:b", "literal"),
+    }
+    # a template object the store does not hold removes nothing
+    r = store_update(spark, store, '''
+        DELETE { GRAPH ex:g1 { ex:a ex:p "nope" } }
+        WHERE { ex:a ex:p ?o }''')
+    assert r["ops"][0]["deleted"] == 0
+    assert len(terms()) == 2
